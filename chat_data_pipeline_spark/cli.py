@@ -52,6 +52,7 @@ import argparse
 import contextlib
 import logging
 import sys
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -296,11 +297,12 @@ def _run_training(spark: SparkSession, df: DataFrame, train_cfg: dict) -> None:
 
 
 def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
-    """Config-driven index maintenance (r13 bm25, r14 ivf — engine
-    extension): build / extend / maintain the persisted BM25 text index
-    and/or the persisted IVF ANN index from the same YAML that runs the
-    pipeline, so a curation job can leave a servable index behind (or
-    deliver its batch into one) without a separate script.
+    """Config-driven store maintenance (engine extension): build / extend /
+    maintain any of the five persisted stores (bm25, ivf, ivfpq, dedup,
+    neardup) from the same YAML that runs the pipeline, so a curation job
+    can leave a servable store behind (or deliver its batch into one)
+    without a separate script.  Every kind's action runs through
+    :func:`_run_index_action`; kinds run in ``STORE_KINDS`` order.
 
     YAML shape::
 
@@ -347,9 +349,10 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
             n_codewords: 16
             dim: 64
             action: build             # build (default) | extend | delete
-                                      #   | compact  (NO rebuild: PQ
-                                      #   storage is lossy — rebuild from
-                                      #   the source corpus via build)
+                                      #   | compact
+                                      #   | rebuild (PQ storage is lossy:
+                                      #   re-encodes `dataset:` or this
+                                      #   run's rows)
             batch_id: delivery-042    # required for extend / delete
             ids_dataset: /ids.parquet # optional delete-id table
             dst_path: /indexes/v2     # optional for compact
@@ -359,6 +362,21 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
             column: response          # text column to fingerprint
             id_expr: id
             family: md5               # md5 (default, oracle-backed) | sha1
+            action: build             # build (default) | extend | delete
+                                      #   | compact
+            batch_id: crawl-042       # required for extend / delete
+            ids_dataset: /ids.parquet # optional delete-id table
+            dst_path: /stores/v2      # optional for compact
+            alias: /stores/serving    # optional cutover pointer
+          neardup:
+            path: /stores/ref_vectors # persisted SRP-LSH embedding store
+            dataset: /tables/emb.parquet  # optional vector source
+            vec_col: embedding
+            id_expr: id
+            n_planes: 4               # default: corpus-scaled occupancy
+            n_tables: 4
+            dim: 64
+            threshold: 0.45
             action: build             # build (default) | extend | delete
                                       #   | compact
             batch_id: crawl-042       # required for extend / delete
@@ -398,25 +416,20 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
     loop is one config: rebuild/compact into `dst_path`, then the swap
     lands ONLY after the action completed — a run that dies mid-action
     leaves the alias serving the old root."""
-    known = {"bm25", "ivf", "ivfpq", "dedup", "neardup"}
-    unknown = set(index_cfg) - known
+    from chat_data_pipeline_spark.operators.maintenance import STORE_KINDS
+
+    unknown = set(index_cfg) - set(STORE_KINDS)
     if unknown:
         raise ValueError(
-            f"index: unknown index kind(s) {sorted(unknown)}; supported: {sorted(known)}"
+            f"index: unknown index kind(s) {sorted(unknown)}; "
+            f"supported: {sorted(STORE_KINDS)}"
         )
-    handlers = {
-        "bm25": _run_bm25_indexing,
-        "ivf": _run_ivf_indexing,
-        "ivfpq": _run_ivfpq_indexing,
-        "dedup": _run_dedup_store_indexing,
-        "neardup": _run_neardup_store_indexing,
-    }
-    for kind, handler in handlers.items():
+    for kind in STORE_KINDS:
         if kind not in index_cfg:
             continue
         spec = dict(index_cfg.get(kind) or {})
         if "path" not in spec:
-            handler(spark, df, spec)  # surfaces the kind's own config error
+            _run_index_action(spark, df, spec, kind)  # raises the config error
             continue
         # ONE writer lease per index block, covering EVERY action — not
         # just compact/rebuild: an extend or delete committing between a
@@ -442,16 +455,13 @@ def _run_indexing(spark: SparkSession, df: DataFrame, index_cfg: dict) -> None:
                 _stack.enter_context(
                     _cli_lease(spark, _root, f"cli:index.{kind}", spec)
                 )
-            handler(spark, df, spec)
+            _run_index_action(spark, df, spec, kind)
 
 
-def _finish_with_alias(
-    spark: SparkSession, spec: dict, action: str, dst_writing_actions: tuple
-) -> None:
+def _finish_with_alias(spark: SparkSession, spec: dict, action: str) -> None:
     """Optional serving-alias cutover AFTER an index action lands — the ONE
     implementation of the 'dst_path only counts for the action that writes
-    it' rule (previously triplicated across the three index kinds, r14
-    review): a reused config carrying a stale dst_path with
+    it' rule: a reused config carrying a stale dst_path with
     action=build/extend/delete must swap serving to `path`, never to
     whatever old root dst_path still names."""
     if not spec.get("alias"):
@@ -459,7 +469,10 @@ def _finish_with_alias(
     from chat_data_pipeline_spark.operators.retrieval import swap_index_alias
 
     dst = str(spec["dst_path"]) if spec.get("dst_path") else None
-    final = dst if action in dst_writing_actions and dst else str(spec["path"])
+    final = (
+        dst if action in ("compact", "rebuild", "snapshot") and dst
+        else str(spec["path"])
+    )
     swap_index_alias(spark, str(spec["alias"]), final)
 
 
@@ -608,300 +621,220 @@ def _run_restore(spark: SparkSession, spec: dict, kind: str) -> None:
     )
 
 
-def _run_bm25_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    from chat_data_pipeline_spark.operators import retrieval as RT
+def _text_source(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
+    """(id, text) of the curated rows, under the temp names the text
+    stores' build and extend calls name."""
+    return df.select(
+        F.expr(str(spec.get("id_expr", "id"))).alias("__doc_id__"),
+        F.col(str(spec.get("column", "response"))).alias("__text__"),
+    )
+
+
+def _vector_source(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
+    """(id, vector) from `dataset:` (the common layout: embeddings beside
+    the corpus, keyed by the same ids) or the curated rows, under temp
+    names.  A fresh build OWNS the meta (normalized internal column
+    names); a delivery passes the same temp names as OVERRIDES and the
+    operator adopts the target's meta names itself — a config can extend
+    a store built by any caller without the CLI pre-reading meta."""
+    base = spark.read.parquet(str(spec["dataset"])) if spec.get("dataset") else df
+    return base.select(
+        F.expr(str(spec.get("id_expr", "id"))).alias("__vec_id__"),
+        F.col(str(spec.get("vec_col", "embedding"))).alias("__vec__"),
+    )
+
+
+_VEC_COLS = {"id_col": "__vec_id__", "vec_col": "__vec__"}
+
+
+def _build_bm25(source: DataFrame, path: str, spec: dict) -> None:
+    from chat_data_pipeline_spark.operators.retrieval import build_text_index
+
+    build_text_index(source, path, "__text__", "__doc_id__")
+
+
+def _build_ivf(source: DataFrame, path: str, spec: dict) -> None:
+    from chat_data_pipeline_spark.operators.similarity import build_ivf_index
+
+    build_ivf_index(
+        source,
+        path,
+        n_centroids=int(spec.get("n_centroids", 16)),
+        coarse=str(spec.get("coarse", "md5")),
+        dim=int(spec.get("dim", 64)),
+        seed=int(spec.get("seed", 42)),
+        **_VEC_COLS,
+    )
+
+
+def _build_ivfpq(source: DataFrame, path: str, spec: dict) -> None:
+    from chat_data_pipeline_spark.operators.similarity import build_ivfpq_index
+
+    build_ivfpq_index(
+        source,
+        path,
+        n_centroids=int(spec.get("n_centroids", 16)),
+        m=int(spec.get("m", 8)),
+        n_codewords=int(spec.get("n_codewords", 16)),
+        dim=int(spec.get("dim", 64)),
+        **_VEC_COLS,
+    )
+
+
+def _build_dedup(source: DataFrame, path: str, spec: dict) -> None:
+    from chat_data_pipeline_spark.operators.dedup_store import build_dedup_index
+
+    build_dedup_index(
+        source,
+        path,
+        column="__text__",
+        id_col="__doc_id__",
+        family=str(spec.get("family", "md5")),
+        ngram_size=int(spec.get("ngram_size", 5)),
+        num_perm=int(spec.get("num_perm", 16)),
+        num_bands=int(spec.get("num_bands", 4)),
+        threshold=float(spec.get("threshold", 0.7)),
+        min_ngram_size=int(spec.get("min_ngram_size", 5)),
+        seed=int(spec.get("seed", 42)),
+    )
+
+
+def _build_neardup(source: DataFrame, path: str, spec: dict) -> None:
+    from chat_data_pipeline_spark.operators.neardup_store import (
+        build_neardup_index,
+    )
+
+    build_neardup_index(
+        source,
+        path,
+        # default None = the corpus-scaled occupancy rule (see the
+        # operator docstring); an explicit n_planes pins it
+        n_planes=int(spec["n_planes"]) if spec.get("n_planes") else None,
+        n_tables=int(spec.get("n_tables", 4)),
+        dim=int(spec.get("dim", 64)),
+        threshold=float(spec.get("threshold", 0.45)),
+        **_VEC_COLS,
+    )
+
+
+def _rebuild_ivf(spark: SparkSession, df, spec: dict, path: str, dst) -> None:
+    """The drift repair: coarse-retrain over base+committed postings,
+    re-assign, cut over (see ivf_index_drift_report's thresholds) — it
+    reads no corpus."""
+    from chat_data_pipeline_spark.operators.similarity import rebuild_ivf_index
+
+    rebuild_ivf_index(
+        spark,
+        path,
+        dst_index=dst,
+        n_centroids=int(spec["n_centroids"]) if spec.get("n_centroids") else None,
+        seed=int(spec.get("seed", 42)),
+    )
+
+
+def _rebuild_ivfpq(spark: SparkSession, df, spec: dict, path: str, dst) -> None:
+    """PQ storage is lossy, so the rebuild REQUIRES the source corpus back
+    (`dataset:` or this run's rows) and re-encodes it: tombstones made
+    physical, folded ids spent, optional `n_centroids`/`m`/`n_codewords`
+    re-shard."""
+    from chat_data_pipeline_spark.operators.similarity import rebuild_ivfpq_index
+
+    def _opt(key):
+        return int(spec[key]) if spec.get(key) else None
+
+    rebuild_ivfpq_index(
+        spark,
+        path,
+        _vector_source(spark, df, spec),
+        dst_index=dst,
+        n_centroids=_opt("n_centroids"),
+        m=_opt("m"),
+        n_codewords=_opt("n_codewords"),
+        **_VEC_COLS,
+    )
+
+
+class _IndexShape(NamedTuple):
+    """The YAML-to-source shaping of one `index.<kind>` block: the source
+    frame its build and extend read, the column kwargs its extend verb
+    takes for that frame, its build, and its rebuild (None: the kind has
+    no rebuild action)."""
+
+    source: Callable
+    extend_cols: dict
+    build: Callable
+    rebuild: Callable | None = None
+
+
+_INDEX_SHAPES = {
+    "bm25": _IndexShape(
+        _text_source, {"text_col": "__text__", "id_col": "__doc_id__"},
+        _build_bm25,
+    ),
+    "ivf": _IndexShape(_vector_source, _VEC_COLS, _build_ivf, _rebuild_ivf),
+    "ivfpq": _IndexShape(_vector_source, _VEC_COLS, _build_ivfpq, _rebuild_ivfpq),
+    "dedup": _IndexShape(
+        _text_source, {"column": "__text__", "id_col": "__doc_id__"},
+        _build_dedup,
+    ),
+    "neardup": _IndexShape(_vector_source, _VEC_COLS, _build_neardup),
+}
+
+
+def _run_index_action(
+    spark: SparkSession, df: DataFrame, spec: dict, kind: str
+) -> None:
+    """One `index.<kind>` block, for all five kinds: validate, run the
+    action, cut the alias over, log.  build / extend shape their source
+    via ``_INDEX_SHAPES``; extend, delete and compact call the kind's verb
+    from ``maintenance.STORE_KINDS``.  delete is a takedown delivery:
+    victim ids come from `ids_dataset:` or this run's curated rows
+    (:func:`_delete_ids_frame`).  compact folds committed deliveries (and
+    tombstones, which become physical) into a fresh base and ignores this
+    run's rows."""
+    from chat_data_pipeline_spark.operators.maintenance import STORE_KINDS
 
     if "path" not in spec:
-        raise ValueError("index.bm25 needs `path` (the index root)")
-    column = str(spec.get("column", "response"))
-    id_expr = str(spec.get("id_expr", "id"))
+        raise ValueError(f"index.{kind} needs `path` (the store root)")
+    path = str(spec["path"])
     action = str(spec.get("action", "build"))
-    if action in ("build", "extend"):
-        source = df.select(
-            F.expr(id_expr).alias("__doc_id__"), F.col(column).alias("__text__")
+    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
+    shape = _INDEX_SHAPES[kind]
+    actions = ("build", "extend", "delete", "compact") + (
+        ("rebuild",) if shape.rebuild else ()
+    ) + ("auto_compact", "snapshot", "restore")
+    if action not in actions:
+        raise ValueError(
+            f"index.{kind} action must be "
+            f"{', '.join(map(repr, actions[:-1]))} or {actions[-1]!r}, "
+            f"got {action!r}"
         )
+    if action in ("extend", "delete") and "batch_id" not in spec:
+        raise ValueError(f"index.{kind} action={action} needs `batch_id`")
+    store = STORE_KINDS[kind]
     if action == "build":
-        RT.build_text_index(source, str(spec["path"]), "__text__", "__doc_id__")
+        shape.build(shape.source(spark, df, spec), path, spec)
     elif action == "extend":
-        if "batch_id" not in spec:
-            raise ValueError("index.bm25 action=extend needs `batch_id`")
-        RT.extend_text_index(
-            source, str(spec["path"]), spec["batch_id"], "__text__", "__doc_id__"
+        store.extend(
+            shape.source(spark, df, spec), path, spec["batch_id"],
+            **shape.extend_cols,
         )
     elif action == "delete":
-        # takedown delivery: tombstone the ids WITHOUT a rebuild — ids come
-        # from this run's curated rows by default (curate-the-victims
-        # configs), or from `ids_dataset:` (a plain id table)
-        if "batch_id" not in spec:
-            raise ValueError("index.bm25 action=delete needs `batch_id`")
-        base = (
-            spark.read.parquet(str(spec["ids_dataset"]))
-            if spec.get("ids_dataset")
-            else df
-        )
-        RT.delete_from_text_index(
-            spark,
-            str(spec["path"]),
-            base.select(F.expr(id_expr).alias("__doc_id__")),
-            spec["batch_id"],
+        store.delete(
+            spark, path, _delete_ids_frame(spark, df, spec, kind), spec["batch_id"]
         )
     elif action == "compact":
-        # maintenance action: folds committed deliveries (and any
-        # tombstones, which become physical) into a fresh base — ignores
-        # this run's rows; pair with a separate extend config
-        RT.compact_text_index(
-            spark,
-            str(spec["path"]),
-            dst_index=str(spec["dst_path"]) if spec.get("dst_path") else None,
-        )
+        store.compact(spark, path, dst_index=dst)
+    elif action == "rebuild":
+        shape.rebuild(spark, df, spec, path, dst)
     elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "bm25")
+        action = _run_auto_compact(spark, spec, kind)
     elif action == "snapshot":
-        _run_snapshot(spark, spec, "bm25")
-    elif action == "restore":
-        _run_restore(spark, spec, "bm25")
+        _run_snapshot(spark, spec, kind)
     else:
-        raise ValueError(
-            "index.bm25 action must be 'build', 'extend', 'delete', "
-            f"'compact', 'auto_compact', 'snapshot' or 'restore', "
-            f"got {action!r}"
-        )
-    _finish_with_alias(spark, spec, action, ("compact", "snapshot"))
-    logger.info("index.bm25: %s %s", action, spec["path"])
-
-
-def _run_ivf_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    """The ANN twin of the bm25 block (closes the r13 verdict gap: an
-    embedding-curation config can now leave a servable IVF index behind
-    the way a text config can).  Vectors come from the curated rows by
-    default; `dataset:` points at a separate (id, vector) table instead —
-    the common layout where embeddings live beside the corpus, keyed by
-    the same ids."""
-    from chat_data_pipeline_spark.operators import similarity as SIM
-
-    if "path" not in spec:
-        raise ValueError("index.ivf needs `path` (the index root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
-    if action not in ("build", "extend", "delete", "compact", "rebuild",
-                      "auto_compact", "snapshot", "restore"):
-        raise ValueError(
-            "index.ivf action must be 'build', 'extend', 'delete', "
-            f"'compact', 'rebuild', 'auto_compact', 'snapshot' or "
-            f"'restore', got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.ivf action={action} needs `batch_id`")
-    if action in ("build", "extend"):
-        vec_col = str(spec.get("vec_col", "embedding"))
-        id_expr = str(spec.get("id_expr", "id"))
-        base = (
-            spark.read.parquet(str(spec["dataset"])) if spec.get("dataset") else df
-        )
-        # a fresh build OWNS the meta (normalized internal column names); a
-        # delivery passes the same temp names as OVERRIDES and the operator
-        # adopts the target's meta names itself — a config can extend an
-        # index built by any caller without the CLI pre-reading meta
-        source = base.select(
-            F.expr(id_expr).alias("__vec_id__"), F.col(vec_col).alias("__vec__")
-        )
-    if action == "build":
-        SIM.build_ivf_index(
-            source,
-            path,
-            n_centroids=int(spec.get("n_centroids", 16)),
-            id_col="__vec_id__",
-            vec_col="__vec__",
-            coarse=str(spec.get("coarse", "md5")),
-            dim=int(spec.get("dim", 64)),
-            seed=int(spec.get("seed", 42)),
-        )
-    elif action == "extend":
-        SIM.extend_ivf_index(
-            source, path, spec["batch_id"], id_col="__vec_id__", vec_col="__vec__"
-        )
-    elif action == "delete":
-        # takedown delivery: tombstone the vector ids without a rebuild
-        SIM.delete_from_ivf_index(
-            spark, path, _delete_ids_frame(spark, df, spec, "ivf"), spec["batch_id"]
-        )
-    elif action == "compact":
-        SIM.compact_ivf_index(spark, path, dst_index=dst)
-    elif action == "rebuild":
-        # the drift repair: coarse-retrain over base+committed postings,
-        # re-assign, cut over (see ivf_index_drift_report's thresholds)
-        SIM.rebuild_ivf_index(
-            spark,
-            path,
-            dst_index=dst,
-            n_centroids=int(spec["n_centroids"]) if spec.get("n_centroids") else None,
-            seed=int(spec.get("seed", 42)),
-        )
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "ivf")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "ivf")
-    elif action == "restore":
-        _run_restore(spark, spec, "ivf")
-    _finish_with_alias(spark, spec, action, ("compact", "rebuild", "snapshot"))
-    logger.info("index.ivf: %s %s", action, path)
-
-
-def _run_ivfpq_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    """The COMPRESSED ANN store's config block (closes the r14 verdict's
-    reachability gap: a YAML run could leave behind a BM25, IVF or
-    signature store but not the codes-only store the 100 TB serving story
-    actually reads from).  Same shape as `index.ivf`; `rebuild` (r16)
-    differs from the IVF one because PQ storage is lossy — it REQUIRES
-    the source corpus back (`dataset:` or this run's rows) and re-encodes
-    it through `rebuild_ivfpq_index` (tombstones made physical, folded
-    ids spent, optional `n_centroids`/`m`/`n_codewords` re-shard)."""
-    from chat_data_pipeline_spark.operators import similarity as SIM
-
-    if "path" not in spec:
-        raise ValueError("index.ivfpq needs `path` (the index root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
-    if action not in (
-        "build", "extend", "delete", "compact", "rebuild", "auto_compact",
-        "snapshot", "restore",
-    ):
-        raise ValueError(
-            "index.ivfpq action must be 'build', 'extend', 'delete', "
-            f"'compact', 'rebuild', 'auto_compact', 'snapshot' or "
-            f"'restore', got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.ivfpq action={action} needs `batch_id`")
-    if action in ("build", "extend", "rebuild"):
-        vec_col = str(spec.get("vec_col", "embedding"))
-        id_expr = str(spec.get("id_expr", "id"))
-        base = (
-            spark.read.parquet(str(spec["dataset"])) if spec.get("dataset") else df
-        )
-        source = base.select(
-            F.expr(id_expr).alias("__vec_id__"), F.col(vec_col).alias("__vec__")
-        )
-    if action == "build":
-        SIM.build_ivfpq_index(
-            source,
-            path,
-            n_centroids=int(spec.get("n_centroids", 16)),
-            m=int(spec.get("m", 8)),
-            n_codewords=int(spec.get("n_codewords", 16)),
-            dim=int(spec.get("dim", 64)),
-            id_col="__vec_id__",
-            vec_col="__vec__",
-        )
-    elif action == "extend":
-        SIM.extend_ivfpq_index(
-            source, path, spec["batch_id"], id_col="__vec_id__", vec_col="__vec__"
-        )
-    elif action == "delete":
-        SIM.delete_from_ivf_index(
-            spark, path, _delete_ids_frame(spark, df, spec, "ivfpq"),
-            spec["batch_id"],
-        )
-    elif action == "compact":
-        SIM.compact_ivf_index(spark, path, dst_index=dst)
-    elif action == "rebuild":
-        SIM.rebuild_ivfpq_index(
-            spark,
-            path,
-            source,
-            dst_index=dst,
-            n_centroids=int(spec["n_centroids"])
-            if spec.get("n_centroids")
-            else None,
-            m=int(spec["m"]) if spec.get("m") else None,
-            n_codewords=int(spec["n_codewords"])
-            if spec.get("n_codewords")
-            else None,
-            id_col="__vec_id__",
-            vec_col="__vec__",
-        )
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "ivfpq")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "ivfpq")
-    elif action == "restore":
-        _run_restore(spark, spec, "ivfpq")
-    _finish_with_alias(spark, spec, action, ("compact", "rebuild", "snapshot"))
-    logger.info("index.ivfpq: %s %s", action, path)
-
-
-def _run_dedup_store_indexing(spark: SparkSession, df: DataFrame, spec: dict) -> None:
-    """The signature-store twin of the bm25/ivf blocks: build / extend /
-    delete / compact the persisted MinHash store from the same config that
-    curates — so a curation job can leave (or grow) the reference-signature
-    set its successors onboard against.  Signatures come from the CURATED
-    rows; `ids_dataset:` supplies delete ids like the bm25 twin."""
-    from chat_data_pipeline_spark.operators import dedup_store as DS
-
-    if "path" not in spec:
-        raise ValueError("index.dedup needs `path` (the store root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    if action not in ("build", "extend", "delete", "compact", "auto_compact",
-                      "snapshot", "restore"):
-        raise ValueError(
-            "index.dedup action must be 'build', 'extend', 'delete', "
-            f"'compact', 'auto_compact', 'snapshot' or 'restore', "
-            f"got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.dedup action={action} needs `batch_id`")
-    column = str(spec.get("column", "response"))
-    id_expr = str(spec.get("id_expr", "id"))
-    if action == "build":
-        source = df.select(
-            F.expr(id_expr).alias("__doc_id__"), F.col(column).alias("__text__")
-        )
-        DS.build_dedup_index(
-            source,
-            path,
-            column="__text__",
-            id_col="__doc_id__",
-            family=str(spec.get("family", "md5")),
-            ngram_size=int(spec.get("ngram_size", 5)),
-            num_perm=int(spec.get("num_perm", 16)),
-            num_bands=int(spec.get("num_bands", 4)),
-            threshold=float(spec.get("threshold", 0.7)),
-            min_ngram_size=int(spec.get("min_ngram_size", 5)),
-            seed=int(spec.get("seed", 42)),
-        )
-    elif action == "extend":
-        # the operator resolves the target store's meta itself; the CLI
-        # just names its own columns (one meta read per delivery, not two)
-        source = df.select(F.expr(id_expr).alias("__sid__"), F.col(column))
-        DS.extend_dedup_index(
-            source, path, spec["batch_id"], column=column, id_col="__sid__"
-        )
-    elif action == "delete":
-        base = (
-            spark.read.parquet(str(spec["ids_dataset"]))
-            if spec.get("ids_dataset")
-            else df
-        )
-        DS.delete_from_dedup_index(
-            spark, path, base.select(F.expr(id_expr)), spec["batch_id"]
-        )
-    elif action == "compact":
-        DS.compact_dedup_index(
-            spark,
-            path,
-            dst_index=str(spec["dst_path"]) if spec.get("dst_path") else None,
-        )
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "dedup")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "dedup")
-    elif action == "restore":
-        _run_restore(spark, spec, "dedup")
-    _finish_with_alias(spark, spec, action, ("compact", "snapshot"))
-    logger.info("index.dedup: %s %s", action, path)
+        _run_restore(spark, spec, kind)
+    _finish_with_alias(spark, spec, action)
+    logger.info("index.%s: %s %s", kind, action, path)
 
 
 def _run_onboarding(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
@@ -1015,90 +948,6 @@ def _run_semantic_onboarding(
     return out.drop("__onboard_id__")
 
 
-def _run_neardup_store_indexing(
-    spark: SparkSession, df: DataFrame, spec: dict
-) -> None:
-    """The EMBEDDING near-dup store's config block (r15): build / extend /
-    delete / compact / auto_compact the persisted SRP-LSH store — the
-    semantic twin of `index.dedup`.  Vectors come from `dataset:` (an
-    (id, vector) table) or the curated rows:
-
-        index:
-          neardup:
-            path: /stores/ref_vectors
-            dataset: /tables/emb.parquet
-            vec_col: embedding
-            id_expr: id
-            n_planes: 4
-            n_tables: 4
-            dim: 64
-            threshold: 0.45
-            action: build            # build | extend | delete | compact
-                                     #   | auto_compact
-            batch_id: crawl-042      # required for extend / delete
-            ids_dataset: /ids.parquet
-            dst_path: /stores/v2
-            alias: /stores/serving
-    """
-    from chat_data_pipeline_spark.operators import neardup_store as NS
-
-    if "path" not in spec:
-        raise ValueError("index.neardup needs `path` (the store root)")
-    path = str(spec["path"])
-    action = str(spec.get("action", "build"))
-    dst = str(spec["dst_path"]) if spec.get("dst_path") else None
-    if action not in ("build", "extend", "delete", "compact", "auto_compact",
-                      "snapshot", "restore"):
-        raise ValueError(
-            "index.neardup action must be 'build', 'extend', 'delete', "
-            f"'compact', 'auto_compact', 'snapshot' or 'restore', "
-            f"got {action!r}"
-        )
-    if action in ("extend", "delete") and "batch_id" not in spec:
-        raise ValueError(f"index.neardup action={action} needs `batch_id`")
-    if action in ("build", "extend"):
-        vec_col = str(spec.get("vec_col", "embedding"))
-        id_expr = str(spec.get("id_expr", "id"))
-        base = (
-            spark.read.parquet(str(spec["dataset"])) if spec.get("dataset") else df
-        )
-        source = base.select(
-            F.expr(id_expr).alias("__vec_id__"), F.col(vec_col).alias("__vec__")
-        )
-    if action == "build":
-        NS.build_neardup_index(
-            source,
-            path,
-            id_col="__vec_id__",
-            vec_col="__vec__",
-            # default None = the corpus-scaled occupancy rule (see the
-            # operator docstring); an explicit n_planes pins it
-            n_planes=int(spec["n_planes"]) if spec.get("n_planes") else None,
-            n_tables=int(spec.get("n_tables", 4)),
-            dim=int(spec.get("dim", 64)),
-            threshold=float(spec.get("threshold", 0.45)),
-        )
-    elif action == "extend":
-        NS.extend_neardup_index(
-            source, path, spec["batch_id"], id_col="__vec_id__", vec_col="__vec__"
-        )
-    elif action == "delete":
-        NS.delete_from_neardup_index(
-            spark, path, _delete_ids_frame(spark, df, spec, "neardup"),
-            spec["batch_id"],
-        )
-    elif action == "compact":
-        NS.compact_neardup_index(spark, path, dst_index=dst)
-    elif action == "auto_compact":
-        action = _run_auto_compact(spark, spec, "neardup")
-    elif action == "snapshot":
-        _run_snapshot(spark, spec, "neardup")
-    elif action == "restore":
-        _run_restore(spark, spec, "neardup")
-    _finish_with_alias(spark, spec, action, ("compact", "snapshot"))
-    logger.info("index.neardup: %s %s", action, path)
-
-
 def _run_takedown(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
     """Top-level `takedown:` block (r15) — ONE victim table deleted from
     EVERY store that serves it, in one config:
@@ -1124,13 +973,11 @@ def _run_takedown(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
     stays idempotent per store); a crash between stores leaves the
     completed ones committed and the re-run re-delivers every store
     idempotently.  Returns the distinct victim-id frame for accounting."""
-    from chat_data_pipeline_spark.operators import dedup_store as DS
-    from chat_data_pipeline_spark.operators import retrieval as RT
-    from chat_data_pipeline_spark.operators import similarity as SIM
+    from chat_data_pipeline_spark.operators.maintenance import STORE_KINDS
 
     if "batch_id" not in spec:
         raise ValueError("takedown needs `batch_id`")
-    stores = [k for k in ("bm25", "ivf", "ivfpq", "dedup", "neardup") if spec.get(k)]
+    stores = [k for k in STORE_KINDS if spec.get(k)]
     if not stores:
         raise ValueError(
             "takedown needs at least one store root: bm25/ivf/ivfpq/dedup/neardup"
@@ -1149,20 +996,13 @@ def _run_takedown(spark: SparkSession, df: DataFrame, spec: dict) -> DataFrame:
     # one deterministic id set for every store: the per-store deletes each
     # scan their own already-deleted sets, so pin the frame once
     victims = victims.localCheckpoint(eager=True)
-    from chat_data_pipeline_spark.operators import neardup_store as NS
-
-    deleters = {
-        "bm25": RT.delete_from_text_index,
-        "ivf": SIM.delete_from_ivf_index,
-        "ivfpq": SIM.delete_from_ivf_index,  # deletes are flavor-agnostic
-        "dedup": DS.delete_from_dedup_index,
-        "neardup": NS.delete_from_neardup_index,
-    }
     for kind in stores:
         # per-root writer lease (r16): a compliance run may fan into roots
         # that live delivery streams are writing — serialize per store
         with _cli_lease(spark, str(spec[kind]), "cli:takedown", spec):
-            deleters[kind](spark, str(spec[kind]), victims, spec["batch_id"])
+            STORE_KINDS[kind].delete(
+                spark, str(spec[kind]), victims, spec["batch_id"]
+            )
         logger.info("takedown: %s %s", kind, spec[kind])
     return victims
 
@@ -1605,7 +1445,7 @@ def _index_block_is_corpus_free(index_cfg: dict) -> bool:
     `dataset:`; deletes may source victims from `ids_dataset:`.  The
     text stores' build/extend always index the curated rows, so those
     keep requiring `datasets:`."""
-    for kind in ("bm25", "ivf", "ivfpq", "dedup", "neardup"):
+    for kind, shape in _INDEX_SHAPES.items():
         spec = index_cfg.get(kind)
         if not spec:
             continue
@@ -1618,7 +1458,7 @@ def _index_block_is_corpus_free(index_cfg: dict) -> bool:
             # PQ storage is lossy, so it needs `dataset:` back)
             continue
         if (
-            kind in ("ivf", "ivfpq", "neardup")
+            shape.source is _vector_source
             and action in ("build", "extend", "rebuild")
             and spec.get("dataset")
         ):

@@ -23,8 +23,15 @@ engine-extension surface like the stores themselves.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+from chat_data_pipeline_spark.operators import dedup_store as DS
+from chat_data_pipeline_spark.operators import neardup_store as NS
+from chat_data_pipeline_spark.operators import retrieval as RT
+from chat_data_pipeline_spark.operators import similarity as SIM
 
 # Row factories for the driver-side "values" forms below (r17): each
 # maintenance verb computes plain Python values, so callers that consume
@@ -85,9 +92,7 @@ def store_kind_and_meta(spark, index_path: str):
     maintenance plan, the serve engine's per-arm validation) pay ONE meta
     read per root instead of detect-then-re-read — per-micro-batch cost
     on ``streaming_query_serving``."""
-    from chat_data_pipeline_spark.operators.retrieval import read_meta_row
-
-    meta = read_meta_row(spark, index_path)
+    meta = RT.read_meta_row(spark, index_path)
     if meta is None:
         # a parquet footer with zero rows (crash between file creation and
         # row flush) must fail as loudly as a missing/unknown meta
@@ -109,6 +114,50 @@ def store_kind_and_meta(spark, index_path: str):
     )
 
 
+class StoreKind(NamedTuple):
+    """One store kind's mutation verbs and residency artifact.
+
+    ``extend(df, path, batch_id, ...)`` and ``delete(spark, path, ids,
+    batch_id)`` are the kind's ledger-committed deliveries (``ids`` is a
+    one-column id frame), ``compact(spark, path, dst_index=None)`` its
+    compactor, and ``residency`` the ``(subdir, id_col)`` artifact holding
+    one id row per stored unit — ``id_col=None`` means the meta's own
+    ``id_col``."""
+
+    extend: Callable
+    delete: Callable
+    compact: Callable
+    residency: tuple[str, str | None]
+
+
+# The ONE kind -> verb table: streams, CLI blocks, takedown fan-out and
+# maintenance all dispatch through it.  Insertion order is the order a
+# multi-kind ``index:`` block runs in.  IVF deletes and compaction are
+# flavor-agnostic, so ivf and ivfpq share them.
+STORE_KINDS: dict[str, StoreKind] = {
+    "bm25": StoreKind(
+        RT.extend_text_index, RT.delete_from_text_index,
+        RT.compact_text_index, ("doclens", "doc"),
+    ),
+    "ivf": StoreKind(
+        SIM.extend_ivf_index, SIM.delete_from_ivf_index,
+        SIM.compact_ivf_index, ("postings", None),
+    ),
+    "ivfpq": StoreKind(
+        SIM.extend_ivfpq_index, SIM.delete_from_ivf_index,
+        SIM.compact_ivf_index, ("postings", None),
+    ),
+    "dedup": StoreKind(
+        DS.extend_dedup_index, DS.delete_from_dedup_index,
+        DS.compact_dedup_index, ("bands", "id"),
+    ),
+    "neardup": StoreKind(
+        NS.extend_neardup_index, NS.delete_from_neardup_index,
+        NS.compact_neardup_index, ("vectors", "id"),
+    ),
+}
+
+
 def detect_store_kind(spark, index_path: str) -> str:
     """Kind-only convenience over :func:`store_kind_and_meta`."""
     return store_kind_and_meta(spark, index_path)[0]
@@ -119,9 +168,7 @@ def _count_committed(spark, index_path: str, sub: str, committed: list[str]) -> 
     artifact directory does not exist.  Parquet ``count()`` resolves from
     file-footer row counts — a metadata operation, no data scan — so this
     stays cheap on a corpus-sized postings table."""
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for
-
-    fs, path, _jvm = _fs_for(spark, f"{index_path}/{sub}")
+    fs, path, _jvm = RT._fs_for(spark, f"{index_path}/{sub}")
     if not fs.exists(path):
         return 0
     # partition-column-only explicit schema (r17): the count resolves
@@ -195,46 +242,30 @@ def maintenance_plan_values(
     a tombstone set exists, one column-pruned id scan whose shuffle side
     is the (broadcast-sized) tombstone set.  Never reads corpus text or
     vectors, never shuffles corpus-sized data."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fs_for,
-        _tombstoned_ids,
-    )
-
     # ``kind_meta``: a caller that already classified the root (a fleet
     # chain running gc/fsck and the plan on the same root) passes the
     # (kind, meta_row) pair so the chain pays ONE meta read, not one per
     # verb (r17; the store_kind_and_meta docstring's posture extended
     # across operators)
     kind, meta = kind_meta or store_kind_and_meta(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    committed = RT._committed_batches(spark, index_path)
     n_batches = len(committed)
 
-    if kind in ("bm25", "dedup", "neardup"):
-        id_type = meta.id_type
-    else:
-        # ivf/ivfpq metas pin id_type since r15; pre-r15 roots fall back
-        # to inferring it from the BASE partition only — inferring over
-        # the whole postings tree would touch the footers of a crashed
-        # uncommitted delivery's partial files (the exact hazard the
-        # explicit-schema reads below guard against; the base is complete
-        # by construction, its commit marker being the meta write)
-        id_type = meta.asDict().get("id_type") or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[meta.id_col]
-    tomb = _tombstoned_ids(spark, index_path, id_type, committed)
+    # every meta pins id_type except pre-r15 ivf/ivfpq roots, which fall
+    # back to inferring it from the BASE partition only — inferring over
+    # the whole postings tree would touch the footers of a crashed
+    # uncommitted delivery's partial files (the exact hazard the
+    # explicit-schema reads below guard against; the base is complete by
+    # construction, its commit marker being the meta write)
+    id_type = meta.asDict().get("id_type") or dict(
+        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
+    )[meta.id_col]
+    tomb = RT._tombstoned_ids(spark, index_path, id_type, committed)
 
     # the residency artifact: one id row (or a known multiple) per stored
     # unit, positive deliveries only — deletes write none of these
-    res_sub, res_id = {
-        "bm25": ("doclens", "doc"),
-        "dedup": ("bands", "id"),
-        "neardup": ("vectors", "id"),
-        "ivf": ("postings", None),
-        "ivfpq": ("postings", None),
-    }[kind]
-    if res_id is None:
-        res_id = meta.id_col
+    res_sub, res_id = STORE_KINDS[kind].residency
+    res_id = res_id or meta.id_col
 
     # residency artifact loaded with an explicit single-column schema (the
     # probe paths' discipline): a crashed uncommitted delivery's partial
@@ -289,7 +320,7 @@ def maintenance_plan_values(
         from concurrent.futures import ThreadPoolExecutor
 
         def _bm25_live() -> int:
-            fs, spath, _jvm = _fs_for(spark, f"{index_path}/stats")
+            fs, spath, _jvm = RT._fs_for(spark, f"{index_path}/stats")
             if not fs.exists(spath):
                 return 0
             return int(
@@ -454,14 +485,9 @@ def gc_debris_values(
     in-grace survivors a next sweep will re-judge."""
     import time
 
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fs_for,
-    )
-
     kind, _meta = kind_meta or store_kind_and_meta(spark, index_path)
-    committed = set(_committed_batches(spark, index_path))
-    fs, root, _jvm = _fs_for(spark, index_path)
+    committed = set(RT._committed_batches(spark, index_path))
+    fs, root, _jvm = RT._fs_for(spark, index_path)
     horizon_ms = int(time.time() * 1000) - int(grace_seconds) * 1000
     removed = kept = tmp_removed = 0
     for st in fs.listStatus(root):
@@ -569,16 +595,10 @@ def snapshot_store(
     writer costs is missing its newest batch, never inconsistency.
 
     Returns one row: ``(kind, n_batches, batch_dirs_copied, subtrees)``."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fs_for,
-        ledger_commit,
-    )
-
     kind, _meta = store_kind_and_meta(spark, src_index)
-    committed = _committed_batches(spark, src_index)
+    committed = RT._committed_batches(spark, src_index)
     cset = set(committed)
-    fs, src, jvm = _fs_for(spark, src_index)
+    fs, src, jvm = RT._fs_for(spark, src_index)
     dst = jvm.org.apache.hadoop.fs.Path(dst_index)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     futil = jvm.org.apache.hadoop.fs.FileUtil
@@ -643,7 +663,7 @@ def snapshot_store(
         subtrees += 1 if copied_here else 0
     for bid in committed:
         if bid != "base":
-            ledger_commit(spark, dst_index, bid)
+            RT.ledger_commit(spark, dst_index, bid)
     # meta LAST — the commit marker
     futil.copy(
         fs, jvm.org.apache.hadoop.fs.Path(f"{src_index}/meta"), fs,
@@ -721,11 +741,6 @@ def fsck_store_values(
     import time
 
     from chat_data_pipeline_spark.operators.lease import DEFAULT_TTL_SECONDS
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fs_for,
-        folded_ids,
-    )
 
     ttl = DEFAULT_TTL_SECONDS if ttl_seconds is None else int(ttl_seconds)
     try:
@@ -736,9 +751,9 @@ def fsck_store_values(
             "unknown", False, 0, 0, 0, 0, 0, 0, False, False, 0, "corrupt"
         )
 
-    committed = _committed_batches(spark, index_path)
+    committed = RT._committed_batches(spark, index_path)
     cset = set(committed)
-    fs, root, jvm = _fs_for(spark, index_path)
+    fs, root, jvm = RT._fs_for(spark, index_path)
 
     seen_ids: set[str] = set()
     orphans = tmp_dirs = 0
@@ -762,7 +777,7 @@ def fsck_store_values(
                 orphans += 1
     missing = len(cset - seen_ids)
 
-    ext_ids, del_ids = folded_ids(spark, index_path)
+    ext_ids, del_ids = RT.folded_ids(spark, index_path)
     folded = set(ext_ids) | set(del_ids)
     overlap = len(folded & cset)
 
@@ -856,28 +871,5 @@ def compact_if_needed(
     )
     if not plan.compact_recommended:
         return False
-    if plan.kind == "bm25":
-        from chat_data_pipeline_spark.operators.retrieval import (
-            compact_text_index,
-        )
-
-        compact_text_index(spark, index_path, dst_index=dst_index)
-    elif plan.kind == "dedup":
-        from chat_data_pipeline_spark.operators.dedup_store import (
-            compact_dedup_index,
-        )
-
-        compact_dedup_index(spark, index_path, dst_index=dst_index)
-    elif plan.kind == "neardup":
-        from chat_data_pipeline_spark.operators.neardup_store import (
-            compact_neardup_index,
-        )
-
-        compact_neardup_index(spark, index_path, dst_index=dst_index)
-    else:
-        from chat_data_pipeline_spark.operators.similarity import (
-            compact_ivf_index,
-        )
-
-        compact_ivf_index(spark, index_path, dst_index=dst_index)
+    STORE_KINDS[plan.kind].compact(spark, index_path, dst_index=dst_index)
     return True

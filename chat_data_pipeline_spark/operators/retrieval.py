@@ -328,7 +328,7 @@ def read_meta_row(spark, index_path: str):
     fsck/gc/plan chain) starts with exactly this read, so a 5-root fleet
     sweep paid 10 jobs before touching any real artifact.  The meta file
     is one row of flat scalars by construction of all five store writers
-    (``values_df(...).repartition(1)``), so for local roots the part file
+    (``values_df(...).coalesce(1)``), so for local roots the part file
     is read driver-side via pyarrow and wrapped in a ``Row`` with the same
     field order and Python value types the Spark path produced.
 

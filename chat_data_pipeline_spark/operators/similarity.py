@@ -17,7 +17,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from chat_data_pipeline_spark.operators.dedup import connected_components_min_label
 from chat_data_pipeline_spark.operators.retrieval import read_meta_row
 
 
@@ -980,29 +979,6 @@ def embedding_neardup_pairs(
     return src.mapInPandas(
         score_blocks, schema=f"id1 {id_type}, id2 {id_type}, cosine double"
     )
-
-
-def embedding_neardup_dedup(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **kwargs: object,
-) -> DataFrame:
-    """Embedding-cosine near-dedup: min-id survivor per cosine-≥-threshold
-    component (same survivor rule as the MinHash path).
-
-    EAGER: constructing the result executes the pair search (the component
-    search probe-collects its edge set — see
-    ``connected_components_min_label``)."""
-    edges = embedding_neardup_pairs(df, threshold, id_col, vec_col, **kwargs).select(
-        F.col("id1").alias("src"), F.col("id2").alias("dst")
-    )
-    labels = connected_components_min_label(edges)
-    dropped = labels.filter(F.col("label") != F.col("node")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(dropped, on=id_col, how="left_anti")
 
 
 def srp_md5_sign_planes(

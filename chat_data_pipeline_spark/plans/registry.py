@@ -49,51 +49,6 @@ def get_filter(flt: str | FilterSpec, **kwargs: object) -> FilterSpec:
     return spec
 
 
-# Preset bundles (ref:utils.py:53-139) — the reference's ready-made cleaner /
-# filter stacks for response ("output text") and instruction ("input text").
-def get_output_text_cleaners() -> list[str]:
-    # ref:utils.py:53-60
-    return ["fix_utf8_encoding", "normalize_punctuation", "remove_empty_lines"]
-
-
-def get_input_text_cleaners() -> list[str]:
-    # ref:utils.py:63-68
-    return ["fix_utf8_encoding", "normalize_punctuation"]
-
-
-def get_output_text_filters(
-    do_nsfw_filter: bool = True, do_perplexity_filter: bool = False
-) -> list[FilterSpec]:
-    # ref:utils.py:71-107: word count 5-128, completion, char-rep (10, 0.2),
-    # lowercase 0.75, optional nsfw 0.025, optional perplexity 300-10k.
-    specs = [
-        get_filter("check_word_number", min_word_threshold=5, max_word_threshold=128),
-        get_filter("check_completion"),
-        get_filter(
-            "check_char_repetition",
-            char_repetition_len=10,
-            char_repetition_threshold=0.2,
-        ),
-        get_filter("check_lowercase_ratio", lowercase_threshold=0.75),
-    ]
-    if do_nsfw_filter:
-        specs.append(get_filter("check_nsfw_words", flagged_words_threshold=0.025))
-    if do_perplexity_filter:
-        specs.append(
-            get_filter(
-                "check_perplexity",
-                min_perplexity_threshold=300,
-                max_perplexity_threshold=10_000,
-            )
-        )
-    return specs
-
-
-def get_input_text_filters() -> list[FilterSpec]:
-    # ref:utils.py:122-129: lowercase ratio 0.55.
-    return [get_filter("check_lowercase_ratio", lowercase_threshold=0.55)]
-
-
 def get_web_page_cleaners() -> list[str]:
     """Web-scrape preset (round 6, no reference twin): markup off first,
     then the standard text normalization — the order matters because tag

@@ -2222,7 +2222,7 @@ def filter_gender(spark: SparkSession, sf_dir: str) -> DataFrame:
                THEN CAST(length(doc) - length(regexp_replace(doc, '[a-z]', '', 'g')) AS DOUBLE) / length(doc)
                ELSE 0.0 END >= 0.75
     """,
-    "composed native subset of get_output_text_filters (ref:utils.py:71-107) over "
+    "composed native subset of the reference's output-text filter preset (ref:utils.py:71-107) over "
     "discriminating constructed docs — Catalyst fuses all three predicates into one scan",
 )
 def pipeline_output_preset(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -253,26 +253,28 @@ def local_parquet_schema(spark, path: str):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        local = part.toUri().getPath()
-        aschema = pq.read_schema(local)
-        fields = []
-        for f in aschema:
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
-                # nanosAsLong only applies to INT64 TIMESTAMP(NANOS), but
-                # pyarrow reports legacy INT96 timestamps as timestamp[ns]
-                # too (r17 ADVICE): pin to bigint ONLY when no INT96 column
-                # exists in the footer — otherwise fall back to Spark
-                # inference (a wrong-but-non-throwing mapping would never
-                # trigger the fallback and misread at scan time)
-                pf = pq.ParquetFile(local)
-                if any(
-                    pf.schema.column(i).physical_type == "INT96"
-                    for i in range(len(pf.schema))
-                ):
-                    return None
-                fields.append(pa.field(f.name, pa.int64()))
-            else:
-                fields.append(f)
+        # one footer read per call: the arrow schema and the INT96 check
+        # come from the same open file
+        with pq.ParquetFile(part.toUri().getPath()) as pf:
+            aschema = pf.schema_arrow
+            has_int96 = any(
+                pf.schema.column(i).physical_type == "INT96"
+                for i in range(len(pf.schema))
+            )
+        # nanosAsLong only applies to INT64 TIMESTAMP(NANOS), but pyarrow
+        # reports legacy INT96 timestamps as timestamp[ns] too (r17
+        # ADVICE): pin to bigint ONLY when no INT96 column exists in the
+        # footer — otherwise fall back to Spark inference (a
+        # wrong-but-non-throwing mapping would never trigger the fallback
+        # and misread at scan time)
+        if has_int96:
+            return None
+        fields = [
+            pa.field(f.name, pa.int64())
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+            else f
+            for f in aschema
+        ]
         derived = from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=True)
         return _force_nullable(derived)
     except Exception:  # noqa: BLE001 — any surprise: Spark inference

@@ -758,12 +758,32 @@ def _step_lease(spark, store_path: str, kind: str, checkpoint_path: str,
     )
 
 
-def streaming_index_delivery(
+def _leased_foreach_batch(
+    stream: DataFrame, store_path: str, checkpoint_path: str, label: str,
+    mutate, lease_ttl_seconds: int, lease_wait_seconds: float,
+):
+    """Start ``stream`` with a foreachBatch step that runs
+    ``mutate(batch_df, epoch)`` inside the per-trigger writer lease;
+    idle triggers write nothing (no empty ledger entries)."""
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        with _step_lease(batch_df.sparkSession, store_path, label,
+                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
+            mutate(batch_df, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_path)
+        .start()
+    )
+
+
+def streaming_store_delivery(
     stream: DataFrame,
-    index_path: str,
+    store_path: str,
     checkpoint_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     auto_compact_every: int | None = None,
     max_batches: int | None = None,
     max_tombstone_nanos: int | None = None,
@@ -771,405 +791,119 @@ def streaming_index_delivery(
     lease_ttl_seconds: int = 900,
     lease_wait_seconds: float = 120,
 ):
-    """Live corpus → fresh servable BM25 index (r14): each micro-batch
-    becomes ONE ledger-committed delivery via
-    ``extend_text_index(batch_id=f"s{epoch}")``, so a long-running ingest
-    keeps the persisted index current without ever rebuilding.
+    """Live feed → fresh persisted store, for all five store kinds (bm25,
+    ivf, ivfpq, dedup, neardup): each micro-batch becomes ONE
+    ledger-committed delivery through the kind's ``extend`` verb
+    (``maintenance.STORE_KINDS``) with ``batch_id=f"{prefix}{epoch}"``,
+    so a long-running ingest keeps the store current without ever
+    rebuilding.  The kind is read from the store meta once, before the
+    query starts: the base must already exist (the stream only DELIVERS;
+    it never owns the meta), and a meta-less root fails here instead of
+    inside the first trigger.  The vector and signature kinds take their
+    id/vector/text column names from the meta; bm25 reads ``doc_id`` and
+    ``text``.  Every kind assigns/fingerprints/encodes with the store's
+    OWN meta-pinned arithmetic, so the extended store stays
+    probe-compatible by construction.
 
-    Effectively-once on top of the checkpoint's replay — for free, because
+    Effectively-once on top of the checkpoint's replay, for free, because
     it reuses the batch extension contract end to end: a micro-batch
-    replayed after a mid-commit crash overwrites its OWN ``batch=`` hive
-    partitions and re-commits its ledger marker (sketch-store idempotence),
-    and until that marker lands the partial delivery is INVISIBLE to
-    probes, which keep serving the committed batches throughout.  Probes
-    over base + streamed deliveries are bit-identical to a full rebuild
-    over the union (the extension exactness contract, tested).  Pair with
-    ``compact_text_index`` when the accumulated per-trigger batches make
-    the N-way probe merge noticeable, and ``swap_index_alias`` to cut
-    serving over to the compacted root.
+    replayed after a mid-commit crash overwrites its OWN ``batch=``
+    partitions and re-commits its ledger marker, and until that marker
+    lands the partial delivery is INVISIBLE to probes, which keep serving
+    the committed batches throughout.  Probes over base + streamed
+    deliveries are bit-identical to a full build over the union (tested
+    for every kind).
 
-    The index base must exist (``build_text_index`` first) — the stream
-    only DELIVERS; it never owns the meta/coarse structure.
+    ``auto_compact_every`` runs :func:`_maybe_auto_compact` every N
+    epochs, inside the same trigger lease; otherwise compact separately
+    and cut serving over with ``swap_index_alias``.
 
-    ``batch_id_prefix`` scopes this checkpoint's epoch-derived batch ids
-    (``{prefix}{epoch}``).  Epoch counters restart at 0 with a FRESH
-    checkpoint, so restarting a stream with a new checkpoint against a
-    root whose earlier ``s<epoch>`` deliveries were compacted away would
-    collide with SPENT ids — the folded manifest treats those as replays
-    and silently skips them (data loss, WARN-logged only).  Give every
-    checkpoint generation its own prefix (``s2``, ``ingest-b``, ...) and
-    the collision cannot happen; keep it disjoint from the takedown
-    stream's prefix."""
-    from chat_data_pipeline_spark.operators.retrieval import extend_text_index
+    ``batch_id_prefix`` scopes this checkpoint's epoch-derived batch ids.
+    Epoch counters restart at 0 with a FRESH checkpoint, so restarting a
+    stream with a new checkpoint against a root whose earlier
+    ``s<epoch>`` deliveries were compacted away would collide with SPENT
+    ids — the folded manifest treats those as replays and silently skips
+    them (data loss, WARN-logged only).  Give every checkpoint generation
+    its own prefix (``s2``, ``ingest-b``, ...) and keep it disjoint from
+    the takedown stream's."""
+    from chat_data_pipeline_spark.operators.maintenance import (
+        STORE_KINDS,
+        detect_store_kind,
+    )
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # no empty ledger entries for idle triggers
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "bm25-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_text_index(
-                batch_df.select(id_col, text_col),
-                index_path,
-                batch_id=f"{batch_id_prefix}{batch_id}",
-                text_col=text_col,
-                id_col=id_col,
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, index_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
+    kind = detect_store_kind(stream.sparkSession, store_path)
+    extend = STORE_KINDS[kind].extend
 
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    def deliver(batch_df: DataFrame, epoch: int) -> None:
+        extend(batch_df, store_path, batch_id=f"{batch_id_prefix}{epoch}")
+        _maybe_auto_compact(
+            batch_df.sparkSession, store_path, epoch, auto_compact_every,
+            max_batches, max_tombstone_nanos,
+        )
+
+    return _leased_foreach_batch(
+        stream, store_path, checkpoint_path, f"{kind}-delivery", deliver,
+        lease_ttl_seconds, lease_wait_seconds,
     )
 
 
-def streaming_ivf_delivery(
+def streaming_store_takedown(
     stream: DataFrame,
-    index_path: str,
+    store_path: str,
     checkpoint_path: str,
-    auto_compact_every: int | None = None,
-    max_batches: int | None = None,
-    max_tombstone_nanos: int | None = None,
-    batch_id_prefix: str = "s",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """ANN twin of :func:`streaming_index_delivery`: every micro-batch of
-    vectors is assigned with the index's OWN coarse arithmetic (so the
-    extended index stays probe-compatible by construction) and lands as a
-    ledger-committed ``extend_ivf_index`` delivery — same effectively-once
-    replay semantics, same invisible-until-committed crash posture.  The
-    id/vector column names come from the index meta; monitor the live
-    deliveries with ``ivf_index_drift_report`` and repair a drifted
-    quantizer with ``rebuild_ivf_index`` + ``swap_index_alias``.
-    ``batch_id_prefix`` scopes this checkpoint's epoch ids — use a fresh
-    prefix per checkpoint generation so recycled epoch counters can never
-    collide with ids a compaction already spent (see
-    :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.similarity import extend_ivf_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivf-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_ivf_index(
-                batch_df, index_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, index_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def streaming_ivfpq_delivery(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    auto_compact_every: int | None = None,
-    max_batches: int | None = None,
-    max_tombstone_nanos: int | None = None,
-    batch_id_prefix: str = "s",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """Compressed-ANN twin of :func:`streaming_ivf_delivery` (closes the
-    r14 verdict's reachability gap on the newest store): every micro-batch
-    of vectors encodes with the index's OWN meta-pinned md5-PQ arithmetic
-    — coarse assign + per-subspace residual codes — and lands as one
-    ledger-committed ``extend_ivfpq_index`` delivery, so a live embedding
-    feed keeps the codes-only serving store current without ever touching
-    raw-vector storage.  Same effectively-once replay semantics and
-    invisible-until-committed crash posture as the other delivery streams;
-    probes stay bit-identical to the in-flight ``ivf_pq_topk_md5`` twin
-    over the same corpus.  The id/vector column names come from the index
-    meta; the base must exist (``build_ivfpq_index`` first).
-    ``batch_id_prefix``: fresh per checkpoint generation (see
-    :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.similarity import extend_ivfpq_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivfpq-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_ivfpq_index(
-                batch_df, index_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, index_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def streaming_ivfpq_takedown(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    id_col: str = "vec_id",
     batch_id_prefix: str = "t",
     lease_ttl_seconds: int = 900,
     lease_wait_seconds: float = 120,
 ):
-    """Takedown twin for the compressed store: each micro-batch of vector
-    ids lands as one ledger-committed tombstone delivery.  Deletes are
-    flavor-agnostic (:func:`delete_from_ivf_index` tombstones by id for
-    every IVF flavor, md5pq included), so this shares that operator —
-    same ``{prefix}{epoch}`` batch-id discipline as the other takedown
-    streams, disjoint from the delivery stream's prefix; use a fresh
-    prefix per checkpoint generation (see
-    :func:`streaming_index_delivery`).  Compact to make the removals
-    physical."""
-    from chat_data_pipeline_spark.operators.similarity import delete_from_ivf_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivfpq-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_ivf_index(
-                batch_df.sparkSession,
-                index_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def streaming_index_takedown(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    id_col: str = "doc_id",
-    batch_id_prefix: str = "t",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """Live takedown feed → tombstone deliveries (r14): the removal twin of
-    :func:`streaming_index_delivery`.  Each micro-batch of document ids
-    becomes ONE ledger-committed ``delete_from_text_index`` delivery
-    (``batch_id=f"{batch_id_prefix}{epoch}"`` — the prefix keeps takedown
-    ids disjoint from the delivery stream's; use a fresh one per
-    checkpoint generation, see the delivery stream), so a compliance feed
-    (user deletion requests, post-hoc contamination discoveries) keeps the
-    serving index clean without rebuilds.
+    """Live takedown feed → tombstone deliveries, the removal twin of
+    :func:`streaming_store_delivery` for all five store kinds.  ``stream``
+    is the one-column id frame the kind's ``delete`` verb takes; each
+    micro-batch becomes ONE ledger-committed tombstone delivery
+    (``batch_id=f"{batch_id_prefix}{epoch}"`` — keep the prefix disjoint
+    from the delivery stream's, and fresh per checkpoint generation), so
+    a compliance feed (user deletion requests, post-hoc contamination
+    discoveries) keeps every serving store clean without rebuilds.  The
+    column count and the store kind are checked before the query starts.
 
     Effectively-once rides the same two mechanisms as deliveries: a
     replayed micro-batch RECOMPUTES its own victims (its previous
     tombstones are excluded from the already-deleted set) and overwrites
     its own partitions, and a mid-commit crash leaves the delete invisible
     to probes.  Ids already tombstoned by an earlier epoch are excluded up
-    front, so an id reported twice never double-subtracts df/stats.
-
-    Coordination contract: one writer at a time per index root — since
-    r16 ENFORCED by the per-trigger writer lease (``operators/lease.py``):
-    a takedown stream sharing a root with a delivery stream (even a
-    self-compacting one) serializes per micro-batch, and a trigger that
-    cannot get the lease inside ``lease_wait_seconds`` fails the query
-    loudly instead of racing a compaction.  A delivery containing a
+    front, so an id reported twice never double-subtracts.  Compact to
+    make the removals physical; a delivery containing a
     currently-tombstoned id still fails loudly by design (compact first,
-    then re-deliver)."""
-    from chat_data_pipeline_spark.operators.retrieval import delete_from_text_index
+    then re-deliver).
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "bm25-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_text_index(
-                batch_df.sparkSession,
-                index_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    Coordination contract for both stream kinds: one writer at a time per
+    store root, ENFORCED by the per-trigger writer lease
+    (``operators/lease.py``).  A takedown stream sharing a root with a
+    delivery stream (even a self-compacting one) serializes per
+    micro-batch, and a trigger that cannot get the lease inside
+    ``lease_wait_seconds`` fails the query loudly instead of racing a
+    compaction."""
+    from chat_data_pipeline_spark.operators.maintenance import (
+        STORE_KINDS,
+        detect_store_kind,
     )
 
+    if len(stream.columns) != 1:
+        raise ValueError(
+            "streaming_store_takedown takes a one-column id stream, got "
+            f"columns {stream.columns}"
+        )
+    kind = detect_store_kind(stream.sparkSession, store_path)
+    delete = STORE_KINDS[kind].delete
 
-def streaming_ivf_takedown(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    id_col: str = "vec_id",
-    batch_id_prefix: str = "t",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """ANN twin of :func:`streaming_index_takedown`: each micro-batch of
-    vector ids lands as one ledger-committed ``delete_from_ivf_index``
-    tombstone delivery — same effectively-once replay semantics, same
-    invisible-until-committed crash posture, no global statistics to
-    adjust.  ``batch_id_prefix``: fresh per checkpoint generation (see
-    :func:`streaming_index_delivery`).  Compact or rebuild to make the
-    removals physical."""
-    from chat_data_pipeline_spark.operators.similarity import delete_from_ivf_index
+    def take_down(batch_df: DataFrame, epoch: int) -> None:
+        delete(
+            batch_df.sparkSession, store_path, batch_df,
+            batch_id=f"{batch_id_prefix}{epoch}",
+        )
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, index_path, "ivf-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_ivf_index(
-                batch_df.sparkSession,
-                index_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def streaming_neardup_store_delivery(
-    stream: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    auto_compact_every: int | None = None,
-    max_batches: int | None = None,
-    max_tombstone_nanos: int | None = None,
-    batch_id_prefix: str = "s",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """Live deliveries into the persisted SRP-LSH embedding near-dup store
-    (r15): each micro-batch of (id, vector) rows fingerprints ONCE with
-    the store meta's pinned sign planes and lands as one ledger-committed
-    ``extend_neardup_index`` delivery — the semantic-reference set future
-    onboarding runs probe grows continuously, same effectively-once
-    replay semantics and invisible-until-committed crash posture as the
-    other four stores' delivery streams.  Takedowns are
-    :func:`streaming_neardup_store_takedown` (keep its prefix disjoint
-    from this stream's ``batch_id_prefix``, itself fresh per checkpoint
-    generation — see :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.neardup_store import (
-        extend_neardup_index,
-    )
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "neardup-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_neardup_index(
-                batch_df, store_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, store_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def streaming_neardup_store_takedown(
-    stream: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    id_col: str = "vec_id",
-    batch_id_prefix: str = "t",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """Takedown twin for the embedding near-dup store (r16 — completes
-    the delivery/takedown matrix across all five persisted stores): each
-    micro-batch of reference ids lands as one ledger-committed
-    ``delete_from_neardup_index`` tombstone delivery, so a taken-down
-    item stops subtracting semantic near-copies of content that no
-    longer exists, live.  Same effectively-once replay semantics,
-    invisible-until-committed crash posture, per-trigger writer lease
-    and ``batch_id_prefix`` discipline as the other takedown streams;
-    compact to make the removals physical."""
-    from chat_data_pipeline_spark.operators.neardup_store import (
-        delete_from_neardup_index,
-    )
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "neardup-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_neardup_index(
-                batch_df.sparkSession,
-                store_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def streaming_dedup_store_takedown(
-    stream: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    id_col: str = "doc_id",
-    batch_id_prefix: str = "t",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """Takedown twin for the persisted MinHash signature store (r16):
-    each micro-batch of reference doc ids lands as one ledger-committed
-    ``delete_from_dedup_index`` tombstone delivery — a taken-down
-    document stops subtracting lexical near-copies at the next
-    onboarding probe, without a store rebuild.  Same effectively-once
-    replay semantics, invisible-until-committed crash posture,
-    per-trigger writer lease and ``batch_id_prefix`` discipline as the
-    other takedown streams; compact to make the removals physical."""
-    from chat_data_pipeline_spark.operators.dedup_store import (
-        delete_from_dedup_index,
-    )
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "dedup-takedown",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            delete_from_dedup_index(
-                batch_df.sparkSession,
-                store_path,
-                batch_df.select(id_col),
-                batch_id=f"{batch_id_prefix}{batch_id}",
-            )
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    return _leased_foreach_batch(
+        stream, store_path, checkpoint_path, f"{kind}-takedown", take_down,
+        lease_ttl_seconds, lease_wait_seconds,
     )
 
 
@@ -1206,49 +940,6 @@ def streaming_query_serving(
         # replay overwrites its OWN epoch dir only (writing through the
         # root with static overwrite would replace the whole result log)
         out.write.mode("overwrite").parquet(f"{results_path}/epoch={batch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def streaming_dedup_store_delivery(
-    stream: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    auto_compact_every: int | None = None,
-    max_batches: int | None = None,
-    max_tombstone_nanos: int | None = None,
-    batch_id_prefix: str = "s",
-    lease_ttl_seconds: int = 900,
-    lease_wait_seconds: float = 120,
-):
-    """Live signature deliveries into the persisted MinHash store (r14):
-    each micro-batch of curated documents fingerprints ONCE — with the
-    store meta's pinned family/params — and lands as one ledger-committed
-    ``extend_dedup_index`` delivery, so the reference set future onboarding
-    runs probe grows continuously.  Same effectively-once replay semantics
-    and invisible-until-committed crash posture as the BM25/IVF delivery
-    streams; the column names come from the store meta.  Takedowns are
-    :func:`streaming_dedup_store_takedown` (keep its prefix disjoint
-    from this stream's ``batch_id_prefix``, itself fresh per checkpoint
-    generation — see :func:`streaming_index_delivery`)."""
-    from chat_data_pipeline_spark.operators.dedup_store import extend_dedup_index
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with _step_lease(batch_df.sparkSession, store_path, "dedup-delivery",
-                         checkpoint_path, lease_ttl_seconds, lease_wait_seconds):
-            extend_dedup_index(
-                batch_df, store_path, batch_id=f"{batch_id_prefix}{batch_id}"
-            )
-            _maybe_auto_compact(
-                batch_df.sparkSession, store_path, batch_id, auto_compact_every,
-                max_batches, max_tombstone_nanos,
-            )
 
     return (
         stream.writeStream.foreachBatch(step)

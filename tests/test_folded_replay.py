@@ -187,7 +187,7 @@ def test_streaming_delivery_with_auto_compact(spark, docs, tmp_path):
     probes equal a direct build over the union and the ledger stays
     single-batch under a tight budget."""
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_index_delivery,
+        streaming_store_delivery,
     )
 
     base = docs.filter(F.col("doc_id") % 4 == 0)
@@ -204,7 +204,7 @@ def test_streaming_delivery_with_auto_compact(spark, docs, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_index_delivery(
+    q = streaming_store_delivery(
         stream, idx, str(tmp_path / "auto_ckpt"),
         auto_compact_every=1, max_batches=1,
     )
@@ -255,7 +255,7 @@ def test_fresh_checkpoint_prefix_avoids_spent_id_collision(spark, docs, tmp_path
     checkpoint generation; prove the parameter exists end-to-end and that
     the prefixed generation actually lands."""
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_index_delivery,
+        streaming_store_delivery,
     )
 
     idx = str(tmp_path / "prefix_live")
@@ -270,7 +270,7 @@ def test_fresh_checkpoint_prefix_avoids_spent_id_collision(spark, docs, tmp_path
             .option("maxFilesPerTrigger", 1)
             .parquet(str(feed) + "/*")
         )
-        q = streaming_index_delivery(
+        q = streaming_store_delivery(
             stream, idx, str(tmp_path / ckpt_name), batch_id_prefix=prefix
         )
         try:

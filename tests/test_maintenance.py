@@ -51,6 +51,53 @@ def test_detect_store_kind_all_four(spark, docs, emb, tmp_path):
     assert MT.detect_store_kind(spark, d) == "dedup"
 
 
+def _build_half(kind, docs, emb, path):
+    """Base over the even-id half of the kind's corpus; returns the odd
+    half, the extension frame."""
+    from chat_data_pipeline_spark.operators import neardup_store as NS
+
+    src, id_col = (docs, "doc_id") if kind in ("bm25", "dedup") else (emb, "vec_id")
+    base = src.filter(F.col(id_col) % 2 == 0)
+    if kind == "bm25":
+        RT.build_text_index(base, path)
+    elif kind == "ivf":
+        SIM.build_ivf_index(base, path, n_centroids=16, coarse="md5", dim=64)
+    elif kind == "ivfpq":
+        SIM.build_ivfpq_index(base, path, n_centroids=16, m=8, n_codewords=16, dim=64)
+    elif kind == "dedup":
+        DS.build_dedup_index(base, path, family="md5")
+    else:
+        NS.build_neardup_index(base, path, n_planes=4, n_tables=4, dim=64)
+    return src.filter(F.col(id_col) % 2 == 1)
+
+
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "ivfpq", "dedup", "neardup"])
+def test_store_kinds_dispatch_every_kind(spark, docs, emb, tmp_path, kind):
+    """Every kind reaches its verbs through ``STORE_KINDS``: an extension
+    delivered via the table, a CLI snapshot whose plan equals the
+    source's, and a threshold-0 ``compact_if_needed`` that folds the
+    extension into the base without changing ``live_units``."""
+    from chat_data_pipeline_spark.cli import _run_indexing
+
+    path = str(tmp_path / f"dispatch_{kind}")
+    ext = _build_half(kind, docs, emb, path)
+    assert MT.store_kind_and_meta(spark, path)[0] == kind
+    assert set(MT.STORE_KINDS) == {"bm25", "ivf", "ivfpq", "dedup", "neardup"}
+    MT.STORE_KINDS[kind].extend(ext, path, batch_id="e1")
+    assert RT._committed_batches(spark, path) == ["base", "e1"]
+    plan = MT.maintenance_plan_values(spark, path)
+
+    clone = str(tmp_path / f"dispatch_{kind}_clone")
+    _run_indexing(
+        spark, None, {kind: {"path": path, "action": "snapshot", "dst_path": clone}}
+    )
+    assert MT.maintenance_plan_values(spark, clone) == plan
+
+    assert MT.compact_if_needed(spark, path, max_batches=0)
+    assert RT._committed_batches(spark, path) == ["base"]
+    assert MT.maintenance_plan_values(spark, path).live_units == plan.live_units
+
+
 def test_maintenance_plan_bm25_exact_numbers(spark, docs, tmp_path):
     idx = str(tmp_path / "plan_bm25")
     n = docs.count()

@@ -232,7 +232,7 @@ def test_cli_neardup_lifecycle_and_semantic_onboarding(spark, emb, tmp_path):
 
 def test_streaming_neardup_delivery_stream_equals_batch(spark, emb, tmp_path):
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_neardup_store_delivery,
+        streaming_store_delivery,
     )
 
     store = str(tmp_path / "live_nd")
@@ -249,7 +249,7 @@ def test_streaming_neardup_delivery_stream_equals_batch(spark, emb, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_neardup_store_delivery(stream, store, str(tmp_path / "ckpt_nd"))
+    q = streaming_store_delivery(stream, store, str(tmp_path / "ckpt_nd"))
     try:
         q.processAllAvailable()
     finally:

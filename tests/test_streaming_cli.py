@@ -1549,7 +1549,7 @@ def test_cli_index_alias_cutover(spark, tmp_path):
     )
 
 
-def test_streaming_index_delivery_stream_equals_batch(spark, tmp_path):
+def test_store_delivery_bm25_stream_equals_batch(spark, tmp_path):
     """r14: a live feed keeps the persisted BM25 index fresh — each
     micro-batch is one ledger-committed delivery, and probes over
     base + streamed deliveries are bit-identical to a fresh build over
@@ -1560,7 +1560,7 @@ def test_streaming_index_delivery_stream_equals_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from chat_data_pipeline_spark.operators import retrieval as RT
-    from chat_data_pipeline_spark.streaming.pipeline import streaming_index_delivery
+    from chat_data_pipeline_spark.streaming.pipeline import streaming_store_delivery
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     idx = str(tmp_path / "live_bm25")
@@ -1580,7 +1580,7 @@ def test_streaming_index_delivery_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_index_delivery(
+    q = streaming_store_delivery(
         stream, idx, str(tmp_path / "ckpt_live_bm25")
     )
     try:
@@ -1598,14 +1598,14 @@ def test_streaming_index_delivery_stream_equals_batch(spark, tmp_path):
     ) == sorted(map(tuple, RT.bm25_topk_indexed(spark, fresh, terms).collect()))
 
 
-def test_streaming_ivf_delivery_stream_equals_batch(spark, tmp_path):
+def test_store_delivery_ivf_stream_equals_batch(spark, tmp_path):
     """ANN twin: streamed vector deliveries assign with the index's own
     coarse arithmetic, so probes equal a direct build over the union."""
     from pyspark.sql import functions as F
 
     from chat_data_pipeline_spark.operators import retrieval as RT
     from chat_data_pipeline_spark.operators import similarity as SIM
-    from chat_data_pipeline_spark.streaming.pipeline import streaming_ivf_delivery
+    from chat_data_pipeline_spark.streaming.pipeline import streaming_store_delivery
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     idx = str(tmp_path / "live_ivf")
@@ -1625,7 +1625,7 @@ def test_streaming_ivf_delivery_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_ivf_delivery(stream, idx, str(tmp_path / "ckpt_live_ivf"))
+    q = streaming_store_delivery(stream, idx, str(tmp_path / "ckpt_live_ivf"))
     try:
         q.processAllAvailable()
     finally:
@@ -1773,8 +1773,7 @@ def test_streaming_takedown_stream_equals_batch(spark, tmp_path):
     from chat_data_pipeline_spark.operators import retrieval as RT
     from chat_data_pipeline_spark.operators import similarity as SIM
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_index_takedown,
-        streaming_ivf_takedown,
+        streaming_store_takedown,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
@@ -1794,7 +1793,7 @@ def test_streaming_takedown_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_index_takedown(stream, idx, str(tmp_path / "ckpt_take"))
+    q = streaming_store_takedown(stream, idx, str(tmp_path / "ckpt_take"))
     try:
         q.processAllAvailable()
     finally:
@@ -1829,7 +1828,7 @@ def test_streaming_takedown_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(vfeed) + "/*")
     )
-    vq = streaming_ivf_takedown(vstream, ivf, str(tmp_path / "ckpt_vtake"))
+    vq = streaming_store_takedown(vstream, ivf, str(tmp_path / "ckpt_vtake"))
     try:
         vq.processAllAvailable()
     finally:
@@ -1846,6 +1845,53 @@ def test_streaming_takedown_stream_equals_batch(spark, tmp_path):
     ) == sorted(
         map(tuple, SIM.ivf_topk_persisted(spark, vfresh, queries, k=10, n_probe=4).collect())
     )
+
+
+def test_store_takedown_rejects_multi_column_stream_before_start(spark, tmp_path):
+    """A takedown stream IS the one-column id frame the delete verbs take;
+    a wider stream fails at construction, before any query starts."""
+    from chat_data_pipeline_spark.operators import retrieval as RT
+    from chat_data_pipeline_spark.streaming.pipeline import (
+        streaming_store_takedown,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    idx = str(tmp_path / "guard_take_bm25")
+    RT.build_text_index(docs, idx)
+    feed = tmp_path / "guard_take_feed"
+    feed.mkdir()
+    docs.limit(3).repartition(1).write.parquet(str(feed / "f1.parquet"))
+    stream = spark.readStream.schema(docs.schema).parquet(str(feed) + "/*")
+    ckpt = tmp_path / "guard_take_ckpt"
+    n_active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="one-column"):
+        streaming_store_takedown(stream, idx, str(ckpt))
+    assert len(spark.streams.active) == n_active
+    assert not ckpt.exists()
+    assert RT._committed_batches(spark, idx) == ["base"]
+
+
+def test_store_delivery_on_metaless_root_fails_at_construction(spark, tmp_path):
+    """The store kind is read once, before ``.start()``: a root without
+    meta (never built, or mid-rebuild) fails when the stream is built,
+    not inside its first trigger."""
+    from chat_data_pipeline_spark.streaming.pipeline import (
+        streaming_store_delivery,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    root = tmp_path / "metaless_root"
+    root.mkdir()
+    feed = tmp_path / "metaless_feed"
+    feed.mkdir()
+    docs.limit(3).repartition(1).write.parquet(str(feed / "f1.parquet"))
+    stream = spark.readStream.schema(docs.schema).parquet(str(feed) + "/*")
+    ckpt = tmp_path / "metaless_ckpt"
+    n_active = len(spark.streams.active)
+    with pytest.raises(Exception, match="meta"):
+        streaming_store_delivery(stream, str(root), str(ckpt))
+    assert len(spark.streams.active) == n_active
+    assert not ckpt.exists()
 
 
 def test_cli_dedup_store_and_onboard_block(spark, tmp_path):
@@ -1923,13 +1969,13 @@ def test_cli_dedup_store_and_onboard_block(spark, tmp_path):
         _run_indexing(spark, df, {"dedup": {"path": store, "action": "probe"}})
 
 
-def test_streaming_dedup_store_delivery_stream_equals_batch(spark, tmp_path):
+def test_store_delivery_dedup_stream_equals_batch(spark, tmp_path):
     """r14: streamed signature deliveries — probes of the stream-grown store
     equal a store built directly over the union."""
     from chat_data_pipeline_spark.operators import dedup_store as DS
     from chat_data_pipeline_spark.operators import retrieval as RT
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_dedup_store_delivery,
+        streaming_store_delivery,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
@@ -1945,7 +1991,7 @@ def test_streaming_dedup_store_delivery_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_dedup_store_delivery(stream, store, str(tmp_path / "ckpt_sigs"))
+    q = streaming_store_delivery(stream, store, str(tmp_path / "ckpt_sigs"))
     try:
         q.processAllAvailable()
     finally:
@@ -1998,7 +2044,7 @@ def test_onboard_block_does_not_clobber_colliding_columns(spark, tmp_path):
     assert "__onboard_id__" not in out.columns
 
 
-def test_streaming_ivfpq_delivery_and_takedown_stream_equals_batch(spark, tmp_path):
+def test_store_delivery_and_takedown_ivfpq_stream_equals_batch(spark, tmp_path):
     """r15: the compressed store's live lifecycle — streamed vector
     deliveries encode with the index's own meta-pinned md5-PQ arithmetic
     and streamed takedowns tombstone by id, so probes afterwards are
@@ -2008,8 +2054,8 @@ def test_streaming_ivfpq_delivery_and_takedown_stream_equals_batch(spark, tmp_pa
     from chat_data_pipeline_spark.operators import retrieval as RT
     from chat_data_pipeline_spark.operators import similarity as SIM
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_ivfpq_delivery,
-        streaming_ivfpq_takedown,
+        streaming_store_delivery,
+        streaming_store_takedown,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -2031,7 +2077,7 @@ def test_streaming_ivfpq_delivery_and_takedown_stream_equals_batch(spark, tmp_pa
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_ivfpq_delivery(stream, idx, str(tmp_path / "ckpt_live_pq"))
+    q = streaming_store_delivery(stream, idx, str(tmp_path / "ckpt_live_pq"))
     try:
         q.processAllAvailable()
     finally:
@@ -2050,7 +2096,7 @@ def test_streaming_ivfpq_delivery_and_takedown_stream_equals_batch(spark, tmp_pa
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tfeed) + "/*")
     )
-    tq = streaming_ivfpq_takedown(tstream, idx, str(tmp_path / "ckpt_take_pq"))
+    tq = streaming_store_takedown(tstream, idx, str(tmp_path / "ckpt_take_pq"))
     try:
         tq.processAllAvailable()
     finally:
@@ -2344,8 +2390,7 @@ def test_streaming_store_takedowns_stream_equals_batch(spark, tmp_path):
     from chat_data_pipeline_spark.operators import dedup_store as DS
     from chat_data_pipeline_spark.operators import neardup_store as NS
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_dedup_store_takedown,
-        streaming_neardup_store_takedown,
+        streaming_store_takedown,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
@@ -2365,7 +2410,7 @@ def test_streaming_store_takedowns_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_dedup_store_takedown(stream, store, str(tmp_path / "sig_ckpt"))
+    q = streaming_store_takedown(stream, store, str(tmp_path / "sig_ckpt"))
     try:
         q.processAllAvailable()
     finally:
@@ -2403,7 +2448,7 @@ def test_streaming_store_takedowns_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(vfeed) + "/*")
     )
-    vq = streaming_neardup_store_takedown(
+    vq = streaming_store_takedown(
         vstream, vstore, str(tmp_path / "vec_ckpt")
     )
     try:

@@ -88,7 +88,7 @@ def test_contended_stream_fails_loudly_not_silently(spark, docs, tmp_path):
     writer HOLDS the root, a takedown stream trigger must fail its query
     loudly — never tombstone behind the holder's back."""
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_index_takedown,
+        streaming_store_takedown,
     )
 
     idx = str(tmp_path / "held_idx")
@@ -105,7 +105,7 @@ def test_contended_stream_fails_loudly_not_silently(spark, docs, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_index_takedown(
+    q = streaming_store_takedown(
         stream, idx, str(tmp_path / "held_ckpt"), lease_wait_seconds=1
     )
     try:
@@ -128,8 +128,8 @@ def test_delivery_with_auto_compact_and_takedown_share_a_root(
     final probes equal a direct build over exactly (base + deliveries -
     victims), with nothing folded-but-unspent."""
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_index_delivery,
-        streaming_index_takedown,
+        streaming_store_delivery,
+        streaming_store_takedown,
     )
 
     idx = str(tmp_path / "shared_root")
@@ -159,11 +159,11 @@ def test_delivery_with_auto_compact_and_takedown_share_a_root(
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tfeed) + "/*")
     )
-    dq = streaming_index_delivery(
+    dq = streaming_store_delivery(
         dstream, idx, str(tmp_path / "dckpt"),
         auto_compact_every=1, max_batches=1,
     )
-    tq = streaming_index_takedown(tstream, idx, str(tmp_path / "tckpt"))
+    tq = streaming_store_takedown(tstream, idx, str(tmp_path / "tckpt"))
     try:
         dq.processAllAvailable()
         tq.processAllAvailable()
@@ -429,8 +429,7 @@ def test_new_takedown_twins_fail_loudly_when_root_held(spark, docs, tmp_path):
     from chat_data_pipeline_spark.operators import dedup_store as DS
     from chat_data_pipeline_spark.operators import neardup_store as NS
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_dedup_store_takedown,
-        streaming_neardup_store_takedown,
+        streaming_store_takedown,
     )
 
     # dedup-store twin
@@ -447,7 +446,7 @@ def test_new_takedown_twins_fail_loudly_when_root_held(spark, docs, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed) + "/*")
     )
-    q = streaming_dedup_store_takedown(
+    q = streaming_store_takedown(
         stream, store, str(tmp_path / "held_sig_ckpt"), lease_wait_seconds=1
     )
     try:
@@ -486,7 +485,7 @@ def test_new_takedown_twins_fail_loudly_when_root_held(spark, docs, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(vfeed) + "/*")
     )
-    vq = streaming_neardup_store_takedown(
+    vq = streaming_store_takedown(
         vstream, vstore, str(tmp_path / "held_vec_ckpt"), lease_wait_seconds=1
     )
     try:
@@ -504,7 +503,7 @@ def test_two_takedown_streams_share_one_root(spark, docs, tmp_path):
     via the lease; after both drain, probes equal a direct build over
     the corpus minus BOTH victim sets, and no lease is left behind."""
     from chat_data_pipeline_spark.streaming.pipeline import (
-        streaming_index_takedown,
+        streaming_store_takedown,
     )
 
     idx = str(tmp_path / "twin_take_root")
@@ -521,10 +520,10 @@ def test_two_takedown_streams_share_one_root(spark, docs, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(feed) + "/*")
         )
-    qa = streaming_index_takedown(
+    qa = streaming_store_takedown(
         feeds[0], idx, str(tmp_path / "tckpt_a"), batch_id_prefix="ta"
     )
-    qb = streaming_index_takedown(
+    qb = streaming_store_takedown(
         feeds[1], idx, str(tmp_path / "tckpt_b"), batch_id_prefix="tb"
     )
     try:
