@@ -466,7 +466,7 @@ def _finish_with_alias(spark: SparkSession, spec: dict, action: str) -> None:
     whatever old root dst_path still names."""
     if not spec.get("alias"):
         return
-    from chat_data_pipeline_spark.operators.retrieval import swap_index_alias
+    from chat_data_pipeline_spark.operators.store import swap_index_alias
 
     dst = str(spec["dst_path"]) if spec.get("dst_path") else None
     final = (
@@ -1163,9 +1163,7 @@ def _serve_root(spark: SparkSession, spec: dict, kind: str) -> str:
     if bool(spec.get("path")) == bool(spec.get("alias")):
         raise ValueError(f"serve.{kind} needs exactly one of `path` or `alias`")
     if spec.get("alias"):
-        from chat_data_pipeline_spark.operators.retrieval import (
-            resolve_index_alias,
-        )
+        from chat_data_pipeline_spark.operators.store import resolve_index_alias
 
         return resolve_index_alias(spark, str(spec["alias"]))
     return str(spec["path"])

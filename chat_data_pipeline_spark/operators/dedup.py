@@ -398,6 +398,7 @@ def minhash_dedup(
     start_time = time.time()
     timers: dict[str, float] = {}
 
+    t0 = time.time()
     drop_id = id_col is None
     if drop_id:
         id_col = _ID
@@ -408,41 +409,12 @@ def minhash_dedup(
         df = df.withColumn(id_col, F.monotonically_increasing_id()).localCheckpoint(
             eager=True
         )
-
-    t0 = time.time()
-    B, R = optimal_param(threshold, num_perm)
-    hashranges = [(i * R, (i + 1) * R) for i in range(B)]
-    permutations = _permutations(num_perm, seed)
     timers["load_dataset"] = time.time() - t0
 
-    # --- D1-D3 fingerprint (Arrow-batched; permutation table ships in the
-    # UDF closure — 256×2×8 bytes) -----------------------------------------
+    # --- D1-D3 fingerprint --------------------------------------------------
     t0 = time.time()
-
-    def fingerprint_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            sigs = [
-                minhash_signature(
-                    content if content is not None else "",
-                    num_perm,
-                    ngram_size,
-                    min_ngram_size,
-                    permutations,
-                    hashranges,
-                )
-                for content in batch[column]
-            ]
-            yield pd.DataFrame({"id": batch[id_col], "sigs": sigs})
-
-    from chat_data_pipeline_spark.session import repartition_for_compute
-
-    # id type derives from the input (string doc ids are common) — a
-    # hardcoded bigint would miscast or fail at runtime.
-    id_type = dict(df.dtypes)[id_col]
-    fingerprints = repartition_for_compute(df.select(id_col, column)).mapInPandas(
-        fingerprint_batches, schema=f"id {id_type}, sigs array<binary>"
+    fingerprints = minhash_sha1_fingerprints(
+        df, column, id_col, ngram_size, num_perm, threshold, min_ngram_size, seed
     )
     if verbose:
         # materialize the stage so the timer measures execution, not lazy
@@ -473,7 +445,16 @@ def minhash_dedup(
     return result.drop(_ID) if drop_id else result
 
 
-def minhash_bands(
+def _sha1_banding(
+    num_perm: int, threshold: float, seed: int
+) -> tuple[list[tuple[int, int]], np.ndarray]:
+    """(band hashranges, permutation table) of the sha1 family — the
+    datasketch-optimal (B, R) banding and the seeded permutations."""
+    B, R = optimal_param(threshold, num_perm)
+    return [(i * R, (i + 1) * R) for i in range(B)], _permutations(num_perm, seed)
+
+
+def minhash_sha1_fingerprints(
     df: DataFrame,
     column: str,
     id_col: str,
@@ -483,13 +464,12 @@ def minhash_bands(
     min_ngram_size: int = 5,
     seed: int = SEED,
 ) -> DataFrame:
-    """``(id, band, sig)`` LSH band signatures — the fingerprint+banding
-    stage of :func:`minhash_dedup` exposed standalone so the incremental /
-    streaming dedup (streaming/pipeline.py) shares the exact same
-    signature math (same permutations, same optimal (B,R), same bytes)."""
-    B, R = optimal_param(threshold, num_perm)
-    hashranges = [(i * R, (i + 1) * R) for i in range(B)]
-    permutations = _permutations(num_perm, seed)
+    """``(id, sigs array<binary>)`` fingerprints of the production sha1
+    family — the ONE copy of the D1-D3 arithmetic (Arrow-batched; the
+    permutation table ships in the UDF closure, 256×2×8 bytes) behind
+    :func:`minhash_dedup`, :func:`minhash_bands` and the persisted
+    signature store."""
+    hashranges, permutations = _sha1_banding(num_perm, threshold, seed)
 
     def fingerprint_batches(
         batches: Iterator[pd.DataFrame],
@@ -510,11 +490,57 @@ def minhash_bands(
 
     from chat_data_pipeline_spark.session import repartition_for_compute
 
+    # id type derives from the input (string doc ids are common) — a
+    # hardcoded bigint would miscast or fail at runtime.
     id_type = dict(df.dtypes)[id_col]
-    fingerprints = repartition_for_compute(df.select(id_col, column)).mapInPandas(
+    return repartition_for_compute(df.select(id_col, column)).mapInPandas(
         fingerprint_batches, schema=f"id {id_type}, sigs array<binary>"
     )
-    return fingerprints.select("id", F.posexplode("sigs").alias("band", "sig"))
+
+
+def minhash_bands(
+    df: DataFrame,
+    column: str,
+    id_col: str,
+    ngram_size: int = 5,
+    num_perm: int = 256,
+    threshold: float = 0.7,
+    min_ngram_size: int = 5,
+    seed: int = SEED,
+) -> DataFrame:
+    """``(id, band, sig)`` LSH band signatures — the fingerprint+banding
+    stage of :func:`minhash_dedup` exposed standalone so the incremental /
+    streaming dedup (streaming/pipeline.py) shares the exact same
+    signature math (same permutations, same optimal (B,R), same bytes)."""
+    return minhash_sha1_fingerprints(
+        df, column, id_col, ngram_size, num_perm, threshold, min_ngram_size, seed
+    ).select("id", F.posexplode("sigs").alias("band", "sig"))
+
+
+def cross_corpus_bands_sha1(
+    df: DataFrame,
+    column: str,
+    id_col: str,
+    ngram_size: int = 5,
+    num_perm: int = 256,
+    threshold: float = 0.7,
+    min_ngram_size: int = 5,
+    seed: int = SEED,
+) -> DataFrame:
+    """``(id, band, sig)`` cross-corpus postings of the sha1 family: the
+    :func:`minhash_bands` rows minus the all-MAX_HASH sentinel bands of
+    shingle-less docs — one short reference doc would otherwise
+    band-collide with EVERY short new doc and silently subtract them all
+    (content-free deletions).  The sentinel (a pure function of the
+    parameters) is excluded on both sides of every cross-corpus probe —
+    the in-flight filter and the persisted signature store alike."""
+    hashranges, permutations = _sha1_banding(num_perm, threshold, seed)
+    sentinel = minhash_signature(
+        "", num_perm, ngram_size, min_ngram_size, permutations, hashranges
+    )
+    return minhash_bands(
+        df, column, id_col, ngram_size, num_perm, threshold, min_ngram_size, seed
+    ).filter(~F.col("sig").isin([bytes(s) for s in sentinel]))
 
 
 def md5_perm_hash(p: int, s: Column) -> Column:
@@ -1072,6 +1098,22 @@ def source_similarity_matrix(
     )
 
 
+def cross_corpus_bands_md5(
+    df: DataFrame,
+    column: str,
+    id_col: str,
+    ngram_size: int = 5,
+    num_perm: int = 16,
+    num_bands: int = 4,
+) -> DataFrame:
+    """``(id, band, sig)`` cross-corpus postings of the md5 family (the
+    in-flight filter and the persisted signature store alike).
+    Shingle-less docs emit no rows by construction."""
+    return minhash_md5_fingerprints(
+        df, column, id_col, ngram_size, num_perm, num_bands
+    ).select("id", F.posexplode("sigs").alias("band", "sig"))
+
+
 def _cross_corpus_filter_from_bands(
     new_df: DataFrame,
     new_bands: DataFrame,
@@ -1120,22 +1162,17 @@ def cross_corpus_minhash_filter(
     reference would band-collide with EVERY short new doc and silently
     subtract them all — content-free deletions.  The sentinel band
     signatures (a pure function of the parameters) are therefore excluded
-    from both postings: shingle-less new docs always survive, matching the
-    md5 twin's contract (whose fingerprint build skips them entirely)."""
-    nb = minhash_bands(
-        new_df, column, id_col, ngram_size, num_perm, threshold, min_ngram_size, seed
-    )
-    rb = minhash_bands(
-        ref_df, column, id_col, ngram_size, num_perm, threshold, min_ngram_size, seed
-    )
-    B, R = optimal_param(threshold, num_perm)
-    hashranges = [(i * R, (i + 1) * R) for i in range(B)]
-    sentinel = minhash_signature(
-        "", num_perm, ngram_size, min_ngram_size, _permutations(num_perm, seed), hashranges
-    )
-    not_sentinel = ~F.col("sig").isin([bytes(s) for s in sentinel])
+    from both postings (:func:`cross_corpus_bands_sha1`): shingle-less new
+    docs always survive, matching the md5 twin's contract (whose
+    fingerprint build skips them entirely)."""
+
+    def bands(df: DataFrame) -> DataFrame:
+        return cross_corpus_bands_sha1(
+            df, column, id_col, ngram_size, num_perm, threshold, min_ngram_size, seed
+        )
+
     return _cross_corpus_filter_from_bands(
-        new_df, nb.filter(not_sentinel), rb.filter(not_sentinel), id_col
+        new_df, bands(new_df), bands(ref_df), id_col
     )
 
 
@@ -1155,10 +1192,9 @@ def cross_corpus_minhash_filter_md5(
     have no posting rows and always survive — both engines encode that."""
 
     def bands(df: DataFrame) -> DataFrame:
-        fp = minhash_md5_fingerprints(
+        return cross_corpus_bands_md5(
             df, column, id_col, ngram_size, num_perm, num_bands
         )
-        return fp.select("id", F.posexplode("sigs").alias("band", "sig"))
 
     return _cross_corpus_filter_from_bands(
         new_df, bands(new_df), bands(ref_df), id_col

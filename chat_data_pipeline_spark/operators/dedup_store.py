@@ -10,7 +10,7 @@ crawl arrives.  This store persists the exploded ``(id, band, sig)``
 postings once and lets every onboarding run probe them, giving the dedup
 family the same build-once / serve-many lifecycle the BM25 and IVF indexes
 already have — including the ledger, tombstones, compaction and crash
-posture, which are shared code (operators/retrieval.py).
+posture, which are shared code (operators/store.py).
 
 Layout::
 
@@ -41,25 +41,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chat_data_pipeline_spark.operators.retrieval import (
-    _committed_batches,
-    read_meta_row,
-    _fold_manifest_forward,
-    _fs_for,
-    _guard_batch_id_kind,
-    _guard_delivery_id_type,
-    _guard_spent_batch_id,
-    _guard_tombstoned_delivery,
-    _tombstoned_ids,
-    cluster_for_partitioned_write,
-    folded_clear,
-    invalidate_index_meta,
-    ledger_commit,
-    ledger_reset,
-    validate_batch_id,
-)
+from chat_data_pipeline_spark.operators import dedup as D
+from chat_data_pipeline_spark.operators import store as ST
+from chat_data_pipeline_spark.session import values_df
 
 SEED = 42
+DEDUP_META = (
+    "family string, ngram_size int, num_perm int, num_bands int, "
+    "threshold double, min_ngram_size int, seed int, "
+    "id_type string, sig_type string, text_col string, id_col string"
+)
 
 
 def _params_from_meta(meta) -> dict:
@@ -75,74 +66,36 @@ def _params_from_meta(meta) -> dict:
 
 
 def _bands_for(df: DataFrame, column: str, id_col: str, m: dict) -> DataFrame:
-    """(id, band, sig) postings under the store's pinned fingerprint family.
-
-    sha1 family: the all-MAX_HASH sentinel of shingle-less docs is excluded
-    on BOTH sides (store write and probe) — one short reference doc would
-    otherwise band-collide with every short new doc and silently subtract
-    them all (the same guard :func:`dedup.cross_corpus_minhash_filter`
-    documents).  The md5 family skips shingle-less docs by construction."""
-    from chat_data_pipeline_spark.operators import dedup as D
-
+    """(id, band, sig) postings under the store's pinned fingerprint family
+    — the same cross-corpus builders :func:`dedup.cross_corpus_minhash_filter`
+    and its md5 twin use, sentinel exclusion included."""
     if m["family"] == "md5":
-        fp = D.minhash_md5_fingerprints(
+        return D.cross_corpus_bands_md5(
             df, column, id_col, m["ngram_size"], m["num_perm"], m["num_bands"]
         )
-        return fp.select("id", F.posexplode("sigs").alias("band", "sig"))
     if m["family"] != "sha1":
         raise ValueError(f"family must be 'md5' or 'sha1', got {m['family']!r}")
-    bands = D.minhash_bands(
-        df,
-        column,
-        id_col,
-        m["ngram_size"],
-        m["num_perm"],
-        m["threshold"],
-        m["min_ngram_size"],
-        m["seed"],
+    return D.cross_corpus_bands_sha1(
+        df, column, id_col, m["ngram_size"], m["num_perm"], m["threshold"],
+        m["min_ngram_size"], m["seed"],
     )
-    B, R = D.optimal_param(m["threshold"], m["num_perm"])
-    hashranges = [(i * R, (i + 1) * R) for i in range(B)]
-    sentinel = D.minhash_signature(
-        "",
-        m["num_perm"],
-        m["ngram_size"],
-        m["min_ngram_size"],
-        D._permutations(m["num_perm"], m["seed"]),
-        hashranges,
-    )
-    return bands.filter(~F.col("sig").isin([bytes(s) for s in sentinel]))
 
 
-def _write_dedup_base(
-    spark, index_path: str, bands: DataFrame, meta_row, clear_folded: bool = True
+def _commit_dedup_base(
+    spark, index_path: str, bands: DataFrame, meta_row: tuple, fold=None
 ) -> None:
-    """Base write with the shared crash posture: meta deleted FIRST (the
-    whole (re)build window is meta-less — probes of a partial root fail
-    loudly), tombstones cleared inside that window, band-clustered salted
-    postings written through the root (clearing stale extension batches,
-    static overwrite pinned), ledger reset, meta written LAST as the
-    commit marker."""
-    invalidate_index_meta(spark, index_path)
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    fs.delete(tpath, True)
-    if clear_folded:
-        folded_clear(spark, index_path)
-    cluster_for_partitioned_write(
-        bands.withColumn("batch", F.lit("base")), ["band"], F.col("sig")
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "band").parquet(f"{index_path}/bands")
-    ledger_reset(spark, index_path)
-    from chat_data_pipeline_spark.session import values_df
+    """Band-clustered salted postings written through the root under
+    ``batch=base`` (clearing stale extension batches, static overwrite
+    pinned), inside :func:`store.commit_base`'s crash posture."""
 
-    values_df(
-        spark,
-        [meta_row],
-        "family string, ngram_size int, num_perm int, num_bands int, "
-        "threshold double, min_ngram_size int, seed int, "
-        "id_type string, sig_type string, text_col string, id_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+    def write() -> None:
+        ST.cluster_for_partitioned_write(
+            bands.withColumn("batch", F.lit("base")), ["band"], F.col("sig")
+        ).write.mode("overwrite").option(
+            "partitionOverwriteMode", "static"
+        ).partitionBy("batch", "band").parquet(f"{index_path}/bands")
+
+    ST.commit_base(spark, index_path, write, DEDUP_META, meta_row, fold=fold)
 
 
 def build_dedup_index(
@@ -180,7 +133,7 @@ def build_dedup_index(
     bands = _bands_for(df.select(id_col, column), column, id_col, m)
     id_type = dict(df.dtypes)[id_col]
     sig_type = "string" if family == "md5" else "binary"
-    _write_dedup_base(
+    _commit_dedup_base(
         spark,
         index_path,
         bands,
@@ -209,63 +162,21 @@ def extend_dedup_index(
     meta read per delivery, not two).  Replay overwrites its own
     partition and re-commits; a delivery containing a tombstoned id is
     refused until compaction (same contract as the other indexes)."""
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
+    opened = ST.open_extension(df, index_path, batch_id, id_col)
+    if opened is None:
         return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
-    )
-    meta = read_meta_row(spark, index_path)
+    batch_id, meta, df, id_col = opened
     column = column or meta.text_col
-    id_col = id_col or meta.id_col
-    _guard_delivery_id_type(df, id_col, meta.id_type, index_path)
-    _guard_tombstoned_delivery(df.select(id_col), index_path, id_col)
     bands = _bands_for(
-        df.select(id_col, column), column, id_col,
-        _params_from_meta(meta),
+        df.select(id_col, column), column, id_col, _params_from_meta(meta)
     )
-    cluster_for_partitioned_write(bands, ["band"], F.col("sig")).write.mode(
+    ST.cluster_for_partitioned_write(bands, ["band"], F.col("sig")).write.mode(
         "overwrite"
     ).option("partitionOverwriteMode", "static").partitionBy("band").parquet(
         f"{index_path}/bands/batch={batch_id}"
     )
     # commit marker LAST: a crashed delivery stays invisible to probes
-    ledger_commit(spark, index_path, batch_id)
-
-
-def delete_from_dedup_index(
-    spark,
-    index_path: str,
-    ids: DataFrame,
-    batch_id: int | str,
-) -> None:
-    """Tombstone-delete reference documents from the store — a taken-down
-    doc must stop subtracting near-duplicates from future onboarding runs
-    (its content is gone, so new near-copies are no longer duplicates of
-    anything).  The store keeps per-id posting rows precisely so this is
-    an id-level operation: one ledger-committed tombstone set that probes
-    anti-join before the (band, sig) keys are formed; no additive state to
-    adjust.  Compaction makes it physical and clears the set."""
-    batch_id = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
-        return  # folded replay: the victims are already physically gone
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "bands", "delete", "extension"
-    )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    want = ids.select(
-        F.col(ids.columns[0]).cast(meta.id_type).alias("doc")
-    ).distinct()
-    tomb = _tombstoned_ids(
-        spark, index_path, meta.id_type, committed, exclude_batch=batch_id
-    )
-    if tomb is not None:
-        want = want.join(tomb, "doc", "left_anti")
-        want = want.localCheckpoint(eager=True)  # write overwrites a read root
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    ledger_commit(spark, index_path, batch_id)
+    ST.ledger_commit(df.sparkSession, index_path, batch_id)
 
 
 def _committed_bands(
@@ -278,13 +189,13 @@ def _committed_bands(
     listings would otherwise be folded into the rewritten base without
     being marked spent in the folded manifest."""
     if committed is None:
-        committed = _committed_batches(spark, index_path)
+        committed = ST.committed_batches(spark, index_path)
     ref = (
         spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
         .parquet(f"{index_path}/bands")
         .filter(F.col("batch").isin(committed))
     )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
+    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
     if tomb is not None:
         ref = ref.join(tomb.withColumnRenamed("doc", "id"), "id", "left_anti")
     return ref
@@ -303,20 +214,16 @@ def filter_against_dedup_index(
     the point of persisting), one distinct over the store keys, one
     (band, sig) semi-join, one anti-join back — bit-identical to
     :func:`dedup.cross_corpus_minhash_filter` / ``_md5`` over the union of
-    live reference batches (tested)."""
-    meta = read_meta_row(spark, index_path)
+    live reference batches (tested) — it runs that filter's own
+    downstream over the stored reference postings."""
+    meta = ST.read_meta_row(spark, index_path)
     column = column or meta.text_col
     id_col = id_col or meta.id_col
-    ref_keys = _committed_bands(spark, index_path, meta).select("band", "sig").distinct()
+    ref = _committed_bands(spark, index_path, meta)
     nb = _bands_for(
         new_df.select(id_col, column), column, id_col, _params_from_meta(meta)
     )
-    hits = (
-        nb.join(ref_keys, ["band", "sig"], "left_semi")
-        .select(F.col("id").alias(id_col))
-        .distinct()
-    )
-    return new_df.join(hits, id_col, "left_anti")
+    return D._cross_corpus_filter_from_bands(new_df, nb, ref, id_col)
 
 
 def compact_dedup_index(spark, index_path: str, dst_index: str | None = None) -> None:
@@ -326,29 +233,20 @@ def compact_dedup_index(spark, index_path: str, dst_index: str | None = None) ->
     layout, not content).  ``dst_index=None`` compacts in place (eager
     checkpoint pins the postings before the overwrite); a 100 TB
     deployment passes ``dst_index`` and swaps probes over
-    (``retrieval.swap_index_alias`` works here too — resolution only needs
+    (``store.swap_index_alias`` works here too — resolution only needs
     the root's meta)."""
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     bands = _committed_bands(spark, index_path, meta, committed).select(
         "id", "sig", "band"
     )
     if dst_index is None:
         bands = bands.localCheckpoint(eager=True)
         dst_index = index_path
-    # spent-id manifest BEFORE the rewrite (see retrieval.folded_record)
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    _write_dedup_base(
-        spark,
-        dst_index,
-        bands,
-        (
-            meta.family, int(meta.ngram_size), int(meta.num_perm),
-            int(meta.num_bands), float(meta.threshold),
-            int(meta.min_ngram_size), int(meta.seed),
-            meta.id_type, meta.sig_type, meta.text_col, meta.id_col,
-        ),
-        clear_folded=False,
+    # the meta carries forward unchanged; the spent-id manifest lands
+    # BEFORE the rewrite (see store.commit_base)
+    _commit_dedup_base(
+        spark, dst_index, bands, tuple(meta), fold=(index_path, committed)
     )
 
 
@@ -367,8 +265,8 @@ def dedup_store_health(spark, index_path: str) -> DataFrame:
 
     Scale shape: one map-side-combined count agg over the postings plus an
     id-sized tombstone count; O(batches) output rows."""
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     bands = (
         spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
         .parquet(f"{index_path}/bands")
@@ -379,7 +277,7 @@ def dedup_store_health(spark, index_path: str) -> DataFrame:
             F.countDistinct("id").cast("long").alias("n_ids"),
         )
     )
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
+    fs, tpath, _jvm = ST.fs_for(spark, f"{index_path}/tombstones")
     if fs.exists(tpath):
         tombs = (
             spark.read.schema(f"doc {meta.id_type}")
@@ -389,8 +287,6 @@ def dedup_store_health(spark, index_path: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_tombstones"))
         )
     else:
-        from chat_data_pipeline_spark.session import values_df
-
         tombs = values_df(spark, [], "batch string, n_tombstones long")
     out = bands.join(tombs, "batch", "full_outer")
     return out.fillna(

@@ -96,9 +96,9 @@ class LeaseLostError(RuntimeError):
 
 
 def _lease_paths(spark, root: str):
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for
+    from chat_data_pipeline_spark.operators.store import fs_for
 
-    fs, lock, jvm = _fs_for(spark, f"{root}/_writer_lease/LOCK")
+    fs, lock, jvm = fs_for(spark, f"{root}/_writer_lease/LOCK")
     owner_path = jvm.org.apache.hadoop.fs.Path(f"{root}/_writer_lease/owner")
     return fs, lock, owner_path, jvm
 

@@ -32,6 +32,7 @@ from chat_data_pipeline_spark.operators import dedup_store as DS
 from chat_data_pipeline_spark.operators import neardup_store as NS
 from chat_data_pipeline_spark.operators import retrieval as RT
 from chat_data_pipeline_spark.operators import similarity as SIM
+from chat_data_pipeline_spark.operators import store as ST
 
 # Row factories for the driver-side "values" forms below (r17): each
 # maintenance verb computes plain Python values, so callers that consume
@@ -92,7 +93,7 @@ def store_kind_and_meta(spark, index_path: str):
     maintenance plan, the serve engine's per-arm validation) pay ONE meta
     read per root instead of detect-then-re-read — per-micro-batch cost
     on ``streaming_query_serving``."""
-    meta = RT.read_meta_row(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
     if meta is None:
         # a parquet footer with zero rows (crash between file creation and
         # row flush) must fail as loudly as a missing/unknown meta
@@ -132,27 +133,30 @@ class StoreKind(NamedTuple):
 
 # The ONE kind -> verb table: streams, CLI blocks, takedown fan-out and
 # maintenance all dispatch through it.  Insertion order is the order a
-# multi-kind ``index:`` block runs in.  IVF deletes and compaction are
-# flavor-agnostic, so ivf and ivfpq share them.
+# multi-kind ``index:`` block runs in.  IVF compaction is flavor-agnostic,
+# so ivf and ivfpq share it; every kind without additive statistics
+# shares the id-set delete (bm25 subtracts its globals instead), whose
+# cross-kind batch-id guard probes the kind's residency subdir — an
+# artifact every extension of the kind writes.
 STORE_KINDS: dict[str, StoreKind] = {
     "bm25": StoreKind(
         RT.extend_text_index, RT.delete_from_text_index,
         RT.compact_text_index, ("doclens", "doc"),
     ),
     "ivf": StoreKind(
-        SIM.extend_ivf_index, SIM.delete_from_ivf_index,
+        SIM.extend_ivf_index, ST.tombstone_delete,
         SIM.compact_ivf_index, ("postings", None),
     ),
     "ivfpq": StoreKind(
-        SIM.extend_ivfpq_index, SIM.delete_from_ivf_index,
+        SIM.extend_ivfpq_index, ST.tombstone_delete,
         SIM.compact_ivf_index, ("postings", None),
     ),
     "dedup": StoreKind(
-        DS.extend_dedup_index, DS.delete_from_dedup_index,
+        DS.extend_dedup_index, ST.tombstone_delete,
         DS.compact_dedup_index, ("bands", "id"),
     ),
     "neardup": StoreKind(
-        NS.extend_neardup_index, NS.delete_from_neardup_index,
+        NS.extend_neardup_index, ST.tombstone_delete,
         NS.compact_neardup_index, ("vectors", "id"),
     ),
 }
@@ -168,7 +172,7 @@ def _count_committed(spark, index_path: str, sub: str, committed: list[str]) -> 
     artifact directory does not exist.  Parquet ``count()`` resolves from
     file-footer row counts — a metadata operation, no data scan — so this
     stays cheap on a corpus-sized postings table."""
-    fs, path, _jvm = RT._fs_for(spark, f"{index_path}/{sub}")
+    fs, path, _jvm = ST.fs_for(spark, f"{index_path}/{sub}")
     if not fs.exists(path):
         return 0
     # partition-column-only explicit schema (r17): the count resolves
@@ -248,19 +252,13 @@ def maintenance_plan_values(
     # verb (r17; the store_kind_and_meta docstring's posture extended
     # across operators)
     kind, meta = kind_meta or store_kind_and_meta(spark, index_path)
-    committed = RT._committed_batches(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     n_batches = len(committed)
 
-    # every meta pins id_type except pre-r15 ivf/ivfpq roots, which fall
-    # back to inferring it from the BASE partition only — inferring over
-    # the whole postings tree would touch the footers of a crashed
-    # uncommitted delivery's partial files (the exact hazard the
-    # explicit-schema reads below guard against; the base is complete by
-    # construction, its commit marker being the meta write)
-    id_type = meta.asDict().get("id_type") or dict(
-        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-    )[meta.id_col]
-    tomb = RT._tombstoned_ids(spark, index_path, id_type, committed)
+    # base-partition-pinned for pre-r15 roots: the same crashed-delivery
+    # footer hazard the explicit-schema reads below guard against
+    id_type = ST.meta_id_type(spark, index_path, meta)
+    tomb = ST.tombstoned_ids(spark, index_path, id_type, committed)
 
     # the residency artifact: one id row (or a known multiple) per stored
     # unit, positive deliveries only — deletes write none of these
@@ -320,7 +318,7 @@ def maintenance_plan_values(
         from concurrent.futures import ThreadPoolExecutor
 
         def _bm25_live() -> int:
-            fs, spath, _jvm = RT._fs_for(spark, f"{index_path}/stats")
+            fs, spath, _jvm = ST.fs_for(spark, f"{index_path}/stats")
             if not fs.exists(spath):
                 return 0
             return int(
@@ -486,8 +484,8 @@ def gc_debris_values(
     import time
 
     kind, _meta = kind_meta or store_kind_and_meta(spark, index_path)
-    committed = set(RT._committed_batches(spark, index_path))
-    fs, root, _jvm = RT._fs_for(spark, index_path)
+    committed = set(ST.committed_batches(spark, index_path))
+    fs, root, _jvm = ST.fs_for(spark, index_path)
     horizon_ms = int(time.time() * 1000) - int(grace_seconds) * 1000
     removed = kept = tmp_removed = 0
     for st in fs.listStatus(root):
@@ -596,9 +594,9 @@ def snapshot_store(
 
     Returns one row: ``(kind, n_batches, batch_dirs_copied, subtrees)``."""
     kind, _meta = store_kind_and_meta(spark, src_index)
-    committed = RT._committed_batches(spark, src_index)
+    committed = ST.committed_batches(spark, src_index)
     cset = set(committed)
-    fs, src, jvm = RT._fs_for(spark, src_index)
+    fs, src, jvm = ST.fs_for(spark, src_index)
     dst = jvm.org.apache.hadoop.fs.Path(dst_index)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     futil = jvm.org.apache.hadoop.fs.FileUtil
@@ -663,7 +661,7 @@ def snapshot_store(
         subtrees += 1 if copied_here else 0
     for bid in committed:
         if bid != "base":
-            RT.ledger_commit(spark, dst_index, bid)
+            ST.ledger_commit(spark, dst_index, bid)
     # meta LAST — the commit marker
     futil.copy(
         fs, jvm.org.apache.hadoop.fs.Path(f"{src_index}/meta"), fs,
@@ -751,9 +749,9 @@ def fsck_store_values(
             "unknown", False, 0, 0, 0, 0, 0, 0, False, False, 0, "corrupt"
         )
 
-    committed = RT._committed_batches(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     cset = set(committed)
-    fs, root, jvm = RT._fs_for(spark, index_path)
+    fs, root, jvm = ST.fs_for(spark, index_path)
 
     seen_ids: set[str] = set()
     orphans = tmp_dirs = 0
@@ -777,7 +775,7 @@ def fsck_store_values(
                 orphans += 1
     missing = len(cset - seen_ids)
 
-    ext_ids, del_ids = RT.folded_ids(spark, index_path)
+    ext_ids, del_ids = ST.folded_ids(spark, index_path)
     folded = set(ext_ids) | set(del_ids)
     overlap = len(folded & cset)
 

@@ -41,24 +41,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chat_data_pipeline_spark.operators.retrieval import (
-    _committed_batches,
-    read_meta_row,
-    _fold_manifest_forward,
-    _fs_for,
-    _guard_batch_id_kind,
-    _guard_delivery_id_type,
-    _guard_spent_batch_id,
-    _guard_tombstoned_delivery,
-    _tombstoned_ids,
-    cluster_for_partitioned_write,
-    committed_tree,
-    invalidate_index_meta,
-    ledger_commit,
-    ledger_reset,
-    validate_batch_id,
-)
+from chat_data_pipeline_spark.operators import store as ST
 from chat_data_pipeline_spark.operators.similarity import srp_md5_sign_planes
+from chat_data_pipeline_spark.session import values_df
+
+NEARDUP_META = (
+    "n_planes int, n_tables int, dim int, threshold double, "
+    "id_type string, id_col string, vec_col string"
+)
 
 
 def _srp_bucket_udf(n_planes: int, n_tables: int, dim: int):
@@ -122,7 +112,7 @@ def _write_batch(
     from concurrent.futures import ThreadPoolExecutor
 
     def _w_post():
-        cluster_for_partitioned_write(posting, ["t"], F.col("b")).write.mode(
+        ST.cluster_for_partitioned_write(posting, ["t"], F.col("b")).write.mode(
             "overwrite"
         ).option("partitionOverwriteMode", "static").partitionBy("t").parquet(
             f"{index_path}/postings/{batch_dir}"
@@ -185,30 +175,29 @@ def build_neardup_index(
         n_planes = 4 + max(0, int(math.floor(math.log2(max(n, 1) / 500.0))))
     buckets = _srp_bucket_udf(int(n_planes), int(n_tables), int(dim))
     posting = base.select("id", F.posexplode(buckets(F.col("v"))).alias("t", "b"))
-    vectors = base
-    invalidate_index_meta(spark, index_path)
-    # a REBUILD clears stale extension batches, tombstones and the
-    # spent-id manifest inside the meta-less window (probes reject the
-    # root until meta lands LAST; a fresh world makes old ids reusable)
-    for _sub in ("postings", "vectors", "tombstones", "folded"):
-        _fs, _p, _jvm = _fs_for(spark, f"{index_path}/{_sub}")
-        _fs.delete(_p, True)
-    # the batch level is the hive DIRECTORY (batch=base), same as every
-    # extension delivery — one read of postings/ sees base + extensions
-    _write_batch(index_path, "batch=base", posting, vectors)
-    ledger_reset(spark, index_path)
-    id_type = dict(df.dtypes)[id_col]
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
-        spark,
-        [(
+    _commit_neardup_base(
+        spark, index_path, posting, base,
+        (
             int(n_planes), int(n_tables), int(dim), float(threshold),
-            id_type, id_col, vec_col,
-        )],
-        "n_planes int, n_tables int, dim int, threshold double, "
-        "id_type string, id_col string, vec_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+            dict(df.dtypes)[id_col], id_col, vec_col,
+        ),
+    )
+
+
+def _commit_neardup_base(
+    spark, index_path: str, posting: DataFrame, vectors: DataFrame,
+    meta_row: tuple, fold=None,
+) -> None:
+    """Base postings + verify vectors under :func:`store.commit_base`.  The
+    batch level is the hive DIRECTORY (``batch=base``), same as every
+    extension delivery — one read of postings/ sees base + extensions —
+    so the stale extension dirs of both trees are cleared inside the
+    meta-less window rather than overwritten through the root."""
+    ST.commit_base(
+        spark, index_path,
+        lambda: _write_batch(index_path, "batch=base", posting, vectors),
+        NEARDUP_META, meta_row, clear=("postings", "vectors"), fold=fold,
+    )
 
 
 def extend_neardup_index(
@@ -222,69 +211,18 @@ def extend_neardup_index(
     meta-pinned planes, ledger-committed, replay-idempotent,
     tombstone-guarded and id-type-guarded like every other store
     delivery.  ``id_col``/``vec_col`` override the meta column names."""
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
-        return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
+    opened = ST.open_extension(
+        df, index_path, batch_id, id_col, vec_col, vec_base=("vectors", "v")
     )
-    meta = read_meta_row(spark, index_path)
-    if id_col or vec_col:
-        df = df.select(
-            F.col(id_col or meta.id_col).alias(meta.id_col),
-            F.col(vec_col or meta.vec_col).alias(meta.vec_col),
-        )
-    _guard_delivery_id_type(df, meta.id_col, meta.id_type, index_path)
-    _guard_tombstoned_delivery(df.select(meta.id_col), index_path, meta.id_col)
-    # normalize the delivery's vector type to the BASE's (r17, same as
-    # extend_ivf_index): a widened delivery would land a physically
-    # heterogeneous vectors tree, which the schema-pinned loads refuse
-    base_vec_type = dict(
-        spark.read.parquet(f"{index_path}/vectors/batch=base").dtypes
-    ).get("v")
-    if (
-        base_vec_type is not None
-        and dict(df.dtypes)[meta.vec_col] != base_vec_type
-    ):
-        df = df.withColumn(meta.vec_col, F.col(meta.vec_col).cast(base_vec_type))
+    if opened is None:
+        return  # folded replay: the base already holds this delivery
+    batch_id, meta, df, id_col = opened
     posting, vectors = _postings_and_vectors(
-        df, meta.id_col, meta.vec_col,
+        df, id_col, meta.vec_col,
         int(meta.n_planes), int(meta.n_tables), int(meta.dim),
     )
     _write_batch(index_path, f"batch={batch_id}", posting, vectors)
-    ledger_commit(spark, index_path, batch_id)
-
-
-def delete_from_neardup_index(
-    spark,
-    index_path: str,
-    ids: DataFrame,
-    batch_id: int | str,
-) -> None:
-    """Tombstone-delete reference embeddings — a taken-down item must stop
-    subtracting semantic near-copies of content that no longer exists.
-    Same ledger-committed id-set shape as the other stores' deletes; no
-    additive state to adjust; compaction makes it physical."""
-    batch_id = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
-        return  # folded replay: the victims are already physically gone
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "postings", "delete", "extension"
-    )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    want = ids.select(
-        F.col(ids.columns[0]).cast(meta.id_type).alias("doc")
-    ).distinct()
-    tomb = _tombstoned_ids(
-        spark, index_path, meta.id_type, committed, exclude_batch=batch_id
-    )
-    if tomb is not None:
-        want = want.join(tomb, "doc", "left_anti")
-        want = want.localCheckpoint(eager=True)
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    ledger_commit(spark, index_path, batch_id)
+    ST.ledger_commit(df.sparkSession, index_path, batch_id)
 
 
 def compact_neardup_index(
@@ -295,19 +233,19 @@ def compact_neardup_index(
     together so the verify side can never dangle.  Same in-place
     (checkpoint-pinned) vs write-then-swap (``dst_index``) split as the
     other stores' compactors."""
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     posting = (
-        committed_tree(spark, index_path, "postings")
+        ST.committed_tree(spark, index_path, "postings")
         .filter(F.col("batch").isin(committed))
         .select("id", "t", "b")
     )
     vectors = (
-        committed_tree(spark, index_path, "vectors")
+        ST.committed_tree(spark, index_path, "vectors")
         .filter(F.col("batch").isin(committed))
         .select("id", "v")
     )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
+    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
     if tomb is not None:
         dead = tomb.withColumnRenamed("doc", "id")
         posting = posting.join(dead, "id", "left_anti")
@@ -316,28 +254,13 @@ def compact_neardup_index(
         posting = posting.localCheckpoint(eager=True)
         vectors = vectors.localCheckpoint(eager=True)
         dst_index = index_path
-    # spent-id manifest BEFORE the rewrite (see retrieval.folded_record)
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    invalidate_index_meta(spark, dst_index)
-    # stale extension dirs + tombstones cleared inside the meta-less
-    # window (the in-place inputs are pinned by the eager checkpoints;
-    # the folded manifest written above survives — it must)
-    for _sub in ("postings", "vectors", "tombstones"):
-        _fs, _p, _jvm = _fs_for(spark, f"{dst_index}/{_sub}")
-        _fs.delete(_p, True)
-    _write_batch(dst_index, "batch=base", posting, vectors)
-    ledger_reset(spark, dst_index)
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
-        spark,
-        [(
-            int(meta.n_planes), int(meta.n_tables), int(meta.dim),
-            float(meta.threshold), meta.id_type, meta.id_col, meta.vec_col,
-        )],
-        "n_planes int, n_tables int, dim int, threshold double, "
-        "id_type string, id_col string, vec_col string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{dst_index}/meta")
+    # the in-place inputs are pinned by the eager checkpoints, so the
+    # base commit may clear the trees they were read from; the meta
+    # carries forward unchanged
+    _commit_neardup_base(
+        spark, dst_index, posting, vectors, tuple(meta),
+        fold=(index_path, committed),
+    )
 
 
 def matched_against_neardup_index(
@@ -360,21 +283,21 @@ def matched_against_neardup_index(
 
     ``_meta``: a caller that already read the store meta Row passes it
     through (one meta read per probe, not one per layer — r17)."""
-    meta = _meta or read_meta_row(spark, index_path)
+    meta = _meta or ST.read_meta_row(spark, index_path)
     nid = id_col or meta.id_col
     nvec = vec_col or meta.vec_col
-    committed = _committed_batches(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     ref_post = (
-        committed_tree(spark, index_path, "postings")
+        ST.committed_tree(spark, index_path, "postings")
         .filter(F.col("batch").isin(committed))
         .select(F.col("id").alias("rid"), "t", "b")
     )
     ref_vecs = (
-        committed_tree(spark, index_path, "vectors")
+        ST.committed_tree(spark, index_path, "vectors")
         .filter(F.col("batch").isin(committed))
         .select(F.col("id").alias("rid"), F.col("v").alias("__rv__"))
     )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
+    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
     if tomb is not None:
         dead = tomb.withColumnRenamed("doc", "rid")
         ref_post = ref_post.join(dead, "rid", "left_anti")
@@ -461,7 +384,7 @@ def filter_against_neardup_index(
     joins sized by the collisions — bit-identical to the in-flight
     ``embedding_neardup_pairs_srp_md5`` arithmetic restricted to
     cross-corpus pairs (the registered row value-hashes it)."""
-    meta = read_meta_row(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
     nid = id_col or meta.id_col
     matched = matched_against_neardup_index(
         spark, index_path, new_df, id_col=id_col, vec_col=vec_col, _meta=meta
@@ -491,8 +414,8 @@ def neardup_store_health(spark, index_path: str) -> DataFrame:
     Scale shape: two map-side-combined count aggs (posting footer
     metadata + vector rows) plus an id-sized tombstone count; O(batches)
     output rows."""
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     posts = (
         spark.read.schema(f"id {meta.id_type}, b long")
         .parquet(f"{index_path}/postings")
@@ -507,7 +430,7 @@ def neardup_store_health(spark, index_path: str) -> DataFrame:
         .groupBy(F.col("batch").cast("string").alias("batch"))
         .agg(F.count("*").cast("long").alias("n_ids"))
     )
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
+    fs, tpath, _jvm = ST.fs_for(spark, f"{index_path}/tombstones")
     if fs.exists(tpath):
         tombs = (
             spark.read.schema(f"doc {meta.id_type}")
@@ -517,8 +440,6 @@ def neardup_store_health(spark, index_path: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_tombstones"))
         )
     else:
-        from chat_data_pipeline_spark.session import values_df
-
         tombs = values_df(spark, [], "batch string, n_tombstones long")
     out = posts.join(vecs, "batch", "full_outer").join(tombs, "batch", "full_outer")
     return out.fillna(

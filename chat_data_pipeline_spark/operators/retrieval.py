@@ -30,13 +30,12 @@ the displayed score rounds to 6 decimals.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.functions import text as T
+from chat_data_pipeline_spark.operators import store as ST
+from chat_data_pipeline_spark.session import values_df
 
 
 def bm25_scores(
@@ -149,57 +148,7 @@ def top_ngrams(
 # listing: a 5-term probe touches ≤5 of n_term_buckets partition dirs).
 
 N_TERM_BUCKETS = 64
-
-# Write-salt for bucket-clustered index writes.  Clustering on the partition
-# column alone bounds the FILE count to O(buckets) — but it also bounds the
-# WRITE-TASK count to the number of distinct bucket values, so a corpus-sized
-# postings table funnels through ≤ N_TERM_BUCKETS (=64) tasks no matter how
-# many executors the cluster has: invisible at sf0.1, the named scale-killer
-# at 100 TB.  Salting the repartition keeps files at O(buckets × salt) while
-# the write stage scales with the salt (raise it with the cluster size).
-WRITE_SALT = 8
-
-_BATCH_ID_RE = re.compile(r"^[A-Za-z0-9._-]+$")
-
-
-def validate_batch_id(batch_id: int | str) -> str:
-    """Reject batch ids that would corrupt the hive layout: ``'base'`` would
-    silently overwrite the base build, and path separators / ``=`` / spaces
-    would break ``batch=<id>`` partition-directory parsing."""
-    s = str(batch_id)
-    if s == "base":
-        raise ValueError(
-            "batch_id 'base' is reserved for the index's base build; "
-            "pick a distinct delivery id"
-        )
-    if not _BATCH_ID_RE.match(s):
-        raise ValueError(
-            f"batch_id {s!r} is not a safe partition value "
-            "(allowed: letters, digits, '.', '_', '-')"
-        )
-    return s
-
-
-def cluster_for_partitioned_write(
-    df: DataFrame, part_cols: list[str], salt_expr, write_salt: int = WRITE_SALT
-) -> DataFrame:
-    """Cluster rows ahead of a hive-partitioned write so the file count
-    stays O(dirs × write_salt) while write parallelism scales with
-    ``write_salt``, DECOUPLED from the partition-dir count.
-
-    A bare ``repartition(part_cols)`` gives O(dirs) files but also caps the
-    write stage at #dirs non-empty tasks; adding a hashed salt column to the
-    shuffle key (dropped before the write, so it never reaches the files)
-    spreads each dir's rows over ≤ write_salt tasks."""
-    cols = [F.col(c) for c in part_cols]
-    if write_salt <= 1:
-        return df.repartition(*cols)
-    salt = F.pmod(F.xxhash64(salt_expr), F.lit(int(write_salt)))
-    return (
-        df.withColumn("__wsalt__", salt)
-        .repartition(*cols, F.col("__wsalt__"))
-        .drop("__wsalt__")
-    )
+TEXT_META = "id_type string, n_term_buckets int"
 
 
 def _term_bucket_py(term: str, n_buckets: int = N_TERM_BUCKETS) -> int:
@@ -263,8 +212,6 @@ def build_text_index(
         f_dl = ex.submit(lambda: dlens_src.localCheckpoint(eager=True))
         postings, dlens = f_post.result(), f_dl.result()
     dfreq = postings.groupBy("bkt", "term").agg(F.count("*").alias("df"))
-    from chat_data_pipeline_spark.session import values_df
-
     stats = values_df(
         spark,
         [(int(obs.get["n"] or 0), int(obs.get["s"] or 0))],
@@ -273,17 +220,18 @@ def build_text_index(
     id_type = dict(docs.dtypes)[id_col]
     # salt the bucket-clustered writes so the corpus-sized postings table is
     # written by O(N_TERM_BUCKETS × WRITE_SALT) tasks, not ≤64 (see
-    # WRITE_SALT above); the salt hashes the term so a bucket's rows spread
+    # store.WRITE_SALT); the salt hashes the term so a bucket's rows spread
     # over ≤ WRITE_SALT tasks → ≤ WRITE_SALT files per bkt dir.
     # partitionOverwriteMode is pinned STATIC per-write: under a session
     # configured dynamic, a base rebuild would replace only batch=base and
     # probes would silently keep serving stale extension batches (and a
     # replayed extension would keep stale bkt dirs its new content no
     # longer produces).
-    p_out = cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
-    d_out = cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
+    p_out = ST.cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
+    d_out = ST.cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
     if _clear:  # base build: write through the root, clearing old batches
-        _write_text_base(spark, index_path, p_out, d_out, stats, dlens, id_type)
+        write = _text_base_writer(index_path, p_out, d_out, stats, dlens)
+        ST.commit_base(spark, index_path, write, TEXT_META, (id_type, N_TERM_BUCKETS))
     else:  # extension: overwrite only this delivery's partition
         # the four artifact writes target disjoint paths and share only
         # already-materialized checkpoints — run them concurrently (r17);
@@ -317,135 +265,40 @@ def build_text_index(
         # agreeing, so probes read only ledger-committed batches and a
         # half-delivered batch can't silently skew df against tf.  Replay
         # with the same id overwrites the partial artifacts and re-commits.
-        ledger_commit(spark, index_path, batch_id)
+        ST.ledger_commit(spark, index_path, batch_id)
 
 
-def read_meta_row(spark, index_path: str):
-    """One-row store-meta read with ZERO Spark jobs on ``file:``-scheme
-    roots (r17 optimization).  ``spark.read.parquet(meta).first()`` costs
-    TWO driver-paced jobs — a parquet footer schema-inference job plus the
-    ``executeTake`` — and every store verb (probe, delivery, maintenance,
-    fsck/gc/plan chain) starts with exactly this read, so a 5-root fleet
-    sweep paid 10 jobs before touching any real artifact.  The meta file
-    is one row of flat scalars by construction of all five store writers
-    (``values_df(...).coalesce(1)``), so for local roots the part file
-    is read driver-side via pyarrow and wrapped in a ``Row`` with the same
-    field order and Python value types the Spark path produced.
-
-    Semantics pinned to the old path: a missing/corrupt meta falls back to
-    the Spark read so the error type/message stays identical; a zero-row
-    meta (crash between file creation and row flush) returns ``None``
-    exactly like ``first()``.  Non-local schemes (HDFS/S3A) always take
-    the Spark read — the cost being cut is per-call driver latency, which
-    at cluster scale is the same fixed overhead this removes locally."""
-    try:
-        fs, path, _jvm = _fs_for(spark, f"{index_path}/meta")
-        if fs.getScheme() == "file":
-            import pyarrow.parquet as pq
-
-            parts = sorted(
-                st.getPath().toUri().getPath()
-                for st in fs.listStatus(path)
-                if st.getPath().getName().endswith(".parquet")
-            )
-            if not parts:
-                raise IOError(f"no parquet part files under {index_path}/meta")
-            rows: list[dict] = []
-            for p in parts:
-                rows.extend(pq.read_table(p).to_pylist())
-            if not rows:
-                return None
-            if len(rows) > 1:
-                # metas are one-row by construction of all five store
-                # writers; a non-conforming multi-row meta must take the
-                # Spark path below (r17 ADVICE) — this fast path's
-                # lexicographic part ordering could otherwise silently
-                # pick a different row than Spark's first()
-                raise IOError(f"multi-row meta under {index_path}/meta")
-            from pyspark.sql import Row
-
-            return Row(**rows[0])
-    except Exception:  # noqa: BLE001 — any surprise: identical Spark path
-        pass
-    return spark.read.parquet(f"{index_path}/meta").first()
-
-
-def invalidate_index_meta(spark, index_path: str) -> None:
-    """Delete the index's meta FIRST in every base (re)build / in-place
-    compaction — meta is the build's commit marker (written LAST), and a
-    first build at a fresh path crashes safely because no meta exists yet;
-    but a REBUILD that dies between the postings overwrite and the ledger
-    reset would otherwise leave the OLD meta and OLD ledger intact, so
-    probes would silently merge the partial new base with stale
-    dfreq/stats/extension state (r13 ADVICE).  Deleting meta up front
-    makes the whole rebuild window meta-less: a crash anywhere inside it
-    leaves a root every probe rejects loudly.  Plain Hadoop FS metadata
-    op — milliseconds, never a Spark job."""
-    fs, path, _jvm = _fs_for(spark, f"{index_path}/meta")
-    fs.delete(path, True)
-
-
-def _write_text_base(
-    spark, index_path: str, p_out: DataFrame, d_out: DataFrame,
-    stats: DataFrame, dlens: DataFrame, id_type: str,
-    clear_folded: bool = True,
-) -> None:
-    """Write the four base artifacts through the root (clearing stale
-    extension batches), reset the commit ledger, then write meta LAST as
-    the build's commit marker (same order as build_ivf_index): meta is
-    deleted FIRST (see :func:`invalidate_index_meta`), so a build OR
-    REBUILD that dies midway leaves no meta at all and a probe of the
-    partial root fails loudly instead of reading postings that disagree
-    with stale meta/ledger state.  meta also carries the id type so probes
-    supply EXPLICIT schemas — no footer sampling at read time (on a
-    million-file index, schema inference would open an arbitrary footer
-    per read).
-
-    Tombstones are cleared inside the same meta-less window: a fresh base
-    (or a compaction, which physically drops the tombstoned docs before
-    calling here) starts with no pending deletes by definition, and a
-    crash between the tombstone wipe and the meta write leaves a root
-    probes reject loudly rather than one silently serving un-deleted
-    rows."""
-    invalidate_index_meta(spark, index_path)
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    fs.delete(tpath, True)
-    if clear_folded:
-        # a from-source rebuild starts a new world: old delivery ids are
-        # reusable; a COMPACTION passes clear_folded=False to keep the
-        # spent-id manifest it just wrote
-        folded_clear(spark, index_path)
-    base = F.lit("base")
-    # the four base artifacts land at disjoint paths from already-
-    # materialized checkpoints — write them concurrently (r17, guide §2.6);
-    # crash consistency is unchanged because the whole window is meta-less
-    # (meta deleted above, rewritten LAST below), so partial concurrent
-    # writes leave a root every probe rejects loudly, same as before
-    from concurrent.futures import ThreadPoolExecutor
+def _text_base_writer(
+    index_path: str, p_out: DataFrame, d_out: DataFrame,
+    stats: DataFrame, dlens: DataFrame,
+):
+    """The base's artifact write for :func:`store.commit_base`: the four
+    artifacts land through the root under ``batch=base`` (clearing stale
+    extension batches; static overwrite pinned), concurrently (r17, guide
+    §2.6) — they sit at disjoint paths over already-materialized
+    checkpoints, and the whole write runs inside the meta-less window, so
+    a partial concurrent write leaves a root every probe rejects."""
 
     def _w(df, sub: str, bucketed: bool):
         part_cols = ["batch", "bkt"] if bucketed else ["batch"]
-        df.withColumn("batch", base).write.mode("overwrite").option(
+        df.withColumn("batch", F.lit("base")).write.mode("overwrite").option(
             "partitionOverwriteMode", "static"
         ).partitionBy(*part_cols).parquet(f"{index_path}/{sub}")
 
-    jobs = [
-        (p_out, "postings", True),
-        (d_out, "dfreq", True),
-        (stats, "stats", False),
-        (dlens, "doclens", False),
-    ]
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        for f in [ex.submit(_w, df, sub, b) for df, sub, b in jobs]:
-            f.result()
-    ledger_reset(spark, index_path)
-    from chat_data_pipeline_spark.session import values_df
+    def write() -> None:
+        from concurrent.futures import ThreadPoolExecutor
 
-    # meta via the JVM-local VALUES constructor (r17): the parallelize
-    # path pays a Python-worker round trip per write — one per BUILD
-    values_df(
-        spark, [(id_type, N_TERM_BUCKETS)], "id_type string, n_term_buckets int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+        jobs = [
+            (p_out, "postings", True),
+            (d_out, "dfreq", True),
+            (stats, "stats", False),
+            (dlens, "doclens", False),
+        ]
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            for f in [ex.submit(_w, df, sub, b) for df, sub, b in jobs]:
+                f.result()
+
+    return write
 
 
 def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> None:
@@ -462,11 +315,11 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
     postings to executor-local disk — fine at single-node scale.  A 100 TB
     deployment passes ``dst_index`` instead: the compaction streams into a
     FRESH root with no checkpoint, and the caller swaps probes over to it
-    (write-then-swap, the zero-downtime pattern — :func:`swap_index_alias`
+    (write-then-swap, the zero-downtime pattern — :func:`store.swap_index_alias`
     is that pointer as an operator)."""
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
+    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
     p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
     postings = (
         spark.read.schema(p_schema).parquet(f"{index_path}/postings")
@@ -492,7 +345,7 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
     if tomb is not None:
         # compaction is where deletes become PHYSICAL: tombstoned docs are
         # dropped from the rewritten postings/doclens, their negative
-        # df/stats rows cancel in the net sums above, and _write_text_base
+        # df/stats rows cancel in the net sums above, and the base commit
         # clears the tombstone set itself — after which a previously
         # deleted id may be re-delivered
         postings = postings.join(tomb, "doc", "left_anti")
@@ -509,17 +362,12 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
         F.count("*").cast("long").alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
     )
-    p_out = cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
-    d_out = cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
-    # the folded manifest lands BEFORE the rewrite: a delivery this
-    # compaction folds must read as spent from the moment the compacted
-    # base serves (see folded_record — closes the streaming replay
-    # double-count window); safe even if the rewrite crashes, because the
-    # marked batches are still ledger-committed in the old root
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    _write_text_base(
-        spark, dst_index, p_out, d_out, stats, dlens, meta.id_type,
-        clear_folded=False,
+    p_out = ST.cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
+    d_out = ST.cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
+    write = _text_base_writer(dst_index, p_out, d_out, stats, dlens)
+    ST.commit_base(
+        spark, dst_index, write, TEXT_META, (meta.id_type, N_TERM_BUCKETS),
+        fold=(index_path, committed),
     )
 
 
@@ -543,15 +391,10 @@ def extend_text_index(
     tombstones, then re-deliver.  The guard costs nothing until the index
     has seen a delete (one directory existence check), then one
     delivery-sized semi-join per delivery."""
-    bid = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(docs.sparkSession, index_path, bid, "extension"):
+    opened = ST.open_extension(docs, index_path, batch_id, id_col)
+    if opened is None:
         return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        docs.sparkSession, index_path, bid, "tombstones", "extension", "delete"
-    )
-    meta = read_meta_row(docs.sparkSession, index_path)
-    _guard_delivery_id_type(docs, id_col, meta.id_type, index_path)
-    _guard_tombstoned_delivery(docs, index_path, id_col)
+    bid = opened[0]
     build_text_index(
         docs,
         index_path,
@@ -559,108 +402,6 @@ def extend_text_index(
         id_col,
         batch_id=bid,
         _clear=False,
-    )
-
-
-def _guard_batch_id_kind(
-    spark,
-    index_path: str,
-    batch_id: str,
-    other_kind_dir: str,
-    this_kind: str,
-    other_kind: str,
-) -> None:
-    """Deletes and extensions share one ledger namespace, but replay
-    idempotence is SAME-KIND only: a delete re-using a committed
-    extension's id would statically overwrite that batch's dfreq/stats
-    with the victims' negatives while its postings survived (silently
-    corrupt idf/avgdl); an extension re-using a delete's id would replace
-    the negatives while the tombstones kept hiding live docs.  One FS
-    existence probe on the OTHER kind's batch dir fails the cross-kind
-    reuse loudly — uncommitted remnants count too, since committing this
-    delivery would make the crashed other-kind artifacts visible."""
-    fs, p, _jvm = _fs_for(spark, f"{index_path}/{other_kind_dir}/batch={batch_id}")
-    if fs.exists(p):
-        raise ValueError(
-            f"batch id {batch_id!r} already names a {other_kind} delivery of "
-            f"{index_path}; {this_kind} deliveries must use a distinct id "
-            "(replay idempotence is same-kind only)"
-        )
-
-
-def _guard_delivery_id_type(
-    df: DataFrame, id_col: str, expected: str, index_path: str
-) -> None:
-    """Refuse a delivery whose id column's type differs from the type the
-    store was built with (r14 ADVICE): without this, a wrong-typed
-    extension ledger-commits cleanly and only fails LATER, at probe time,
-    under the meta-pinned explicit read schema — the one delivery guard
-    that didn't share the others' refuse-at-delivery posture.  One dtypes
-    dict lookup; no Spark job."""
-    got = dict(df.dtypes).get(id_col)
-    if got is None:
-        raise ValueError(
-            f"delivery into {index_path}: expected id column {id_col!r} "
-            f"(from the store meta) but the delivered frame has columns "
-            f"{df.columns}; pass the column-name overrides if the frame "
-            "uses its own names"
-        )
-    if got != expected:
-        raise ValueError(
-            f"delivery into {index_path}: id column {id_col!r} has type "
-            f"{got!r} but the store was built with id type {expected!r}; "
-            "cast the delivered ids first (a mismatched delivery would "
-            "commit and only fail later at probe scan time)"
-        )
-
-
-def _guard_tombstoned_delivery(docs: DataFrame, index_path: str, id_col: str) -> None:
-    """Raise if any delivered id is currently tombstoned (shared by the
-    text and IVF extension paths)."""
-    spark = docs.sparkSession
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    if not fs.exists(tpath):
-        return
-    id_type = dict(docs.dtypes)[id_col]
-    committed = _committed_batches(spark, index_path)
-    tomb = _tombstoned_ids(spark, index_path, id_type, committed)
-    if tomb is None:
-        return
-    clash = (
-        docs.select(F.col(id_col).cast(id_type).alias("doc"))
-        .join(tomb, "doc", "left_semi")
-        .limit(1)
-        .count()
-    )
-    if clash:
-        raise ValueError(
-            f"delivery into {index_path} contains tombstoned ids; "
-            "compact the index to clear its tombstones before re-delivering "
-            "deleted documents"
-        )
-
-
-def _tombstoned_ids(
-    spark,
-    index_path: str,
-    id_type: str,
-    committed: list[str],
-    exclude_batch: str | None = None,
-) -> DataFrame | None:
-    """Ledger-committed tombstoned ids as a one-column ``doc`` DataFrame,
-    or ``None`` when the index has never seen a delete — the common case
-    stays one directory-existence check, no Spark job.  ``exclude_batch``
-    lets a delete REPLAY recompute its own victims instead of seeing its
-    previous commit and degrading to a no-op."""
-    fs, tpath, _jvm = _fs_for(spark, f"{index_path}/tombstones")
-    if not fs.exists(tpath):
-        return None
-    batches = [b for b in committed if b != exclude_batch]
-    return (
-        spark.read.schema(f"doc {id_type}")
-        .parquet(f"{index_path}/tombstones")
-        .filter(F.col("batch").isin(batches))
-        .select("doc")
     )
 
 
@@ -700,17 +441,14 @@ def delete_from_text_index(
     anti-join against the tombstone set (AQE broadcasts it while small).
     Compaction is the pressure valve: it drops tombstoned docs physically
     and clears the set."""
-    batch_id = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
+    opened = ST.open_delivery(spark, index_path, batch_id, "delete", "postings")
+    if opened is None:
         return  # folded replay: the victims are already physically gone
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "postings", "delete", "extension"
-    )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    batch_id, meta = opened
+    committed = ST.committed_batches(spark, index_path)
     id_type = meta.id_type
     want = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc")).distinct()
-    tomb = _tombstoned_ids(
+    tomb = ST.tombstoned_ids(
         spark, index_path, id_type, committed, exclude_batch=batch_id
     )
     if tomb is not None:
@@ -737,7 +475,7 @@ def delete_from_text_index(
             (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("sum_dl"),
         )
     )
-    cluster_for_partitioned_write(neg_df, ["bkt"], F.col("term")).write.mode(
+    ST.cluster_for_partitioned_write(neg_df, ["bkt"], F.col("term")).write.mode(
         "overwrite"
     ).option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(
         f"{index_path}/dfreq/batch={batch_id}"
@@ -745,355 +483,7 @@ def delete_from_text_index(
     neg_stats.write.mode("overwrite").parquet(f"{index_path}/stats/batch={batch_id}")
     want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
     # commit marker LAST: a crash anywhere above leaves the delete invisible
-    ledger_commit(spark, index_path, batch_id)
-
-
-def _fs_for(spark, path_str: str):
-    """(FileSystem, Path, jvm) for any path — the ONE Hadoop-FS handle
-    helper behind the ledger, the meta invalidation and the serving alias
-    (plain FS metadata ops, works on HDFS/S3A/local alike, milliseconds,
-    never a Spark job)."""
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, path, jvm
-
-
-def _ledger_fs(spark, index_path: str):
-    """(FileSystem, Path) for the index's commit ledger directory."""
-    return _fs_for(spark, f"{index_path}/batches")
-
-
-def ledger_reset(spark, index_path: str) -> None:
-    """Base-build ledger reset: clears every extension's commit marker (the
-    base itself is committed by the meta write that follows)."""
-    fs, path, _jvm = _ledger_fs(spark, index_path)
-    fs.delete(path, True)
-    fs.mkdirs(path)
-
-
-def ledger_commit(spark, index_path: str, batch_id: int | str) -> None:
-    """Mark one delivery committed — an empty touch file named after the
-    batch id, created AFTER the delivery's artifacts."""
-    fs, path, jvm = _ledger_fs(spark, index_path)
-    fs.mkdirs(path)
-    fs.create(jvm.org.apache.hadoop.fs.Path(path, str(batch_id)), True).close()
-
-
-def folded_record(
-    spark, index_path: str, extension_ids: list[str], delete_ids: list[str]
-) -> None:
-    """Record batch ids a compaction/rebuild has FOLDED into the base —
-    the manifest that closes the streaming replay double-count window
-    (r15): a micro-batch delivered, compacted into the base, and then
-    REPLAYED after a crash (checkpoint not yet committed past it) would
-    otherwise re-deliver rows the base already contains; the extend paths
-    treat a folded extension id as a spent no-op instead.  Kind-split
-    markers (``folded/extensions/<id>`` / ``folded/deletes/<id>``) keep
-    the cross-kind refusal working after compaction erased the artifact
-    dirs the live cross-kind guard keys on.  Tiny touch files, written
-    INSIDE the compaction's meta-less window (before meta lands), so base
-    and manifest become visible together or the root fails probes
-    loudly."""
-    fs, _root, jvm = _fs_for(spark, index_path)
-    for sub, ids in (("extensions", extension_ids), ("deletes", delete_ids)):
-        if not ids:
-            continue
-        d = jvm.org.apache.hadoop.fs.Path(f"{index_path}/folded/{sub}")
-        fs.mkdirs(d)
-        for bid in ids:
-            fs.create(jvm.org.apache.hadoop.fs.Path(d, str(bid)), True).close()
-
-
-def folded_kind(spark, index_path: str, batch_id: str) -> str | None:
-    """'extension' / 'delete' if ``batch_id`` was folded by a past
-    compaction of this root, else None.  One directory-existence probe
-    when the root has never compacted; two marker probes after."""
-    fs, fpath, jvm = _fs_for(spark, f"{index_path}/folded")
-    if not fs.exists(fpath):
-        return None
-    for sub in ("extensions", "deletes"):
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{index_path}/folded/{sub}/{batch_id}"
-            )
-        ):
-            return sub[:-1] if sub == "deletes" else "extension"
-    return None
-
-
-def folded_ids(spark, index_path: str) -> tuple[list[str], list[str]]:
-    """(extension_ids, delete_ids) previously folded — carried forward
-    across compactions (a delivery folded two compactions ago must stay
-    spent) and copied to ``dst_index`` on write-then-swap compactions."""
-    out: list[list[str]] = []
-    for sub in ("extensions", "deletes"):
-        fs, p, _jvm = _fs_for(spark, f"{index_path}/folded/{sub}")
-        out.append(
-            sorted(st.getPath().getName() for st in fs.listStatus(p))
-            if fs.exists(p)
-            else []
-        )
-    return out[0], out[1]
-
-
-def folded_clear(spark, index_path: str) -> None:
-    """Fresh base build: a from-source rebuild starts a new world — prior
-    delivery ids are legitimately reusable against it."""
-    fs, p, _jvm = _fs_for(spark, f"{index_path}/folded")
-    fs.delete(p, True)
-
-
-def _classify_committed(
-    spark, index_path: str, committed: list[str]
-) -> tuple[list[str], list[str]]:
-    """Split a committed-batch list into (extensions, deletes) by the
-    artifact that defines a delete: its ``tombstones/batch=`` dir (still
-    present at compact time — compaction classifies BEFORE it clears)."""
-    fs, _p, jvm = _fs_for(spark, index_path)
-    exts, dels = [], []
-    for bid in committed:
-        if bid == "base":
-            continue
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{index_path}/tombstones/batch={bid}")
-        ):
-            dels.append(bid)
-        else:
-            exts.append(bid)
-    return exts, dels
-
-
-def _fold_manifest_forward(
-    spark, src_index: str, dst_index: str, committed: list[str]
-) -> None:
-    """The ONE compaction-side call: carry src's already-folded ids
-    forward and add this compaction's committed batches, written to dst
-    (== src for in-place) inside the meta-less window."""
-    prior_ext, prior_del = folded_ids(spark, src_index)
-    new_ext, new_del = _classify_committed(spark, src_index, committed)
-    if dst_index != src_index:
-        # a dst root that previously lived as an index carries an
-        # UNRELATED world's spent ids — resurrecting them would silently
-        # no-op legitimate future deliveries; only src's history carries
-        folded_clear(spark, dst_index)
-    folded_record(
-        spark,
-        dst_index,
-        sorted(set(prior_ext) | set(new_ext)),
-        sorted(set(prior_del) | set(new_del)),
-    )
-
-
-def _guard_spent_batch_id(spark, index_path: str, batch_id: str, this_kind: str):
-    """Shared entry/delete check against the folded manifest.  Returns
-    True when the caller should NO-OP (same-kind replay of a folded
-    delivery — the base already contains exactly what the replay would
-    re-deliver); raises on cross-kind reuse of a spent id."""
-    fk = folded_kind(spark, index_path, batch_id)
-    if fk is None:
-        return False
-    if fk == this_kind:
-        import logging
-
-        # WARNING level: a replay is the expected producer of this event,
-        # but an id COLLISION (a stream restarted with a fresh checkpoint
-        # re-deriving epoch ids from 0 against the same root) would be
-        # silently dropped here too — the log is the operator's signal to
-        # use a fresh batch_id_prefix per checkpoint (see the delivery
-        # streams' parameter)
-        logging.getLogger("chat_data_pipeline_spark").warning(
-            "batch %s of %s was already folded by compaction; treating "
-            "this %s as a replay and skipping it (if this is NEW content "
-            "under a recycled id, deliver under a fresh id/prefix)",
-            batch_id, index_path, this_kind,
-        )
-        return True
-    raise ValueError(
-        f"batch id {batch_id!r} already names a {fk} delivery that a "
-        f"compaction of {index_path} folded into the base; {this_kind} "
-        "deliveries must use a distinct id (replay idempotence is "
-        "same-kind only, and folded ids stay spent)"
-    )
-
-
-def _committed_batches(spark, index_path: str) -> list[str]:
-    """'base' plus every batch id whose delivery fully committed (ledger
-    touch file written after the artifacts) — probes read ONLY these, so a
-    crashed delivery's partial artifacts can never skew a result.  The
-    base build needs no ledger entry: its commit marker is the meta write,
-    which already lands after the base artifacts."""
-    fs, path, _jvm = _ledger_fs(spark, index_path)
-    out = ["base"]
-    if fs.exists(path):
-        out += sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(path)
-            if not st.getPath().getName().startswith("_")
-        )
-    return out
-
-
-def committed_tree(spark, index_path: str, sub: str) -> DataFrame:
-    """Load a batch-partitioned store artifact tree (``postings`` /
-    ``vectors``) with its schema PINNED from the base partition instead
-    of inferred over the whole tree (r17): inference samples parquet
-    footers BEFORE any batch filter applies, so a crashed uncommitted
-    delivery's partial files could fail (or skew) the load — and the
-    probe/compaction paths that hit this are exactly what an operator
-    runs right after a crash.  The base partition is complete by
-    construction (its commit marker is the meta write), so its schema is
-    authoritative; callers still filter to the ledger-committed batches,
-    which prunes the debris partitions before any data is read.  One
-    tiny footer read on the base replaces tree-wide sampling — same
-    discipline as maintenance.py's explicit-schema reads."""
-    from pyspark.sql.types import IntegerType, StringType
-
-    schema = None
-    try:
-        # driver-side schema (r17): the base read above existed ONLY for
-        # its schema, yet paid a schema-inference Spark job per call.
-        # Derive the same schema from one base part file's footer plus the
-        # partition dirs walked to reach it (our artifact layouts nest at
-        # most bkt=<int> / band=<int> under batch=); anything unexpected
-        # falls back to the inference read below, unchanged.
-        import re as _re
-
-        from chat_data_pipeline_spark.session import local_parquet_schema
-
-        fs, _root, jvm = _fs_for(spark, index_path)
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{sub}/batch=base")
-        part_cols: list[str] = []
-        fs.getFileStatus(p)  # missing base must fail like the old read
-        for _ in range(3):
-            found_file = any(
-                s.isFile() and s.getPath().getName().endswith(".parquet")
-                for s in fs.listStatus(p)
-            )
-            if found_file:
-                schema = local_parquet_schema(spark, p.toUri().getPath())
-                break
-            sub_dirs = [
-                s.getPath()
-                for s in fs.listStatus(p)
-                if s.isDirectory()
-                and _re.match(r"^\w+=-?\d+$", s.getPath().getName())
-            ]
-            if not sub_dirs:
-                break
-            part_cols.append(sub_dirs[0].getName().split("=", 1)[0])
-            p = sub_dirs[0]
-        if schema is not None:
-            for c in part_cols:
-                schema = schema.add(c, IntegerType())
-    except Exception:  # noqa: BLE001 — any surprise: inference path below
-        schema = None
-    if schema is None:
-        base = spark.read.parquet(f"{index_path}/{sub}/batch=base")
-        schema = base.schema
-    if "batch" not in schema.fieldNames():
-        schema = schema.add("batch", StringType())
-    return spark.read.schema(schema).parquet(f"{index_path}/{sub}")
-
-
-def swap_index_alias(spark, alias_path: str, index_path: str) -> None:
-    """Point an alias at an index root — the probe-side half of
-    write-then-swap (:func:`compact_text_index` / ``rebuild_ivf_index``
-    stream into a FRESH root; this is the 'caller's pointer swap' their
-    docstrings hand off to).  The alias is a DIRECTORY of monotonically
-    versioned one-line pointer files: a swap stages the new pointer under
-    a ``_tmp`` name and RENAMES it into place (rename is the atomic
-    primitive on HDFS-like stores, and same-directory so object stores
-    degrade gracefully), so a reader never sees a half-written pointer —
-    it resolves either the old version or the new one.  Pruning keeps the
-    IMMEDIATELY-PREVIOUS version and only deletes older history, so a
-    reader that listed the directory just before the swap still opens a
-    live file (the resolve side additionally retries one list-again on a
-    lost race two swaps deep).
-
-    Concurrency contract: version numbers are allocated by list-then-max
-    (no FS-only primitive can serialize two racing swaps), so two
-    CONCURRENT swaps may share a version and the survivor is the
-    deterministic (version, zero-padded pid) name order — atomic
-    visibility is guaranteed, swap ORDER is the caller's coordination
-    job (one maintenance actor per alias, the same posture as the
-    index builds themselves).
-
-    Fails fast if the target has no readable ``meta`` — an alias must
-    never be swapped onto a root that is mid-rebuild (meta-less window) or
-    missing."""
-    read_meta_row(spark, index_path)  # target must be servable
-    fs, adir, jvm = _fs_for(spark, alias_path)
-    fs.mkdirs(adir)
-    existing = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(adir)
-        if st.getPath().getName().startswith("v")
-    )
-    nxt = 1 + max((int(n[1:].split("-")[0]) for n in existing), default=0)
-    vname = f"v{nxt:012d}-{os.getpid():010d}"
-    tmp = jvm.org.apache.hadoop.fs.Path(adir, f"_tmp.{vname}")
-    out = fs.create(tmp, True)
-    out.write(bytearray(str(index_path).encode("utf-8")))
-    out.close()
-    if not fs.rename(tmp, jvm.org.apache.hadoop.fs.Path(adir, vname)):
-        raise IOError(f"alias swap rename failed under {alias_path}")
-    # prune AFTER the new pointer is live, KEEPING the immediately-previous
-    # version for in-flight readers (a crash mid-prune leaves extra
-    # history, never a broken alias)
-    for name in existing[:-1]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(adir, name), False)
-    # also sweep CRASHED swaps' staging files (a swapper that died between
-    # create and rename leaves an _tmp.v... orphan per attempt — invisible
-    # to resolution but unbounded growth otherwise).  Only strictly OLDER
-    # versions than the pointer just renamed are swept: a concurrent
-    # swapper's live staging file carries version >= nxt, and an older
-    # straggler whose tmp we delete would have LOST the (version, pid)
-    # tiebreak anyway — its rename now fails loudly instead of silently
-    # losing.
-    for st in fs.listStatus(adir):
-        name = st.getPath().getName()
-        if name.startswith("_tmp.v"):
-            try:
-                ver = int(name[len("_tmp.v"):].split("-")[0])
-            except ValueError:
-                continue
-            if ver < nxt:
-                fs.delete(st.getPath(), False)
-
-
-def resolve_index_alias(spark, alias_path: str) -> str:
-    """The index root an alias currently points at: the highest-versioned
-    committed pointer file (``_tmp`` stages are ignored, so a concurrent
-    or crashed swap is invisible).  Probe composition:
-    ``bm25_topk_indexed(spark, resolve_index_alias(spark, alias), ...)``
-    — probes keep hitting the OLD root until the swap's rename lands.
-    A reader that loses the prune race two swaps deep (its listed file
-    was deleted before it opened) retries one fresh listing."""
-    fs, adir, jvm = _fs_for(spark, alias_path)
-    if not fs.exists(adir):
-        raise FileNotFoundError(f"no index alias at {alias_path}")
-    last_err: Exception | None = None
-    for _attempt in range(2):
-        names = sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(adir)
-            if st.getPath().getName().startswith("v")
-        )
-        if not names:
-            raise FileNotFoundError(
-                f"index alias {alias_path} has no committed pointer"
-            )
-        try:
-            stream = fs.open(jvm.org.apache.hadoop.fs.Path(adir, names[-1]))
-            try:
-                raw = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
-            return raw.decode("utf-8")
-        except Exception as exc:  # pruned between list and open: re-list once
-            last_err = exc
-    raise last_err
+    ST.ledger_commit(spark, index_path, batch_id)
 
 
 def rrf_fuse(
@@ -1190,8 +580,8 @@ def bm25_topk_indexed(
         raise ValueError("query_terms must be non-empty")
     terms = [t.lower() for t in query_terms]
     bkts = sorted({_term_bucket_py(t) for t in terms})
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     # explicit schemas (from meta): zero footer sampling — the pruned read
     # lists only the probed bkt dirs of COMMITTED batches and opens nothing
     # else (batch and bkt are both partition columns: two literal INs at
@@ -1204,7 +594,7 @@ def bm25_topk_indexed(
         .filter(F.col("term").isin(terms))
         .select(F.col("doc").alias(id_col), "dl", "term", "tf")
     )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
+    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
     if tomb is not None:
         # tombstoned docs stay physical until compaction; the anti-join
         # hides them, while their negative dfreq/stats deliveries subtract
@@ -1323,15 +713,13 @@ def bm25_topk_indexed_batch(
         )
     terms = sorted({t for _, ts in qterms for t in ts})
     bkts = sorted({_term_bucket_py(t) for t in terms})
-    from chat_data_pipeline_spark.session import values_df
-
     qt = values_df(
         spark,
         [(qid, t) for qid, ts in qterms for t in ts],
         f"{query_id_col} {dict(queries.dtypes)[query_id_col]}, term string",
     )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
     postings = (
         spark.read.schema(p_schema).parquet(f"{index_path}/postings")
@@ -1340,7 +728,7 @@ def bm25_topk_indexed_batch(
         .filter(F.col("term").isin(terms))
         .select(F.col("doc").alias(id_col), "dl", "term", "tf")
     )
-    tomb = _tombstoned_ids(spark, index_path, meta.id_type, committed)
+    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
     if tomb is not None:
         postings = postings.join(
             tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
@@ -1421,14 +809,12 @@ def text_index_health(spark, index_path: str) -> DataFrame:
     Scale shape: postings are touched only by a count aggregate
     (map-side-combined, no row leaves the executors); dfreq/stats/
     tombstones are term-/batch-/id-sized.  O(batches) output rows."""
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
 
     def _per_batch(sub: str, schema: str, aggs: list, names: list[str]) -> DataFrame:
-        fs, path, _jvm = _fs_for(spark, f"{index_path}/{sub}")
+        fs, path, _jvm = ST.fs_for(spark, f"{index_path}/{sub}")
         if not fs.exists(path):
-            from chat_data_pipeline_spark.session import values_df
-
             return values_df(
                 spark, [], "batch string, " + ", ".join(f"{n} long" for n in names)
             )

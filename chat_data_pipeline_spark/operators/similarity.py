@@ -17,7 +17,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from chat_data_pipeline_spark.operators.retrieval import read_meta_row
+from chat_data_pipeline_spark.operators import store as ST
+from chat_data_pipeline_spark.session import values_df
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -1183,15 +1184,6 @@ def pq_md5_sign_codebooks(
     ]
 
 
-def _committed_tree(spark, index_path: str, sub: str):
-    """Schema-pinned tree load (see retrieval.committed_tree): probes and
-    compactors must never schema-infer over a tree that can hold a
-    crashed delivery's partial files."""
-    from chat_data_pipeline_spark.operators.retrieval import committed_tree
-
-    return committed_tree(spark, index_path, sub)
-
-
 def _fold_norm_rows(mat: np.ndarray) -> np.ndarray:
     """Row norms as columnwise fold accumulation (per-row ordered IEEE sums,
     the srp_md5 discipline) with the module's 1e-12 zero-vector floor."""
@@ -1421,6 +1413,16 @@ def ivf_topk_md5(
 #                            the files at the LISTING, before any scan
 
 
+IVF_META = (
+    "coarse string, n_centroids int, dim int, id_col string, "
+    "vec_col string, id_type string"
+)
+IVFPQ_META = (
+    "coarse string, n_centroids int, m int, n_codewords int, dim int, "
+    "id_col string, vec_col string, id_type string"
+)
+
+
 def build_ivf_index(
     df: DataFrame,
     index_path: str,
@@ -1430,7 +1432,7 @@ def build_ivf_index(
     coarse: str = "md5",
     dim: int = 64,
     seed: int = 42,
-    _clear_folded: bool = True,
+    _fold: tuple[str, list[str]] | None = None,
 ) -> None:
     """Build → write the IVF index artifacts (idempotent: every part is an
     overwrite, so a replayed build leaves the index byte-identical).
@@ -1439,135 +1441,88 @@ def build_ivf_index(
     fold-dot argmax — the exact :func:`ivf_topk_md5` assignment arithmetic,
     so a load-and-probe replays that oracle bit-for-bit.  ``coarse='kmeans'``
     trains the seeded Lloyd centroids of :func:`ivf_topk` and persists them
-    under ``centroids/``."""
-    import pandas as pd
-
-    from chat_data_pipeline_spark.operators.retrieval import invalidate_index_meta
-
+    under ``centroids/``.  ``_fold`` is :func:`store.commit_base`'s
+    spent-id carry for :func:`rebuild_ivf_index`."""
     spark = df.sparkSession
     # everything that can FAIL without writing — flavor validation and the
     # kmeans driver-side training — runs BEFORE the live root is touched: a
     # typo'd coarse kind or a failed retrain must leave a previously
     # servable index serving, not meta-less (r14 review)
-    if coarse == "kmeans":
-        trained_centroids = _train_centroids(
-            df, vec_col, n_centroids, seed=seed, id_col=id_col
-        )
-    elif coarse != "md5":
-        raise ValueError(f"coarse must be 'md5' or 'kmeans', got {coarse!r}")
-    # meta deleted FIRST / written LAST (r13 ADVICE): the delete must come
-    # BEFORE the kmeans branch's centroids write, not just before the
-    # postings write — otherwise an in-place rebuild crashing right after
-    # centroids/ lands would leave OLD meta + OLD postings + NEW centroids,
-    # and probes would silently score stale assignments against the
-    # retrained quantizer.  From here to the meta write the root is
-    # meta-less and every probe fails loudly.
-    invalidate_index_meta(spark, index_path)
-    # a fresh base starts with no pending deletes; cleared inside the
-    # meta-less window (same posture as the text index's base write)
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for
-
-    _tfs, _tpath, _tjvm = _fs_for(spark, f"{index_path}/tombstones")
-    _tfs.delete(_tpath, True)
     if coarse == "md5":
-        coarse_mat = np.asarray(
-            pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
-        )
-
-        def assign(batches):
-            for batch in batches:
-                if not len(batch):
-                    continue
-                mat = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-                )
-                if mat.shape[1] != dim:
-                    raise ValueError(
-                        f"corpus dim {mat.shape[1]} != configured dim {dim}"
-                    )
-                normed = mat / _fold_norm_rows(mat)[:, None]
-                out = batch.copy()
-                out["list"] = np.argmax(
-                    _fold_subspace_dots(normed, coarse_mat, 0), axis=1
-                ).astype("int32")
-                yield out
-
-        vec_type = dict(df.dtypes)[vec_col]
-        id_type = dict(df.dtypes)[id_col]
-        postings = df.select(id_col, vec_col).mapInPandas(
-            assign, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, list int"
-        )
+        postings = _ivf_md5_list_postings(df, id_col, vec_col, n_centroids, dim)
     elif coarse == "kmeans":
-        centroids = trained_centroids  # trained above, pre-invalidation
+        centroids = _train_centroids(df, vec_col, n_centroids, seed=seed, id_col=id_col)
         dim = int(centroids.shape[1])
         cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-        # coalesce(1), not repartition(1) (r18): the r15 warning against
-        # coalesce guarded the PARALLELIZE-backed frame (serial pickled
-        # partitions in one task); a values_df LocalRelation is a single
-        # JVM partition, so coalesce is a no-op wrapper while
-        # repartition(1) inserted a round-robin exchange — one extra
-        # driver-paced job per artifact write (measured 2 jobs -> 1)
-        from chat_data_pipeline_spark.session import values_df
-
-        values_df(
-            spark, cent_rows, "list int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
         postings = _ivf_assign_expr(
             df.select(id_col, vec_col), vec_col, centroids, "__lists__", 1
         ).select(
             id_col, vec_col, F.element_at("__lists__", 1).alias("list")
         )
-    # the base lands under batch=base so the tree is uniformly two-level
-    # (batch=*/list=*) and later extend_ivf_index deliveries interleave
-    # without producing the mixed root layout partition discovery rejects;
-    # writing THROUGH the root in overwrite mode also clears any stale
-    # extension batches from a previous build of the same path —
-    # partitionOverwriteMode is pinned STATIC per-write so a session
-    # configured dynamic can't turn that clearing into a batch=base-only
-    # replace that leaves probes silently serving stale extensions.
-    # Cluster on (list, salt) BEFORE the partitioned write: unclustered,
-    # every task writes a file into every list dir (tasks × n_centroids
-    # files — tens of millions at 100 TB, the sink-sizing metadata bomb);
-    # clustered on list ALONE, the corpus-sized write funnels through
-    # ≤ n_centroids tasks (the scale-killer in the other direction).  The
-    # id-hashed salt keeps files at O(n_centroids × WRITE_SALT) while the
-    # write stage scales with the salt.
-    from chat_data_pipeline_spark.operators.retrieval import (
-        cluster_for_partitioned_write,
+    else:
+        raise ValueError(f"coarse must be 'md5' or 'kmeans', got {coarse!r}")
+
+    def write() -> None:
+        # the centroids land inside the meta-less window too (r13 ADVICE):
+        # an in-place rebuild crashing right after centroids/ lands must
+        # not leave OLD meta + OLD postings + NEW centroids serving
+        if coarse == "kmeans":
+            # coalesce(1), not repartition(1) (r18): a values_df
+            # LocalRelation is a single JVM partition, so coalesce is a
+            # no-op wrapper while repartition(1) inserted a round-robin
+            # exchange — one extra driver-paced job per artifact write
+            values_df(
+                spark, cent_rows, "list int, centroid array<double>"
+            ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
+        _write_list_base(index_path, postings, id_col)
+
+    ST.commit_base(
+        spark, index_path, write, IVF_META,
+        (coarse, int(n_centroids), int(dim), id_col, vec_col, dict(df.dtypes)[id_col]),
+        fold=_fold,
     )
 
-    cluster_for_partitioned_write(
+
+def _write_list_base(index_path: str, postings: DataFrame, id_col: str) -> None:
+    """The IVF / IVF-PQ base postings write.  The base lands under
+    ``batch=base`` so the tree is uniformly two-level (batch=*/list=*) and
+    later deliveries interleave without producing the mixed root layout
+    partition discovery rejects; writing THROUGH the root in overwrite mode
+    also clears any stale extension batches from a previous build of the
+    same path — partitionOverwriteMode is pinned STATIC per-write so a
+    session configured dynamic can't turn that clearing into a
+    batch=base-only replace that leaves probes silently serving stale
+    extensions.  Cluster on (list, salt) BEFORE the partitioned write:
+    unclustered, every task writes a file into every list dir (tasks ×
+    n_centroids files — tens of millions at 100 TB, the sink-sizing
+    metadata bomb); clustered on list ALONE, the corpus-sized write
+    funnels through ≤ n_centroids tasks (the scale-killer in the other
+    direction).  The id-hashed salt keeps files at O(n_centroids ×
+    WRITE_SALT) while the write stage scales with the salt."""
+    ST.cluster_for_partitioned_write(
         postings.withColumn("batch", F.lit("base")), ["list"], F.col(id_col)
     ).write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).partitionBy("batch", "list").parquet(f"{index_path}/postings")
-    # commit ledger (same posture as the text index): reset with the base
-    # (driver-side FS op), one touch marker per committed delivery — probes
-    # read only marked batches, so a crashed extension's partial part-files
-    # are invisible; the base's own commit marker is the meta write below
-    from chat_data_pipeline_spark.operators.retrieval import (
-        folded_clear,
-        ledger_reset,
+
+
+def _write_list_delivery(
+    index_path: str, batch_id: str, postings: DataFrame, id_col: str
+) -> None:
+    """One IVF / IVF-PQ delivery's postings, then its ledger commit.  Same
+    salted list-clustering as the base: O(n_centroids × salt) files per
+    delivery with the write stage decoupled from the centroid count;
+    static overwrite pinned so a replayed delivery fully replaces its
+    batch dir (dynamic mode would keep stale list dirs the replay's new
+    content no longer produces).  The commit marker lands LAST: a crashed
+    delivery's partial part-files stay invisible to probes until a replay
+    completes and re-commits."""
+    ST.cluster_for_partitioned_write(postings, ["list"], F.col(id_col)).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "static").partitionBy("list").parquet(
+        f"{index_path}/postings/batch={batch_id}"
     )
-
-    ledger_reset(spark, index_path)
-    if _clear_folded:
-        # fresh-from-source world: old delivery ids are reusable.  A
-        # REBUILD passes False — it wrote the carried-forward spent-id
-        # manifest BEFORE this base landed, and that manifest must
-        # survive (r15 review: recording it after meta would leave a
-        # crash window with a servable root and no manifest, reopening
-        # the replay double-count this machinery closes)
-        folded_clear(spark, index_path)
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
-        spark,
-        [(coarse, int(n_centroids), int(dim), id_col, vec_col,
-          dict(df.dtypes)[id_col])],
-        "coarse string, n_centroids int, dim int, id_col string, "
-        "vec_col string, id_type string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+    ST.ledger_commit(postings.sparkSession, index_path, batch_id)
 
 
 def extend_ivf_index(
@@ -1589,103 +1544,25 @@ def extend_ivf_index(
     :func:`ivf_topk_persisted` reads the postings root and sees base +
     extensions as one table (``build_ivf_index`` writes its base under
     ``batch=base`` through the root, which also clears stale extensions on
-    a rebuild)."""
-    import pandas as pd
-
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_batch_id_kind,
-        _guard_tombstoned_delivery,
-        validate_batch_id,
+    a rebuild).  ``id_col``/``vec_col`` override the meta column names;
+    the delivery is refused on a wrong id type or a tombstoned id, and its
+    vector column is cast to the base's type (:func:`store.open_extension`)."""
+    opened = ST.open_extension(
+        df, index_path, batch_id, id_col, vec_col, vec_base=("postings", None)
     )
-
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_spent_batch_id,
-    )
-
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
+    if opened is None:
         return  # folded replay: the base already holds this delivery
-    # cross-kind batch-id reuse is refused (same contract as the text
-    # index): replay idempotence is same-kind only
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
-    )
-    meta = read_meta_row(spark, index_path)
-    # optional column-name overrides: a caller whose frame uses its own
-    # names aliases here instead of pre-reading meta (one read, not two)
-    if id_col or vec_col:
-        df = df.select(
-            F.col(id_col or meta.id_col).alias(meta.id_col),
-            F.col(vec_col or meta.vec_col).alias(meta.vec_col),
-        )
-    id_col, vec_col = meta.id_col, meta.vec_col
-    # refuse a wrong-typed delivery up front, not at probe; meta pins
-    # id_type since r15 (one tiny file already read above) — only a
-    # pre-r15 root falls back to inferring it, and then from the BASE
-    # partition only: inferring over the whole postings tree would touch
-    # the footers of a crashed uncommitted delivery's partial files (the
-    # base is complete by construction, its commit marker being the meta
-    # write — same pin as maintenance.py's store_kind_and_meta path)
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_delivery_id_type,
-    )
-
-    _guard_delivery_id_type(
-        df,
-        id_col,
-        meta.asDict().get("id_type")
-        or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[id_col],
-        index_path,
-    )
-    # a delivery containing a tombstoned id is refused (same contract as
-    # extend_text_index): the tombstone would hide the new rows from
-    # probes — compact first, then re-deliver
-    _guard_tombstoned_delivery(df.select(id_col, vec_col), index_path, id_col)
-    # normalize the delivery's vector type to the BASE's (r17): a
-    # double-typed delivery over a float base (e.g. a drift transform's
-    # literal arithmetic widening the column) would otherwise land a
-    # physically heterogeneous tree, which the schema-pinned loads — and
-    # any columnar reader expecting one physical type per column — refuse
-    base_vec_type = dict(
-        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-    ).get(vec_col)
-    if base_vec_type is not None and dict(df.dtypes)[vec_col] != base_vec_type:
-        df = df.withColumn(vec_col, F.col(vec_col).cast(base_vec_type))
-    n_centroids, dim = int(meta.n_centroids), int(meta.dim)
+    batch_id, meta, df, id_col = opened
+    vec_col = meta.vec_col
     if meta.coarse == "md5":
-        coarse_mat = np.asarray(
-            pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
-        )
-
-        def assign(batches):
-            for batch in batches:
-                if not len(batch):
-                    continue
-                mat = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-                )
-                if mat.shape[1] != dim:
-                    raise ValueError(
-                        f"corpus dim {mat.shape[1]} != index dim {dim}"
-                    )
-                normed = mat / _fold_norm_rows(mat)[:, None]
-                out = batch.copy()
-                out["list"] = np.argmax(
-                    _fold_subspace_dots(normed, coarse_mat, 0), axis=1
-                ).astype("int32")
-                yield out
-
-        vec_type = dict(df.dtypes)[vec_col]
-        id_type = dict(df.dtypes)[id_col]
-        postings = df.select(id_col, vec_col).mapInPandas(
-            assign, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, list int"
+        postings = _ivf_md5_list_postings(
+            df, id_col, vec_col, int(meta.n_centroids), int(meta.dim)
         )
     elif meta.coarse == "kmeans":
         cent = (
-            spark.read.parquet(f"{index_path}/centroids").orderBy("list").collect()
+            df.sparkSession.read.parquet(f"{index_path}/centroids")
+            .orderBy("list")
+            .collect()
         )
         centroids = np.asarray([r.centroid for r in cent], dtype=np.float64)
         postings = _ivf_assign_expr(
@@ -1693,25 +1570,7 @@ def extend_ivf_index(
         ).select(id_col, vec_col, F.element_at("__lists__", 1).alias("list"))
     else:
         raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
-    # same salted list-clustering as the base build: O(n_centroids × salt)
-    # files per delivery with the write stage decoupled from the centroid
-    # count; static overwrite pinned so a replayed delivery fully replaces
-    # its batch dir (dynamic mode would keep stale list dirs the replay's
-    # new content no longer produces)
-    from chat_data_pipeline_spark.operators.retrieval import (
-        cluster_for_partitioned_write,
-    )
-
-    cluster_for_partitioned_write(postings, ["list"], F.col(id_col)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("list").parquet(
-        f"{index_path}/postings/batch={batch_id}"
-    )
-    # commit marker LAST: a crashed delivery's partial part-files stay
-    # invisible to probes until a replay completes and re-commits
-    from chat_data_pipeline_spark.operators.retrieval import ledger_commit
-
-    ledger_commit(spark, index_path, batch_id)
+    _write_list_delivery(index_path, batch_id, postings, id_col)
 
 
 def ivf_topk_persisted(
@@ -1733,20 +1592,15 @@ def ivf_topk_persisted(
     build-and-probe path (``ivf_topk_md5`` / ``ivf_topk``)."""
     import pandas as pd
 
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _tombstoned_ids,
-    )
-
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     # ledger-committed batches only: a crashed delivery's partial
     # part-files are invisible until its replay re-commits
-    postings = _committed_tree(spark, index_path, "postings").filter(
+    postings = ST.committed_tree(spark, index_path, "postings").filter(
         F.col("batch").isin(committed)
     )
     id_col, vec_col = meta.id_col, meta.vec_col
-    tomb = _tombstoned_ids(
+    tomb = ST.tombstoned_ids(
         spark, index_path, dict(postings.dtypes)[id_col], committed
     )
     if tomb is not None:
@@ -2282,13 +2136,11 @@ def ivf_index_drift_report(spark, index_path: str) -> DataFrame:
     """
     import pandas as pd
 
-    from chat_data_pipeline_spark.operators.retrieval import _committed_batches
-
-    meta = read_meta_row(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
     n_centroids, dim = int(meta.n_centroids), int(meta.dim)
     vec_col = meta.vec_col
-    postings = _committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(_committed_batches(spark, index_path))
+    postings = ST.committed_tree(spark, index_path, "postings").filter(
+        F.col("batch").isin(ST.committed_batches(spark, index_path))
     )
 
     if meta.coarse == "md5":
@@ -2367,27 +2219,18 @@ def compact_ivf_index(spark, index_path: str, dst_index: str | None = None) -> N
     postings before the overwrite — fine at single-node scale); a 100 TB
     deployment passes ``dst_index`` to stream into a fresh root with no
     checkpoint and swaps probes over (write-then-swap)."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fs_for,
-        _tombstoned_ids,
-        cluster_for_partitioned_write,
-        invalidate_index_meta,
-        ledger_reset,
-    )
-
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     # payload column by flavor: the compressed md5pq store folds its codes,
     # the full-precision flavors their vectors — assignments never move
     # lists either way, so compaction is layout-only for all of them
     payload = "pq_code" if meta.coarse == "md5pq" else meta.vec_col
     postings = (
-        _committed_tree(spark, index_path, "postings")
+        ST.committed_tree(spark, index_path, "postings")
         .filter(F.col("batch").isin(committed))
         .select(meta.id_col, payload, "list")
     )
-    tomb = _tombstoned_ids(
+    tomb = ST.tombstoned_ids(
         spark, index_path, dict(postings.dtypes)[meta.id_col], committed
     )
     if tomb is not None:
@@ -2403,57 +2246,31 @@ def compact_ivf_index(spark, index_path: str, dst_index: str | None = None) -> N
         if cent is not None:
             cent = cent.localCheckpoint(eager=True)
         dst_index = index_path
-    # folded manifest BEFORE the rewrite (see retrieval.folded_record):
-    # deliveries this compaction folds must read as spent once the
-    # compacted base serves; marking early is safe — they stay
-    # ledger-committed in the old root until the rewrite lands
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _fold_manifest_forward,
-    )
 
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
-    # meta-less rebuild window (r13 ADVICE): a compaction crash after the
-    # postings overwrite must not leave probes merging the partial new
-    # base with the old ledger's extension state
-    invalidate_index_meta(spark, dst_index)
-    # the compacted root starts with no pending deletes (they just became
-    # physical); cleared inside the meta-less window
-    _tfs, _tpath, _tjvm = _fs_for(spark, f"{dst_index}/tombstones")
-    _tfs.delete(_tpath, True)
-    if cent is not None:
-        cent.coalesce(1).write.mode("overwrite").parquet(
-            f"{dst_index}/centroids"
-        )
-    cluster_for_partitioned_write(
-        postings.withColumn("batch", F.lit("base")), ["list"], F.col(meta.id_col)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "list").parquet(f"{dst_index}/postings")
-    ledger_reset(spark, dst_index)
+    def write() -> None:
+        if cent is not None:
+            cent.coalesce(1).write.mode("overwrite").parquet(
+                f"{dst_index}/centroids"
+            )
+        _write_list_base(dst_index, postings, meta.id_col)
+
     # carry id_type forward (r15: the extend guards read it from meta; a
     # pre-r15 root lacks the field, so recover it from the postings once)
-    id_type = meta.asDict().get("id_type") or dict(postings.dtypes)[meta.id_col]
+    id_type = ST.meta_id_type(spark, index_path, meta, postings)
     if meta.coarse == "md5pq":
-        from chat_data_pipeline_spark.session import values_df
-
-        values_df(
-            spark,
-            [(meta.coarse, int(meta.n_centroids), int(meta.m),
-              int(meta.n_codewords), int(meta.dim), meta.id_col, meta.vec_col,
-              id_type)],
-            "coarse string, n_centroids int, m int, n_codewords int, dim int, "
-            "id_col string, vec_col string, id_type string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{dst_index}/meta")
+        schema, row = IVFPQ_META, (
+            meta.coarse, int(meta.n_centroids), int(meta.m),
+            int(meta.n_codewords), int(meta.dim), meta.id_col, meta.vec_col,
+            id_type,
+        )
     else:
-        from chat_data_pipeline_spark.session import values_df
-
-        values_df(
-            spark,
-            [(meta.coarse, int(meta.n_centroids), int(meta.dim), meta.id_col,
-              meta.vec_col, id_type)],
-            "coarse string, n_centroids int, dim int, id_col string, "
-            "vec_col string, id_type string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{dst_index}/meta")
+        schema, row = IVF_META, (
+            meta.coarse, int(meta.n_centroids), int(meta.dim), meta.id_col,
+            meta.vec_col, id_type,
+        )
+    ST.commit_base(
+        spark, dst_index, write, schema, row, fold=(index_path, committed)
+    )
 
 
 def rebuild_ivf_index(
@@ -2492,17 +2309,11 @@ def rebuild_ivf_index(
     fresh root with no checkpoint and swaps probes over once the rebuild
     commits (write-then-swap, zero-downtime).  The probe cutover itself is
     the caller's pointer swap — probes hitting the OLD root keep serving
-    the old index throughout; ``retrieval.swap_index_alias`` /
+    the old index throughout; ``store.swap_index_alias`` /
     ``resolve_index_alias`` provide that pointer as an operator (atomic
     versioned rename, refuses meta-less targets).
     """
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fold_manifest_forward,
-        _tombstoned_ids,
-    )
-
-    meta = read_meta_row(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
     if meta.coarse == "md5pq":
         raise ValueError(
             "rebuild_ivf_index cannot rebuild a compressed md5pq index: PQ "
@@ -2510,13 +2321,13 @@ def rebuild_ivf_index(
             "source corpus with build_ivfpq_index, or compact_ivf_index for "
             "layout maintenance"
         )
-    committed = _committed_batches(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
     union = (
-        _committed_tree(spark, index_path, "postings")
+        ST.committed_tree(spark, index_path, "postings")
         .filter(F.col("batch").isin(committed))
         .select(meta.id_col, meta.vec_col)
     )
-    tomb = _tombstoned_ids(
+    tomb = ST.tombstoned_ids(
         spark, index_path, dict(union.dtypes)[meta.id_col], committed
     )
     if tomb is not None:
@@ -2529,18 +2340,11 @@ def rebuild_ivf_index(
     if dst_index is None:
         union = union.localCheckpoint(eager=True)
         dst_index = index_path
-    # spent-id manifest via the ONE shared protocol (r17 unification —
-    # this was the last inline copy; rebuild_ivfpq_index and every
-    # compactor already route through _fold_manifest_forward): classify
-    # the folded batches WHILE their tombstone dirs still exist (the
-    # helper runs before build_ivf_index clears them) and write the
-    # manifest to dst BEFORE the new base can serve (r15 review: a
+    # the spent-id manifest carries through build_ivf_index's base commit
+    # (store.commit_base): classified WHILE the tombstone dirs still exist
+    # and written to dst BEFORE the new base can serve (r15 review: a
     # post-meta write left a crash window with a healthy root and no
-    # manifest — exactly the replay double-count hole it closes).  Early
-    # marking is safe: the marked batches stay ledger-committed in the
-    # old root until the rebuild lands; a reused dst root's unrelated
-    # spent ids are cleared inside the helper.
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
+    # manifest — exactly the replay double-count hole it closes)
     build_ivf_index(
         union,
         dst_index,
@@ -2550,67 +2354,44 @@ def rebuild_ivf_index(
         coarse=meta.coarse,
         dim=int(meta.dim),
         seed=seed,
-        _clear_folded=False,
+        _fold=(index_path, committed),
     )
 
 
-def delete_from_ivf_index(
-    spark,
-    index_path: str,
-    ids: DataFrame,
-    batch_id: int | str,
-) -> None:
-    """Tombstone-delete vectors from the persisted IVF index WITHOUT a
-    rebuild — the ANN half of the takedown / post-hoc decontamination
-    story (:func:`retrieval.delete_from_text_index` is the lexical half).
-    ``ids`` is a one-column DataFrame of vector ids.
-
-    The IVF index keeps no global statistics, so a delete is just the
-    ledger-committed tombstone set under ``tombstones/batch=<id>``:
-    probes anti-join it out of the postings (bit-identical to a fresh
-    build over the retained vectors — tested), the drift-repair rebuild
-    excludes it from the retrain, and compaction/rebuild make the removal
-    physical and clear the set.  Crash consistency: the ledger marker
-    commits LAST, so a half-written tombstone set is invisible; replaying
-    the same ``batch_id`` overwrites its own partition.  Already-deleted
-    ids are folded in again harmlessly (no additive state to
-    double-subtract), but are excluded anyway so the tombstone set stays
-    duplicate-free across deliveries."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _guard_batch_id_kind,
-        _guard_spent_batch_id,
-        _tombstoned_ids,
-        ledger_commit,
-        validate_batch_id,
+def _ivf_md5_list_postings(
+    df: DataFrame, id_col: str, vec_col: str, n_centroids: int, dim: int
+) -> DataFrame:
+    """(id, vector, list) posting rows under the md5 IVF coarse arithmetic
+    — the literal ±1 codebook and ordered fold-dot argmax of
+    :func:`ivf_topk_md5`, shared by the persisted build and extend so the
+    two can never diverge."""
+    coarse_mat = np.asarray(
+        pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
     )
 
-    batch_id = validate_batch_id(batch_id)
-    if _guard_spent_batch_id(spark, index_path, batch_id, "delete"):
-        return  # folded replay: the victims are already physically gone
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "postings", "delete", "extension"
+    def assign(batches):
+        for batch in batches:
+            if not len(batch):
+                continue
+            mat = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
+            )
+            if mat.shape[1] != dim:
+                raise ValueError(
+                    f"corpus dim {mat.shape[1]} != configured dim {dim}"
+                )
+            normed = mat / _fold_norm_rows(mat)[:, None]
+            out = batch.copy()
+            out["list"] = np.argmax(
+                _fold_subspace_dots(normed, coarse_mat, 0), axis=1
+            ).astype("int32")
+            yield out
+
+    dtypes = dict(df.dtypes)
+    return df.select(id_col, vec_col).mapInPandas(
+        assign,
+        schema=f"{id_col} {dtypes[id_col]}, {vec_col} {dtypes[vec_col]}, list int",
     )
-    meta = read_meta_row(spark, index_path)
-    committed = _committed_batches(spark, index_path)
-    # pre-r15 meta-less fallback pinned to the BASE partition (r17): full
-    # postings-tree inference would read the footers of a crashed
-    # uncommitted delivery's partial files; the base is complete by
-    # construction (its commit marker is the meta write)
-    id_type = meta.asDict().get("id_type") or dict(
-        spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-    )[meta.id_col]
-    want = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc")).distinct()
-    tomb = _tombstoned_ids(
-        spark, index_path, id_type, committed, exclude_batch=batch_id
-    )
-    if tomb is not None:
-        want = want.join(tomb, "doc", "left_anti")
-        # eager: the write below overwrites a partition of the root the
-        # anti-join reads (delete replay)
-        want = want.localCheckpoint(eager=True)
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    ledger_commit(spark, index_path, batch_id)
 
 
 def _ivfpq_code_postings(
@@ -2675,7 +2456,7 @@ def build_ivfpq_index(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _clear_folded: bool = True,
+    _fold: tuple[str, list[str]] | None = None,
 ) -> None:
     """Persist the COMPRESSED ANN index: (id, list, pq_code) postings only —
     no raw vectors.  This is the variant that actually fits 100 TB of
@@ -2698,45 +2479,22 @@ def build_ivfpq_index(
     writes, meta deleted first / written LAST, ledger reset, tombstones
     cleared in the meta-less window.  NOTE: storage is LOSSY — a rebuild
     at different params needs the source corpus, not the index (inherent
-    to PQ); compaction and deletes work normally."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _fs_for,
-        cluster_for_partitioned_write,
-        folded_clear,
-        invalidate_index_meta,
-        ledger_reset,
-    )
-
+    to PQ); compaction and deletes work normally.  ``_fold`` is
+    :func:`store.commit_base`'s spent-id carry for
+    :func:`rebuild_ivfpq_index`."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    spark = df.sparkSession
     postings = _ivfpq_code_postings(
         df, id_col, vec_col, n_centroids, m, n_codewords, dim
     )
-    invalidate_index_meta(spark, index_path)
-    _tfs, _tpath, _tjvm = _fs_for(spark, f"{index_path}/tombstones")
-    _tfs.delete(_tpath, True)
-    if _clear_folded:
-        # a FRESH build starts a new world: old ids become reusable.  A
-        # rebuild passes False — it wrote the spent-id manifest BEFORE
-        # calling here and that manifest must survive the base rewrite
-        # (mirrors build_ivf_index's contract with rebuild_ivf_index).
-        folded_clear(spark, index_path)
-    cluster_for_partitioned_write(
-        postings.withColumn("batch", F.lit("base")), ["list"], F.col(id_col)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "list").parquet(f"{index_path}/postings")
-    ledger_reset(spark, index_path)
-    from chat_data_pipeline_spark.session import values_df
-
-    values_df(
-        spark,
-        [("md5pq", int(n_centroids), int(m), int(n_codewords), int(dim),
-          id_col, vec_col, dict(df.dtypes)[id_col])],
-        "coarse string, n_centroids int, m int, n_codewords int, dim int, "
-        "id_col string, vec_col string, id_type string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+    ST.commit_base(
+        df.sparkSession, index_path,
+        lambda: _write_list_base(index_path, postings, id_col),
+        IVFPQ_META,
+        ("md5pq", int(n_centroids), int(m), int(n_codewords), int(dim),
+         id_col, vec_col, dict(df.dtypes)[id_col]),
+        fold=_fold,
+    )
 
 
 def extend_ivfpq_index(
@@ -2752,56 +2510,17 @@ def extend_ivfpq_index(
     ``id_col``/``vec_col`` override the meta COLUMN NAMES when the
     delivered frame uses its own (config-driven callers pass theirs
     instead of pre-reading meta — one meta read per delivery)."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_batch_id_kind,
-        _guard_delivery_id_type,
-        _guard_tombstoned_delivery,
-        cluster_for_partitioned_write,
-        ledger_commit,
-        validate_batch_id,
-    )
-
-    batch_id = validate_batch_id(batch_id)
-    spark = df.sparkSession
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _guard_spent_batch_id,
-    )
-
-    if _guard_spent_batch_id(spark, index_path, batch_id, "extension"):
+    opened = ST.open_extension(df, index_path, batch_id, id_col, vec_col)
+    if opened is None:
         return  # folded replay: the base already holds this delivery
-    _guard_batch_id_kind(
-        spark, index_path, batch_id, "tombstones", "extension", "delete"
-    )
-    meta = read_meta_row(spark, index_path)
+    batch_id, meta, df, id_col = opened
     if meta.coarse != "md5pq":
         raise ValueError(f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r})")
-    if id_col or vec_col:
-        df = df.select(
-            F.col(id_col or meta.id_col).alias(meta.id_col),
-            F.col(vec_col or meta.vec_col).alias(meta.vec_col),
-        )
-    # pre-r15 fallback pinned to batch=base (r17) — see extend_ivf_index:
-    # whole-tree inference touches crashed partial-delivery footers
-    _guard_delivery_id_type(
-        df,
-        meta.id_col,
-        meta.asDict().get("id_type")
-        or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[meta.id_col],
-        index_path,
-    )
-    _guard_tombstoned_delivery(df.select(meta.id_col), index_path, meta.id_col)
     postings = _ivfpq_code_postings(
-        df, meta.id_col, meta.vec_col, int(meta.n_centroids), int(meta.m),
+        df, id_col, meta.vec_col, int(meta.n_centroids), int(meta.m),
         int(meta.n_codewords), int(meta.dim),
     )
-    cluster_for_partitioned_write(postings, ["list"], F.col(meta.id_col)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("list").parquet(
-        f"{index_path}/postings/batch={batch_id}"
-    )
-    ledger_commit(spark, index_path, batch_id)
+    _write_list_delivery(index_path, batch_id, postings, id_col)
 
 
 def rebuild_ivfpq_index(
@@ -2831,7 +2550,7 @@ def rebuild_ivfpq_index(
       the rebuild makes pending deletes physical;
     - the spent-id manifest carries forward and gains this rebuild's
       committed batch ids, written to dst BEFORE the new base can serve
-      (``build_ivfpq_index(_clear_folded=False)`` keeps it through the
+      (``build_ivfpq_index(_fold=...)`` keeps it through the
       meta-less window) — a crash-replayed delivery of a folded id stays
       a no-op on the rebuilt root;
     - VALIDATES before invalidating: param divisibility, id-column type
@@ -2840,21 +2559,14 @@ def rebuild_ivfpq_index(
     - ``dst_index=None`` rebuilds in place (tombstone anti-join pinned
       with an eager localCheckpoint before the overwrite); a 100 TB
       deployment passes ``dst_index`` and swaps probes over with
-      ``retrieval.swap_index_alias`` (write-then-swap, zero-downtime).
+      ``store.swap_index_alias`` (write-then-swap, zero-downtime).
 
     Pass a larger ``n_centroids`` to re-shard a grown corpus into more
     lists (finer file-listing pruning) while keeping the literal-codebook
     arithmetic — probes of the rebuilt root are BIT-IDENTICAL to a fresh
     ``build_ivfpq_index`` over the retained vectors at the same params
     (tested, and driver-hashed via ``ann_ivfpq_rebuild_report``)."""
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _fold_manifest_forward,
-        _guard_delivery_id_type,
-        _tombstoned_ids,
-    )
-
-    meta = read_meta_row(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
     if meta.coarse != "md5pq":
         raise ValueError(
             f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r}); "
@@ -2869,15 +2581,11 @@ def rebuild_ivfpq_index(
         F.col(id_col or meta.id_col).alias(meta.id_col),
         F.col(vec_col or meta.vec_col).alias(meta.vec_col),
     )
-    _guard_delivery_id_type(
-        union, meta.id_col, meta.asDict().get("id_type")
-        or dict(
-            spark.read.parquet(f"{index_path}/postings/batch=base").dtypes
-        )[meta.id_col],
-        index_path,
+    ST.guard_delivery_id_type(
+        union, meta.id_col, ST.meta_id_type(spark, index_path, meta), index_path
     )
-    committed = _committed_batches(spark, index_path)
-    tomb = _tombstoned_ids(
+    committed = ST.committed_batches(spark, index_path)
+    tomb = ST.tombstoned_ids(
         spark, index_path, dict(union.dtypes)[meta.id_col], committed
     )
     if tomb is not None:
@@ -2889,10 +2597,9 @@ def rebuild_ivfpq_index(
         # deletes inside its meta-less window — pin the retained set first
         union = union.localCheckpoint(eager=True)
         dst_index = index_path
-    # spent-id manifest BEFORE the new base can serve (shared compaction/
-    # rebuild protocol: carries src history forward, spends this rebuild's
-    # committed ids, clears a reused foreign dst's stale manifest)
-    _fold_manifest_forward(spark, index_path, dst_index, committed)
+    # spent-id manifest BEFORE the new base can serve, through the base
+    # commit (carries src history forward, spends this rebuild's committed
+    # ids, clears a reused foreign dst's stale manifest)
     build_ivfpq_index(
         union,
         dst_index,
@@ -2902,7 +2609,7 @@ def rebuild_ivfpq_index(
         dim=int(meta.dim),
         id_col=meta.id_col,
         vec_col=meta.vec_col,
-        _clear_folded=False,
+        _fold=(index_path, committed),
     )
 
 
@@ -2924,23 +2631,18 @@ def ivfpq_topk_persisted(
     the storage and scan bytes of the full-precision probe."""
     import pandas as pd
 
-    from chat_data_pipeline_spark.operators.retrieval import (
-        _committed_batches,
-        _tombstoned_ids,
-    )
-
-    meta = read_meta_row(spark, index_path)
+    meta = ST.read_meta_row(spark, index_path)
     if meta.coarse != "md5pq":
         raise ValueError(f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r})")
     n_centroids, m_sub = int(meta.n_centroids), int(meta.m)
     n_codewords, dim = int(meta.n_codewords), int(meta.dim)
     dsub = dim // m_sub
-    committed = _committed_batches(spark, index_path)
-    postings = _committed_tree(spark, index_path, "postings").filter(
+    committed = ST.committed_batches(spark, index_path)
+    postings = ST.committed_tree(spark, index_path, "postings").filter(
         F.col("batch").isin(committed)
     )
     id_col = meta.id_col
-    tomb = _tombstoned_ids(
+    tomb = ST.tombstoned_ids(
         spark, index_path, dict(postings.dtypes)[id_col], committed
     )
     if tomb is not None:

@@ -49,6 +49,7 @@ from chat_data_pipeline_spark.operators import retrieval as RT
 from chat_data_pipeline_spark.operators import sampling as S
 from chat_data_pipeline_spark.operators import selection as SEL
 from chat_data_pipeline_spark.operators import similarity as SIM
+from chat_data_pipeline_spark.operators import store as ST
 from chat_data_pipeline_spark.operators import language_model as LMOD
 from chat_data_pipeline_spark.operators import temporal as TP
 
@@ -2517,7 +2518,7 @@ def _mk_dedup_store(spark: SparkSession, sf_dir: str, idx: str) -> None:
     DSTORE.extend_dedup_index(
         docs.filter(F.col("doc_id") % 3 == 1), idx, batch_id="crawl-1"
     )
-    DSTORE.delete_from_dedup_index(
+    ST.tombstone_delete(
         spark,
         idx,
         docs.filter(F.col("doc_id") % 9 == 0).select("doc_id"),
@@ -7587,7 +7588,7 @@ def _mk_ivf_del_store(spark: SparkSession, sf_dir: str, idx: str) -> None:
     keys, so each row still owns its root)."""
     emb = _read(spark, sf_dir, "embeddings")
     SIM.build_ivf_index(emb, idx, n_centroids=16, coarse="md5", dim=64)
-    SIM.delete_from_ivf_index(
+    ST.tombstone_delete(
         spark,
         idx,
         emb.filter(F.col("vec_id") % 5 == 2).select("vec_id"),
@@ -7666,7 +7667,7 @@ def ivf_compacted_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         SIM.extend_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 1), idx, batch_id="crawl-1"
         )
-        SIM.delete_from_ivf_index(
+        ST.tombstone_delete(
             spark,
             idx,
             emb.filter(F.col("vec_id") % 5 == 2).select("vec_id"),
@@ -7947,7 +7948,7 @@ def _mk_ivfpq_del_store(spark: SparkSession, sf_dir: str, idx: str) -> None:
     distinct `_build_once` keys, so each row still owns its root)."""
     emb = _read(spark, sf_dir, "embeddings")
     SIM.build_ivfpq_index(emb, idx, n_centroids=16, m=8, n_codewords=16, dim=64)
-    SIM.delete_from_ivf_index(
+    ST.tombstone_delete(
         spark,
         idx,
         emb.filter(F.col("vec_id") % 5 == 2).select("vec_id"),
@@ -7984,7 +7985,7 @@ def ivfpq_compacted_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         SIM.extend_ivfpq_index(
             emb.filter(F.col("vec_id") % 2 == 1), idx, batch_id="crawl-1"
         )
-        SIM.delete_from_ivf_index(
+        ST.tombstone_delete(
             spark,
             idx,
             emb.filter(F.col("vec_id") % 5 == 2).select("vec_id"),
@@ -8157,7 +8158,7 @@ def _mk_neardup_store(spark: SparkSession, sf_dir: str, idx: str) -> None:
     NS.extend_neardup_index(
         emb.filter(F.col("vec_id") % 3 == 1), idx, batch_id="crawl-1"
     )
-    NS.delete_from_neardup_index(
+    ST.tombstone_delete(
         spark,
         idx,
         emb.filter((F.col("vec_id") % 3 == 1) & (F.col("vec_id") % 5 == 0))
@@ -8414,7 +8415,7 @@ def _mk_fleet_dedup(spark: SparkSession, sf_dir: str, idx: str) -> None:
     DSTORE.extend_dedup_index(
         docs.filter(F.col("doc_id") % 3 == 1), idx, batch_id="crawl-1"
     )
-    DSTORE.delete_from_dedup_index(
+    ST.tombstone_delete(
         spark,
         idx,
         docs.filter(F.col("doc_id") % 9 == 0).select("doc_id"),
@@ -8455,7 +8456,7 @@ def ann_ivfpq_rebuild_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         SIM.extend_ivfpq_index(
             emb.filter(F.col("vec_id") % 2 == 1), src, batch_id="b1"
         )
-        SIM.delete_from_ivf_index(
+        ST.tombstone_delete(
             spark,
             src,
             emb.filter(F.col("vec_id") % 7 == 1).select("vec_id"),
@@ -8482,9 +8483,7 @@ def _plant_gc_debris(spark: SparkSession, root: str, sub: str, shard: str | None
     can never age it across runs)."""
     import time
 
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for
-
-    fs, _p, jvm = _fs_for(spark, root)
+    fs, _p, jvm = ST.fs_for(spark, root)
     P = jvm.org.apache.hadoop.fs.Path
     now_ms = int(time.time() * 1000)
     leaf = f"/{shard}" if shard else ""
@@ -8616,13 +8615,11 @@ def _plant_fsck_finding(spark: SparkSession, label: str, root: str) -> None:
     import shutil
     import time
 
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for, folded_record
-
     if label == "fsck_bm25_index":
         _plant_gc_debris(spark, root, "postings", "bkt=0")
     elif label == "fsck_dedup_store":
         lease_dir = f"{root}/_writer_lease"
-        fs, ldir, jvm = _fs_for(spark, lease_dir)
+        fs, ldir, jvm = ST.fs_for(spark, lease_dir)
         fs.mkdirs(ldir)
         P = jvm.org.apache.hadoop.fs.Path
         for name in ("LOCK", "REAP-1755000000000"):
@@ -8632,7 +8629,7 @@ def _plant_fsck_finding(spark: SparkSession, label: str, root: str) -> None:
     elif label == "fsck_ivf_index":
         shutil.rmtree(f"{root}/postings/batch=b1", ignore_errors=True)
     elif label == "fsck_ivfpq_index":
-        folded_record(spark, root, [], ["takedown"])
+        ST.folded_record(spark, root, [], ["takedown"])
 
 
 @_register(

@@ -715,7 +715,7 @@ def _maybe_auto_compact(
     can never commit between the compactor's ledger snapshot and its base
     rewrite.  The folded-batch manifest independently keeps a
     crash-replay of an already-folded epoch a no-op instead of a
-    double-count (see ``retrieval.folded_record``).  Thresholds default
+    double-count (see ``store.folded_record``).  Thresholds default
     to the maintenance module's."""
     if not every or (epoch + 1) % int(every):
         return

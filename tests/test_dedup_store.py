@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators import dedup as D
 from chat_data_pipeline_spark.operators import dedup_store as DS
-from chat_data_pipeline_spark.operators import retrieval as RT
+from chat_data_pipeline_spark.operators import store as ST
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -85,7 +85,7 @@ def test_store_crash_and_delete_lifecycle(spark, docs, tmp_path):
 
     # delete half the b1 delivery: probes equal the filter vs retained refs
     victims = ref_b.filter(F.col("doc_id") % 2 == 0).select("doc_id")
-    DS.delete_from_dedup_index(spark, idx, victims, batch_id="take-1")
+    ST.tombstone_delete(spark, idx, victims, batch_id="take-1")
     retained = ref_a.unionByName(ref_b.filter(F.col("doc_id") % 2 == 1))
     got = _ids(DS.filter_against_dedup_index(spark, idx, new))
     want = _ids(D.cross_corpus_minhash_filter_md5(new, retained, "text", "doc_id"))
@@ -97,7 +97,7 @@ def test_store_crash_and_delete_lifecycle(spark, docs, tmp_path):
     DS.compact_dedup_index(spark, idx)
     assert not os.path.exists(f"{idx}/tombstones")
     assert _ids(DS.filter_against_dedup_index(spark, idx, new)) == want
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
     left = {
         r.id
         for r in spark.read.parquet(f"{idx}/bands").select("id").distinct().collect()
@@ -138,7 +138,7 @@ def test_dedup_store_health_reports_the_lifecycle(spark, docs, tmp_path):
     DS.build_dedup_index(ref_a, idx, family="md5")
     DS.extend_dedup_index(ref_b, idx, batch_id="b1")
     victims = ref_b.filter(F.col("doc_id") % 2 == 0).select("doc_id")
-    DS.delete_from_dedup_index(spark, idx, victims, batch_id="take")
+    ST.tombstone_delete(spark, idx, victims, batch_id="take")
     rows = {r.batch: r for r in DS.dedup_store_health(spark, idx).collect()}
     assert set(rows) == {"base", "b1", "take"}
 
@@ -172,4 +172,4 @@ def test_extend_dedup_index_refuses_wrong_id_type(spark, docs, tmp_path):
     )
     with pytest.raises(ValueError, match="id type"):
         DS.extend_dedup_index(bad, idx, batch_id="b1")
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]

@@ -17,6 +17,7 @@ from chat_data_pipeline_spark.operators import dedup_store as DS
 from chat_data_pipeline_spark.operators import neardup_store as NS
 from chat_data_pipeline_spark.operators import retrieval as RT
 from chat_data_pipeline_spark.operators import similarity as SIM
+from chat_data_pipeline_spark.operators import store as ST
 
 SF_DIR = "/root/testdata/sf0.001"
 TERMS = ["join", "hash", "scan", "window", "sort"]
@@ -51,7 +52,7 @@ def test_bm25_replay_after_compaction_is_noop(spark, docs, tmp_path):
     RT.extend_text_index(half_b, idx, batch_id="s5")
     after = sorted(map(tuple, RT.bm25_topk_indexed(spark, idx, TERMS, k=20).collect()))
     assert after == before  # pre-manifest this double-counted df/n_docs
-    assert RT._committed_batches(spark, idx) == ["base"]  # true no-op
+    assert ST.committed_batches(spark, idx) == ["base"]  # true no-op
     # the live totals stayed exact too
     health = {r.batch: r for r in RT.text_index_health(spark, idx).collect()}
     assert health["base"].n_docs == docs.count()
@@ -75,10 +76,10 @@ def test_bm25_replay_after_compaction_is_noop(spark, docs, tmp_path):
         RT.extend_text_index(half_b, idx, batch_id="t9")
 
     # manifests survive chained compactions (s5 is still spent) ...
-    assert RT.folded_kind(spark, idx, "s5") == "extension"
+    assert ST.folded_kind(spark, idx, "s5") == "extension"
     # ... and a FRESH from-source build starts a new world
     RT.build_text_index(docs, idx)
-    assert RT.folded_kind(spark, idx, "s5") is None
+    assert ST.folded_kind(spark, idx, "s5") is None
     RT.extend_text_index(half_b.limit(5), idx, batch_id="s5")  # legal again
 
 
@@ -106,7 +107,7 @@ def test_ivf_and_ivfpq_replay_after_compaction_is_noop(spark, emb, tmp_path):
         else:
             SIM.extend_ivfpq_index(half_b, idx, batch_id="s3")
         assert sorted(map(tuple, probe(idx).collect())) == before
-        assert RT._committed_batches(spark, idx) == ["base"]
+        assert ST.committed_batches(spark, idx) == ["base"]
 
 
 def test_ivf_rebuild_spends_folded_ids(spark, emb, tmp_path):
@@ -127,7 +128,7 @@ def test_ivf_rebuild_spends_folded_ids(spark, emb, tmp_path):
     assert sorted(
         map(tuple, SIM.ivf_topk_persisted(spark, idx, queries, k=10, n_probe=4).collect())
     ) == before
-    assert RT.folded_kind(spark, idx, "s7") == "extension"
+    assert ST.folded_kind(spark, idx, "s7") == "extension"
 
 
 def test_dedup_and_neardup_replay_after_compaction_is_noop(spark, docs, emb, tmp_path):
@@ -142,7 +143,7 @@ def test_dedup_and_neardup_replay_after_compaction_is_noop(spark, docs, emb, tmp
     assert {
         r.doc_id for r in DS.filter_against_dedup_index(spark, d, new).collect()
     } == before
-    assert RT._committed_batches(spark, d) == ["base"]
+    assert ST.committed_batches(spark, d) == ["base"]
 
     nd = str(tmp_path / "fold_nd")
     NS.build_neardup_index(
@@ -159,7 +160,7 @@ def test_dedup_and_neardup_replay_after_compaction_is_noop(spark, docs, emb, tmp
     assert {
         r.vec_id for r in NS.filter_against_neardup_index(spark, nd, vnew).collect()
     } == nbefore
-    assert RT._committed_batches(spark, nd) == ["base"]
+    assert ST.committed_batches(spark, nd) == ["base"]
 
 
 def test_write_then_swap_compaction_carries_the_manifest(spark, docs, tmp_path):
@@ -171,8 +172,8 @@ def test_write_then_swap_compaction_carries_the_manifest(spark, docs, tmp_path):
     dst = str(tmp_path / "fold_dst")
     RT.compact_text_index(spark, idx, dst_index=dst)
     # BOTH generations of spent ids reached the new root
-    assert RT.folded_kind(spark, dst, "s1") == "extension"
-    assert RT.folded_kind(spark, dst, "s2") == "extension"
+    assert ST.folded_kind(spark, dst, "s1") == "extension"
+    assert ST.folded_kind(spark, dst, "s2") == "extension"
     before = sorted(map(tuple, RT.bm25_topk_indexed(spark, dst, TERMS, k=20).collect()))
     RT.extend_text_index(docs.limit(7), dst, batch_id="s2")  # replay vs dst
     assert sorted(
@@ -214,8 +215,8 @@ def test_streaming_delivery_with_auto_compact(spark, docs, tmp_path):
         q.stop()
     # every trigger's delivery pushed the ledger over max_batches=1 and
     # the follow-up compaction folded it back down
-    assert RT._committed_batches(spark, idx) == ["base"]
-    assert RT.folded_kind(spark, idx, "s0") == "extension"
+    assert ST.committed_batches(spark, idx) == ["base"]
+    assert ST.folded_kind(spark, idx, "s0") == "extension"
     direct = str(tmp_path / "auto_direct")
     RT.build_text_index(docs, direct)
     assert sorted(
@@ -233,18 +234,18 @@ def test_reused_dst_root_does_not_resurrect_stale_spent_ids(spark, docs, tmp_pat
     RT.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), old_world)
     RT.extend_text_index(docs.filter(F.col("doc_id") % 2 == 1), old_world, batch_id="sX")
     RT.compact_text_index(spark, old_world)
-    assert RT.folded_kind(spark, old_world, "sX") == "extension"
+    assert ST.folded_kind(spark, old_world, "sX") == "extension"
 
     src = str(tmp_path / "new_src")
     RT.build_text_index(docs.filter(F.col("doc_id") % 3 == 0), src)
     RT.extend_text_index(docs.filter(F.col("doc_id") % 3 == 1), src, batch_id="sY")
     RT.compact_text_index(spark, src, dst_index=old_world)
     # the reused dst carries ONLY the source's history
-    assert RT.folded_kind(spark, old_world, "sY") == "extension"
-    assert RT.folded_kind(spark, old_world, "sX") is None
+    assert ST.folded_kind(spark, old_world, "sY") == "extension"
+    assert ST.folded_kind(spark, old_world, "sX") is None
     # a fresh delivery under the unrelated world's id is legal again
     RT.extend_text_index(docs.limit(5), old_world, batch_id="sX")
-    assert "sX" in RT._committed_batches(spark, old_world)
+    assert "sX" in ST.committed_batches(spark, old_world)
 
 
 def test_fresh_checkpoint_prefix_avoids_spent_id_collision(spark, docs, tmp_path):
@@ -281,15 +282,15 @@ def test_fresh_checkpoint_prefix_avoids_spent_id_collision(spark, docs, tmp_path
     # generation 1 delivers epoch 0 under the default prefix, then a
     # compaction folds (and spends) s0
     _run_generation("gen1", "ckpt1", docs.filter(F.col("doc_id") % 3 == 1), "s")
-    assert "s0" in RT._committed_batches(spark, idx)
+    assert "s0" in ST.committed_batches(spark, idx)
     RT.compact_text_index(spark, idx)
-    assert RT.folded_kind(spark, idx, "s0") == "extension"
+    assert ST.folded_kind(spark, idx, "s0") == "extension"
 
     # generation 2: fresh checkpoint, epochs restart at 0.  Under the old
     # prefix this NEW content would be skipped as a replay of spent s0;
     # under its own prefix it lands as a real delivery.
     _run_generation("gen2", "ckpt2", docs.filter(F.col("doc_id") % 3 == 2), "s2-")
-    assert "s2-0" in RT._committed_batches(spark, idx)
+    assert "s2-0" in ST.committed_batches(spark, idx)
 
     direct = str(tmp_path / "prefix_direct")
     RT.build_text_index(docs, direct)

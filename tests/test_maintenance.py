@@ -16,6 +16,7 @@ from chat_data_pipeline_spark.operators import dedup_store as DS
 from chat_data_pipeline_spark.operators import maintenance as MT
 from chat_data_pipeline_spark.operators import retrieval as RT
 from chat_data_pipeline_spark.operators import similarity as SIM
+from chat_data_pipeline_spark.operators import store as ST
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -51,13 +52,10 @@ def test_detect_store_kind_all_four(spark, docs, emb, tmp_path):
     assert MT.detect_store_kind(spark, d) == "dedup"
 
 
-def _build_half(kind, docs, emb, path):
-    """Base over the even-id half of the kind's corpus; returns the odd
-    half, the extension frame."""
+def _build(kind, base, path):
+    """Build a ``kind`` store over ``base`` at ``path``."""
     from chat_data_pipeline_spark.operators import neardup_store as NS
 
-    src, id_col = (docs, "doc_id") if kind in ("bm25", "dedup") else (emb, "vec_id")
-    base = src.filter(F.col(id_col) % 2 == 0)
     if kind == "bm25":
         RT.build_text_index(base, path)
     elif kind == "ivf":
@@ -68,6 +66,13 @@ def _build_half(kind, docs, emb, path):
         DS.build_dedup_index(base, path, family="md5")
     else:
         NS.build_neardup_index(base, path, n_planes=4, n_tables=4, dim=64)
+
+
+def _build_half(kind, docs, emb, path):
+    """Base over the even-id half of the kind's corpus; returns the odd
+    half, the extension frame."""
+    src, id_col = (docs, "doc_id") if kind in ("bm25", "dedup") else (emb, "vec_id")
+    _build(kind, src.filter(F.col(id_col) % 2 == 0), path)
     return src.filter(F.col(id_col) % 2 == 1)
 
 
@@ -84,7 +89,7 @@ def test_store_kinds_dispatch_every_kind(spark, docs, emb, tmp_path, kind):
     assert MT.store_kind_and_meta(spark, path)[0] == kind
     assert set(MT.STORE_KINDS) == {"bm25", "ivf", "ivfpq", "dedup", "neardup"}
     MT.STORE_KINDS[kind].extend(ext, path, batch_id="e1")
-    assert RT._committed_batches(spark, path) == ["base", "e1"]
+    assert ST.committed_batches(spark, path) == ["base", "e1"]
     plan = MT.maintenance_plan_values(spark, path)
 
     clone = str(tmp_path / f"dispatch_{kind}_clone")
@@ -94,8 +99,111 @@ def test_store_kinds_dispatch_every_kind(spark, docs, emb, tmp_path, kind):
     assert MT.maintenance_plan_values(spark, clone) == plan
 
     assert MT.compact_if_needed(spark, path, max_batches=0)
-    assert RT._committed_batches(spark, path) == ["base"]
+    assert ST.committed_batches(spark, path) == ["base"]
     assert MT.maintenance_plan_values(spark, path).live_units == plan.live_units
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+def _probe(kind, spark, path, docs, emb):
+    """The kind's serving probe, run to completion, as sorted tuples."""
+    from chat_data_pipeline_spark.operators import neardup_store as NS
+
+    queries = emb.limit(3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    if kind == "bm25":
+        out = RT.bm25_topk_indexed(spark, path, ["join", "hash", "scan"], k=5)
+    elif kind == "ivf":
+        out = SIM.ivf_topk_persisted(spark, path, queries, k=5, n_probe=4)
+    elif kind == "ivfpq":
+        out = SIM.ivfpq_topk_persisted(spark, path, queries, k=5, n_probe=4)
+    elif kind == "dedup":
+        out = DS.filter_against_dedup_index(spark, path, docs.limit(40))
+    else:
+        out = NS.filter_against_neardup_index(spark, path, emb.limit(40))
+    return sorted(map(tuple, out.collect()))
+
+
+@pytest.mark.parametrize("verb", ["build", "compact"])
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "ivfpq", "dedup", "neardup"])
+def test_crash_inside_base_commit_leaves_no_servable_root(
+    spark, docs, emb, tmp_path, monkeypatch, kind, verb
+):
+    """The base commit's crash posture, per kind, for a rebuild AND an
+    in-place compaction: the artifact write lands and then dies inside
+    ``store.commit_base``.  The root must be meta-less, so classification
+    and the kind's probe both fail loudly instead of merging the partial
+    new base with the old ledger's extension; a completed rebuild over the
+    same corpus then serves exactly what base + extension served."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / f"crash_{kind}_{verb}")
+    ext = _build_half(kind, docs, emb, path)
+    MT.STORE_KINDS[kind].extend(ext, path, batch_id="e1")
+    served = _probe(kind, spark, path, docs, emb)
+    src = docs if kind in ("bm25", "dedup") else emb
+
+    real = ST.commit_base
+
+    def crashing(spark_, index_path, write, *args, **kwargs):
+        def write_then_die():
+            write()
+            raise _InjectedCrash(f"{kind} {verb} died after its artifact write")
+
+        real(spark_, index_path, write_then_die, *args, **kwargs)
+
+    monkeypatch.setattr(ST, "commit_base", crashing)
+    with pytest.raises(_InjectedCrash):
+        if verb == "build":
+            _build(kind, src, path)
+        else:
+            MT.STORE_KINDS[kind].compact(spark, path)
+    monkeypatch.undo()
+
+    assert not os.path.exists(os.path.join(path, "meta"))
+    with pytest.raises((AnalysisException, Py4JJavaError)):
+        MT.store_kind_and_meta(spark, path)
+    with pytest.raises((AnalysisException, Py4JJavaError)):
+        _probe(kind, spark, path, docs, emb)
+
+    _build(kind, src, path)
+    assert MT.store_kind_and_meta(spark, path)[0] == kind
+    assert ST.committed_batches(spark, path) == ["base"]
+    assert _probe(kind, spark, path, docs, emb) == served
+
+
+def test_store_protocol_steps_live_only_in_store_module():
+    """Structural guard: the base-commit steps — meta invalidation, ledger
+    reset, folded-manifest clear — and every ``.parquet(f"{...}/meta")``
+    call are sequenced in ``operators/store.py`` alone, so no store kind
+    can hand-copy (and drift) the crash posture again."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(MT.__file__).resolve().parents[1]
+    steps = {"invalidate_index_meta", "ledger_reset", "folded_clear"}
+    found: dict[str, list[str]] = {}
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(py.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name == "parquet" and node.args and isinstance(node.args[0], ast.JoinedStr):
+                tail = node.args[0].values[-1]
+                if isinstance(tail, ast.Constant) and str(tail.value).endswith("/meta"):
+                    name = "meta parquet"
+            if name in steps or name == "meta parquet":
+                found.setdefault(rel, []).append(f"{name}:{node.lineno}")
+    assert set(found) == {"operators/store.py"}, found
+    assert {n.split(":")[0] for n in found["operators/store.py"]} == steps | {
+        "meta parquet"
+    }
 
 
 def test_maintenance_plan_bm25_exact_numbers(spark, docs, tmp_path):
@@ -137,12 +245,12 @@ def test_maintenance_plan_batch_threshold_and_noop(spark, emb, tmp_path):
     assert not plan.compact_recommended  # 4 <= default 8, no tombstones
     # below thresholds: no-op, ledger untouched
     assert not MT.compact_if_needed(spark, idx)
-    assert len(RT._committed_batches(spark, idx)) == 4
+    assert len(ST.committed_batches(spark, idx)) == 4
     # a tighter batch budget flips the recommendation
     tight = MT.maintenance_plan(spark, idx, max_batches=3).first()
     assert tight.compact_recommended
     assert MT.compact_if_needed(spark, idx, max_batches=3)
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
 
 def test_maintenance_plan_dedup_and_ivfpq_units(spark, docs, emb, tmp_path):
@@ -179,14 +287,14 @@ def test_cli_auto_compact_acts_and_skips(spark, docs, tmp_path):
                   "max_tombstone_nanos": 999_999_999, "dst_path": stale_dst,
                   "alias": alias}},
     )
-    assert RT.resolve_index_alias(spark, alias) == idx
+    assert ST.resolve_index_alias(spark, alias) == idx
     assert os.path.exists(f"{idx}/tombstones")
     # default thresholds: ~17% dead crosses 10% — compacts, tombstones gone
     _run_indexing(
         spark, dfu, {"bm25": {"path": idx, "action": "auto_compact"}}
     )
     assert not os.path.exists(f"{idx}/tombstones")
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
 
 def test_cli_takedown_block_hits_every_store(spark, docs, emb, tmp_path):
@@ -300,7 +408,7 @@ def test_cli_maintain_block_sweeps_the_fleet(spark, docs, emb, tmp_path):
     assert not os.path.exists(f"{b}/tombstones")
     # the healthy ivf root untouched
     assert rows[v].n_batches == 1 and not rows[v].compact_recommended
-    assert RT._committed_batches(spark, v) == ["base"]
+    assert ST.committed_batches(spark, v) == ["base"]
     # the persisted report matches the returned frame
     persisted = {r.root: r for r in spark.read.parquet(report_path).collect()}
     assert persisted.keys() == rows.keys()
@@ -408,7 +516,7 @@ def test_cli_maintain_five_kind_fleet_with_crash_debris(
     )
     pidx = str(tmp_path / "fleet_p")
     SIM.build_ivfpq_index(emb, pidx, n_centroids=16, m=8, n_codewords=16, dim=64)
-    SIM.delete_from_ivf_index(
+    ST.tombstone_delete(
         spark, pidx, emb.filter(F.col("vec_id") % 5 == 2).select("vec_id"),
         batch_id="take",
     )
@@ -418,7 +526,7 @@ def test_cli_maintain_five_kind_fleet_with_crash_debris(
         n_planes=4, n_tables=4, dim=64, threshold=0.45,
     )
     NS.extend_neardup_index(emb.filter(F.col("vec_id") % 2 == 1), nidx, batch_id="b1")
-    NS.delete_from_neardup_index(
+    ST.tombstone_delete(
         spark, nidx, emb.filter(F.col("vec_id") % 6 == 0).select("vec_id"),
         batch_id="take",
     )
@@ -462,9 +570,7 @@ def _age_dir(spark, path: str, ms_ago: int = 86_400_000 * 2) -> None:
     """Backdate a dir's mtime so the GC grace judges it stale."""
     import time
 
-    from chat_data_pipeline_spark.operators.retrieval import _fs_for
-
-    fs, p, _jvm = _fs_for(spark, path)
+    fs, p, _jvm = ST.fs_for(spark, path)
     fs.setTimes(p, int(time.time() * 1000) - ms_ago, -1)
 
 
@@ -581,7 +687,6 @@ def test_snapshot_store_clones_committed_state_only(spark, docs, tmp_path):
     spent-id manifest travel; crash debris and the lease dir never do;
     probes of the snapshot bit-match the source; the destination is a
     full store (its own ledger) that refuses accidental overwrite."""
-    from chat_data_pipeline_spark.operators import retrieval as RTL
 
     src = str(tmp_path / "snap_src")
     RT.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), src)
@@ -619,7 +724,7 @@ def test_snapshot_store_clones_committed_state_only(spark, docs, tmp_path):
     before = RT.bm25_topk_indexed(spark, dst, terms, k=10).collect()
     RT.extend_text_index(docs.limit(5), dst, batch_id="b1")  # folded id
     assert RT.bm25_topk_indexed(spark, dst, terms, k=10).collect() == before
-    assert set(RTL._committed_batches(spark, dst)) == {"base", "b2"}
+    assert set(ST.committed_batches(spark, dst)) == {"base", "b2"}
     # existing destination refused without overwrite
     with pytest.raises(ValueError, match="overwrite"):
         MT.snapshot_store(spark, src, dst)
@@ -631,7 +736,7 @@ def test_cli_snapshot_action_with_alias_cutover(spark, docs, tmp_path):
     under the dual-root lease, and the serving alias cuts over to the
     fresh snapshot only after its meta commits."""
     from chat_data_pipeline_spark.cli import _run_indexing
-    from chat_data_pipeline_spark.operators.retrieval import resolve_index_alias
+    from chat_data_pipeline_spark.operators.store import resolve_index_alias
 
     src = str(tmp_path / "clis_src")
     RT.build_text_index(docs, src)
@@ -857,7 +962,7 @@ def test_fsck_fold_ledger_overlap_is_corrupt(spark, docs, tmp_path):
     idx = str(tmp_path / "fsck_overlap")
     RT.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), idx)
     RT.extend_text_index(docs.filter(F.col("doc_id") % 2 == 1), idx, batch_id="b1")
-    RT.folded_record(spark, idx, ["b1"], [])  # fold landed, reset didn't
+    ST.folded_record(spark, idx, ["b1"], [])  # fold landed, reset didn't
     row = MT.fsck_store(spark, idx).first()
     assert row.status == "corrupt"
     assert (row.fold_ledger_overlap, row.folded_spent) == (1, 1)
@@ -1068,7 +1173,7 @@ def test_maintenance_plan_fused_counts_ivf_with_tombstones(spark, emb, tmp_path)
     idx = str(tmp_path / "fused_ivf")
     SIM.build_ivf_index(emb, idx, n_centroids=16, coarse="md5", dim=64)
     victims = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id")
-    SIM.delete_from_ivf_index(spark, idx, victims, batch_id="take")
+    ST.tombstone_delete(spark, idx, victims, batch_id="take")
     n = emb.count()
     k = victims.count()
     plan = MT.maintenance_plan(spark, idx).first()
@@ -1113,7 +1218,7 @@ def test_read_meta_row_matches_spark_read(spark, docs, emb, tmp_path):
     v = str(tmp_path / "mr_ivf")
     SIM.build_ivf_index(emb, v, n_centroids=16, coarse="md5", dim=64)
     for root in (b, v):
-        fast = RT.read_meta_row(spark, root)
+        fast = ST.read_meta_row(spark, root)
         slow = spark.read.parquet(f"{root}/meta").first()
         assert fast == slow
         assert list(fast.asDict()) == list(slow.asDict())
@@ -1124,11 +1229,11 @@ def test_read_meta_row_matches_spark_read(spark, docs, emb, tmp_path):
     spark.range(0).selectExpr(
         "CAST('x' AS STRING) AS id_type", "CAST(1 AS INT) AS n_term_buckets"
     ).repartition(1).write.mode("overwrite").parquet(f"{z}/meta")
-    assert RT.read_meta_row(spark, z) is None
+    assert ST.read_meta_row(spark, z) is None
 
     # missing root -> the Spark path's loud failure
     with pytest.raises(Exception) as exc:
-        RT.read_meta_row(spark, str(tmp_path / "mr_missing"))
+        ST.read_meta_row(spark, str(tmp_path / "mr_missing"))
     assert "PATH_NOT_FOUND" in str(exc.value) or "Path does not exist" in str(
         exc.value
     )
@@ -1183,7 +1288,7 @@ def test_local_parquet_schema_parity(spark, docs, emb, tmp_path):
         (nd, ["postings", "vectors"]),
     ]:
         for sub in subs:
-            got = RT.committed_tree(spark, root, sub).schema
+            got = ST.committed_tree(spark, root, sub).schema
             want = _inferred_tree_schema(root, sub)
             assert got == want, f"{root}/{sub}: {got} != {want}"
 
@@ -1198,7 +1303,7 @@ def test_read_meta_row_multi_row_takes_spark_path(spark, tmp_path):
     spark.sql(
         "SELECT * FROM VALUES ('x', 1), ('y', 2) AS t(id_type, n_term_buckets)"
     ).repartition(1).write.mode("overwrite").parquet(f"{m}/meta")
-    fast = RT.read_meta_row(spark, m)
+    fast = ST.read_meta_row(spark, m)
     slow = spark.read.parquet(f"{m}/meta").first()
     assert fast == slow
 

@@ -12,8 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators import neardup_store as NS
-from chat_data_pipeline_spark.operators import retrieval as RT
 from chat_data_pipeline_spark.operators import similarity as SIM
+from chat_data_pipeline_spark.operators import store as ST
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -83,7 +83,7 @@ def test_crash_delete_compact_lifecycle(spark, emb, tmp_path):
 
     # delete half of b1: probes equal the twin over the retained refs
     vic = ref_b.filter(F.col("vec_id") % 2 == 0).select("vec_id")
-    NS.delete_from_neardup_index(spark, idx, vic, batch_id="t1")
+    ST.tombstone_delete(spark, idx, vic, batch_id="t1")
     retained = ref.unionByName(ref_b.filter(F.col("vec_id") % 2 == 1))
     want_dropped = _cross_dropped(retained, new, lambda i: i % 3 == 2)
     kept2 = {
@@ -96,7 +96,7 @@ def test_crash_delete_compact_lifecycle(spark, emb, tmp_path):
         NS.extend_neardup_index(ref_b, idx, batch_id="b2")
     NS.compact_neardup_index(spark, idx)
     assert not os.path.exists(f"{idx}/tombstones")
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
     kept3 = {
         r.vec_id for r in NS.filter_against_neardup_index(spark, idx, new).collect()
     }
@@ -115,7 +115,7 @@ def test_guards_and_kind_detection(spark, emb, tmp_path):
         NS.extend_neardup_index(bad, idx, batch_id="b1")
     # cross-kind batch-id reuse refused (victims chosen RESIDENT — the
     # plan below counts only resident dead since the r15 review fix)
-    NS.delete_from_neardup_index(
+    ST.tombstone_delete(
         spark, idx,
         emb.filter(F.col("vec_id").isin(0, 2, 4)).select("vec_id"),
         batch_id="x1",
@@ -214,7 +214,7 @@ def test_cli_neardup_lifecycle_and_semantic_onboarding(spark, emb, tmp_path):
     )
     assert {r.id for r in out.select("id").collect()} == want
     # the write-back delivered the survivors' vectors
-    committed = set(RT._committed_batches(spark, store))
+    committed = set(ST.committed_batches(spark, store))
     assert "crawl-2" in committed
     n_vecs = (
         spark.read.parquet(f"{store}/vectors")
@@ -227,7 +227,7 @@ def test_cli_neardup_lifecycle_and_semantic_onboarding(spark, emb, tmp_path):
         spark, dfu,
         {"neardup": {"path": store, "action": "auto_compact", "max_batches": 1}},
     )
-    assert RT._committed_batches(spark, store) == ["base"]
+    assert ST.committed_batches(spark, store) == ["base"]
 
 
 def test_streaming_neardup_delivery_stream_equals_batch(spark, emb, tmp_path):
@@ -254,7 +254,7 @@ def test_streaming_neardup_delivery_stream_equals_batch(spark, emb, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    assert len(RT._committed_batches(spark, store)) == 2
+    assert len(ST.committed_batches(spark, store)) == 2
     new = emb.filter(F.col("vec_id") % 3 == 2)
     got = {
         r.vec_id for r in NS.filter_against_neardup_index(spark, store, new).collect()
@@ -318,7 +318,7 @@ def test_neardup_store_health_counts_committed_only(spark, emb, tmp_path):
     NS.extend_neardup_index(
         emb.filter(F.col("vec_id") % 3 == 1), idx, batch_id="c1"
     )
-    NS.delete_from_neardup_index(
+    ST.tombstone_delete(
         spark, idx, emb.filter(F.col("vec_id") % 9 == 2).select("vec_id"),
         batch_id="t1",
     )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from chat_data_pipeline_spark.operators import dedup as D
 from chat_data_pipeline_spark.operators import retrieval as RT
 from chat_data_pipeline_spark.operators import sampling as S
+from chat_data_pipeline_spark.operators import store as ST
 
 DOCS = [
     (0, "spark shuffles the hash join across the cluster"),
@@ -414,14 +415,14 @@ def test_index_write_parallelism_decouples_from_bucket_count(spark):
 
         bare = nonempty(rows.repartition(F.col("bkt")))
         salted = nonempty(
-            RT.cluster_for_partitioned_write(rows, ["bkt"], F.col("term"))
+            ST.cluster_for_partitioned_write(rows, ["bkt"], F.col("term"))
         )
         assert bare <= 64  # the ceiling the bare clustering imposes
         assert salted > 64  # the salt breaks it
         # salt=1 degenerates to the bare clustering (byte-identical shape)
         assert (
             nonempty(
-                RT.cluster_for_partitioned_write(
+                ST.cluster_for_partitioned_write(
                     rows, ["bkt"], F.col("term"), write_salt=1
                 )
             )
@@ -446,7 +447,7 @@ def test_index_file_count_stays_bounded_by_salt(spark, tmp_path):
     RT.build_text_index(docs, idx)
     for d in glob.glob(f"{idx}/postings/batch=base/bkt=*"):
         n = len(glob.glob(f"{d}/part-*"))
-        assert 1 <= n <= RT.WRITE_SALT, f"{d} has {n} files"
+        assert 1 <= n <= ST.WRITE_SALT, f"{d} has {n} files"
 
 
 def test_extend_rejects_reserved_and_unsafe_batch_ids(spark, tmp_path):
@@ -465,7 +466,7 @@ def test_extend_rejects_reserved_and_unsafe_batch_ids(spark, tmp_path):
         with _pytest.raises(ValueError):
             RT.extend_text_index(docs.limit(5), idx, batch_id=bad)
     # the sibling IVF extension shares the validator
-    assert RT.validate_batch_id("delivery-2026.08_15") == "delivery-2026.08_15"
+    assert ST.validate_batch_id("delivery-2026.08_15") == "delivery-2026.08_15"
 
 
 def test_text_index_meta_is_the_commit_marker(spark, tmp_path):
@@ -681,7 +682,7 @@ def test_compact_text_index_bit_identical_probes(spark, tmp_path):
         for r in spark.read.parquet(f"{idx}/postings").select("batch").distinct().collect()
     }
     assert batches == {"base"}  # single-batch probe cost restored
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
     # the compacted index keeps extending normally
     extra = spark.createDataFrame(
@@ -715,7 +716,7 @@ def test_rebuild_crash_leaves_no_servable_meta(spark, tmp_path):
     assert RT.bm25_topk_indexed(spark, idx, terms, k=5).count() == 5
 
     # a rebuild's FIRST action: the index enters the meta-less window
-    RT.invalidate_index_meta(spark, idx)
+    ST.invalidate_index_meta(spark, idx)
     with _pytest.raises((AnalysisException, Py4JJavaError)):
         RT.bm25_topk_indexed(spark, idx, terms, k=5).collect()
 
@@ -744,67 +745,67 @@ def test_index_alias_write_then_swap_cutover(spark, tmp_path):
     v1, v2 = str(tmp_path / "idx_v1"), str(tmp_path / "idx_v2")
     alias = str(tmp_path / "serving_alias")
     RT.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), v1)
-    RT.swap_index_alias(spark, alias, v1)
-    assert RT.resolve_index_alias(spark, alias) == v1
+    ST.swap_index_alias(spark, alias, v1)
+    assert ST.resolve_index_alias(spark, alias) == v1
     old = sorted(
         map(
             tuple,
             RT.bm25_topk_indexed(
-                spark, RT.resolve_index_alias(spark, alias), terms
+                spark, ST.resolve_index_alias(spark, alias), terms
             ).collect(),
         )
     )
 
     # rebuild into a FRESH root while the alias keeps serving v1
     RT.build_text_index(docs, v2)
-    assert RT.resolve_index_alias(spark, alias) == v1
-    RT.swap_index_alias(spark, alias, v2)
-    assert RT.resolve_index_alias(spark, alias) == v2
+    assert ST.resolve_index_alias(spark, alias) == v1
+    ST.swap_index_alias(spark, alias, v2)
+    assert ST.resolve_index_alias(spark, alias) == v2
     new = sorted(
         map(
             tuple,
             RT.bm25_topk_indexed(
-                spark, RT.resolve_index_alias(spark, alias), terms
+                spark, ST.resolve_index_alias(spark, alias), terms
             ).collect(),
         )
     )
     assert new != old  # the cutover actually moved probes to the full corpus
 
     # pruning keeps the immediately-previous pointer for in-flight readers
-    fs, adir, jvm = RT._fs_for(spark, alias)
+    fs, adir, jvm = ST.fs_for(spark, alias)
     live = sorted(
         st.getPath().getName()
         for st in fs.listStatus(adir)
         if st.getPath().getName().startswith("v")
     )
     assert len(live) == 2  # v1's pointer survived the v2 swap
-    RT.swap_index_alias(spark, alias, v2)  # third swap prunes the oldest
+    ST.swap_index_alias(spark, alias, v2)  # third swap prunes the oldest
     live = sorted(
         st.getPath().getName()
         for st in fs.listStatus(adir)
         if st.getPath().getName().startswith("v")
     )
-    assert len(live) == 2 and RT.resolve_index_alias(spark, alias) == v2
+    assert len(live) == 2 and ST.resolve_index_alias(spark, alias) == v2
 
     # a crashed swap's _tmp stage is invisible to resolution
     stage = jvm.org.apache.hadoop.fs.Path(adir, "_tmp.v999999999999-1")
     out = fs.create(stage, True)
     out.write(bytearray(b"/nowhere"))
     out.close()
-    assert RT.resolve_index_alias(spark, alias) == v2
+    assert ST.resolve_index_alias(spark, alias) == v2
 
     # swapping onto a mid-rebuild (meta-less) root fails fast
-    RT.invalidate_index_meta(spark, v1)
+    ST.invalidate_index_meta(spark, v1)
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import AnalysisException
 
     with _pytest.raises((AnalysisException, Py4JJavaError)):
-        RT.swap_index_alias(spark, alias, v1)
-    assert RT.resolve_index_alias(spark, alias) == v2  # alias untouched
+        ST.swap_index_alias(spark, alias, v1)
+    assert ST.resolve_index_alias(spark, alias) == v2  # alias untouched
 
     # unknown alias resolves loudly
     with _pytest.raises(FileNotFoundError):
-        RT.resolve_index_alias(spark, str(tmp_path / "missing_alias"))
+        ST.resolve_index_alias(spark, str(tmp_path / "missing_alias"))
 
 
 # ---------------------------------------------------------------------------
@@ -1139,14 +1140,14 @@ def test_alias_swap_sweeps_crashed_staging_files(spark, tmp_path):
     idx = str(tmp_path / "al_idx")
     RT.build_text_index(docs, idx)
     alias = str(tmp_path / "alias")
-    RT.swap_index_alias(spark, alias, idx)
+    ST.swap_index_alias(spark, alias, idx)
     # crash-sim: a staged-but-never-renamed pointer from an older attempt
     orphan = f"{alias}/_tmp.v{0:012d}-{1:010d}"
     with open(orphan, "w") as fh:
         fh.write("/dead/root")
-    RT.swap_index_alias(spark, alias, idx)
+    ST.swap_index_alias(spark, alias, idx)
     assert not _os.path.exists(orphan)
-    assert RT.resolve_index_alias(spark, alias) == idx
+    assert ST.resolve_index_alias(spark, alias) == idx
 
 
 def test_rrf_fuse_preserves_string_query_ids(spark):
@@ -1193,4 +1194,4 @@ def test_extend_text_index_refuses_wrong_id_type(spark, tmp_path):
     with pytest.raises(ValueError, match="id type"):
         RT.extend_text_index(bad, idx, batch_id="b1")
     # the refused delivery left nothing committed
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]

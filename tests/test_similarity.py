@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators import similarity as SIM
+from chat_data_pipeline_spark.operators import store as ST
 
 SF_DIR = os.environ.get("CDP_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -929,7 +930,7 @@ def test_ivf_rebuild_crash_leaves_no_servable_meta(spark, emb, queries, tmp_path
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import AnalysisException
 
-    from chat_data_pipeline_spark.operators.retrieval import invalidate_index_meta
+    from chat_data_pipeline_spark.operators.store import invalidate_index_meta
 
     half_a = emb.filter(F.col("vec_id") % 2 == 0)
     idx = str(tmp_path / "ivf_rebuild_crash")
@@ -1000,7 +1001,7 @@ def test_rebuild_ivf_index_md5_probes_bit_exact(spark, emb, queries, tmp_path):
     """md5 flavor: the coarse codebook is a deterministic literal, so an
     in-place rebuild at the same n_centroids is assignment-identical to a
     compaction — probes BIT-EXACT before and after, ledger reset."""
-    from chat_data_pipeline_spark.operators.retrieval import _committed_batches
+    from chat_data_pipeline_spark.operators.store import committed_batches
 
     idx = str(tmp_path / "ivf_md5_rebuild")
     SIM.build_ivf_index(
@@ -1015,7 +1016,7 @@ def test_rebuild_ivf_index_md5_probes_bit_exact(spark, emb, queries, tmp_path):
         map(tuple, SIM.ivf_topk_persisted(spark, idx, queries, k=10, n_probe=4).collect())
     )
     assert got == want
-    assert _committed_batches(spark, idx) == ["base"]
+    assert committed_batches(spark, idx) == ["base"]
 
 
 # ---------------------------------------------------------------------------
@@ -1042,7 +1043,7 @@ def test_delete_from_ivf_index_matches_retained_build(spark, emb, queries, tmp_p
     SIM.build_ivf_index(emb, idx, n_centroids=16, coarse="md5", dim=64)
     SIM.extend_ivf_index(emb.limit(0), idx, batch_id="noop")  # ledger exercise
     victims = emb.filter(F.col("vec_id") % 5 == 2).select("vec_id")
-    SIM.delete_from_ivf_index(spark, idx, victims, batch_id="takedown-1")
+    ST.tombstone_delete(spark, idx, victims, batch_id="takedown-1")
     fresh = str(tmp_path / "ivf_retained")
     SIM.build_ivf_index(
         emb.filter(F.col("vec_id") % 5 != 2), fresh, n_centroids=16, coarse="md5", dim=64
@@ -1060,12 +1061,12 @@ def test_ivf_delete_crash_sim_and_guard(spark, emb, queries, tmp_path):
     SIM.build_ivf_index(emb, idx, n_centroids=16, coarse="md5", dim=64)
     before = _pp(spark, idx, queries)
     victims = emb.filter(F.col("vec_id") % 5 == 2).select("vec_id")
-    SIM.delete_from_ivf_index(spark, idx, victims, batch_id="d1")
+    ST.tombstone_delete(spark, idx, victims, batch_id="d1")
     after = _pp(spark, idx, queries)
     assert after != before
     os.remove(f"{idx}/batches/d1")
     assert _pp(spark, idx, queries) == before
-    SIM.delete_from_ivf_index(spark, idx, victims, batch_id="d1")
+    ST.tombstone_delete(spark, idx, victims, batch_id="d1")
     assert _pp(spark, idx, queries) == after
     with pytest.raises(ValueError, match="tombstoned"):
         SIM.extend_ivf_index(emb.filter(F.col("vec_id") % 5 == 2), idx, batch_id="b1")
@@ -1093,7 +1094,7 @@ def test_ivf_rebuild_after_delete_excludes_victims(spark, emb, queries, tmp_path
     idx = str(tmp_path / "ivf_reb_del")
     SIM.build_ivf_index(emb, idx, n_centroids=8, coarse="kmeans", seed=42)
     victims = emb.filter(F.col("vec_id") % 3 == 1).select("vec_id")
-    SIM.delete_from_ivf_index(spark, idx, victims, batch_id="d1")
+    ST.tombstone_delete(spark, idx, victims, batch_id="d1")
     SIM.rebuild_ivf_index(spark, idx)
     import os
 
@@ -1125,7 +1126,7 @@ def test_failed_ivf_rebuild_request_leaves_root_servable(spark, emb, queries, tm
     # cross-kind batch-id guard on the ANN side
     SIM.extend_ivf_index(emb.limit(3), idx, batch_id="b1")
     with pytest.raises(ValueError, match="extension delivery"):
-        SIM.delete_from_ivf_index(
+        ST.tombstone_delete(
             spark, idx, emb.limit(1).select("vec_id"), batch_id="b1"
         )
 
@@ -1181,7 +1182,7 @@ def test_ivfpq_persisted_lifecycle(spark, emb, queries, tmp_path):
     assert _ppq(spark, idx, queries) == _ppq(spark, union, queries)
 
     victims = emb.filter(F.col("vec_id") % 5 == 2).select("vec_id")
-    SIM.delete_from_ivf_index(spark, idx, victims, batch_id="take")
+    ST.tombstone_delete(spark, idx, victims, batch_id="take")
     retained = str(tmp_path / "ivfpq_retained")
     SIM.build_ivfpq_index(
         emb.filter(F.col("vec_id") % 5 != 2), retained, n_centroids=16, m=8,
@@ -1245,7 +1246,7 @@ def test_pre_r15_id_type_fallback_reads_base_partition_only(
         ghost.mkdir(parents=True)
         (ghost / "part-00000.parquet").write_bytes(b"NOT A PARQUET FOOTER")
 
-    from chat_data_pipeline_spark.operators.retrieval import _committed_batches
+    from chat_data_pipeline_spark.operators.store import committed_batches
 
     idx = str(tmp_path / "legacy_ivf")
     SIM.build_ivf_index(
@@ -1255,11 +1256,11 @@ def test_pre_r15_id_type_fallback_reads_base_partition_only(
     _strip_id_type(idx)
     _plant_corrupt_ghost(idx)
     SIM.extend_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), idx, batch_id="b1")
-    SIM.delete_from_ivf_index(
+    ST.tombstone_delete(
         spark, idx, emb.filter(F.col("vec_id") % 10 == 1).select("vec_id"),
         batch_id="t1",
     )
-    assert {"base", "b1", "t1"} <= set(_committed_batches(spark, idx))
+    assert {"base", "b1", "t1"} <= set(committed_batches(spark, idx))
     # the wrong-type refusal still works through the legacy fallback
     bad = emb.filter(F.col("vec_id") % 2 == 1).select(
         F.col("vec_id").cast("string").alias("vec_id"), "embedding"
@@ -1275,7 +1276,7 @@ def test_pre_r15_id_type_fallback_reads_base_partition_only(
     _strip_id_type(pidx)
     _plant_corrupt_ghost(pidx)
     SIM.extend_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), pidx, batch_id="b1")
-    assert {"base", "b1"} <= set(_committed_batches(spark, pidx))
+    assert {"base", "b1"} <= set(committed_batches(spark, pidx))
 
 
 def test_probe_and_compact_survive_crashed_partial_files(
@@ -1353,7 +1354,7 @@ def test_rebuild_ivfpq_index_from_source_vectors(spark, emb, queries, tmp_path):
     )
     SIM.extend_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), idx, batch_id="b1")
     victims = emb.filter(F.col("vec_id") % 5 == 2).select("vec_id")
-    SIM.delete_from_ivf_index(spark, idx, victims, batch_id="take")
+    ST.tombstone_delete(spark, idx, victims, batch_id="take")
 
     # in-place rebuild at the same params: deletes become physical
     SIM.rebuild_ivfpq_index(spark, idx, emb)
@@ -1368,12 +1369,12 @@ def test_rebuild_ivfpq_index_from_source_vectors(spark, emb, queries, tmp_path):
 
     # the rebuild SPENT the folded delivery ids: a crash-replay of either
     # is a logged no-op, and cross-kind reuse is refused
-    assert RT.folded_kind(spark, idx, "b1") == "extension"
-    assert RT.folded_kind(spark, idx, "take") == "delete"
+    assert ST.folded_kind(spark, idx, "b1") == "extension"
+    assert ST.folded_kind(spark, idx, "take") == "delete"
     before = _ppq(spark, idx, queries)
     SIM.extend_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), idx, batch_id="b1")
     assert _ppq(spark, idx, queries) == before
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
     # write-then-swap re-shard into MORE lists (finer pruning): probes
     # bit-match a fresh build at the new param over the same vectors

@@ -9,6 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from chat_data_pipeline_spark.operators import store as ST
 from chat_data_pipeline_spark.streaming import (
     read_events_stream,
     sessionize,
@@ -1374,7 +1375,7 @@ def test_cli_index_compact_action(spark, tmp_path):
     _run_indexing(spark, docs.limit(0), {"bm25": {"path": idx, "action": "compact"}})
     got = sorted(map(tuple, RT.bm25_topk_indexed(spark, idx, ["join", "hash"]).collect()))
     assert got == want
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
 
 IVF_INDEX_CONFIG = """
@@ -1415,7 +1416,7 @@ def test_cli_index_ivf_lifecycle(spark, tmp_path):
 
     from chat_data_pipeline_spark.cli import _run_indexing, load_yaml, run_config
     from chat_data_pipeline_spark.operators import similarity as SIM
-    from chat_data_pipeline_spark.operators.retrieval import _committed_batches
+    from chat_data_pipeline_spark.operators.store import committed_batches
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     half_a, half_b = (
@@ -1477,7 +1478,7 @@ def test_cli_index_ivf_lifecycle(spark, tmp_path):
     # compact from config: one base, probes unchanged
     df0 = spark.createDataFrame([(1, "x")], "id long, response string")
     _run_indexing(spark, df0, {"ivf": {"path": idx, "action": "compact"}})
-    assert _committed_batches(spark, idx) == ["base"]
+    assert committed_batches(spark, idx) == ["base"]
     assert sorted(
         map(tuple, SIM.ivf_topk_persisted(spark, idx, queries, k=5, n_probe=4).collect())
     ) == want
@@ -1513,10 +1514,10 @@ def test_cli_index_alias_cutover(spark, tmp_path):
     idx = str(tmp_path / "alias_bm25")
     alias = str(tmp_path / "bm25_serving")
     _run_indexing(spark, docs, {"bm25": {"path": idx, "alias": alias}})
-    assert RT.resolve_index_alias(spark, alias) == idx
+    assert ST.resolve_index_alias(spark, alias) == idx
     assert (
         RT.bm25_topk_indexed(
-            spark, RT.resolve_index_alias(spark, alias), ["join", "hash"], k=5
+            spark, ST.resolve_index_alias(spark, alias), ["join", "hash"], k=5
         ).count()
         == 5
     )
@@ -1529,13 +1530,13 @@ def test_cli_index_alias_cutover(spark, tmp_path):
         spark, emb,
         {"ivf": {"path": ividx, "id_expr": "vec_id", "alias": ivalias}},
     )
-    assert RT.resolve_index_alias(spark, ivalias) == ividx
+    assert ST.resolve_index_alias(spark, ivalias) == ividx
     _run_indexing(
         spark, emb,
         {"ivf": {"path": ividx, "action": "rebuild", "dst_path": ivdst,
                  "alias": ivalias}},
     )
-    assert RT.resolve_index_alias(spark, ivalias) == ivdst
+    assert ST.resolve_index_alias(spark, ivalias) == ivdst
     queries = (
         emb.limit(3)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
@@ -1543,7 +1544,7 @@ def test_cli_index_alias_cutover(spark, tmp_path):
     )
     assert (
         SIM.ivf_topk_persisted(
-            spark, RT.resolve_index_alias(spark, ivalias), queries, k=5, n_probe=4
+            spark, ST.resolve_index_alias(spark, ivalias), queries, k=5, n_probe=4
         ).count()
         > 0
     )
@@ -1588,7 +1589,7 @@ def test_store_delivery_bm25_stream_equals_batch(spark, tmp_path):
     finally:
         q.stop()
 
-    committed = RT._committed_batches(spark, idx)
+    committed = ST.committed_batches(spark, idx)
     assert committed[0] == "base" and len(committed) == 3  # two stream deliveries
     terms = ["join", "hash", "scan", "window", "sort"]
     fresh = str(tmp_path / "fresh_bm25")
@@ -1631,7 +1632,7 @@ def test_store_delivery_ivf_stream_equals_batch(spark, tmp_path):
     finally:
         q.stop()
 
-    assert len(RT._committed_batches(spark, idx)) == 3
+    assert len(ST.committed_batches(spark, idx)) == 3
     queries = (
         emb.limit(5)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
@@ -1703,7 +1704,7 @@ def test_cli_alias_ignores_stale_dst_path_for_build(spark, tmp_path):
         {"bm25": {"path": idx, "action": "build", "dst_path": old_dst,
                   "alias": alias}},
     )
-    assert RT.resolve_index_alias(spark, alias) == idx
+    assert ST.resolve_index_alias(spark, alias) == idx
 
 
 def test_cli_index_delete_action_both_kinds(spark, tmp_path):
@@ -1868,7 +1869,7 @@ def test_store_takedown_rejects_multi_column_stream_before_start(spark, tmp_path
         streaming_store_takedown(stream, idx, str(ckpt))
     assert len(spark.streams.active) == n_active
     assert not ckpt.exists()
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
 
 def test_store_delivery_on_metaless_root_fails_at_construction(spark, tmp_path):
@@ -1955,7 +1956,7 @@ def test_cli_dedup_store_and_onboard_block(spark, tmp_path):
     kept = {r.id for r in out.select("id").collect()}
     assert kept == {11}  # the near-dup of ref doc 1 subtracted
     # survivors' signatures were delivered back
-    assert "crawl-1" in RT._committed_batches(spark, store)
+    assert "crawl-1" in ST.committed_batches(spark, store)
     ids_in_store = {
         r.id for r in spark.read.parquet(f"{store}/bands").select("id").collect()
     }
@@ -1996,7 +1997,7 @@ def test_store_delivery_dedup_stream_equals_batch(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    assert len(RT._committed_batches(spark, store)) == 2
+    assert len(ST.committed_batches(spark, store)) == 2
     new = docs.filter(F.col("doc_id") % 3 == 2)
     direct = str(tmp_path / "direct_sigs")
     DS.build_dedup_index(docs.filter(F.col("doc_id") % 3 != 2), direct, family="md5")
@@ -2082,7 +2083,7 @@ def test_store_delivery_and_takedown_ivfpq_stream_equals_batch(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    assert len(RT._committed_batches(spark, idx)) == 3
+    assert len(ST.committed_batches(spark, idx)) == 3
 
     # takedown feed: one id twice across triggers (no double-subtract) plus
     # a strided victim set
@@ -2180,7 +2181,7 @@ def test_cli_ivfpq_lifecycle(spark, tmp_path):
     )
     from chat_data_pipeline_spark.operators import retrieval as RT
 
-    assert RT.resolve_index_alias(spark, alias) == idx
+    assert ST.resolve_index_alias(spark, alias) == idx
 
     # r16: rebuild is YAML-reachable but REQUIRES the source corpus back
     # (PQ storage is lossy); a re-shard to more lists bit-matches a fresh
@@ -2290,7 +2291,7 @@ def test_cli_serve_block_hybrid_bit_matches_operator_path(spark, tmp_path):
 
     # alias-addressed arm + path/alias exclusivity
     alias = str(tmp_path / "srv_alias")
-    RT.swap_index_alias(spark, alias, bidx)
+    ST.swap_index_alias(spark, alias, bidx)
     via_alias = run_config(
         spark, {"serve": {"queries": qtab, "k": 5, "bm25": {"alias": alias}}}
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators import lease as L
 from chat_data_pipeline_spark.operators import retrieval as RT
+from chat_data_pipeline_spark.operators import store as ST
 
 SF_DIR = "/root/testdata/sf0.001"
 TERMS = ["join", "hash", "scan", "window", "sort"]
@@ -115,7 +116,7 @@ def test_contended_stream_fails_loudly_not_silently(spark, docs, tmp_path):
         q.stop()
         L.release_writer_lease(spark, idx, "a-live-compaction")
     # nothing landed: no tombstones, ledger still base-only
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
 
 def test_delivery_with_auto_compact_and_takedown_share_a_root(
@@ -251,7 +252,7 @@ def test_cli_maintain_block_honors_lease_tuning(spark, docs, tmp_path):
          "lease_wait_seconds": 0},
     ).collect()
     assert len(report) == 1 and report[0].n_batches == 1  # folded to base
-    assert RT._committed_batches(spark, idx) == ["base"]
+    assert ST.committed_batches(spark, idx) == ["base"]
 
 
 def test_heartbeat_keeps_long_trigger_alive_past_ttl(spark, tmp_path):
@@ -396,7 +397,7 @@ def test_cli_dual_root_lease_covers_dst_path(spark, docs, tmp_path):
                           "lease_wait_seconds": 0}},
             )
         # src stayed untouched by the refused compact (still 2 batches)
-        assert sorted(RT._committed_batches(spark, src)) == ["b1", "base"]
+        assert sorted(ST.committed_batches(spark, src)) == ["b1", "base"]
         # an extend carrying the same stale dst_path key ignores dst's
         # holder entirely (dst is not written by action=extend)
         _run_indexing(
@@ -405,7 +406,7 @@ def test_cli_dual_root_lease_covers_dst_path(spark, docs, tmp_path):
                       "batch_id": "b2", "id_expr": "doc_id", "column": "text",
                       "lease_wait_seconds": 0}},
         )
-        assert "b2" in RT._committed_batches(spark, src)
+        assert "b2" in ST.committed_batches(spark, src)
     finally:
         L.release_writer_lease(spark, dst, "live-dst-stream")
     # with dst free the same compact lands into dst
@@ -414,7 +415,7 @@ def test_cli_dual_root_lease_covers_dst_path(spark, docs, tmp_path):
         {"bm25": {"path": src, "dst_path": dst, "action": "compact",
                   "lease_wait_seconds": 0}},
     )
-    assert RT._committed_batches(spark, dst) == ["base"]
+    assert ST.committed_batches(spark, dst) == ["base"]
     assert L.lease_holder(spark, src) is None
     assert L.lease_holder(spark, dst) is None
 
@@ -462,7 +463,7 @@ def test_new_takedown_twins_fail_loudly_when_root_held(spark, docs, tmp_path):
     finally:
         q.stop()
         L.release_writer_lease(spark, store, "sig-compaction")
-    assert RT._committed_batches(spark, store) == ["base"]  # nothing landed
+    assert ST.committed_batches(spark, store) == ["base"]  # nothing landed
 
     # neardup-store twin
     emb = (
@@ -494,7 +495,7 @@ def test_new_takedown_twins_fail_loudly_when_root_held(spark, docs, tmp_path):
     finally:
         vq.stop()
         L.release_writer_lease(spark, vstore, "vec-compaction")
-    assert RT._committed_batches(spark, vstore) == ["base"]
+    assert ST.committed_batches(spark, vstore) == ["base"]
 
 
 def test_two_takedown_streams_share_one_root(spark, docs, tmp_path):
