@@ -1,14 +1,27 @@
 """Similarity search over embedding columns (``array<float>``).
 
 Training-data extension (not in the reference — SURVEY.md §2.7 lists no
-vector ops): brute-force cosine top-k as the exact baseline, a random-
-hyperplane LSH bucketing as the sublinear scale path, and pairwise
-embedding-cosine near-duplicate detection.
+vector ops): brute-force cosine top-k as the exact baseline, SRP-LSH, IVF,
+PQ and IVF-PQ as the sublinear scale paths, persisted IVF / IVF-PQ stores,
+and pairwise embedding-cosine near-duplicate detection.
 
-All distance math is native (``zip_with`` product + ``aggregate`` fold — a
-strict left-to-right double summation, which the duckdb oracle mirrors), so
-the scans stay in whole-stage codegen and scale with executors; no Python in
-the hot path.
+Only brute force and LSH candidate scoring are native Column math
+(``zip_with`` product + ``aggregate`` fold, a strict left-to-right double
+summation the duckdb oracle mirrors).  Everything else scores in numpy over
+Arrow batches, in one of two arithmetic families:
+
+- **trained** — seeded Lloyd centroids / PQ codebooks, scored with numpy
+  matmul and ``sum(axis=1)`` (the recall-tested production paths);
+- **md5** — literal ±1 codebooks derived from md5, scored with columnwise
+  ordered folds that are bit-for-bit with DuckDB (the oracle twins and the
+  persisted stores).
+
+Every driver-collected top-k (PQ, IVF-PQ, the md5 twins and the persisted
+probes) runs ONE scan body, :func:`_topk_scan`: collect the queries in one
+bounded job (:func:`_collect_queries`), build the family's query tables,
+one fused ``mapInPandas`` that prepares each batch and cuts a per-partition
+top-k, then the one global window (:func:`_rank_topk`).  A family supplies
+only its ``prepare`` and ``score`` kernels.
 """
 
 from __future__ import annotations
@@ -46,10 +59,6 @@ def norm_expr(a: Column) -> Column:
     )
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def _half_away_micros(x: np.ndarray) -> np.ndarray:
     """Vectorized DuckDB/Spark ROUND semantics (half away from zero) at
     1e-6 — NOT numpy's banker's ``rint``, so exact .5-micro boundaries
@@ -60,16 +69,132 @@ def _half_away_micros(x: np.ndarray) -> np.ndarray:
 
 def _guard_query_rows(queries: DataFrame, max_query_rows: int, site: str) -> None:
     """limit-probe guard (scans ≤ cap+1 narrow rows, never a full count) for
-    the driver-collected / broadcast probe side of the ANN scans: an
-    oversized probe set must fail with guidance, not silently OOM the
-    driver — the same posture as the exact all-pairs ``max_broadcast_rows``
-    guard in :func:`embedding_neardup_pairs`."""
+    the broadcast probe side of the ANN scans: an oversized probe set must
+    fail with guidance, not silently OOM the driver — the same posture as
+    the exact all-pairs ``max_broadcast_rows`` guard in
+    :func:`embedding_neardup_pairs`.  The driver-collected paths fold this
+    guard into their one bounded collect (:func:`_collect_queries`)."""
     if queries.limit(max_query_rows + 1).count() > max_query_rows:
         raise ValueError(
             f"{site}: probe set exceeds max_query_rows={max_query_rows}; "
             "shard the query set (the corpus side scales out, the probe side "
             "is driver-collected/broadcast) or raise the guard explicitly"
         )
+
+
+def _as_matrix(vectors) -> np.ndarray:
+    """An Arrow batch's vector column as a float64 row matrix."""
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _collect_queries(
+    queries: DataFrame,
+    query_id_col: str,
+    query_vec_col: str,
+    max_query_rows: int,
+    dim: int,
+    site: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The probe side of a driver-collected top-k in ONE bounded job: the
+    ``limit(cap+1)`` both guards the size (an oversized probe set fails with
+    guidance instead of OOMing the driver) and bounds the Arrow transfer.
+    Returns the ids and an always-2-D ``(n, dim)`` float64 matrix, so an
+    empty probe set runs every query-table kernel unchanged.  A query width
+    other than ``dim`` is refused: the LUT slices would silently score a
+    prefix of each query."""
+    qpdf = (
+        queries.select(query_id_col, query_vec_col)
+        .limit(int(max_query_rows) + 1)
+        .toPandas()
+    )
+    if len(qpdf) > max_query_rows:
+        raise ValueError(
+            f"{site}: probe set exceeds max_query_rows={max_query_rows}; shard "
+            "the query set or raise the guard explicitly"
+        )
+    qids = qpdf[query_id_col].to_numpy()
+    if not len(qpdf):
+        return qids, np.zeros((0, dim))
+    qmat = _as_matrix(qpdf[query_vec_col])
+    if qmat.shape[1] != dim:
+        raise ValueError(f"{site}: query dim {qmat.shape[1]} != expected dim {dim}")
+    return qids, qmat
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str, score_col: str
+) -> DataFrame:
+    """The ANN family's one global rank: ``row_number`` per query by
+    (score desc, id asc), cut at ``k``."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col(score_col).desc(), F.col(id_col).asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, score_col, "rank")
+    )
+
+
+def _topk_scan(
+    source: DataFrame,
+    payload: tuple,
+    prepare,
+    score,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    query_id_col: str,
+    score_col: str,
+) -> DataFrame:
+    """The one top-k scan body: ONE ``mapInPandas`` over ``source`` that
+    runs ``prepare(batch) -> (lists, data)`` once per Arrow batch (each
+    row's coarse list, None on a flat PQ scan, plus whatever the family's
+    score reads), then per query masks the rows to its probed lists, calls
+    ``score(lists, data, tables_of_query, idx)``, rounds to 6 dp and cuts a
+    local top-k; :func:`_rank_topk` then ranks the ≤ partitions·k·|queries|
+    candidates globally.
+
+    ``payload = (qids, probes, tables)`` is broadcast once: ``probes`` is
+    ``(n_queries, n_probe)`` list ids (None on a flat scan) and ``tables``
+    a tuple of per-query arrays, whose ``qi``-th rows reach ``score``.
+
+    Rounding BEFORE the local cut, with the id tie-break, mirrors the global
+    window's (rounded desc, id asc) order: selecting on unrounded scores
+    would let two rows equal at 6 dp be cut differently per partition."""
+    import pandas as pd
+
+    bcast = source.sparkSession.sparkContext.broadcast(payload)
+    kk = int(k)
+
+    def scan(batches):
+        qids, probes, tables = bcast.value
+        for batch in filter(len, batches):
+            vids = batch[id_col].to_numpy()
+            lists, data = prepare(batch)
+            out_q, out_v, out_s = [], [], []
+            for qi in range(len(qids)):
+                idx = (
+                    slice(None)
+                    if probes is None
+                    else np.flatnonzero(np.isin(lists, probes[qi]))
+                )
+                ids = vids[idx]
+                if not len(ids):
+                    continue
+                scores = np.round(score(lists, data, [t[qi] for t in tables], idx), 6)
+                top = np.lexsort((ids, -scores))[:kk]
+                out_q.extend([qids[qi]] * len(top))
+                out_v.extend(ids[top])
+                out_s.extend(scores[top])
+            yield pd.DataFrame({query_id_col: out_q, id_col: out_v, score_col: out_s})
+
+    q_type = dict(queries.dtypes)[query_id_col]
+    id_type = dict(source.dtypes)[id_col]
+    candidates = source.mapInPandas(
+        scan, schema=f"{query_id_col} {q_type}, {id_col} {id_type}, {score_col} double"
+    )
+    return _rank_topk(candidates, k, query_id_col, id_col, score_col)
 
 
 def brute_force_topk(
@@ -102,33 +227,12 @@ def brute_force_topk(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_topk(scored, k, query_id_col, id_col, "cosine")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     return rng.randn(n_planes, dim).tolist()
-
-
-def lsh_bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane (SRP) bucket id: one sign bit per plane."""
-    bits = [
-        F.when(dot_expr(vec, F.lit(p).cast("array<double>")) >= 0, F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        for p in planes
-    ]
-    acc = F.lit(0)
-    for bit in bits:
-        acc = acc * F.lit(2) + bit
-    return acc
 
 
 def lsh_multitable_buckets(
@@ -150,11 +254,12 @@ def lsh_multitable_buckets(
     all_planes = np.vstack(
         [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     )
-    weights = 1 << np.arange(n_planes)[::-1]  # first plane = MSB, as lsh_bucket_expr
+    # one sign bit per plane, first plane = MSB (the md5 twin's bucket order)
+    weights = 1 << np.arange(n_planes)[::-1]
     offsets = np.arange(n_tables, dtype=np.int64) * (1 << n_planes)
 
     def batch(s):
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
+        mat = _as_matrix(s)
         if len(mat) == 0:
             return pd.Series([], dtype=object)
         bits = (mat @ all_planes.T) >= 0
@@ -217,14 +322,7 @@ def lsh_topk(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_topk(scored, k, query_id_col, id_col, "cosine")
 
 
 def _sample_mat(
@@ -248,10 +346,66 @@ def _sample_mat(
         )
     else:
         sample = df.select(vec_col).limit(sample_rows).toPandas()
-    mat = np.asarray([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
+    mat = _as_matrix(sample[vec_col])
     if normalize and len(mat):
-        mat = mat / np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)[:, None]
+        mat = _l2_normalize(mat)
     return mat
+
+
+# --- trained-family kernels: numpy matmul and sum(axis=1) -------------------
+
+
+def _l2_normalize(mat: np.ndarray) -> np.ndarray:
+    """Row L2 normalization with the module's 1e-12 zero-vector floor."""
+    return mat / np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)[:, None]
+
+
+def _nearest(mat: np.ndarray, cent: np.ndarray, n: int) -> np.ndarray:
+    """The ``n`` nearest rows of ``cent`` per row of ``mat`` by squared L2
+    in the ``|x|² - 2x·c + |c|²`` matmul form, stable on ties."""
+    d2 = (
+        (mat * mat).sum(axis=1)[:, None]
+        - 2.0 * (mat @ cent.T)
+        + (cent * cent).sum(axis=1)[None, :]
+    )
+    return np.argsort(d2, axis=1, kind="stable")[:, :n]
+
+
+def _trained_query_tables(
+    qmat: np.ndarray,
+    books: np.ndarray,
+    coarse: np.ndarray | None = None,
+    n_probe: int = 0,
+) -> tuple[np.ndarray | None, tuple]:
+    """``(probes, tables)`` for a trained PQ scan: the L2-normalized queries'
+    per-subspace LUTs ``LUT[q, j, c] = <q_sub_j, book_{j,c}>`` and, on the
+    IVF-PQ path (``coarse`` given), each query's ``n_probe`` nearest lists
+    plus the base term ``<q, c_list>`` for every list."""
+    qmat = _l2_normalize(qmat)
+    dsub = books.shape[2]
+    luts = np.stack(
+        [qmat[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(len(books))],
+        axis=1,
+    )
+    if coarse is None:
+        return None, (luts,)
+    return _nearest(qmat, coarse, n_probe), (qmat @ coarse.T, luts)
+
+
+def _trained_score(lists, codes, tables, idx) -> np.ndarray:
+    """Trained ADC score of ``codes[idx]``: the ``m`` LUT lookups as one
+    gather + ``sum(axis=1)``, plus the ``<q, c_list>`` base term on the
+    IVF-PQ path."""
+    *base, lut = tables
+    s = lut[np.arange(codes.shape[1])[None, :], codes[idx]].sum(axis=1)
+    return base[0][lists[idx]] + s if base else s
+
+
+def _stored_codes(batch):
+    """``prepare`` over encoded rows: the ``list`` column (absent on a flat
+    PQ scan) and the ``pq_code`` matrix."""
+    lists = batch["list"].to_numpy() if "list" in batch else None
+    return lists, np.stack([np.asarray(c) for c in batch["pq_code"]])
 
 
 def _assign_nearest(
@@ -336,17 +490,9 @@ def _ivf_assign_expr(df: DataFrame, vec_col: str, centroids: np.ndarray, out: st
     cent = np.asarray(centroids, dtype=np.float64)
 
     def assign(batches):
-        for batch in batches:
-            if not len(batch):  # empty Arrow batch: (0,)-shaped mat breaks axis=1
-                continue
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            # squared L2 to each centroid: |x|^2 - 2x.c + |c|^2
-            d2 = (
-                (mat * mat).sum(axis=1)[:, None]
-                - 2.0 * (mat @ cent.T)
-                + (cent * cent).sum(axis=1)[None, :]
-            )
-            lists = np.argsort(d2, axis=1, kind="stable")[:, :n_lists]
+        # empty Arrow batches skipped: a (0,)-shaped mat breaks axis=1
+        for batch in filter(len, batches):
+            lists = _nearest(_as_matrix(batch[vec_col]), cent, n_lists)
             out_batch = batch.copy()
             out_batch[out] = [row.tolist() for row in lists]
             yield out_batch
@@ -399,14 +545,7 @@ def ivf_topk(
     ).select(
         F.col("id1").alias(query_id_col), F.col("id2").alias(id_col), "cosine"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _rank_topk(scored, k, query_id_col, id_col, "cosine")
 
 
 def train_pq_codebooks(
@@ -463,13 +602,7 @@ def _pq_codes_mat(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
     m, _, dsub = books.shape
     codes = np.empty((len(mat), m), dtype=np.int64)
     for j in range(m):
-        sub = mat[:, j * dsub : (j + 1) * dsub]
-        d2 = (
-            (sub * sub).sum(axis=1)[:, None]
-            - 2.0 * (sub @ books[j].T)
-            + (books[j] * books[j]).sum(axis=1)[None, :]
-        )
-        codes[:, j] = np.argsort(d2, axis=1, kind="stable")[:, 0]
+        codes[:, j] = _nearest(mat[:, j * dsub : (j + 1) * dsub], books[j], 1)[:, 0]
     return codes
 
 
@@ -492,12 +625,8 @@ def pq_encode(
     id_type = dict(df.dtypes)[id_col]
 
     def encode(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )
+        for batch in filter(len, batches):
+            mat = _as_matrix(batch[vec_col])
             # fail loudly on a corpus/codebook dim mismatch instead of
             # silently reading a prefix of each vector (numpy slicing
             # would not raise) — the md5 twins' guard, applied here
@@ -505,8 +634,7 @@ def pq_encode(
                 raise ValueError(
                     f"corpus dim {mat.shape[1]} != codebook dim {m * dsub}"
                 )
-            mat = mat / np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)[:, None]
-            codes = _pq_codes_mat(mat, books)
+            codes = _pq_codes_mat(_l2_normalize(mat), books)
             yield pd.DataFrame(
                 {id_col: batch[id_col].to_numpy(), "pq_code": list(codes)}
             )
@@ -539,68 +667,18 @@ def pq_topk(
     precision corpus is never shuffled or rescanned — the classic
     IVF-free ADC scan, here as the compressed complement to ``ivf_topk``.
     """
-    import pandas as pd
-
-    _guard_query_rows(queries, max_query_rows, "pq_topk")
     books = train_pq_codebooks(
         df, vec_col, m=m, k=n_subcentroids, seed=seed, id_col=id_col
     )
-    dsub = books.shape[2]
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    qids = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]]
+    qids, qmat = _collect_queries(
+        queries, query_id_col, query_vec_col, max_query_rows,
+        m * books.shape[2], "pq_topk",
     )
-    # a wider query matrix would silently score from a prefix of each query
-    # (the LUT slices below never read past m*dsub); guard like the md5 twin
-    if len(qmat) and qmat.shape[1] != m * dsub:
-        raise ValueError(f"query dim {qmat.shape[1]} != codebook dim {m * dsub}")
-    qmat = qmat / np.maximum(np.sqrt((qmat * qmat).sum(axis=1)), 1e-12)[:, None]
-    # LUT[q, j, c] = <q_sub_j, centroid_{j,c}> — shape (n_queries, m, k)
-    luts = np.stack(
-        [qmat[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)],
-        axis=1,
-    )
-    encoded = pq_encode(df, books, id_col, vec_col)
-    bcast = df.sparkSession.sparkContext.broadcast((qids, luts))
-    q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(df.dtypes)[id_col]
-
-    def scan(batches):
-        ids_q, tables = bcast.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            vids = batch[id_col].to_numpy()
-            codes = np.stack([np.asarray(c) for c in batch["pq_code"]])
-            out_q, out_v, out_s = [], [], []
-            cols = np.arange(codes.shape[1])
-            for qi in range(len(ids_q)):
-                # Round to 6 dp BEFORE the local cut and tie-break by id,
-                # mirroring the global window's (rounded desc, id asc) order
-                # — selecting on unrounded scores lets two docs equal at 6 dp
-                # be cut differently per partition, breaking the module's
-                # partition-invariance convention at rounding-tie boundaries.
-                scores = np.round(tables[qi][cols[None, :], codes].sum(axis=1), 6)
-                top = np.lexsort((vids, -scores))[: min(k, len(vids))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[top])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
-            )
-
-    candidates = encoded.mapInPandas(
-        scan,
-        schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
+    probes, tables = _trained_query_tables(qmat, books)
+    return _topk_scan(
+        pq_encode(df, books, id_col, vec_col), (qids, probes, tables),
+        _stored_codes, _trained_score, queries, k, id_col, query_id_col,
+        "approx_cosine",
     )
 
 
@@ -638,7 +716,6 @@ def ivf_pq_topk(
     """
     import pandas as pd
 
-    _guard_query_rows(queries, max_query_rows, "ivf_pq_topk")
     # --- driver-side training on the bounded deterministic sample ---------
     # (shared sample/Lloyd/assign helpers — the coarse train is exactly
     # _train_centroids on the L2-normalized sample; residuals then feed the
@@ -655,19 +732,9 @@ def ivf_pq_topk(
     id_type = dict(df.dtypes)[id_col]
 
     def encode(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )
-            mat = mat / np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)[:, None]
-            dd = (
-                (mat * mat).sum(axis=1)[:, None]
-                - 2.0 * (mat @ coarse.T)
-                + (coarse * coarse).sum(axis=1)[None, :]
-            )
-            lst = np.argsort(dd, axis=1, kind="stable")[:, 0]
+        for batch in filter(len, batches):
+            mat = _l2_normalize(_as_matrix(batch[vec_col]))
+            lst = _nearest(mat, coarse, 1)[:, 0]
             codes = _pq_codes_mat(mat - coarse[lst], books)
             yield pd.DataFrame(
                 {
@@ -680,71 +747,13 @@ def ivf_pq_topk(
     encoded = df.select(id_col, vec_col).mapInPandas(
         encode, schema=f"{id_col} {id_type}, list int, pq_code array<int>"
     )
-
-    # --- query tables (driver-side, KB-scale) -----------------------------
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    qids = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]]
+    qids, qmat = _collect_queries(
+        queries, query_id_col, query_vec_col, max_query_rows, dim, "ivf_pq_topk"
     )
-    qmat = qmat / np.maximum(np.sqrt((qmat * qmat).sum(axis=1)), 1e-12)[:, None]
-    qd2 = (
-        (qmat * qmat).sum(axis=1)[:, None]
-        - 2.0 * (qmat @ coarse.T)
-        + (coarse * coarse).sum(axis=1)[None, :]
-    )
-    probes = np.argsort(qd2, axis=1, kind="stable")[:, :n_probe]
-    base = qmat @ coarse.T  # (nq, nlists): <q, c_list>
-    dsub = dim // m
-    luts = np.stack(
-        [qmat[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)],
-        axis=1,
-    )  # (nq, m, ksub)
-    bcast = df.sparkSession.sparkContext.broadcast((qids, probes, base, luts))
-    q_type = dict(queries.dtypes)[query_id_col]
-
-    def scan(batches):
-        ids_q, prb, bs, tables = bcast.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            vids = batch[id_col].to_numpy()
-            lst = batch["list"].to_numpy()
-            codes = np.stack([np.asarray(c) for c in batch["pq_code"]])
-            cols = np.arange(codes.shape[1])
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lst, prb[qi])
-                if not mask.any():
-                    continue
-                # Rounded-then-cut with id tie-break — see pq_topk's scan for
-                # why (partition-invariance at rounding-tie boundaries).
-                sc = np.round(
-                    bs[qi][lst[mask]]
-                    + tables[qi][cols[None, :], codes[mask]].sum(axis=1),
-                    6,
-                )
-                midx = np.nonzero(mask)[0]
-                top = np.lexsort((vids[midx], -sc))[: min(k, int(mask.sum()))]
-                sel = midx[top]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[sel])
-                out_s.extend(sc[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
-            )
-
-    candidates = encoded.mapInPandas(
-        scan,
-        schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
+    probes, tables = _trained_query_tables(qmat, books, coarse, n_probe)
+    return _topk_scan(
+        encoded, (qids, probes, tables), _stored_codes, _trained_score,
+        queries, k, id_col, query_id_col, "approx_cosine",
     )
 
 
@@ -763,11 +772,8 @@ def _score_candidate_pairs(
     import pandas as pd
 
     def score(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            m1 = np.stack([np.asarray(v, dtype=np.float64) for v in batch["__v1__"]])
-            m2 = np.stack([np.asarray(v, dtype=np.float64) for v in batch["__v2__"]])
+        for batch in filter(len, batches):
+            m1, m2 = _as_matrix(batch["__v1__"]), _as_matrix(batch["__v2__"])
             # norm floor: a zero vector scores cosine 0, not NaN — NaN would
             # silently drop the pair in threshold mode and, worse, SORT FIRST
             # under Spark's NaN-is-greatest descending order in the top-k
@@ -958,7 +964,7 @@ def embedding_neardup_pairs(
         )
     pdf = df.select(id_col, vec_col).toPandas()
     ids = pdf[id_col].to_numpy()
-    mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    mat = _as_matrix(pdf[vec_col])
     # 1e-12 norm floor (module convention): zero vectors score cosine 0
     norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
     bcast = df.sparkSession.sparkContext.broadcast((ids, mat, norms))
@@ -968,7 +974,7 @@ def embedding_neardup_pairs(
         bids, bmat, bnorms = bcast.value
         for batch in batches:
             ids1 = batch[id_col].to_numpy()
-            m1 = np.asarray([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
+            m1 = _as_matrix(batch[vec_col])
             n1 = np.maximum(np.sqrt((m1 * m1).sum(axis=1)), 1e-12)
             sims = np.round((m1 @ bmat.T) / np.outer(n1, bnorms), 6)
             ii, jj = np.nonzero((sims >= thr) & (ids1[:, None] < bids[None, :]))
@@ -991,19 +997,25 @@ def srp_md5_sign_planes(
     variant (the hash only needs the dot's sign, not gaussian geometry), and
     ±1 components make every dot product an EXACT ordered sum of vector
     elements — no rounding anywhere until the final cosine."""
+    return _md5_signs(tag, n_tables, n_planes, dim)
+
+
+def _md5_signs(tag: str, a: int, b: int, c: int) -> list[list[list[float]]]:
+    """The ``(a, b, c)`` ±1 tensor of the md5 family: entry ``[i][j][t]`` is
+    +1 iff the first hex digit of md5('{tag}{i}_{j}_{t}') is odd."""
     import hashlib
 
     return [
         [
             [
                 1.0
-                if int(hashlib.md5(f"{tag}{t}_{p}_{j}".encode()).hexdigest()[0], 16) % 2
+                if int(hashlib.md5(f"{tag}{i}_{j}_{t}".encode()).hexdigest()[0], 16) % 2
                 else -1.0
-                for j in range(dim)
+                for t in range(c)
             ]
-            for p in range(n_planes)
+            for j in range(b)
         ]
-        for t in range(n_tables)
+        for i in range(a)
     ]
 
 
@@ -1044,16 +1056,10 @@ def embedding_neardup_pairs_srp_md5(
     id_type = dict(df.dtypes)[id_col]
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
 
-    # COLUMNWISE fold accumulation: ``acc += mat[:, j] * sign`` performs,
-    # for every row, the exact same left-to-right IEEE double additions as
-    # the per-row ordered fold (dot_expr / duckdb list_reduce) — identical
-    # bits, but one vectorized numpy op per dimension instead of an
-    # interpreted Column-HOF lambda per element (the fold-expression form
-    # measured ~30 folds/row = 3.6 s at sf0.1; this path is milliseconds).
     sign_mats = [np.asarray(planes[t], dtype=np.float64) for t in range(n_tables)]
 
     def bucket_batch(vs):
-        mat = np.asarray([np.asarray(x, dtype=np.float64) for x in vs])
+        mat = _as_matrix(vs)
         out = []
         if len(mat):
             d = mat.shape[1]
@@ -1068,12 +1074,9 @@ def embedding_neardup_pairs_srp_md5(
                 )
             tbl = np.zeros((len(mat), n_tables), dtype=np.int64)
             for t in range(n_tables):
+                dots = _fold_subspace_dots(mat, sign_mats[t], 0)
                 for p in range(n_planes):
-                    acc = np.zeros(len(mat))
-                    srow = sign_mats[t][p]
-                    for j in range(d):
-                        acc = acc + mat[:, j] * srow[j]
-                    tbl[:, t] = tbl[:, t] * 2 + (acc >= 0).astype(np.int64)
+                    tbl[:, t] = tbl[:, t] * 2 + (dots[:, p] >= 0).astype(np.int64)
             out = [row.tolist() for row in tbl]
         return pd.Series(out, dtype=object)
 
@@ -1122,24 +1125,12 @@ def embedding_neardup_pairs_srp_md5(
     thr = float(threshold)
 
     def score(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            m1 = np.asarray([np.asarray(x, dtype=np.float64) for x in batch["__v1__"]])
-            m2 = np.asarray([np.asarray(x, dtype=np.float64) for x in batch["__v2__"]])
-            d = m1.shape[1]
-            dot = np.zeros(len(m1))
-            n1 = np.zeros(len(m1))
-            n2 = np.zeros(len(m1))
-            # same columnwise-fold trick: per-row ordered sums, vectorized
-            for j in range(d):
-                dot = dot + m1[:, j] * m2[:, j]
-                n1 = n1 + m1[:, j] * m1[:, j]
-                n2 = n2 + m2[:, j] * m2[:, j]
-            # same 1e-12 floor as the oracle's greatest(sqrt(...), 1e-12)
+        for batch in filter(len, batches):
+            m1, m2 = _as_matrix(batch["__v1__"]), _as_matrix(batch["__v2__"])
+            # ordered fold dot over fold norms, 1e-12 floored like the
+            # oracle's greatest(sqrt(...), 1e-12)
             cos = np.round(
-                dot / (np.maximum(np.sqrt(n1), 1e-12) * np.maximum(np.sqrt(n2), 1e-12)),
-                6,
+                _fold_dot_rows(m1, m2) / (_fold_norm_rows(m1) * _fold_norm_rows(m2)), 6
             )
             keep = cos >= thr
             yield pd.DataFrame(
@@ -1168,29 +1159,26 @@ def pq_md5_sign_codebooks(
     until the final score), and every codeword has the same norm ``dsub``,
     so nearest-codeword-by-L2 reduces to argmax inner product — a pure
     comparison of identically-computed doubles in both engines."""
-    import hashlib
+    return _md5_signs(tag, m, k, dsub)
 
-    return [
-        [
-            [
-                1.0
-                if int(hashlib.md5(f"{tag}{j}_{c}_{t}".encode()).hexdigest()[0], 16) % 2
-                else -1.0
-                for t in range(dsub)
-            ]
-            for c in range(k)
-        ]
-        for j in range(m)
-    ]
+
+def _fold_dot_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise ``a·b`` as a COLUMNWISE fold accumulation: ``acc += a[:, i]
+    * b[:, i]`` over ascending ``i`` performs, for every row, exactly the
+    left-to-right IEEE double additions of the per-row ordered fold
+    (``dot_expr`` / DuckDB ``list_reduce``) — identical bits, one vectorized
+    numpy op per dimension (the interpreted Column-HOF fold form measured
+    ~30 folds/row = 3.6 s at sf0.1).  ``b`` may be one broadcast row."""
+    acc = np.zeros(len(a))
+    for i in range(a.shape[1]):
+        acc = acc + a[:, i] * b[:, i]
+    return acc
 
 
 def _fold_norm_rows(mat: np.ndarray) -> np.ndarray:
-    """Row norms as columnwise fold accumulation (per-row ordered IEEE sums,
-    the srp_md5 discipline) with the module's 1e-12 zero-vector floor."""
-    acc = np.zeros(len(mat))
-    for i in range(mat.shape[1]):
-        acc = acc + mat[:, i] * mat[:, i]
-    return np.maximum(np.sqrt(acc), 1e-12)
+    """Row norms as a columnwise fold with the module's 1e-12 zero-vector
+    floor."""
+    return np.maximum(np.sqrt(_fold_dot_rows(mat, mat)), 1e-12)
 
 
 def _fold_subspace_dots(mat: np.ndarray, signs: np.ndarray, offset: int) -> np.ndarray:
@@ -1203,6 +1191,102 @@ def _fold_subspace_dots(mat: np.ndarray, signs: np.ndarray, offset: int) -> np.n
     for t in range(dsub):
         dots = dots + mat[:, offset + t, None] * signs[None, :, t]
     return dots
+
+
+# --- md5-family kernels: ±1 literal codebooks, columnwise ordered folds -----
+
+
+def _md5_coarse_book(n_centroids: int, dim: int) -> np.ndarray:
+    """The md5 IVF coarse codebook ``(n_centroids, dim)`` — the one literal
+    every md5 IVF / IVF-PQ path assigns with: the in-flight twins, the
+    persisted builds and probes, and the drift report."""
+    return np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
+
+
+def _md5_ivfpq_books(
+    n_centroids: int, m: int, n_codewords: int, dim: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(coarse codebook, residual PQ codebooks) of the md5 IVF-PQ family."""
+    return _md5_coarse_book(n_centroids, dim), np.asarray(
+        pq_md5_sign_codebooks(m, n_codewords, dim // m, "ivfpq_book")
+    )
+
+
+def _md5_normed(mat: np.ndarray, dim: int) -> np.ndarray:
+    """Corpus rows fold-normalized.  A width other than the configured
+    ``dim`` fails loudly: the literal codebooks (and the oracle) are built
+    for it, and a narrower vector would silently fold truncated dots."""
+    if mat.shape[1] != dim:
+        raise ValueError(f"corpus dim {mat.shape[1]} != configured dim {dim}")
+    return mat / _fold_norm_rows(mat)[:, None]
+
+
+def _md5_assign(normed: np.ndarray, coarse: np.ndarray) -> np.ndarray:
+    """md5 coarse assign: argmax of the exact ±1 fold dots, first max wins
+    (constant-norm codewords, so nearest by L2 = largest inner product)."""
+    return np.argmax(_fold_subspace_dots(normed, coarse, 0), axis=1)
+
+
+def _md5_subspace_dots(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """``(n_rows, m, k)`` fold dots of every subspace against its ±1
+    codewords: the query LUTs, and (argmax, first max wins) the PQ codes."""
+    dsub = books.shape[2]
+    return np.stack(
+        [_fold_subspace_dots(mat, books[j], j * dsub) for j in range(len(books))],
+        axis=1,
+    )
+
+
+def _md5_ivfpq_encode(
+    mat: np.ndarray, coarse: np.ndarray, books: np.ndarray, dim: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(list, residual codes) of raw corpus rows under the md5 IVF-PQ
+    arithmetic: the residual ``normed - coarse[list]`` subtracts ±1 exactly,
+    then repeats the PQ argmax.  Shared by the in-flight twin and the
+    persisted builder, so the two can never diverge."""
+    normed = _md5_normed(mat, dim)
+    lists = _md5_assign(normed, coarse)
+    return lists, _md5_subspace_dots(normed - coarse[lists], books).argmax(axis=2)
+
+
+def _md5_query_tables(
+    qmat: np.ndarray,
+    coarse: np.ndarray | None = None,
+    books: np.ndarray | None = None,
+    n_probe: int = 0,
+) -> tuple[np.ndarray, np.ndarray | None, tuple]:
+    """``(qn, probes, tables)`` for an md5 scan over the fold-normalized
+    queries ``qn``.  With ``coarse``: each query's exact coarse dots (the
+    IVF-PQ base term) and its ``n_probe`` best lists, dot desc then list id
+    asc — a stable sort of the negated exact dots, the oracle's ROW_NUMBER
+    order.  With ``books``: the per-subspace LUTs."""
+    qn = qmat / _fold_norm_rows(qmat)[:, None]
+    probes, tables = None, ()
+    if coarse is not None:
+        qdots = _fold_subspace_dots(qn, coarse, 0)
+        probes = np.argsort(-qdots, axis=1, kind="stable")[:, :n_probe]
+        tables = (qdots,)
+    if books is not None:
+        tables += (_md5_subspace_dots(qn, books),)
+    return qn, probes, tables
+
+
+def _md5_lut_score(lists, codes, tables, idx) -> np.ndarray:
+    """md5 ADC score of ``codes[idx]``: the ``m`` LUT lookups folded left to
+    right onto 0 (flat PQ) or onto the base term ``<q, c_list>`` (IVF-PQ) —
+    the oracle's summation order."""
+    *base, lut = tables
+    acc = base[0][lists[idx]] if base else 0.0
+    for j in range(len(lut)):
+        acc = acc + lut[j][codes[idx, j]]
+    return acc
+
+
+def _md5_cosine_score(lists, normed, tables, idx) -> np.ndarray:
+    """md5 IVF score: the full-precision ordered fold dot of ``normed[idx]``
+    with the fold-normalized query — the SRP twin's verify arithmetic."""
+    (qn,) = tables
+    return _fold_dot_rows(normed[idx], qn[None, :])
 
 
 def pq_topk_md5(
@@ -1234,77 +1318,21 @@ def pq_topk_md5(
     candidate rows.  Codebooks and query LUTs ship in the closure
     (KB-scale); the corpus is never shuffled at full width.
     """
-    import pandas as pd
-
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    _guard_query_rows(queries, max_query_rows, "pq_topk_md5")
-    books = np.asarray(pq_md5_sign_codebooks(m, n_codewords, dsub, tag))
-
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    qids = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
-    if len(qmat) and qmat.shape[1] != dim:
-        raise ValueError(f"query dim {qmat.shape[1]} != configured dim {dim}")
-    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-    # LUT[q, j, c] = <q_sub_j, book_{j,c}> — same columnwise fold as encode
-    luts = (
-        np.stack(
-            [_fold_subspace_dots(qn, books[j], j * dsub) for j in range(m)], axis=1
-        )
-        if len(qn)
-        else np.zeros((0, m, n_codewords))
+    books = np.asarray(pq_md5_sign_codebooks(m, n_codewords, dim // m, tag))
+    qids, qmat = _collect_queries(
+        queries, query_id_col, query_vec_col, max_query_rows, dim, "pq_topk_md5"
     )
-    bcast = df.sparkSession.sparkContext.broadcast((qids, luts))
-    q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(df.dtypes)[id_col]
-    kk = int(k)
+    _, probes, tables = _md5_query_tables(qmat, books=books)
 
-    def scan(batches):
-        ids_q, tables = bcast.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            vids = batch[id_col].to_numpy()
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            # fail loudly on a corpus dim change instead of corrupting codes
-            # (the srp_md5 advice applied here from day one)
-            if mat.shape[1] != dim:
-                raise ValueError(f"corpus dim {mat.shape[1]} != configured dim {dim}")
-            normed = mat / _fold_norm_rows(mat)[:, None]
-            codes = np.stack(
-                [
-                    np.argmax(_fold_subspace_dots(normed, books[j], j * dsub), axis=1)
-                    for j in range(m)
-                ],
-                axis=1,
-            )
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                acc = np.zeros(len(vids))
-                for j in range(m):
-                    acc = acc + tables[qi][j][codes[:, j]]
-                scores = np.round(acc, 6)
-                top = np.lexsort((vids, -scores))[: min(kk, len(vids))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[top])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
-            )
+    def prepare(batch):
+        normed = _md5_normed(_as_matrix(batch[vec_col]), dim)
+        return None, _md5_subspace_dots(normed, books).argmax(axis=2)
 
-    candidates = df.select(id_col, vec_col).mapInPandas(
-        scan,
-        schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
+    return _topk_scan(
+        df.select(id_col, vec_col), (qids, probes, tables), prepare,
+        _md5_lut_score, queries, k, id_col, query_id_col, "approx_cosine",
     )
 
 
@@ -1332,68 +1360,19 @@ def ivf_topk_md5(
     Plan shape: one fused Arrow pass (assign + probe-mask + score +
     per-partition top-k) then the global rank window — the corpus is never
     shuffled at full width, scan fraction ≈ n_probe/n_centroids."""
-    import pandas as pd
-
-    _guard_query_rows(queries, max_query_rows, "ivf_topk_md5")
-    coarse = np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
-
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    qids = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
-    if len(qmat) and qmat.shape[1] != dim:
-        raise ValueError(f"query dim {qmat.shape[1]} != configured dim {dim}")
-    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-    qdots = _fold_subspace_dots(qn, coarse, 0) if len(qn) else np.zeros((0, n_centroids))
-    probes = np.stack(
-        [np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe] for i in range(len(qn))]
-    ) if len(qn) else np.zeros((0, n_probe), dtype=np.int64)
-    bcast = df.sparkSession.sparkContext.broadcast((qids, probes, qn))
-    q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(df.dtypes)[id_col]
-    kk = int(k)
-
-    def scan(batches):
-        ids_q, prb, qnorm = bcast.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            vids = batch[id_col].to_numpy()
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            if mat.shape[1] != dim:
-                raise ValueError(f"corpus dim {mat.shape[1]} != configured dim {dim}")
-            normed = mat / _fold_norm_rows(mat)[:, None]
-            lists = np.argmax(_fold_subspace_dots(normed, coarse, 0), axis=1)
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lists, prb[qi])
-                if not mask.any():
-                    continue
-                midx = np.nonzero(mask)[0]
-                # ordered fold cosine against the (normalized) query — same
-                # columnwise-fold arithmetic as the SRP twin's verify
-                acc = np.zeros(len(midx))
-                sub = normed[midx]
-                for t in range(dim):
-                    acc = acc + sub[:, t] * qnorm[qi][t]
-                scores = np.round(acc, 6)
-                top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[midx[top]])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "cosine": out_s}
-            )
-
-    candidates = df.select(id_col, vec_col).mapInPandas(
-        scan, schema=f"{query_id_col} {q_type}, {id_col} {id_type}, cosine double"
+    coarse = _md5_coarse_book(n_centroids, dim)
+    qids, qmat = _collect_queries(
+        queries, query_id_col, query_vec_col, max_query_rows, dim, "ivf_topk_md5"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+    qn, probes, _ = _md5_query_tables(qmat, coarse, n_probe=n_probe)
+
+    def prepare(batch):
+        normed = _md5_normed(_as_matrix(batch[vec_col]), dim)
+        return _md5_assign(normed, coarse), normed
+
+    return _topk_scan(
+        df.select(id_col, vec_col), (qids, probes, (qn,)), prepare,
+        _md5_cosine_score, queries, k, id_col, query_id_col, "cosine",
     )
 
 
@@ -1456,9 +1435,7 @@ def build_ivf_index(
         cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
         postings = _ivf_assign_expr(
             df.select(id_col, vec_col), vec_col, centroids, "__lists__", 1
-        ).select(
-            id_col, vec_col, F.element_at("__lists__", 1).alias("list")
-        )
+        ).select(id_col, vec_col, F.element_at("__lists__", 1).alias("list"))
     else:
         raise ValueError(f"coarse must be 'md5' or 'kmeans', got {coarse!r}")
 
@@ -1559,18 +1536,43 @@ def extend_ivf_index(
             df, id_col, vec_col, int(meta.n_centroids), int(meta.dim)
         )
     elif meta.coarse == "kmeans":
-        cent = (
-            df.sparkSession.read.parquet(f"{index_path}/centroids")
-            .orderBy("list")
-            .collect()
-        )
-        centroids = np.asarray([r.centroid for r in cent], dtype=np.float64)
         postings = _ivf_assign_expr(
-            df.select(id_col, vec_col), vec_col, centroids, "__lists__", 1
+            df.select(id_col, vec_col), vec_col,
+            _kmeans_centroids(df.sparkSession, index_path), "__lists__", 1,
         ).select(id_col, vec_col, F.element_at("__lists__", 1).alias("list"))
     else:
         raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
     _write_list_delivery(index_path, batch_id, postings, id_col)
+
+
+def _live_postings(
+    spark, index_path: str, id_col: str
+) -> tuple[DataFrame, list[str]]:
+    """A persisted IVF / IVF-PQ store's live postings and its committed
+    batch ids: ledger-committed batches only (a crashed delivery's partial
+    part-files stay invisible until its replay re-commits), minus the
+    tombstoned ids (deleted vectors stay physical until compaction/rebuild
+    folds them away; the anti-join hides them from every probe)."""
+    committed = ST.committed_batches(spark, index_path)
+    postings = ST.committed_tree(spark, index_path, "postings").filter(
+        F.col("batch").isin(committed)
+    )
+    tomb = ST.tombstoned_ids(
+        spark, index_path, dict(postings.dtypes)[id_col], committed
+    )
+    if tomb is not None:
+        postings = postings.join(
+            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
+        )
+    return postings, committed
+
+
+def _probed_lists(postings: DataFrame, lists) -> DataFrame:
+    """The postings of the probed lists only, as a LITERAL ``IN`` on the
+    ``list`` partition column: static partition pruning, so only
+    n_probe/n_centroids of the index files are even listed."""
+    needed = sorted({int(x) for x in np.ravel(lists)})
+    return postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
 
 
 def ivf_topk_persisted(
@@ -1589,154 +1591,57 @@ def ivf_topk_persisted(
     column (static partition pruning — only n_probe/n_centroids of the
     index files are even listed), and candidates score with the flavor's
     own arithmetic, so the output is bit-identical to the corresponding
-    build-and-probe path (``ivf_topk_md5`` / ``ivf_topk``)."""
-    import pandas as pd
-
+    build-and-probe path (``ivf_topk_md5`` / ``ivf_topk``).  The md5 probe
+    shares :func:`ivf_topk_md5`'s score kernel and differs only in reading
+    the stored list instead of assigning one."""
     meta = ST.read_meta_row(spark, index_path)
-    committed = ST.committed_batches(spark, index_path)
-    # ledger-committed batches only: a crashed delivery's partial
-    # part-files are invisible until its replay re-commits
-    postings = ST.committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(committed)
-    )
     id_col, vec_col = meta.id_col, meta.vec_col
-    tomb = ST.tombstoned_ids(
-        spark, index_path, dict(postings.dtypes)[id_col], committed
-    )
-    if tomb is not None:
-        # deleted vectors stay physical until compaction/rebuild folds them
-        # away; the anti-join hides them from every probe
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
+    postings, _ = _live_postings(spark, index_path, id_col)
     n_centroids, dim = int(meta.n_centroids), int(meta.dim)
-    q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(postings.dtypes)[id_col]
-    kk = int(k)
 
     if meta.coarse == "md5":
-        coarse_mat = np.asarray(
-            pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
+        qids, qmat = _collect_queries(
+            queries, query_id_col, query_vec_col, max_query_rows, dim,
+            "ivf_topk_persisted",
         )
-        # guard and collect in ONE job (serving latency: a separate
-        # limit-count guard was a whole extra scan per probe call) — the
-        # limit bounds the Arrow transfer even for an oversized input
-        qpdf = (
-            queries.select(query_id_col, query_vec_col)
-            .limit(int(max_query_rows) + 1)
-            .toPandas()
+        qn, probes, _ = _md5_query_tables(
+            qmat, _md5_coarse_book(n_centroids, dim), n_probe=n_probe
         )
-        if len(qpdf) > max_query_rows:
-            raise ValueError(
-                f"ivf_topk_persisted: probe set exceeds "
-                f"max_query_rows={max_query_rows}; shard the query set or "
-                "raise the guard explicitly"
-            )
-        qids = qpdf[query_id_col].to_numpy()
-        qmat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]]
-        )
-        if len(qmat) and qmat.shape[1] != dim:
-            raise ValueError(f"query dim {qmat.shape[1]} != index dim {dim}")
-        qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-        qdots = (
-            _fold_subspace_dots(qn, coarse_mat, 0)
-            if len(qn)
-            else np.zeros((0, n_centroids))
-        )
-        probes = (
-            np.stack(
-                [
-                    np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe]
-                    for i in range(len(qn))
-                ]
-            )
-            if len(qn)
-            else np.zeros((0, n_probe), dtype=np.int64)
-        )
-        needed = sorted({int(x) for row in probes for x in row})
-        pruned = postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
-        bcast = spark.sparkContext.broadcast((qids, probes, qn))
 
-        def scan(batches):
-            ids_q, prb, qnorm = bcast.value
-            for batch in batches:
-                if not len(batch):
-                    continue
-                vids = batch[id_col].to_numpy()
-                lists = batch["list"].to_numpy()
-                mat = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-                )
-                normed = mat / _fold_norm_rows(mat)[:, None]
-                out_q, out_v, out_s = [], [], []
-                for qi in range(len(ids_q)):
-                    mask = np.isin(lists, prb[qi])
-                    if not mask.any():
-                        continue
-                    midx = np.nonzero(mask)[0]
-                    acc = np.zeros(len(midx))
-                    sub = normed[midx]
-                    for t in range(dim):
-                        acc = acc + sub[:, t] * qnorm[qi][t]
-                    scores = np.round(acc, 6)
-                    top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                    out_q.extend([ids_q[qi]] * len(top))
-                    out_v.extend(vids[midx[top]])
-                    out_s.extend(scores[top])
-                yield pd.DataFrame(
-                    {query_id_col: out_q, id_col: out_v, "cosine": out_s}
-                )
+        def prepare(batch):
+            return batch["list"].to_numpy(), _md5_normed(_as_matrix(batch[vec_col]), dim)
 
-        candidates = pruned.select(id_col, vec_col, "list").mapInPandas(
-            scan,
-            schema=f"{query_id_col} {q_type}, {id_col} {id_type}, cosine double",
+        return _topk_scan(
+            _probed_lists(postings, probes).select(id_col, vec_col, "list"),
+            (qids, probes, (qn,)), prepare, _md5_cosine_score, queries, k,
+            id_col, query_id_col, "cosine",
         )
-    elif meta.coarse == "kmeans":
-        # this flavor never driver-collects the queries (they broadcast into
-        # the list join), so the limit-count guard stays a separate cheap job
-        _guard_query_rows(queries, max_query_rows, "ivf_topk_persisted")
-        cent = (
-            spark.read.parquet(f"{index_path}/centroids")
-            .orderBy("list")
-            .collect()
-        )
-        centroids = np.asarray([r.centroid for r in cent], dtype=np.float64)
-        probe_df = _ivf_assign_expr(
-            queries.select(query_id_col, query_vec_col),
-            query_vec_col,
-            centroids,
-            "__lists__",
-            n_probe,
-        ).select(
-            query_id_col, query_vec_col, F.explode("__lists__").alias("list")
-        )
-        # ≤ n_centroids values (driver-bounded by MAX_DRIVER_CENTROIDS)
-        needed = sorted(
-            r["list"] for r in probe_df.select("list").distinct().collect()
-        )
-        pruned = postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
-        pairs = pruned.join(F.broadcast(probe_df), "list").select(
-            F.col(query_id_col).alias("id1"),
-            F.col(id_col).alias("id2"),
-            F.col(query_vec_col).alias("__v1__"),
-            F.col(vec_col).alias("__v2__"),
-        )
-        candidates = _score_candidate_pairs(
-            pairs, f"id1 {q_type}, id2 {id_type}, cosine double"
-        ).select(
-            F.col("id1").alias(query_id_col), F.col("id2").alias(id_col), "cosine"
-        )
-    else:
+    if meta.coarse != "kmeans":
         raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+    # this flavor never driver-collects the queries (they broadcast into
+    # the list join), so the limit-count guard stays a separate cheap job
+    _guard_query_rows(queries, max_query_rows, "ivf_topk_persisted")
+    probe_df = _ivf_assign_expr(
+        queries.select(query_id_col, query_vec_col),
+        query_vec_col,
+        _kmeans_centroids(spark, index_path),
+        "__lists__",
+        n_probe,
+    ).select(query_id_col, query_vec_col, F.explode("__lists__").alias("list"))
+    # ≤ n_centroids values (driver-bounded by MAX_DRIVER_CENTROIDS)
+    needed = [r["list"] for r in probe_df.select("list").distinct().collect()]
+    pairs = _probed_lists(postings, needed).join(F.broadcast(probe_df), "list").select(
+        F.col(query_id_col).alias("id1"),
+        F.col(id_col).alias("id2"),
+        F.col(query_vec_col).alias("__v1__"),
+        F.col(vec_col).alias("__v2__"),
     )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    q_type = dict(queries.dtypes)[query_id_col]
+    id_type = dict(postings.dtypes)[id_col]
+    candidates = _score_candidate_pairs(
+        pairs, f"id1 {q_type}, id2 {id_type}, cosine double"
+    ).select(F.col("id1").alias(query_id_col), F.col("id2").alias(id_col), "cosine")
+    return _rank_topk(candidates, k, query_id_col, id_col, "cosine")
 
 
 def ivf_pq_topk_md5(
@@ -1767,89 +1672,17 @@ def ivf_pq_topk_md5(
     (by the same argmax order) are scored — the n_probe/n_centroids scan
     fraction that makes IVF the at-scale path.
     """
-    import pandas as pd
-
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    _guard_query_rows(queries, max_query_rows, "ivf_pq_topk_md5")
-    coarse = np.asarray(
-        pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
-    )  # (n_centroids, dim)
-    books = np.asarray(pq_md5_sign_codebooks(m, n_codewords, dsub, "ivfpq_book"))
-
-    qpdf = queries.select(query_id_col, query_vec_col).toPandas()
-    qids = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
-    if len(qmat) and qmat.shape[1] != dim:
-        raise ValueError(f"query dim {qmat.shape[1]} != configured dim {dim}")
-    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-    qdots = _fold_subspace_dots(qn, coarse, 0) if len(qn) else np.zeros((0, n_centroids))
-    # n_probe closest lists: score desc, index asc on ties — np.lexsort with
-    # the negated (exact) dots mirrors the oracle's ROW_NUMBER order
-    probes = np.stack(
-        [np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe] for i in range(len(qn))]
-    ) if len(qn) else np.zeros((0, n_probe), dtype=np.int64)
-    luts = (
-        np.stack(
-            [_fold_subspace_dots(qn, books[j], j * dsub) for j in range(m)], axis=1
-        )
-        if len(qn)
-        else np.zeros((0, m, n_codewords))
+    coarse, books = _md5_ivfpq_books(n_centroids, m, n_codewords, dim)
+    qids, qmat = _collect_queries(
+        queries, query_id_col, query_vec_col, max_query_rows, dim, "ivf_pq_topk_md5"
     )
-    bcast = df.sparkSession.sparkContext.broadcast((qids, probes, qdots, luts))
-    q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(df.dtypes)[id_col]
-    kk = int(k)
-
-    def scan(batches):
-        ids_q, prb, base, tables = bcast.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            vids = batch[id_col].to_numpy()
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            if mat.shape[1] != dim:
-                raise ValueError(f"corpus dim {mat.shape[1]} != configured dim {dim}")
-            normed = mat / _fold_norm_rows(mat)[:, None]
-            lists = np.argmax(_fold_subspace_dots(normed, coarse, 0), axis=1)
-            resid = normed - coarse[lists]
-            codes = np.stack(
-                [
-                    np.argmax(_fold_subspace_dots(resid, books[j], j * dsub), axis=1)
-                    for j in range(m)
-                ],
-                axis=1,
-            )
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lists, prb[qi])
-                if not mask.any():
-                    continue
-                midx = np.nonzero(mask)[0]
-                acc = base[qi][lists[midx]].copy()
-                for j in range(m):
-                    acc = acc + tables[qi][j][codes[midx, j]]
-                scores = np.round(acc, 6)
-                top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[midx[top]])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
-            )
-
-    candidates = df.select(id_col, vec_col).mapInPandas(
-        scan,
-        schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
+    _, probes, tables = _md5_query_tables(qmat, coarse, books, n_probe)
+    return _topk_scan(
+        df.select(id_col, vec_col), (qids, probes, tables),
+        lambda batch: _md5_ivfpq_encode(_as_matrix(batch[vec_col]), coarse, books, dim),
+        _md5_lut_score, queries, k, id_col, query_id_col, "approx_cosine",
     )
 
 
@@ -1897,21 +1730,17 @@ def hard_negatives_topk(
     pdf = df.select(id_col, vec_col, label_col).toPandas()
     bids = pdf[id_col].to_numpy()
     blabels = pdf[label_col].to_numpy()
-    bmat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    bmat = _as_matrix(pdf[vec_col])
     bnorms = np.maximum(np.sqrt((bmat * bmat).sum(axis=1)), 1e-12)
     bcast = df.sparkSession.sparkContext.broadcast((bids, blabels, bmat, bnorms))
     kk = int(k)
 
     def mine(batches):
         ids, labels, mat, norms = bcast.value
-        for batch in batches:
-            if not len(batch):
-                continue
+        for batch in filter(len, batches):
             aid = batch[id_col].to_numpy()
             alab = batch[label_col].to_numpy()
-            m1 = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )
+            m1 = _as_matrix(batch[vec_col])
             n1 = np.maximum(np.sqrt((m1 * m1).sum(axis=1)), 1e-12)
             sims = np.round((m1 @ mat.T) / np.outer(n1, norms), 6)
             rows = {c: [] for c in ("anchor_id", "anchor_label", "neg_id",
@@ -2071,14 +1900,12 @@ def semantic_dedup(
     def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
-        mat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()[order]]
-        )
+        mat = _as_matrix(pdf[vec_col].to_numpy()[order])
         # zero-norm guard: an all-zero embedding would otherwise yield a NaN
         # row in sims (NaN >= thr is False, so zero vectors silently never
         # dedup); with the eps floor they normalize to the zero vector and
         # score cosine 0 against everything — kept, deterministically.
-        normed = mat / np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)[:, None]
+        normed = _l2_normalize(mat)
         # same 6-dp rounding as every other cosine path in this module, so
         # threshold decisions agree with the pair/LSH operators bit-for-bit
         sims = np.round(normed @ normed.T, 6)
@@ -2144,16 +1971,14 @@ def ivf_index_drift_report(spark, index_path: str) -> DataFrame:
     )
 
     if meta.coarse == "md5":
-        cent = np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
+        cent = _md5_coarse_book(n_centroids, dim)
 
         def fit_micros(mat: np.ndarray, lists: np.ndarray) -> np.ndarray:
-            normed = mat / _fold_norm_rows(mat)[:, None]
-            dots = _fold_subspace_dots(normed, cent, 0)
+            dots = _fold_subspace_dots(_md5_normed(mat, dim), cent, 0)
             return _half_away_micros(dots[np.arange(len(mat)), lists])
 
     elif meta.coarse == "kmeans":
-        rows = spark.read.parquet(f"{index_path}/centroids").orderBy("list").collect()
-        cent = np.asarray([r.centroid for r in rows], dtype=np.float64)
+        cent = _kmeans_centroids(spark, index_path)
 
         def fit_micros(mat: np.ndarray, lists: np.ndarray) -> np.ndarray:
             d2 = ((mat - cent[lists]) ** 2).sum(axis=1)
@@ -2163,18 +1988,13 @@ def ivf_index_drift_report(spark, index_path: str) -> DataFrame:
         raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
 
     def score(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )
+        for batch in filter(len, batches):
             lists = batch["list"].to_numpy().astype(np.int64)
             yield pd.DataFrame(
                 {
                     "batch": batch["batch"].astype(str),
                     "list": lists,
-                    "fit_micros": fit_micros(mat, lists),
+                    "fit_micros": fit_micros(_as_matrix(batch[vec_col]), lists),
                 }
             )
 
@@ -2220,24 +2040,13 @@ def compact_ivf_index(spark, index_path: str, dst_index: str | None = None) -> N
     deployment passes ``dst_index`` to stream into a fresh root with no
     checkpoint and swaps probes over (write-then-swap)."""
     meta = ST.read_meta_row(spark, index_path)
-    committed = ST.committed_batches(spark, index_path)
     # payload column by flavor: the compressed md5pq store folds its codes,
     # the full-precision flavors their vectors — assignments never move
-    # lists either way, so compaction is layout-only for all of them
+    # lists either way, so compaction is layout-only for all of them; the
+    # tombstone anti-join makes deletes physical (the commit clears the set)
     payload = "pq_code" if meta.coarse == "md5pq" else meta.vec_col
-    postings = (
-        ST.committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select(meta.id_col, payload, "list")
-    )
-    tomb = ST.tombstoned_ids(
-        spark, index_path, dict(postings.dtypes)[meta.id_col], committed
-    )
-    if tomb is not None:
-        # compaction makes deletes physical and clears the tombstone set
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", meta.id_col), meta.id_col, "left_anti"
-        )
+    postings, committed = _live_postings(spark, index_path, meta.id_col)
+    postings = postings.select(meta.id_col, payload, "list")
     cent = None
     if meta.coarse == "kmeans":
         cent = spark.read.parquet(f"{index_path}/centroids")
@@ -2321,22 +2130,11 @@ def rebuild_ivf_index(
             "source corpus with build_ivfpq_index, or compact_ivf_index for "
             "layout maintenance"
         )
-    committed = ST.committed_batches(spark, index_path)
-    union = (
-        ST.committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select(meta.id_col, meta.vec_col)
-    )
-    tomb = ST.tombstoned_ids(
-        spark, index_path, dict(union.dtypes)[meta.id_col], committed
-    )
-    if tomb is not None:
-        # the retrain must not learn from deleted vectors, and the rebuilt
-        # root makes the deletes physical (build_ivf_index clears the
-        # tombstone set inside its meta-less window)
-        union = union.join(
-            tomb.withColumnRenamed("doc", meta.id_col), meta.id_col, "left_anti"
-        )
+    # tombstoned ids excluded: the retrain must not learn from deleted
+    # vectors, and the rebuilt root makes the deletes physical
+    # (build_ivf_index clears the tombstone set inside its meta-less window)
+    union, committed = _live_postings(spark, index_path, meta.id_col)
+    union = union.select(meta.id_col, meta.vec_col)
     if dst_index is None:
         union = union.localCheckpoint(eager=True)
         dst_index = index_path
@@ -2365,26 +2163,13 @@ def _ivf_md5_list_postings(
     — the literal ±1 codebook and ordered fold-dot argmax of
     :func:`ivf_topk_md5`, shared by the persisted build and extend so the
     two can never diverge."""
-    coarse_mat = np.asarray(
-        pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0]
-    )
+    coarse = _md5_coarse_book(n_centroids, dim)
 
     def assign(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )
-            if mat.shape[1] != dim:
-                raise ValueError(
-                    f"corpus dim {mat.shape[1]} != configured dim {dim}"
-                )
-            normed = mat / _fold_norm_rows(mat)[:, None]
+        for batch in filter(len, batches):
+            normed = _md5_normed(_as_matrix(batch[vec_col]), dim)
             out = batch.copy()
-            out["list"] = np.argmax(
-                _fold_subspace_dots(normed, coarse_mat, 0), axis=1
-            ).astype("int32")
+            out["list"] = _md5_assign(normed, coarse).astype("int32")
             yield out
 
     dtypes = dict(df.dtypes)
@@ -2392,6 +2177,12 @@ def _ivf_md5_list_postings(
         assign,
         schema=f"{id_col} {dtypes[id_col]}, {vec_col} {dtypes[vec_col]}, list int",
     )
+
+
+def _kmeans_centroids(spark, index_path: str) -> np.ndarray:
+    """A kmeans IVF store's persisted centroids, in list order."""
+    rows = spark.read.parquet(f"{index_path}/centroids").orderBy("list").collect()
+    return np.asarray([r.centroid for r in rows], dtype=np.float64)
 
 
 def _ivfpq_code_postings(
@@ -2405,37 +2196,20 @@ def _ivfpq_code_postings(
 ) -> DataFrame:
     """(id, list, pq_code) posting rows under the md5 IVF-PQ arithmetic —
     the EXACT coarse-argmax + residual-code assignment of
-    :func:`ivf_pq_topk_md5`, factored out so the persisted build/extend
-    and the in-flight twin can never diverge."""
+    :func:`ivf_pq_topk_md5` (:func:`_md5_ivfpq_encode`), so the persisted
+    build/extend and the in-flight twin can never diverge."""
     import pandas as pd
 
-    dsub = dim // m
-    coarse = np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
-    books = np.asarray(pq_md5_sign_codebooks(m, n_codewords, dsub, "ivfpq_book"))
+    coarse, books = _md5_ivfpq_books(n_centroids, m, n_codewords, dim)
 
     def assign(batches):
-        for batch in batches:
-            if not len(batch):
-                continue
-            vids = batch[id_col]
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )
-            if mat.shape[1] != dim:
-                raise ValueError(f"corpus dim {mat.shape[1]} != configured dim {dim}")
-            normed = mat / _fold_norm_rows(mat)[:, None]
-            lists = np.argmax(_fold_subspace_dots(normed, coarse, 0), axis=1)
-            resid = normed - coarse[lists]
-            codes = np.stack(
-                [
-                    np.argmax(_fold_subspace_dots(resid, books[j], j * dsub), axis=1)
-                    for j in range(m)
-                ],
-                axis=1,
+        for batch in filter(len, batches):
+            lists, codes = _md5_ivfpq_encode(
+                _as_matrix(batch[vec_col]), coarse, books, dim
             )
             yield pd.DataFrame(
                 {
-                    id_col: vids,
+                    id_col: batch[id_col],
                     "list": lists.astype("int32"),
                     "pq_code": [row.astype("int32").tolist() for row in codes],
                 }
@@ -2628,109 +2402,24 @@ def ivfpq_topk_persisted(
     the file LISTING, and candidates score as base coarse dot + m residual
     LUT lookups in the twin's exact left-to-right fold — BIT-IDENTICAL to
     :func:`ivf_pq_topk_md5` over the same corpus (tested), at 1/16th-ish
-    the storage and scan bytes of the full-precision probe."""
-    import pandas as pd
-
+    the storage and scan bytes of the full-precision probe.  It shares the
+    twin's score kernel and differs only in reading the stored list and
+    codes instead of encoding them."""
     meta = ST.read_meta_row(spark, index_path)
     if meta.coarse != "md5pq":
         raise ValueError(f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r})")
-    n_centroids, m_sub = int(meta.n_centroids), int(meta.m)
-    n_codewords, dim = int(meta.n_codewords), int(meta.dim)
-    dsub = dim // m_sub
-    committed = ST.committed_batches(spark, index_path)
-    postings = ST.committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(committed)
+    id_col, dim = meta.id_col, int(meta.dim)
+    postings, _ = _live_postings(spark, index_path, id_col)
+    coarse, books = _md5_ivfpq_books(
+        int(meta.n_centroids), int(meta.m), int(meta.n_codewords), dim
     )
-    id_col = meta.id_col
-    tomb = ST.tombstoned_ids(
-        spark, index_path, dict(postings.dtypes)[id_col], committed
+    qids, qmat = _collect_queries(
+        queries, query_id_col, query_vec_col, max_query_rows, dim,
+        "ivfpq_topk_persisted",
     )
-    if tomb is not None:
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
-    coarse = np.asarray(pq_md5_sign_codebooks(1, n_centroids, dim, "ivfpq_coarse")[0])
-    books = np.asarray(pq_md5_sign_codebooks(m_sub, n_codewords, dsub, "ivfpq_book"))
-    qpdf = (
-        queries.select(query_id_col, query_vec_col)
-        .limit(int(max_query_rows) + 1)
-        .toPandas()
-    )
-    if len(qpdf) > max_query_rows:
-        raise ValueError(
-            f"ivfpq_topk_persisted: probe set exceeds "
-            f"max_query_rows={max_query_rows}; shard the query set or raise "
-            "the guard explicitly"
-        )
-    qids = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec_col]])
-    if len(qmat) and qmat.shape[1] != dim:
-        raise ValueError(f"query dim {qmat.shape[1]} != index dim {dim}")
-    qn = qmat / _fold_norm_rows(qmat)[:, None] if len(qmat) else qmat
-    qdots = _fold_subspace_dots(qn, coarse, 0) if len(qn) else np.zeros((0, n_centroids))
-    probes = (
-        np.stack(
-            [
-                np.lexsort((np.arange(n_centroids), -qdots[i]))[:n_probe]
-                for i in range(len(qn))
-            ]
-        )
-        if len(qn)
-        else np.zeros((0, n_probe), dtype=np.int64)
-    )
-    luts = (
-        np.stack(
-            [_fold_subspace_dots(qn, books[j], j * dsub) for j in range(m_sub)], axis=1
-        )
-        if len(qn)
-        else np.zeros((0, m_sub, n_codewords))
-    )
-    needed = sorted({int(x) for row in probes for x in row})
-    pruned = (
-        postings.filter(F.col("list").isin(needed)) if needed else postings.limit(0)
-    )
-    bcast = spark.sparkContext.broadcast((qids, probes, qdots, luts))
-    q_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(postings.dtypes)[id_col]
-    kk = int(k)
-
-    def scan(batches):
-        ids_q, prb, base, tables = bcast.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            vids = batch[id_col].to_numpy()
-            lists = batch["list"].to_numpy()
-            codes = np.stack([np.asarray(c) for c in batch["pq_code"]])
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                mask = np.isin(lists, prb[qi])
-                if not mask.any():
-                    continue
-                midx = np.nonzero(mask)[0]
-                # the twin's exact fold: base coarse dot, then the m LUT
-                # adds left-to-right (identical FP summation order)
-                acc = base[qi][lists[midx]].copy()
-                for j in range(len(tables[qi])):
-                    acc = acc + tables[qi][j][codes[midx, j]]
-                scores = np.round(acc, 6)
-                top = np.lexsort((vids[midx], -scores))[: min(kk, len(midx))]
-                out_q.extend([ids_q[qi]] * len(top))
-                out_v.extend(vids[midx[top]])
-                out_s.extend(scores[top])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_v, "approx_cosine": out_s}
-            )
-
-    candidates = pruned.select(id_col, "list", "pq_code").mapInPandas(
-        scan,
-        schema=f"{query_id_col} {q_type}, {id_col} {id_type}, approx_cosine double",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_cosine", "rank")
+    _, probes, tables = _md5_query_tables(qmat, coarse, books, n_probe)
+    return _topk_scan(
+        _probed_lists(postings, probes).select(id_col, "list", "pq_code"),
+        (qids, probes, tables), _stored_codes, _md5_lut_score, queries, k,
+        id_col, query_id_col, "approx_cosine",
     )

@@ -181,17 +181,19 @@ def test_ccnet_buckets_plan_budget(docs):
     assert r.n_exchanges <= 7 and r.n_sorts <= 1
 
 
-def test_pq_md5_twin_is_single_fused_arrow_pass(spark):
-    """The PQ oracle twin: normalize+encode+LUT-score+local-topk fuse into
-    ONE Arrow boundary over one pruned scan; the only exchange is the
-    global rank window over the per-partition candidates."""
+@pytest.mark.parametrize("fn", ["pq_topk_md5", "ivf_topk_md5", "ivf_pq_topk_md5"])
+def test_pq_md5_twin_is_single_fused_arrow_pass(spark, fn):
+    """The md5 oracle twins: normalize + encode/assign + probe-mask + score
+    + local top-k fuse into ONE Arrow boundary over one pruned scan; the
+    only exchange is the global rank window over the per-partition
+    candidates."""
     from chat_data_pipeline_spark.operators import similarity as SIM
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    r = plan_report(SIM.pq_topk_md5(emb, queries, k=10))
+    r = plan_report(getattr(SIM, fn)(emb, queries, k=10))
     assert r.n_python_stages == 1 and r.n_exchanges == 1
     assert r.scans_are_pruned
     assert r.read_schemas == ["struct<vec_id:bigint,embedding:array<float>>"]

@@ -372,7 +372,7 @@ def test_pq_md5_partition_invariant(emb, queries, fn):
     assert a == b
 
 
-@pytest.mark.parametrize("fn", ["pq_topk_md5", "ivf_pq_topk_md5"])
+@pytest.mark.parametrize("fn", ["pq_topk_md5", "ivf_topk_md5", "ivf_pq_topk_md5"])
 def test_pq_md5_dim_mismatch_fails_loudly(spark, queries, fn):
     """A corpus whose vectors disagree with the configured dim must raise in
     the scan, not silently encode garbage (the srp_md5 ADVICE applied)."""
@@ -408,13 +408,128 @@ def test_ivf_pq_md5_probe_pruning_is_real(emb, queries):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("fn", ["pq_topk", "ivf_topk", "ivf_pq_topk"])
+@pytest.mark.parametrize(
+    "fn",
+    ["pq_topk", "ivf_topk", "ivf_pq_topk", "pq_topk_md5", "ivf_topk_md5", "ivf_pq_topk_md5"],
+)
 def test_ann_query_side_guard_raises_on_oversized_probe_set(emb, queries, fn):
-    """The probe set is driver-collected (pq/ivf_pq LUT build) or broadcast
-    (ivf join): an oversized one must fail with guidance, not OOM the
-    driver — the same posture as the exact path's max_broadcast_rows."""
+    """The probe set is driver-collected (the PQ / IVF-PQ LUT builds and the
+    md5 twins) or broadcast (ivf join): an oversized one must fail with
+    guidance, not OOM the driver — the same posture as the exact path's
+    max_broadcast_rows."""
     with pytest.raises(ValueError, match="max_query_rows"):
         getattr(SIM, fn)(emb, queries, k=5, max_query_rows=2)
+
+
+@pytest.fixture(scope="module")
+def persisted_roots(emb, tmp_path_factory):
+    """One root per persisted flavor, built once for the probe-side tests."""
+    base = tmp_path_factory.mktemp("topk_roots")
+    roots = {f: str(base / f) for f in ("md5", "kmeans", "md5pq")}
+    SIM.build_ivf_index(emb, roots["md5"], n_centroids=16, coarse="md5", dim=64)
+    SIM.build_ivf_index(emb, roots["kmeans"], n_centroids=16, coarse="kmeans")
+    SIM.build_ivfpq_index(emb, roots["md5pq"], n_centroids=16, m=8, n_codewords=16, dim=64)
+    return roots
+
+
+_TOPK_ENTRY_POINTS = {
+    "pq_topk": lambda spark, emb, q, roots: SIM.pq_topk(emb, q, k=5),
+    "ivf_pq_topk": lambda spark, emb, q, roots: SIM.ivf_pq_topk(emb, q, k=5),
+    "pq_topk_md5": lambda spark, emb, q, roots: SIM.pq_topk_md5(emb, q, k=5),
+    "ivf_topk_md5": lambda spark, emb, q, roots: SIM.ivf_topk_md5(emb, q, k=5),
+    "ivf_pq_topk_md5": lambda spark, emb, q, roots: SIM.ivf_pq_topk_md5(emb, q, k=5),
+    "ivf_topk": lambda spark, emb, q, roots: SIM.ivf_topk(emb, q, k=5),
+    "ivf_topk_persisted[md5]": lambda spark, emb, q, roots: SIM.ivf_topk_persisted(
+        spark, roots["md5"], q, k=5
+    ),
+    "ivf_topk_persisted[kmeans]": lambda spark, emb, q, roots: SIM.ivf_topk_persisted(
+        spark, roots["kmeans"], q, k=5
+    ),
+    "ivfpq_topk_persisted": lambda spark, emb, q, roots: SIM.ivfpq_topk_persisted(
+        spark, roots["md5pq"], q, k=5
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", list(_TOPK_ENTRY_POINTS))
+def test_topk_empty_probe_set_returns_no_rows(spark, emb, queries, persisted_roots, entry):
+    """An empty probe set is an empty answer on every top-k entry point, not
+    a crash: the collected query matrix is always 2-D, so the query-table
+    kernels run unchanged on a (0, dim) matrix (a (0,)-shaped one broke the
+    trained PQ paths' axis=1 normalization)."""
+    empty = queries.filter(F.col("query_id") < 0)
+    assert _TOPK_ENTRY_POINTS[entry](spark, emb, empty, persisted_roots).count() == 0
+
+
+@pytest.mark.parametrize(
+    "flavor,refusal",
+    [
+        ("md5", "max_query_rows"),
+        ("kmeans", "max_query_rows"),
+        ("md5pq", "max_query_rows"),
+        ("md5", "dim"),
+        ("md5pq", "dim"),
+    ],
+)
+def test_persisted_probe_refuses_oversized_or_wrong_dim_queries(
+    spark, queries, persisted_roots, flavor, refusal
+):
+    """The persisted probes refuse an oversized probe set and a query width
+    other than the index dim before any scan, like the in-flight paths."""
+    probe = SIM.ivfpq_topk_persisted if flavor == "md5pq" else SIM.ivf_topk_persisted
+    if refusal == "max_query_rows":
+        q, kw = queries, {"max_query_rows": 2}
+    else:
+        q, kw = spark.createDataFrame(
+            [(0, [0.5] * 128)], "query_id long, query_vec array<float>"
+        ), {}
+    with pytest.raises(ValueError, match=refusal):
+        probe(spark, persisted_roots[flavor], q, k=5, **kw)
+
+
+def test_ann_topk_steps_are_written_once():
+    """The collect → scan → rank steps of the ANN top-k family live in one
+    place each: the global window in ``_rank_topk``, the md5 coarse
+    codebook in ``_md5_coarse_book``, the query collect in
+    ``_collect_queries``; the separate limit-count guard survives only at
+    the broadcast (never collected) probe sites."""
+    import ast
+    import inspect
+
+    sites: dict[str, list[str]] = {
+        "window": [], "coarse": [], "collect": [], "guard": []
+    }
+    for fn in ast.parse(inspect.getsource(SIM)).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            f, args = node.func, node.args
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name == "partitionBy" and args and getattr(args[0], "id", None) == "query_id_col":
+                sites["window"].append(fn.name)
+            if (
+                name == "pq_md5_sign_codebooks"
+                and len(args) == 4
+                and getattr(args[0], "value", None) == 1
+                and getattr(args[3], "value", None) == "ivfpq_coarse"
+            ):
+                sites["coarse"].append(fn.name)
+            if name == "toPandas":
+                root = f.value
+                while isinstance(root, (ast.Call, ast.Attribute)):
+                    root = root.func if isinstance(root, ast.Call) else root.value
+                if getattr(root, "id", None) == "queries":
+                    sites["collect"].append(fn.name)
+            if name == "_guard_query_rows":
+                sites["guard"].append(fn.name)
+    assert sites["window"] == ["_rank_topk"]
+    assert sites["coarse"] == ["_md5_coarse_book"]
+    assert sites["collect"] == ["_collect_queries"]
+    assert sorted(sites["guard"]) == [
+        "brute_force_topk", "ivf_topk", "ivf_topk_persisted", "lsh_topk"
+    ]
 
 
 def test_ivf_topk_zero_vector_scores_zero_not_nan(spark, emb, queries):
