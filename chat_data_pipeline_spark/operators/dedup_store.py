@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators import dedup as D
 from chat_data_pipeline_spark.operators import store as ST
-from chat_data_pipeline_spark.session import values_df
 
 SEED = 42
 DEDUP_META = (
@@ -179,28 +178,6 @@ def extend_dedup_index(
     ST.ledger_commit(df.sparkSession, index_path, batch_id)
 
 
-def _committed_bands(
-    spark, index_path: str, meta, committed: list[str] | None = None
-) -> DataFrame:
-    """Committed, non-tombstoned (id, band, sig) store postings.
-
-    ``committed`` lets the compactor pass its ONE ledger snapshot through
-    (r15 review): a delivery committing between two independent ledger
-    listings would otherwise be folded into the rewritten base without
-    being marked spent in the folded manifest."""
-    if committed is None:
-        committed = ST.committed_batches(spark, index_path)
-    ref = (
-        spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
-        .parquet(f"{index_path}/bands")
-        .filter(F.col("batch").isin(committed))
-    )
-    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        ref = ref.join(tomb.withColumnRenamed("doc", "id"), "id", "left_anti")
-    return ref
-
-
 def filter_against_dedup_index(
     spark,
     index_path: str,
@@ -219,7 +196,10 @@ def filter_against_dedup_index(
     meta = ST.read_meta_row(spark, index_path)
     column = column or meta.text_col
     id_col = id_col or meta.id_col
-    ref = _committed_bands(spark, index_path, meta)
+    ref = ST.live_rows(
+        spark, index_path, "bands", ST.committed_batches(spark, index_path),
+        f"id {meta.id_type}, sig {meta.sig_type}", "id",
+    )
     nb = _bands_for(
         new_df.select(id_col, column), column, id_col, _params_from_meta(meta)
     )
@@ -236,10 +216,14 @@ def compact_dedup_index(spark, index_path: str, dst_index: str | None = None) ->
     (``store.swap_index_alias`` works here too — resolution only needs
     the root's meta)."""
     meta = ST.read_meta_row(spark, index_path)
+    # ONE ledger snapshot for the read AND the folded manifest (r15 review):
+    # a delivery committing between two listings would otherwise be folded
+    # into the rewritten base without being marked spent
     committed = ST.committed_batches(spark, index_path)
-    bands = _committed_bands(spark, index_path, meta, committed).select(
-        "id", "sig", "band"
-    )
+    bands = ST.live_rows(
+        spark, index_path, "bands", committed,
+        f"id {meta.id_type}, sig {meta.sig_type}", "id",
+    ).select("id", "sig", "band")
     if dst_index is None:
         bands = bands.localCheckpoint(eager=True)
         dst_index = index_path
@@ -267,28 +251,9 @@ def dedup_store_health(spark, index_path: str) -> DataFrame:
     id-sized tombstone count; O(batches) output rows."""
     meta = ST.read_meta_row(spark, index_path)
     committed = ST.committed_batches(spark, index_path)
-    bands = (
-        spark.read.schema(f"id {meta.id_type}, sig {meta.sig_type}")
-        .parquet(f"{index_path}/bands")
-        .filter(F.col("batch").isin(committed))
-        .groupBy(F.col("batch").cast("string").alias("batch"))
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.countDistinct("id").cast("long").alias("n_ids"),
-        )
+    bands = ST.per_batch_counts(
+        spark, index_path, "bands", committed,
+        f"id {meta.id_type}, sig {meta.sig_type}",
+        n_rows=F.count("*"), n_ids=F.countDistinct("id"),
     )
-    fs, tpath, _jvm = ST.fs_for(spark, f"{index_path}/tombstones")
-    if fs.exists(tpath):
-        tombs = (
-            spark.read.schema(f"doc {meta.id_type}")
-            .parquet(f"{index_path}/tombstones")
-            .filter(F.col("batch").isin(committed))
-            .groupBy(F.col("batch").cast("string").alias("batch"))
-            .agg(F.count("*").cast("long").alias("n_tombstones"))
-        )
-    else:
-        tombs = values_df(spark, [], "batch string, n_tombstones long")
-    out = bands.join(tombs, "batch", "full_outer")
-    return out.fillna(
-        {"n_rows": 0, "n_ids": 0, "n_tombstones": 0}
-    ).orderBy("batch")
+    return ST.batch_health(spark, index_path, committed, meta.id_type, bands)

@@ -181,12 +181,7 @@ def _count_committed(spark, index_path: str, sub: str, committed: list[str]) -> 
     # corrupt partial files must not fail the maintenance read that
     # decides the post-crash compaction (same discipline as every other
     # read in this module)
-    return (
-        spark.read.schema("batch string")
-        .parquet(f"{index_path}/{sub}")
-        .filter(F.col("batch").isin(committed))
-        .count()
-    )
+    return ST.committed_read(spark, index_path, sub, committed, "batch string").count()
 
 
 def maintenance_plan(
@@ -271,12 +266,9 @@ def maintenance_plan_values(
     # hides their ROWS, but inference reads footers before any filter
     # applies
     def _resident_ids():
-        return (
-            spark.read.schema(f"{res_id} {id_type}")
-            .parquet(f"{index_path}/{res_sub}")
-            .filter(F.col("batch").isin(committed))
-            .select(F.col(res_id).alias("doc"))
-        )
+        return ST.committed_read(
+            spark, index_path, res_sub, committed, f"{res_id} {id_type}"
+        ).select(F.col(res_id).alias("doc"))
 
     # dead + live in ONE residency scan per root (r17, guide §2.4/§1.2):
     # the former shape paid two driver-paced jobs over the same artifact
@@ -322,9 +314,9 @@ def maintenance_plan_values(
             if not fs.exists(spath):
                 return 0
             return int(
-                spark.read.schema("n_docs long, sum_dl long")
-                .parquet(f"{index_path}/stats")
-                .filter(F.col("batch").isin(committed))
+                ST.committed_read(
+                    spark, index_path, "stats", committed, "n_docs long, sum_dl long"
+                )
                 .agg(F.coalesce(F.sum("n_docs"), F.lit(0)))
                 .first()[0]
             )

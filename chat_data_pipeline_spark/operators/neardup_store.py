@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from chat_data_pipeline_spark.operators import store as ST
 from chat_data_pipeline_spark.operators.similarity import srp_md5_sign_planes
-from chat_data_pipeline_spark.session import values_df
 
 NEARDUP_META = (
     "n_planes int, n_tables int, dim int, threshold double, "
@@ -235,21 +234,13 @@ def compact_neardup_index(
     other stores' compactors."""
     meta = ST.read_meta_row(spark, index_path)
     committed = ST.committed_batches(spark, index_path)
-    posting = (
-        ST.committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select("id", "t", "b")
+    posting = ST.committed_read(spark, index_path, "postings", committed)
+    vectors = ST.committed_read(spark, index_path, "vectors", committed)
+    posting, vectors = ST.drop_tombstoned(
+        index_path, committed,
+        posting.select("id", "t", "b"), vectors.select("id", "v"),
+        id_col="id",
     )
-    vectors = (
-        ST.committed_tree(spark, index_path, "vectors")
-        .filter(F.col("batch").isin(committed))
-        .select("id", "v")
-    )
-    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        dead = tomb.withColumnRenamed("doc", "id")
-        posting = posting.join(dead, "id", "left_anti")
-        vectors = vectors.join(dead, "id", "left_anti")
     if dst_index is None:
         posting = posting.localCheckpoint(eager=True)
         vectors = vectors.localCheckpoint(eager=True)
@@ -287,22 +278,19 @@ def matched_against_neardup_index(
     nid = id_col or meta.id_col
     nvec = vec_col or meta.vec_col
     committed = ST.committed_batches(spark, index_path)
-    ref_post = (
-        ST.committed_tree(spark, index_path, "postings")
-        .filter(F.col("batch").isin(committed))
-        .select(F.col("id").alias("rid"), "t", "b")
+    # the verify side rides the postings prune: a tombstoned id has no
+    # surviving posting row, so its vector can never be re-fetched
+    ref_post = ST.drop_tombstoned(
+        index_path,
+        committed,
+        ST.committed_read(spark, index_path, "postings", committed).select(
+            F.col("id").alias("rid"), "t", "b"
+        ),
+        id_col="rid",
     )
-    ref_vecs = (
-        ST.committed_tree(spark, index_path, "vectors")
-        .filter(F.col("batch").isin(committed))
-        .select(F.col("id").alias("rid"), F.col("v").alias("__rv__"))
+    ref_vecs = ST.committed_read(spark, index_path, "vectors", committed).select(
+        F.col("id").alias("rid"), F.col("v").alias("__rv__")
     )
-    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        dead = tomb.withColumnRenamed("doc", "rid")
-        ref_post = ref_post.join(dead, "rid", "left_anti")
-        # the verify side rides the postings prune: a tombstoned id has no
-        # surviving posting row, so its vector can never be re-fetched
     new_post, new_vecs = _postings_and_vectors(
         new_df.select(
             F.col(nid).alias(meta.id_col), F.col(nvec).alias(meta.vec_col)
@@ -416,32 +404,12 @@ def neardup_store_health(spark, index_path: str) -> DataFrame:
     output rows."""
     meta = ST.read_meta_row(spark, index_path)
     committed = ST.committed_batches(spark, index_path)
-    posts = (
-        spark.read.schema(f"id {meta.id_type}, b long")
-        .parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .groupBy(F.col("batch").cast("string").alias("batch"))
-        .agg(F.count("*").cast("long").alias("n_rows"))
+    posts = ST.per_batch_counts(
+        spark, index_path, "postings", committed, f"id {meta.id_type}, b long",
+        n_rows=F.count("*"),
     )
-    vecs = (
-        spark.read.schema(f"id {meta.id_type}")
-        .parquet(f"{index_path}/vectors")
-        .filter(F.col("batch").isin(committed))
-        .groupBy(F.col("batch").cast("string").alias("batch"))
-        .agg(F.count("*").cast("long").alias("n_ids"))
+    vecs = ST.per_batch_counts(
+        spark, index_path, "vectors", committed, f"id {meta.id_type}",
+        n_ids=F.count("*"),
     )
-    fs, tpath, _jvm = ST.fs_for(spark, f"{index_path}/tombstones")
-    if fs.exists(tpath):
-        tombs = (
-            spark.read.schema(f"doc {meta.id_type}")
-            .parquet(f"{index_path}/tombstones")
-            .filter(F.col("batch").isin(committed))
-            .groupBy(F.col("batch").cast("string").alias("batch"))
-            .agg(F.count("*").cast("long").alias("n_tombstones"))
-        )
-    else:
-        tombs = values_df(spark, [], "batch string, n_tombstones long")
-    out = posts.join(vecs, "batch", "full_outer").join(tombs, "batch", "full_outer")
-    return out.fillna(
-        {"n_rows": 0, "n_ids": 0, "n_tombstones": 0}
-    ).orderBy("batch")
+    return ST.batch_health(spark, index_path, committed, meta.id_type, posts, vecs)

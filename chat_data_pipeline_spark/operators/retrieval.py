@@ -75,6 +75,22 @@ def bm25_scores(
     # them is cheap and caps the plan at two corpus scans (stats + postings).
     tf = tf.localCheckpoint(eager=False)
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    return (
+        _term_nanos(tf, dfreq, stats, k1, b)
+        .groupBy(id_col)
+        .agg((F.sum("__nano__").cast("double") / 1e9).alias("__raw__"))
+        .select(F.col(id_col), F.round("__raw__", 6).alias("bm25"))
+    )
+
+
+def _term_nanos(
+    postings: DataFrame, dfreq: DataFrame, stats: DataFrame, k1: float, b: float
+) -> DataFrame:
+    """Per-(doc, term) BM25 contributions as integer nanos (``__nano__``):
+    ``(doc, dl, term, tf)`` postings joined to the broadcast ``(term, df)``
+    table and the one-row ``(n_docs, avgdl)`` globals — the arithmetic the
+    self-contained and the persisted-index paths share, so their scores are
+    bit-identical."""
     k1_l, b_l = F.lit(float(k1)), F.lit(float(b))
     idf = F.log(
         F.lit(1.0)
@@ -86,15 +102,10 @@ def bm25_scores(
         * (k1_l + 1.0)
         / (F.col("tf") + k1_l * (F.lit(1.0) - b_l + b_l * F.col("dl") / F.col("avgdl")))
     )
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
+    return (
+        postings.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .withColumn("__nano__", F.round(contrib * 1e9).cast("long"))
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg((F.sum("__nano__").cast("double") / 1e9).alias("__raw__"))
-        .select(F.col(id_col), F.round("__raw__", 6).alias("bm25"))
     )
 
 
@@ -319,37 +330,27 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
     is that pointer as an operator)."""
     meta = ST.read_meta_row(spark, index_path)
     committed = ST.committed_batches(spark, index_path)
-    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
     p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
-    postings = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .select("doc", "dl", "term", "tf", "bkt")
-    )
+    postings = ST.committed_read(
+        spark, index_path, "postings", committed, p_schema
+    ).select("doc", "dl", "term", "tf", "bkt")
     dfreq = (
-        spark.read.schema("term string, df long")
-        .parquet(f"{index_path}/dfreq")
-        .filter(F.col("batch").isin(committed))
+        ST.committed_read(spark, index_path, "dfreq", committed, "term string, df long")
         .groupBy("bkt", "term")
         .agg(F.sum("df").cast("long").alias("df"))
         # a fully-deleted term nets to df=0 (its positive build/extension
         # rows exactly cancel its negative delete rows); drop the husk
         .filter(F.col("df") > 0)
     )
-    dlens = (
-        spark.read.schema(f"doc {meta.id_type}, dl int")
-        .parquet(f"{index_path}/doclens")
-        .filter(F.col("batch").isin(committed))
-        .select("doc", "dl")
-    )
-    if tomb is not None:
-        # compaction is where deletes become PHYSICAL: tombstoned docs are
-        # dropped from the rewritten postings/doclens, their negative
-        # df/stats rows cancel in the net sums above, and the base commit
-        # clears the tombstone set itself — after which a previously
-        # deleted id may be re-delivered
-        postings = postings.join(tomb, "doc", "left_anti")
-        dlens = dlens.join(tomb, "doc", "left_anti")
+    dlens = ST.committed_read(
+        spark, index_path, "doclens", committed, f"doc {meta.id_type}, dl int"
+    ).select("doc", "dl")
+    # compaction is where deletes become PHYSICAL: tombstoned docs are
+    # dropped from the rewritten postings/doclens, their negative df/stats
+    # rows cancel in the net sums above, and the base commit clears the
+    # tombstone set itself — after which a previously deleted id may be
+    # re-delivered
+    postings, dlens = ST.drop_tombstoned(index_path, committed, postings, dlens)
     if dst_index is None:
         postings = postings.localCheckpoint(eager=True)
         dfreq = dfreq.localCheckpoint(eager=True)
@@ -447,28 +448,22 @@ def delete_from_text_index(
     batch_id, meta = opened
     committed = ST.committed_batches(spark, index_path)
     id_type = meta.id_type
-    want = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc")).distinct()
-    tomb = ST.tombstoned_ids(
-        spark, index_path, id_type, committed, exclude_batch=batch_id
-    )
-    if tomb is not None:
-        want = want.join(tomb, "doc", "left_anti")
     # eager: `want` feeds three writes below, one of which overwrites the
-    # tombstone root the anti-join above may be reading (replay)
-    want = want.localCheckpoint(eager=True)
+    # tombstone root its anti-join may be reading (replay)
+    want = ST.delete_victims(
+        ids, index_path, committed, id_type, batch_id
+    ).localCheckpoint(eager=True)
     p_schema = f"doc {id_type}, dl int, term string, tf long"
-    victims = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .join(want, "doc", "left_semi")
-    )
+    victims = ST.committed_read(
+        spark, index_path, "postings", committed, p_schema
+    ).join(want, "doc", "left_semi")
     neg_df = victims.groupBy("bkt", "term").agg(
         (-F.count("*")).cast("long").alias("df")
     )
     neg_stats = (
-        spark.read.schema(f"doc {id_type}, dl int")
-        .parquet(f"{index_path}/doclens")
-        .filter(F.col("batch").isin(committed))
+        ST.committed_read(
+            spark, index_path, "doclens", committed, f"doc {id_type}, dl int"
+        )
         .join(want, "doc", "left_semi")
         .agg(
             (-F.count("*")).cast("long").alias("n_docs"),
@@ -553,6 +548,57 @@ def rrf_fuse(
     )
 
 
+def _indexed_term_nanos(
+    spark, index_path: str, terms: list[str], id_col: str, k1: float, b: float
+) -> DataFrame:
+    """:func:`_term_nanos` over the persisted index's live postings of
+    ``terms`` (already lowercased), keyed on ``id_col``.  Explicit schemas from
+    meta, so no footer is sampled: the probe terms' md5 buckets and the
+    committed batches are two literal ``IN`` s on partition columns, which
+    list only the probed ``bkt`` dirs of committed batches.  Tombstoned
+    docs stay physical until compaction; the anti-join hides them, while
+    their negative dfreq/stats deliveries subtract through the cross-batch
+    sums."""
+    bkts = sorted({_term_bucket_py(t) for t in terms})
+    meta = ST.read_meta_row(spark, index_path)
+    committed = ST.committed_batches(spark, index_path)
+    p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
+    postings = ST.drop_tombstoned(
+        index_path,
+        committed,
+        ST.committed_read(spark, index_path, "postings", committed, p_schema)
+        .filter(F.col("bkt").isin(bkts))
+        .filter(F.col("term").isin(terms))
+        .select(F.col("doc").alias(id_col), "dl", "term", "tf"),
+        id_col=id_col,
+    )
+    dfreq = (
+        ST.committed_read(spark, index_path, "dfreq", committed, "term string, df long")
+        .filter(F.col("bkt").isin(bkts))
+        .filter(F.col("term").isin(terms))
+        .groupBy("term")
+        .agg(F.sum("df").cast("long").alias("df"))
+    )
+    stats = (
+        ST.committed_read(
+            spark, index_path, "stats", committed, "n_docs long, sum_dl long"
+        )
+        .agg(
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.sum("sum_dl").cast("long").alias("__sum_dl__"),
+        )
+        # integer-exact Σdl / n — the identical double F.avg(dl) computes
+        # (integer-valued double sums are exact below 2^53)
+        .select(
+            "n_docs",
+            (F.col("__sum_dl__").cast("double") / F.col("n_docs").cast("double")).alias(
+                "avgdl"
+            ),
+        )
+    )
+    return _term_nanos(postings, dfreq, stats, k1, b)
+
+
 def bm25_topk_indexed(
     spark,
     index_path: str,
@@ -579,73 +625,9 @@ def bm25_topk_indexed(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     terms = [t.lower() for t in query_terms]
-    bkts = sorted({_term_bucket_py(t) for t in terms})
-    meta = ST.read_meta_row(spark, index_path)
-    committed = ST.committed_batches(spark, index_path)
-    # explicit schemas (from meta): zero footer sampling — the pruned read
-    # lists only the probed bkt dirs of COMMITTED batches and opens nothing
-    # else (batch and bkt are both partition columns: two literal INs at
-    # the listing)
-    p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
-    postings = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
-        .select(F.col("doc").alias(id_col), "dl", "term", "tf")
-    )
-    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        # tombstoned docs stay physical until compaction; the anti-join
-        # hides them, while their negative dfreq/stats deliveries subtract
-        # through the cross-batch sums below
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
-    dfreq = (
-        spark.read.schema("term string, df long")
-        .parquet(f"{index_path}/dfreq")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    stats = (
-        spark.read.schema("n_docs long, sum_dl long")
-        .parquet(f"{index_path}/stats")
-        .filter(F.col("batch").isin(committed))
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("__sum_dl__"),
-        )
-        # integer-exact Σdl / n — the identical double F.avg(dl) computes
-        # (integer-valued double sums are exact below 2^53)
-        .select(
-            "n_docs",
-            (F.col("__sum_dl__").cast("double") / F.col("n_docs").cast("double")).alias(
-                "avgdl"
-            ),
-        )
-    )
-    k1_l, b_l = F.lit(float(k1)), F.lit(float(b))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    contrib = (
-        idf
-        * F.col("tf")
-        * (k1_l + 1.0)
-        / (F.col("tf") + k1_l * (F.lit(1.0) - b_l + b_l * F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("__nano__", F.round(contrib * 1e9).cast("long"))
-    )
     out = (
-        scored.groupBy(id_col)
+        _indexed_term_nanos(spark, index_path, terms, id_col, k1, b)
+        .groupBy(id_col)
         .agg((F.sum("__nano__").cast("double") / 1e9).alias("__raw__"))
         .select(F.col(id_col), F.round("__raw__", 6).alias("bm25"))
     )
@@ -712,67 +694,13 @@ def bm25_topk_indexed_batch(
             f"bm25_topk_indexed_batch: no query terms for rows {empty[:10]}"
         )
     terms = sorted({t for _, ts in qterms for t in ts})
-    bkts = sorted({_term_bucket_py(t) for t in terms})
     qt = values_df(
         spark,
         [(qid, t) for qid, ts in qterms for t in ts],
         f"{query_id_col} {dict(queries.dtypes)[query_id_col]}, term string",
     )
-    meta = ST.read_meta_row(spark, index_path)
-    committed = ST.committed_batches(spark, index_path)
-    p_schema = f"doc {meta.id_type}, dl int, term string, tf long"
-    postings = (
-        spark.read.schema(p_schema).parquet(f"{index_path}/postings")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
-        .select(F.col("doc").alias(id_col), "dl", "term", "tf")
-    )
-    tomb = ST.tombstoned_ids(spark, index_path, meta.id_type, committed)
-    if tomb is not None:
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
-    dfreq = (
-        spark.read.schema("term string, df long")
-        .parquet(f"{index_path}/dfreq")
-        .filter(F.col("batch").isin(committed))
-        .filter(F.col("bkt").isin(bkts))
-        .filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    stats = (
-        spark.read.schema("n_docs long, sum_dl long")
-        .parquet(f"{index_path}/stats")
-        .filter(F.col("batch").isin(committed))
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("__sum_dl__"),
-        )
-        .select(
-            "n_docs",
-            (F.col("__sum_dl__").cast("double") / F.col("n_docs").cast("double")).alias(
-                "avgdl"
-            ),
-        )
-    )
-    k1_l, b_l = F.lit(float(k1)), F.lit(float(b))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    contrib = (
-        idf
-        * F.col("tf")
-        * (k1_l + 1.0)
-        / (F.col("tf") + k1_l * (F.lit(1.0) - b_l + b_l * F.col("dl") / F.col("avgdl")))
-    )
-    per_term = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("__nano__", F.round(contrib * 1e9).cast("long"))
-        .select(id_col, "term", "__nano__")
+    per_term = _indexed_term_nanos(spark, index_path, terms, id_col, k1, b).select(
+        id_col, "term", "__nano__"
     )
     scored = (
         per_term.join(F.broadcast(qt), "term")
@@ -812,53 +740,22 @@ def text_index_health(spark, index_path: str) -> DataFrame:
     meta = ST.read_meta_row(spark, index_path)
     committed = ST.committed_batches(spark, index_path)
 
-    def _per_batch(sub: str, schema: str, aggs: list, names: list[str]) -> DataFrame:
-        fs, path, _jvm = ST.fs_for(spark, f"{index_path}/{sub}")
-        if not fs.exists(path):
-            return values_df(
-                spark, [], "batch string, " + ", ".join(f"{n} long" for n in names)
-            )
-        return (
-            spark.read.schema(schema)
-            .parquet(f"{index_path}/{sub}")
-            .filter(F.col("batch").isin(committed))
-            .groupBy(F.col("batch").cast("string").alias("batch"))
-            .agg(*[a.cast("long").alias(n) for a, n in zip(aggs, names)])
+    def counts(sub: str, schema: str, **aggs) -> DataFrame:
+        return ST.per_batch_counts(
+            spark, index_path, sub, committed, schema, optional=True, **aggs
         )
 
-    stats = _per_batch(
-        "stats",
-        "n_docs long, sum_dl long",
-        [F.sum("n_docs"), F.sum("sum_dl")],
-        ["n_docs", "sum_dl"],
+    stats = counts(
+        "stats", "n_docs long, sum_dl long",
+        n_docs=F.sum("n_docs"), sum_dl=F.sum("sum_dl"),
     )
-    dfreq = _per_batch(
-        "dfreq",
-        "term string, df long",
-        [F.count("*"), F.sum("df")],
-        ["n_terms", "sum_df"],
+    dfreq = counts(
+        "dfreq", "term string, df long", n_terms=F.count("*"), sum_df=F.sum("df")
     )
-    postings = _per_batch(
-        "postings",
-        f"doc {meta.id_type}, dl int, term string, tf long",
-        [F.count("*")],
-        ["n_postings"],
+    postings = counts(
+        "postings", f"doc {meta.id_type}, dl int, term string, tf long",
+        n_postings=F.count("*"),
     )
-    tombs = _per_batch(
-        "tombstones", f"doc {meta.id_type}", [F.count("*")], ["n_tombstones"]
+    return ST.batch_health(
+        spark, index_path, committed, meta.id_type, stats, dfreq, postings
     )
-    # REVERTED to the join assembly (r18): the r17 zero-padded-union form
-    # ("one exchange") was kept on an at-scale shape argument with no
-    # measurement; the r18 batch-count instrument (16-delivery store,
-    # interleaved best-of-4) measured the union ~20% SLOWER (0.73-0.78 s
-    # joins vs 0.91-0.92 s union) — the full-outer joins REUSE the
-    # per-artifact aggregates' batch-hash partitioning (guide §2.4
-    # exchange sharing), while the union discards it and pays a fresh
-    # exchange + a second aggregation over 4×batches rows.  Rows
-    # identical either way (each column is owned by exactly one source).
-    out = stats
-    for other in (dfreq, postings, tombs):
-        out = out.join(other, "batch", "full_outer")
-    fill = {c: 0 for c in ("n_docs", "sum_dl", "n_terms", "sum_df",
-                           "n_postings", "n_tombstones")}
-    return out.fillna(fill).orderBy("batch")

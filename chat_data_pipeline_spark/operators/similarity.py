@@ -953,16 +953,15 @@ def embedding_neardup_pairs(
     from chat_data_pipeline_spark.session import repartition_for_compute
 
     id_type = dict(df.dtypes)[id_col]
-    # limit-probe, not a full count(): the guard only needs to know whether
-    # the corpus EXCEEDS the cap, so scan at most cap+1 narrow rows
-    over = df.select(id_col).limit(max_broadcast_rows + 1).count()
-    if over > max_broadcast_rows:
+    # guard and collect in ONE bounded job: the limit caps the driver
+    # transfer at cap+1 rows even when the corpus is over the cap
+    pdf = df.select(id_col, vec_col).limit(max_broadcast_rows + 1).toPandas()
+    if len(pdf) > max_broadcast_rows:
         raise ValueError(
             f"exact all-pairs would broadcast >{max_broadcast_rows} vectors "
             f"(max_broadcast_rows={max_broadcast_rows}); use the SRP-LSH "
             "path (n_planes/n_tables) for corpora that don't fit a broadcast"
         )
-    pdf = df.select(id_col, vec_col).toPandas()
     ids = pdf[id_col].to_numpy()
     mat = _as_matrix(pdf[vec_col])
     # 1e-12 norm floor (module convention): zero vectors score cosine 0
@@ -1545,28 +1544,6 @@ def extend_ivf_index(
     _write_list_delivery(index_path, batch_id, postings, id_col)
 
 
-def _live_postings(
-    spark, index_path: str, id_col: str
-) -> tuple[DataFrame, list[str]]:
-    """A persisted IVF / IVF-PQ store's live postings and its committed
-    batch ids: ledger-committed batches only (a crashed delivery's partial
-    part-files stay invisible until its replay re-commits), minus the
-    tombstoned ids (deleted vectors stay physical until compaction/rebuild
-    folds them away; the anti-join hides them from every probe)."""
-    committed = ST.committed_batches(spark, index_path)
-    postings = ST.committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(committed)
-    )
-    tomb = ST.tombstoned_ids(
-        spark, index_path, dict(postings.dtypes)[id_col], committed
-    )
-    if tomb is not None:
-        postings = postings.join(
-            tomb.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
-    return postings, committed
-
-
 def _probed_lists(postings: DataFrame, lists) -> DataFrame:
     """The postings of the probed lists only, as a LITERAL ``IN`` on the
     ``list`` partition column: static partition pruning, so only
@@ -1596,7 +1573,10 @@ def ivf_topk_persisted(
     the stored list instead of assigning one."""
     meta = ST.read_meta_row(spark, index_path)
     id_col, vec_col = meta.id_col, meta.vec_col
-    postings, _ = _live_postings(spark, index_path, id_col)
+    postings = ST.live_rows(
+        spark, index_path, "postings", ST.committed_batches(spark, index_path),
+        id_col=id_col,
+    )
     n_centroids, dim = int(meta.n_centroids), int(meta.dim)
 
     if meta.coarse == "md5":
@@ -1699,7 +1679,8 @@ def hard_negatives_topk(
     closest impostors, not random negatives, are what tighten a margin).
 
     Exact path: the corpus broadcasts as one dense float64 matrix
-    (limit-probe guarded like the near-dup exact path), each Arrow batch of
+    (collected in one ``limit(cap+1)`` job that also enforces
+    ``max_broadcast_rows``, like the near-dup exact path), each Arrow batch of
     anchors scores against it with a single BLAS matmul and selects its
     cross-label top-k locally — the local answer IS the global answer
     because every anchor sees the full corpus within its own row pass, so
@@ -1720,14 +1701,17 @@ def hard_negatives_topk(
 
     id_type = dict(df.dtypes)[id_col]
     label_type = dict(df.dtypes)[label_col]
-    over = df.select(id_col).limit(max_broadcast_rows + 1).count()
-    if over > max_broadcast_rows:
+    pdf = (
+        df.select(id_col, vec_col, label_col)
+        .limit(max_broadcast_rows + 1)
+        .toPandas()
+    )
+    if len(pdf) > max_broadcast_rows:
         raise ValueError(
             f"exact hard-negative mining would broadcast >{max_broadcast_rows} "
             f"vectors (max_broadcast_rows={max_broadcast_rows}); block with "
             "ivf_topk/lsh_topk first and apply the cross-label top-k per block"
         )
-    pdf = df.select(id_col, vec_col, label_col).toPandas()
     bids = pdf[id_col].to_numpy()
     blabels = pdf[label_col].to_numpy()
     bmat = _as_matrix(pdf[vec_col])
@@ -1966,8 +1950,8 @@ def ivf_index_drift_report(spark, index_path: str) -> DataFrame:
     meta = ST.read_meta_row(spark, index_path)
     n_centroids, dim = int(meta.n_centroids), int(meta.dim)
     vec_col = meta.vec_col
-    postings = ST.committed_tree(spark, index_path, "postings").filter(
-        F.col("batch").isin(ST.committed_batches(spark, index_path))
+    postings = ST.committed_read(
+        spark, index_path, "postings", ST.committed_batches(spark, index_path)
     )
 
     if meta.coarse == "md5":
@@ -2045,8 +2029,10 @@ def compact_ivf_index(spark, index_path: str, dst_index: str | None = None) -> N
     # lists either way, so compaction is layout-only for all of them; the
     # tombstone anti-join makes deletes physical (the commit clears the set)
     payload = "pq_code" if meta.coarse == "md5pq" else meta.vec_col
-    postings, committed = _live_postings(spark, index_path, meta.id_col)
-    postings = postings.select(meta.id_col, payload, "list")
+    committed = ST.committed_batches(spark, index_path)
+    postings = ST.live_rows(
+        spark, index_path, "postings", committed, id_col=meta.id_col
+    ).select(meta.id_col, payload, "list")
     cent = None
     if meta.coarse == "kmeans":
         cent = spark.read.parquet(f"{index_path}/centroids")
@@ -2133,8 +2119,10 @@ def rebuild_ivf_index(
     # tombstoned ids excluded: the retrain must not learn from deleted
     # vectors, and the rebuilt root makes the deletes physical
     # (build_ivf_index clears the tombstone set inside its meta-less window)
-    union, committed = _live_postings(spark, index_path, meta.id_col)
-    union = union.select(meta.id_col, meta.vec_col)
+    committed = ST.committed_batches(spark, index_path)
+    union = ST.live_rows(
+        spark, index_path, "postings", committed, id_col=meta.id_col
+    ).select(meta.id_col, meta.vec_col)
     if dst_index is None:
         union = union.localCheckpoint(eager=True)
         dst_index = index_path
@@ -2359,13 +2347,7 @@ def rebuild_ivfpq_index(
         union, meta.id_col, ST.meta_id_type(spark, index_path, meta), index_path
     )
     committed = ST.committed_batches(spark, index_path)
-    tomb = ST.tombstoned_ids(
-        spark, index_path, dict(union.dtypes)[meta.id_col], committed
-    )
-    if tomb is not None:
-        union = union.join(
-            tomb.withColumnRenamed("doc", meta.id_col), meta.id_col, "left_anti"
-        )
+    union = ST.drop_tombstoned(index_path, committed, union, id_col=meta.id_col)
     if dst_index is None:
         # the anti-join reads this root's tombstones, which the build
         # deletes inside its meta-less window — pin the retained set first
@@ -2409,7 +2391,10 @@ def ivfpq_topk_persisted(
     if meta.coarse != "md5pq":
         raise ValueError(f"{index_path} is not an IVF-PQ index (coarse={meta.coarse!r})")
     id_col, dim = meta.id_col, int(meta.dim)
-    postings, _ = _live_postings(spark, index_path, id_col)
+    postings = ST.live_rows(
+        spark, index_path, "postings", ST.committed_batches(spark, index_path),
+        id_col=id_col,
+    )
     coarse, books = _md5_ivfpq_books(
         int(meta.n_centroids), int(meta.m), int(meta.n_codewords), dim
     )

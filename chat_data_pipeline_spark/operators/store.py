@@ -27,6 +27,15 @@ skeletons below are the ONLY places that order the protocol's steps:
   additive statistics shares (BM25 subtracts its globals instead, but
   opens its delete the same way).
 
+The read side is owned here too: :func:`live_rows` is every probe's,
+compactor's and rebuild's view of a store — :func:`committed_read` (the
+ledger-committed ``batch=`` partitions of one sub-tree) minus
+:func:`drop_tombstoned` (the committed tombstone anti-join);
+:func:`delete_victims` is every delete's victim set; and
+:func:`per_batch_counts` / :func:`batch_health` build the health reports.
+Each takes the caller's one ledger snapshot, so a verb lists the ledger
+once however many trees it reads.
+
 The model is Spark SQL's Data Sources API (Armbrust et al., SIGMOD 2015):
 the engine owns the protocol once, each source supplies only its data.
 """
@@ -465,12 +474,9 @@ def tombstoned_ids(
     if not fs.exists(tpath):
         return None
     batches = [b for b in committed if b != exclude_batch]
-    return (
-        spark.read.schema(f"doc {id_type}")
-        .parquet(f"{index_path}/tombstones")
-        .filter(F.col("batch").isin(batches))
-        .select("doc")
-    )
+    return committed_read(
+        spark, index_path, "tombstones", batches, f"doc {id_type}"
+    ).select("doc")
 
 
 def committed_tree(spark, index_path: str, sub: str) -> DataFrame:
@@ -482,8 +488,8 @@ def committed_tree(spark, index_path: str, sub: str) -> DataFrame:
     probe/compaction paths that hit this are exactly what an operator
     runs right after a crash.  The base partition is complete by
     construction (its commit marker is the meta write), so its schema is
-    authoritative; callers still filter to the ledger-committed batches,
-    which prunes the debris partitions before any data is read.  One
+    authoritative; callers read it through :func:`committed_read`, whose
+    ledger filter prunes the debris partitions before any data is read.  One
     tiny footer read on the base replaces tree-wide sampling — same
     discipline as maintenance.py's explicit-schema reads."""
     from pyspark.sql.types import IntegerType, StringType
@@ -529,6 +535,145 @@ def committed_tree(spark, index_path: str, sub: str) -> DataFrame:
     if "batch" not in schema.fieldNames():
         schema = schema.add("batch", StringType())
     return spark.read.schema(schema).parquet(f"{index_path}/{sub}")
+
+
+# --- the live read ---------------------------------------------------------------
+
+
+def committed_read(
+    spark, index_path: str, sub: str, committed: list[str], schema: str | None = None
+) -> DataFrame:
+    """The ledger-committed rows of one batch-partitioned sub-tree: a
+    literal ``IN`` on the ``batch`` partition column, so a crashed
+    delivery's partial files are pruned at the listing and never read.
+    ``schema`` is the caller's explicit (meta-derived) read schema;
+    ``None`` pins it from the base footer (:func:`committed_tree`)."""
+    tree = (
+        committed_tree(spark, index_path, sub)
+        if schema is None
+        else spark.read.schema(schema).parquet(f"{index_path}/{sub}")
+    )
+    return tree.filter(F.col("batch").isin(committed))
+
+
+def drop_tombstoned(
+    index_path: str,
+    committed: list[str],
+    *frames: DataFrame,
+    id_col: str = "doc",
+    exclude_batch: str | None = None,
+    pin: bool = False,
+):
+    """``frames`` minus the ids a committed delete tombstoned — deleted
+    units stay physical until compaction, and this anti-join on
+    ``id_col`` hides them.  The tombstones are read with the type of the
+    first frame's own ``id_col``, behind ONE directory-existence probe
+    for all frames: a root that never saw a delete gets its frames back
+    untouched.  ``exclude_batch`` leaves out the caller's own delete (a
+    replay recomputes its victims); ``pin`` eagerly checkpoints the
+    result when tombstones were read, for a caller about to overwrite a
+    partition of that tree.  One frame in, one frame out; several in, a
+    tuple out."""
+    tomb = tombstoned_ids(
+        frames[0].sparkSession, index_path, dict(frames[0].dtypes)[id_col],
+        committed, exclude_batch,
+    )
+    if tomb is not None:
+        if id_col != "doc":
+            tomb = tomb.withColumnRenamed("doc", id_col)
+        frames = tuple(f.join(tomb, id_col, "left_anti") for f in frames)
+        if pin:
+            frames = tuple(f.localCheckpoint(eager=True) for f in frames)
+    return frames[0] if len(frames) == 1 else frames
+
+
+def live_rows(
+    spark,
+    index_path: str,
+    sub: str,
+    committed: list[str],
+    schema: str | None = None,
+    id_col: str = "doc",
+) -> DataFrame:
+    """The live rows of one sub-tree: :func:`committed_read` minus
+    :func:`drop_tombstoned` on ``id_col``."""
+    return drop_tombstoned(
+        index_path, committed,
+        committed_read(spark, index_path, sub, committed, schema),
+        id_col=id_col,
+    )
+
+
+def per_batch_counts(
+    spark,
+    index_path: str,
+    sub: str,
+    committed: list[str],
+    schema: str,
+    optional: bool = False,
+    **aggs,
+) -> DataFrame:
+    """The health reports' per-delivery aggregate: ``(batch string,
+    <name> long, ...)`` over the committed batches of one sub-tree, one
+    column per ``aggs`` keyword (name = aggregate), map-side combined into
+    O(batches) rows.  ``optional``: a missing sub-tree (``tombstones`` on
+    a root that never saw a delete) reads as no rows, for one
+    directory-existence probe."""
+    if optional:
+        fs, path, _jvm = fs_for(spark, f"{index_path}/{sub}")
+        if not fs.exists(path):
+            return values_df(
+                spark, [], "batch string, " + ", ".join(f"{n} long" for n in aggs)
+            )
+    return (
+        committed_read(spark, index_path, sub, committed, schema)
+        .groupBy(F.col("batch").cast("string").alias("batch"))
+        .agg(*[a.cast("long").alias(n) for n, a in aggs.items()])
+    )
+
+
+def batch_health(
+    spark, index_path: str, committed: list[str], id_type: str, *counts: DataFrame
+) -> DataFrame:
+    """A health report: one row per committed batch, the
+    :func:`per_batch_counts` frames plus the batch's ``n_tombstones``,
+    full-outer-joined on ``batch`` (an artifact a batch never wrote
+    counts 0), ordered by batch.
+
+    Joins, not a zero-padded union (r18): the batch-count instrument
+    (16-delivery store, interleaved best-of-4) measured the union ~20%
+    SLOWER (0.73-0.78 s joins vs 0.91-0.92 s union) — the full-outer joins
+    REUSE the per-artifact aggregates' batch-hash partitioning (guide §2.4
+    exchange sharing), while the union pays a fresh exchange and a second
+    aggregation.  Rows are identical either way (each column is owned by
+    exactly one source)."""
+    tombs = per_batch_counts(
+        spark, index_path, "tombstones", committed, f"doc {id_type}",
+        optional=True, n_tombstones=F.count("*"),
+    )
+    out = counts[0]
+    for other in (*counts[1:], tombs):
+        out = out.join(other, "batch", "full_outer")
+    return out.fillna({c: 0 for c in out.columns if c != "batch"}).orderBy("batch")
+
+
+def delete_victims(
+    ids: DataFrame,
+    index_path: str,
+    committed: list[str],
+    id_type: str,
+    batch_id: str,
+    pin: bool = False,
+) -> DataFrame:
+    """A delete delivery's victim set: the first column of ``ids`` cast to
+    the store's id type as a distinct ``doc`` column, minus the ids an
+    EARLIER committed delete already tombstoned (overlapping deletes never
+    double-count; ``batch_id``'s own tombstones are left out, so a replay
+    recomputes the same victims).  ``pin`` as in :func:`drop_tombstoned`."""
+    want = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc")).distinct()
+    return drop_tombstoned(
+        index_path, committed, want, exclude_batch=batch_id, pin=pin
+    )
 
 
 # --- the three protocol skeletons ------------------------------------------------
@@ -690,13 +835,12 @@ def tombstone_delete(
         return  # folded replay: the victims are already physically gone
     bid, meta = opened
     committed = committed_batches(spark, index_path)
-    id_type = meta_id_type(spark, index_path, meta)
-    want = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc")).distinct()
-    tomb = tombstoned_ids(spark, index_path, id_type, committed, exclude_batch=bid)
-    if tomb is not None:
-        # eager: the write below overwrites a partition of the root the
-        # anti-join reads (delete replay)
-        want = want.join(tomb, "doc", "left_anti").localCheckpoint(eager=True)
+    # pinned: the write below overwrites a partition of the tombstone tree
+    # the anti-join reads (delete replay)
+    want = delete_victims(
+        ids, index_path, committed, meta_id_type(spark, index_path, meta), bid,
+        pin=True,
+    )
     want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={bid}")
     ledger_commit(spark, index_path, bid)
 

@@ -9998,15 +9998,15 @@ for _name in (
 # round-17 rule-2 re-admissions: the five rows riding this round's touched
 # regions back into the window — ann_ivf_delete_serving /
 # ann_ivf_drift_report / ann_ivf_rebuild_report (the r16-deferred
-# batch=base id_type pin landed in delete_from_ivf_index /
-# extend_ivf_index / extend_ivfpq_index, and rebuild_ivf_index now routes
-# its spent-id manifest through the shared _fold_manifest_forward instead
-# of an inline copy), and dedup_onboarding_indexed / dedup_store_health
+# batch=base id_type pin landed in the IVF delete, now
+# store.tombstone_delete, / extend_ivf_index / extend_ivfpq_index, and
+# rebuild_ivf_index now routes its spent-id manifest through the shared
+# store.fold_manifest_forward instead of an inline copy), and dedup_onboarding_indexed / dedup_store_health
 # (their byte-identical inline store builders became the shared
 # _mk_dedup_store helper; the drift/rebuild pair's fixture likewise became
 # _mk_two_batch_ivf).  The in-window riders of the same regions —
 # fleet_maintenance_plan (extend_ivf_index), ann_ivfpq_delete_serving
-# (delete_from_ivf_index), ann_ivfpq_rebuild_report (extend_ivfpq_index) —
+# (store.tombstone_delete), ann_ivfpq_rebuild_report (extend_ivfpq_index) —
 # stay held in the window to re-earn hashes on the changed code.
 for _name in (
     "ann_ivf_delete_serving",

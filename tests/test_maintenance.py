@@ -206,6 +206,42 @@ def test_store_protocol_steps_live_only_in_store_module():
     }
 
 
+def test_store_live_read_lives_only_in_store_module():
+    """Structural guard: the ledger filter (a ``batch``-column ``.isin``)
+    is written once, in ``store.committed_read``, and the tombstone set is
+    read only by ``operators/store.py`` (the live read, the delivery guard,
+    the delete victims) and by ``maintenance.py``, whose plan COUNTS dead
+    ids with a flagged left join instead of hiding them — so no store can
+    hand-copy (and drift) which of its rows are live."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(MT.__file__).resolve().parents[1]
+    found: dict[str, set[str]] = {}
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(py.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name == "tombstoned_ids":
+                found.setdefault("tombstoned_ids", set()).add(rel)
+            recv = fn.value if isinstance(fn, ast.Attribute) else None
+            if (
+                name == "isin"
+                and isinstance(recv, ast.Call)
+                and recv.args
+                and isinstance(recv.args[0], ast.Constant)
+                and recv.args[0].value == "batch"
+            ):
+                found.setdefault("batch isin", set()).add(rel)
+    assert found == {
+        "batch isin": {"operators/store.py"},
+        "tombstoned_ids": {"operators/store.py", "operators/maintenance.py"},
+    }, found
+
+
 def test_maintenance_plan_bm25_exact_numbers(spark, docs, tmp_path):
     idx = str(tmp_path / "plan_bm25")
     n = docs.count()

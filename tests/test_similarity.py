@@ -581,8 +581,12 @@ def test_hard_negatives_cross_label_and_partition_invariant(emb):
 
 
 def test_hard_negatives_guard_raises(emb):
+    """Both exact broadcast paths refuse a corpus over ``max_broadcast_rows``
+    from their one bounded collect, before anything is broadcast."""
     with pytest.raises(ValueError, match="max_broadcast_rows"):
         SIM.hard_negatives_topk(emb, k=3, max_broadcast_rows=10)
+    with pytest.raises(ValueError, match="max_broadcast_rows"):
+        SIM.embedding_neardup_pairs(emb, max_broadcast_rows=10)
 
 
 def test_hard_negatives_ivf_recall_and_contract(emb):
