@@ -1056,7 +1056,7 @@ def _run_maintenance(spark: SparkSession, spec: dict) -> DataFrame:
         DEFAULT_MAX_TOMBSTONE_NANOS,
         compact_if_needed,
         fsck_sweep,
-        gc_debris,
+        gc_debris_values,
         maintenance_sweep,
         snapshot_store,
     )
@@ -1106,7 +1106,7 @@ def _run_maintenance(spark: SparkSession, spec: dict) -> DataFrame:
             # gc + compaction decision+act against their triggers
             with _cli_lease(spark, root, "cli:maintain", spec):
                 if do_gc:
-                    g = gc_debris(
+                    g = gc_debris_values(
                         spark,
                         root,
                         int(
@@ -1114,7 +1114,7 @@ def _run_maintenance(spark: SparkSession, spec: dict) -> DataFrame:
                                 "gc_grace_seconds", DEFAULT_GC_GRACE_SECONDS
                             )
                         ),
-                    ).first()
+                    )
                     if g.debris_removed or g.tmp_removed:
                         logger.info(
                             "maintain: gc removed %d uncommitted batch "

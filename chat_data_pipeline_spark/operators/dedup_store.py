@@ -83,18 +83,12 @@ def _bands_for(df: DataFrame, column: str, id_col: str, m: dict) -> DataFrame:
 def _commit_dedup_base(
     spark, index_path: str, bands: DataFrame, meta_row: tuple, fold=None
 ) -> None:
-    """Band-clustered salted postings written through the root under
-    ``batch=base`` (clearing stale extension batches, static overwrite
-    pinned), inside :func:`store.commit_base`'s crash posture."""
-
-    def write() -> None:
-        ST.cluster_for_partitioned_write(
-            bands.withColumn("batch", F.lit("base")), ["band"], F.col("sig")
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("batch", "band").parquet(f"{index_path}/bands")
-
-    ST.commit_base(spark, index_path, write, DEDUP_META, meta_row, fold=fold)
+    """The base's band postings under :func:`store.commit_base`."""
+    ST.commit_base(
+        spark, index_path,
+        lambda: ST.write_batch(index_path, "base", {"bands": (bands, "band", "sig")}),
+        DEDUP_META, meta_row, fold=fold,
+    )
 
 
 def build_dedup_index(
@@ -118,7 +112,7 @@ def build_dedup_index(
     the production sha1/seeded-permutation family with datasketch-optimal
     (B, R) banding, so "near-duplicate" means exactly what the in-corpus
     :func:`dedup.minhash_dedup` means.  Idempotent overwrite, same crash
-    posture as the other two persisted indexes."""
+    posture as the other four persisted stores."""
     spark = df.sparkSession
     m = {
         "family": family,
@@ -169,13 +163,7 @@ def extend_dedup_index(
     bands = _bands_for(
         df.select(id_col, column), column, id_col, _params_from_meta(meta)
     )
-    ST.cluster_for_partitioned_write(bands, ["band"], F.col("sig")).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("band").parquet(
-        f"{index_path}/bands/batch={batch_id}"
-    )
-    # commit marker LAST: a crashed delivery stays invisible to probes
-    ST.ledger_commit(df.sparkSession, index_path, batch_id)
+    ST.write_batch(index_path, batch_id, {"bands": (bands, "band", "sig")})
 
 
 def filter_against_dedup_index(

@@ -384,35 +384,61 @@ def maintenance_sweep(
     regardless of completion order.  The sweep only READS ledger-committed
     state — it needs no writer lease; the `maintain:` block takes the
     per-root lease around any compaction it then runs."""
+    return _fleet_sweep(
+        spark, "maintenance_sweep", roots, max_concurrency, _PLAN_SCHEMA,
+        lambda root: maintenance_plan_values(
+            spark, root, max_batches, max_tombstone_nanos
+        ),
+    )
+
+
+def _fleet_sweep(
+    spark,
+    verb: str,
+    roots: list[str],
+    max_concurrency: int,
+    schema: str,
+    one: Callable[[str], Row],
+) -> DataFrame:
+    """The fleet sweeps' one body: ``one(root)`` per root on a pool of at
+    most ``max_concurrency`` threads, rows kept in the input ``roots``
+    order whatever the completion order, each passed through as ``(root,
+    *row)`` under ``"root string, " + schema``."""
     if not roots:
-        raise ValueError("maintenance_sweep needs at least one store root")
+        raise ValueError(f"{verb} needs at least one store root")
     from concurrent.futures import ThreadPoolExecutor
 
+    from chat_data_pipeline_spark.session import values_df
+
     roots = [str(r) for r in roots]
-
-    def _one(root: str):
-        return maintenance_plan_values(
-            spark, root, max_batches, max_tombstone_nanos
-        )
-
     with ThreadPoolExecutor(
         max_workers=max(1, min(int(max_concurrency), len(roots)))
     ) as ex:
-        rows = list(ex.map(_one, roots))
-    from chat_data_pipeline_spark.session import values_df
-
+        rows = list(ex.map(one, roots))
     return values_df(
         spark,
-        [
-            (
-                root, row.kind, row.n_batches, row.n_tombstones,
-                row.live_units, row.tombstone_nanos, row.compact_recommended,
-            )
-            for root, row in zip(roots, rows)
-        ],
-        "root string, kind string, n_batches long, n_tombstones long, "
-        "live_units long, tombstone_nanos long, compact_recommended boolean",
+        [(root, *row) for root, row in zip(roots, rows)],
+        "root string, " + schema,
     )
+
+
+def _batch_dirs(fs, root):
+    """The two-level walk GC and fsck share: every ``batch=<id>`` and
+    ``_temporary`` child dir of the root's artifact subtrees (control dirs
+    and ``_``-prefixed dirs such as the writer lease are skipped), as
+    ``(status, batch id or None for a _temporary dir)``."""
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if not st.isDirectory() or name in _CONTROL_DIRS or name.startswith("_"):
+            continue
+        for child in fs.listStatus(st.getPath()):
+            cname = child.getPath().getName()
+            if not child.isDirectory():
+                continue
+            if cname == "_temporary":
+                yield child, None
+            elif cname.startswith("batch="):
+                yield child, cname.split("=", 1)[1]
 
 
 def gc_debris(
@@ -480,31 +506,18 @@ def gc_debris_values(
     fs, root, _jvm = ST.fs_for(spark, index_path)
     horizon_ms = int(time.time() * 1000) - int(grace_seconds) * 1000
     removed = kept = tmp_removed = 0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not st.isDirectory() or name in _CONTROL_DIRS or name.startswith("_"):
+    for child, bid in _batch_dirs(fs, root):
+        if bid in committed:
             continue
-        for child in fs.listStatus(st.getPath()):
-            cname = child.getPath().getName()
-            if not child.isDirectory():
-                continue
-            if cname == "_temporary":
-                # a crashed Spark write's committer staging dir
-                if child.getModificationTime() < horizon_ms:
-                    fs.delete(child.getPath(), True)
-                    tmp_removed += 1
-                else:
-                    kept += 1
-                continue
-            if not cname.startswith("batch="):
-                continue
-            if cname.split("=", 1)[1] in committed:
-                continue
-            if child.getModificationTime() < horizon_ms:
-                fs.delete(child.getPath(), True)
-                removed += 1
-            else:
-                kept += 1
+        if child.getModificationTime() >= horizon_ms:
+            kept += 1
+        elif bid is None:
+            # a crashed Spark write's committer staging dir
+            fs.delete(child.getPath(), True)
+            tmp_removed += 1
+        else:
+            fs.delete(child.getPath(), True)
+            removed += 1
     return _GC_ROW(kind, len(committed), removed, kept, tmp_removed)
 
 
@@ -518,32 +531,9 @@ def gc_sweep(
     prepended — the hygiene half of :func:`maintenance_sweep`'s fleet
     view.  Per-root walks run concurrently (pure FS metadata ops; the
     pool bounds namenode pressure), output order stays the input order."""
-    if not roots:
-        raise ValueError("gc_sweep needs at least one store root")
-    from concurrent.futures import ThreadPoolExecutor
-
-    roots = [str(r) for r in roots]
-
-    def _one(root: str):
-        return gc_debris_values(spark, root, grace_seconds)
-
-    with ThreadPoolExecutor(
-        max_workers=max(1, min(int(max_concurrency), len(roots)))
-    ) as ex:
-        rows = list(ex.map(_one, roots))
-    from chat_data_pipeline_spark.session import values_df
-
-    return values_df(
-        spark,
-        [
-            (
-                root, row.kind, row.n_batches, row.debris_removed,
-                row.debris_kept, row.tmp_removed,
-            )
-            for root, row in zip(roots, rows)
-        ],
-        "root string, kind string, n_batches long, debris_removed long, "
-        "debris_kept long, tmp_removed long",
+    return _fleet_sweep(
+        spark, "gc_sweep", roots, max_concurrency, _GC_SCHEMA,
+        lambda root: gc_debris_values(spark, root, grace_seconds),
     )
 
 
@@ -747,24 +737,13 @@ def fsck_store_values(
 
     seen_ids: set[str] = set()
     orphans = tmp_dirs = 0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not st.isDirectory() or name in _CONTROL_DIRS or name.startswith("_"):
-            continue
-        for child in fs.listStatus(st.getPath()):
-            cname = child.getPath().getName()
-            if not child.isDirectory():
-                continue
-            if cname == "_temporary":
-                tmp_dirs += 1
-                continue
-            if not cname.startswith("batch="):
-                continue
-            bid = cname.split("=", 1)[1]
-            if bid in cset:
-                seen_ids.add(bid)
-            else:
-                orphans += 1
+    for _child, bid in _batch_dirs(fs, root):
+        if bid is None:
+            tmp_dirs += 1
+        elif bid in cset:
+            seen_ids.add(bid)
+        else:
+            orphans += 1
     missing = len(cset - seen_ids)
 
     ext_ids, del_ids = ST.folded_ids(spark, index_path)
@@ -809,36 +788,9 @@ def fsck_sweep(
     snapshot restore, not a sweep).  Per-root walks run concurrently
     (pure FS metadata ops; the pool bounds namenode pressure), output
     order stays the input order; a broken root reports, never raises."""
-    if not roots:
-        raise ValueError("fsck_sweep needs at least one store root")
-    from concurrent.futures import ThreadPoolExecutor
-
-    roots = [str(r) for r in roots]
-
-    def _one(root: str):
-        return fsck_store_values(spark, root, ttl_seconds)
-
-    with ThreadPoolExecutor(
-        max_workers=max(1, min(int(max_concurrency), len(roots)))
-    ) as ex:
-        rows = list(ex.map(_one, roots))
-    from chat_data_pipeline_spark.session import values_df
-
-    return values_df(
-        spark,
-        [
-            (
-                root, row.kind, row.meta_ok, row.n_batches,
-                row.missing_batch_dirs, row.orphan_dirs, row.tmp_dirs,
-                row.folded_spent, row.fold_ledger_overlap, row.lease_held,
-                row.lease_stale, row.reap_markers, row.status,
-            )
-            for root, row in zip(roots, rows)
-        ],
-        "root string, kind string, meta_ok boolean, n_batches long, "
-        "missing_batch_dirs long, orphan_dirs long, tmp_dirs long, "
-        "folded_spent long, fold_ledger_overlap long, lease_held boolean, "
-        "lease_stale boolean, reap_markers long, status string",
+    return _fleet_sweep(
+        spark, "fsck_sweep", roots, max_concurrency, _FSCK_SCHEMA,
+        lambda root: fsck_store_values(spark, root, ttl_seconds),
     )
 
 

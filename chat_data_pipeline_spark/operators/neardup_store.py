@@ -89,8 +89,8 @@ def _postings_and_vectors(
     n_planes: int, n_tables: int, dim: int,
     eager: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    # eager=True for deliveries (_write_batch races two concurrent write
-    # jobs over the base — it must be materialized first); the PROBE path
+    # eager=True for deliveries (store.write_batch races two concurrent
+    # write jobs over the base — it must be materialized first); the PROBE path
     # passes eager=False so its single collision/verify action materializes
     # the blocks as a side effect instead of paying a dedicated job
     base = df.select(
@@ -101,30 +101,11 @@ def _postings_and_vectors(
     return posting, base
 
 
-def _write_batch(
-    index_path: str, batch_dir: str, posting: DataFrame, vectors: DataFrame
-) -> None:
-    # both frames derive from the eagerly-checkpointed verify-vector base
-    # (_postings_and_vectors), and the two writes target disjoint paths —
-    # run them concurrently (r17, guide §2.6); callers' ledger/meta
-    # commit markers stay strictly after both complete
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _w_post():
-        ST.cluster_for_partitioned_write(posting, ["t"], F.col("b")).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "static").partitionBy("t").parquet(
-            f"{index_path}/postings/{batch_dir}"
-        )
-
-    def _w_vec():
-        vectors.write.mode("overwrite").parquet(
-            f"{index_path}/vectors/{batch_dir}"
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        for f in (ex.submit(_w_post), ex.submit(_w_vec)):
-            f.result()
+def _artifacts(posting: DataFrame, vectors: DataFrame) -> dict:
+    """The batch's two artifacts for :func:`store.write_batch`: the
+    t-partitioned bucket postings (salted on the bucket) and the verify
+    vectors."""
+    return {"postings": (posting, "t", "b"), "vectors": (vectors, None, None)}
 
 
 def build_neardup_index(
@@ -174,28 +155,14 @@ def build_neardup_index(
         n_planes = 4 + max(0, int(math.floor(math.log2(max(n, 1) / 500.0))))
     buckets = _srp_bucket_udf(int(n_planes), int(n_tables), int(dim))
     posting = base.select("id", F.posexplode(buckets(F.col("v"))).alias("t", "b"))
-    _commit_neardup_base(
-        spark, index_path, posting, base,
+    ST.commit_base(
+        spark, index_path,
+        lambda: ST.write_batch(index_path, "base", _artifacts(posting, base)),
+        NEARDUP_META,
         (
             int(n_planes), int(n_tables), int(dim), float(threshold),
             dict(df.dtypes)[id_col], id_col, vec_col,
         ),
-    )
-
-
-def _commit_neardup_base(
-    spark, index_path: str, posting: DataFrame, vectors: DataFrame,
-    meta_row: tuple, fold=None,
-) -> None:
-    """Base postings + verify vectors under :func:`store.commit_base`.  The
-    batch level is the hive DIRECTORY (``batch=base``), same as every
-    extension delivery — one read of postings/ sees base + extensions —
-    so the stale extension dirs of both trees are cleared inside the
-    meta-less window rather than overwritten through the root."""
-    ST.commit_base(
-        spark, index_path,
-        lambda: _write_batch(index_path, "batch=base", posting, vectors),
-        NEARDUP_META, meta_row, clear=("postings", "vectors"), fold=fold,
     )
 
 
@@ -220,8 +187,7 @@ def extend_neardup_index(
         df, id_col, meta.vec_col,
         int(meta.n_planes), int(meta.n_tables), int(meta.dim),
     )
-    _write_batch(index_path, f"batch={batch_id}", posting, vectors)
-    ST.ledger_commit(df.sparkSession, index_path, batch_id)
+    ST.write_batch(index_path, batch_id, _artifacts(posting, vectors))
 
 
 def compact_neardup_index(
@@ -246,11 +212,12 @@ def compact_neardup_index(
         vectors = vectors.localCheckpoint(eager=True)
         dst_index = index_path
     # the in-place inputs are pinned by the eager checkpoints, so the
-    # base commit may clear the trees they were read from; the meta
+    # base write may clear the trees they were read from; the meta
     # carries forward unchanged
-    _commit_neardup_base(
-        spark, dst_index, posting, vectors, tuple(meta),
-        fold=(index_path, committed),
+    ST.commit_base(
+        spark, dst_index,
+        lambda: ST.write_batch(dst_index, "base", _artifacts(posting, vectors)),
+        NEARDUP_META, tuple(meta), fold=(index_path, committed),
     )
 
 

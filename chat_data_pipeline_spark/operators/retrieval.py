@@ -173,25 +173,30 @@ def build_text_index(
     index_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    batch_id: int | str = "base",
-    _clear: bool = True,
 ) -> None:
-    """Build (or, via :func:`extend_text_index`, append to) the persisted
-    BM25 index.  Idempotent: each artifact writes through the root
-    (clearing stale extension batches on a rebuild) or overwrites its own
-    ``batch=`` partition on extension replay."""
+    """Build the persisted BM25 index (:func:`extend_text_index` appends
+    to it).  Idempotent: each artifact writes through the root, clearing
+    stale extension batches on a rebuild."""
+    artifacts = _text_artifacts(docs, text_col, id_col)
+    ST.commit_base(
+        docs.sparkSession, index_path,
+        lambda: ST.write_batch(index_path, "base", artifacts),
+        TEXT_META, (dict(docs.dtypes)[id_col], N_TERM_BUCKETS),
+    )
+
+
+def _text_artifacts(docs: DataFrame, text_col: str, id_col: str) -> dict:
+    """A corpus batch's artifacts (:func:`_artifact_map`) — the base
+    build's and every extension's."""
     from chat_data_pipeline_spark.functions.scoring import token_bucket
 
-    spark = docs.sparkSession
     toks = docs.select(
         F.col(id_col).alias("doc"), T.words(F.col(text_col)).alias("__toks__")
     ).withColumn("dl", F.size("__toks__"))
     # the two corpus-sized passes (postings aggregation, doclens projection)
     # are independent — materialize their checkpoints CONCURRENTLY (r17,
     # guide §2.6: independent jobs submitted from driver threads back-fill
-    # each other's stragglers), then fan the four artifact writes out the
-    # same way below.  Semantics unchanged: both plans are the ones the
-    # former lazy checkpoints materialized on first write.
+    # each other's stragglers); the artifact writes fan out the same way.
     from concurrent.futures import ThreadPoolExecutor
 
     postings_src = (
@@ -224,92 +229,25 @@ def build_text_index(
         postings, dlens = f_post.result(), f_dl.result()
     dfreq = postings.groupBy("bkt", "term").agg(F.count("*").alias("df"))
     stats = values_df(
-        spark,
+        docs.sparkSession,
         [(int(obs.get["n"] or 0), int(obs.get["s"] or 0))],
         "n_docs long, sum_dl long",
     )
-    id_type = dict(docs.dtypes)[id_col]
-    # salt the bucket-clustered writes so the corpus-sized postings table is
-    # written by O(N_TERM_BUCKETS × WRITE_SALT) tasks, not ≤64 (see
-    # store.WRITE_SALT); the salt hashes the term so a bucket's rows spread
-    # over ≤ WRITE_SALT tasks → ≤ WRITE_SALT files per bkt dir.
-    # partitionOverwriteMode is pinned STATIC per-write: under a session
-    # configured dynamic, a base rebuild would replace only batch=base and
-    # probes would silently keep serving stale extension batches (and a
-    # replayed extension would keep stale bkt dirs its new content no
-    # longer produces).
-    p_out = ST.cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
-    d_out = ST.cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
-    if _clear:  # base build: write through the root, clearing old batches
-        write = _text_base_writer(index_path, p_out, d_out, stats, dlens)
-        ST.commit_base(spark, index_path, write, TEXT_META, (id_type, N_TERM_BUCKETS))
-    else:  # extension: overwrite only this delivery's partition
-        # the four artifact writes target disjoint paths and share only
-        # already-materialized checkpoints — run them concurrently (r17);
-        # the ledger commit stays strictly AFTER all four complete
-        def _w_post():
-            p_out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("bkt").parquet(f"{index_path}/postings/batch={batch_id}")
-
-        def _w_dfreq():
-            d_out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("bkt").parquet(f"{index_path}/dfreq/batch={batch_id}")
-
-        def _w_stats():
-            stats.write.mode("overwrite").parquet(
-                f"{index_path}/stats/batch={batch_id}"
-            )
-
-        def _w_dlens():
-            dlens.write.mode("overwrite").parquet(
-                f"{index_path}/doclens/batch={batch_id}"
-            )
-
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            for f in [ex.submit(w) for w in (_w_post, _w_dfreq, _w_stats, _w_dlens)]:
-                f.result()
-        # the delivery's commit marker is written LAST: a crash mid-delivery
-        # (postings landed, df/stats didn't) must leave the batch INVISIBLE
-        # to probes — BM25's exactness claim depends on the three artifacts
-        # agreeing, so probes read only ledger-committed batches and a
-        # half-delivered batch can't silently skew df against tf.  Replay
-        # with the same id overwrites the partial artifacts and re-commits.
-        ST.ledger_commit(spark, index_path, batch_id)
+    return _artifact_map(postings, dfreq, stats, dlens)
 
 
-def _text_base_writer(
-    index_path: str, p_out: DataFrame, d_out: DataFrame,
-    stats: DataFrame, dlens: DataFrame,
-):
-    """The base's artifact write for :func:`store.commit_base`: the four
-    artifacts land through the root under ``batch=base`` (clearing stale
-    extension batches; static overwrite pinned), concurrently (r17, guide
-    §2.6) — they sit at disjoint paths over already-materialized
-    checkpoints, and the whole write runs inside the meta-less window, so
-    a partial concurrent write leaves a root every probe rejects."""
-
-    def _w(df, sub: str, bucketed: bool):
-        part_cols = ["batch", "bkt"] if bucketed else ["batch"]
-        df.withColumn("batch", F.lit("base")).write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy(*part_cols).parquet(f"{index_path}/{sub}")
-
-    def write() -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        jobs = [
-            (p_out, "postings", True),
-            (d_out, "dfreq", True),
-            (stats, "stats", False),
-            (dlens, "doclens", False),
-        ]
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            for f in [ex.submit(_w, df, sub, b) for df, sub, b in jobs]:
-                f.result()
-
-    return write
+def _artifact_map(
+    postings: DataFrame, dfreq: DataFrame, stats: DataFrame, dlens: DataFrame
+) -> dict:
+    """The four BM25 artifacts as :func:`store.write_batch` takes them:
+    bkt-partitioned postings and dfreq (salted on the term), the one-row
+    stats and the doclens."""
+    return {
+        "postings": (postings, "bkt", "term"),
+        "dfreq": (dfreq, "bkt", "term"),
+        "stats": (stats, None, None),
+        "doclens": (dlens, None, None),
+    }
 
 
 def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> None:
@@ -363,12 +301,10 @@ def compact_text_index(spark, index_path: str, dst_index: str | None = None) -> 
         F.count("*").cast("long").alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
     )
-    p_out = ST.cluster_for_partitioned_write(postings, ["bkt"], F.col("term"))
-    d_out = ST.cluster_for_partitioned_write(dfreq, ["bkt"], F.col("term"))
-    write = _text_base_writer(dst_index, p_out, d_out, stats, dlens)
+    artifacts = _artifact_map(postings, dfreq, stats, dlens)
     ST.commit_base(
-        spark, dst_index, write, TEXT_META, (meta.id_type, N_TERM_BUCKETS),
-        fold=(index_path, committed),
+        spark, dst_index, lambda: ST.write_batch(dst_index, "base", artifacts),
+        TEXT_META, (meta.id_type, N_TERM_BUCKETS), fold=(index_path, committed),
     )
 
 
@@ -395,15 +331,7 @@ def extend_text_index(
     opened = ST.open_extension(docs, index_path, batch_id, id_col)
     if opened is None:
         return  # folded replay: the base already holds this delivery
-    bid = opened[0]
-    build_text_index(
-        docs,
-        index_path,
-        text_col,
-        id_col,
-        batch_id=bid,
-        _clear=False,
-    )
+    ST.write_batch(index_path, opened[0], _text_artifacts(docs, text_col, id_col))
 
 
 def delete_from_text_index(
@@ -470,15 +398,15 @@ def delete_from_text_index(
             (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("sum_dl"),
         )
     )
-    ST.cluster_for_partitioned_write(neg_df, ["bkt"], F.col("term")).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(
-        f"{index_path}/dfreq/batch={batch_id}"
+    ST.write_batch(
+        index_path,
+        batch_id,
+        {
+            "dfreq": (neg_df, "bkt", "term"),
+            "stats": (neg_stats, None, None),
+            "tombstones": (want, None, None),
+        },
     )
-    neg_stats.write.mode("overwrite").parquet(f"{index_path}/stats/batch={batch_id}")
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={batch_id}")
-    # commit marker LAST: a crash anywhere above leaves the delete invisible
-    ST.ledger_commit(spark, index_path, batch_id)
 
 
 def rrf_fuse(

@@ -1450,55 +1450,13 @@ def build_ivf_index(
             values_df(
                 spark, cent_rows, "list int, centroid array<double>"
             ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
-        _write_list_base(index_path, postings, id_col)
+        ST.write_batch(index_path, "base", {"postings": (postings, "list", id_col)})
 
     ST.commit_base(
         spark, index_path, write, IVF_META,
         (coarse, int(n_centroids), int(dim), id_col, vec_col, dict(df.dtypes)[id_col]),
         fold=_fold,
     )
-
-
-def _write_list_base(index_path: str, postings: DataFrame, id_col: str) -> None:
-    """The IVF / IVF-PQ base postings write.  The base lands under
-    ``batch=base`` so the tree is uniformly two-level (batch=*/list=*) and
-    later deliveries interleave without producing the mixed root layout
-    partition discovery rejects; writing THROUGH the root in overwrite mode
-    also clears any stale extension batches from a previous build of the
-    same path — partitionOverwriteMode is pinned STATIC per-write so a
-    session configured dynamic can't turn that clearing into a
-    batch=base-only replace that leaves probes silently serving stale
-    extensions.  Cluster on (list, salt) BEFORE the partitioned write:
-    unclustered, every task writes a file into every list dir (tasks ×
-    n_centroids files — tens of millions at 100 TB, the sink-sizing
-    metadata bomb); clustered on list ALONE, the corpus-sized write
-    funnels through ≤ n_centroids tasks (the scale-killer in the other
-    direction).  The id-hashed salt keeps files at O(n_centroids ×
-    WRITE_SALT) while the write stage scales with the salt."""
-    ST.cluster_for_partitioned_write(
-        postings.withColumn("batch", F.lit("base")), ["list"], F.col(id_col)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("batch", "list").parquet(f"{index_path}/postings")
-
-
-def _write_list_delivery(
-    index_path: str, batch_id: str, postings: DataFrame, id_col: str
-) -> None:
-    """One IVF / IVF-PQ delivery's postings, then its ledger commit.  Same
-    salted list-clustering as the base: O(n_centroids × salt) files per
-    delivery with the write stage decoupled from the centroid count;
-    static overwrite pinned so a replayed delivery fully replaces its
-    batch dir (dynamic mode would keep stale list dirs the replay's new
-    content no longer produces).  The commit marker lands LAST: a crashed
-    delivery's partial part-files stay invisible to probes until a replay
-    completes and re-commits."""
-    ST.cluster_for_partitioned_write(postings, ["list"], F.col(id_col)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("list").parquet(
-        f"{index_path}/postings/batch={batch_id}"
-    )
-    ST.ledger_commit(postings.sparkSession, index_path, batch_id)
 
 
 def extend_ivf_index(
@@ -1541,7 +1499,7 @@ def extend_ivf_index(
         ).select(id_col, vec_col, F.element_at("__lists__", 1).alias("list"))
     else:
         raise ValueError(f"unknown coarse kind {meta.coarse!r} in {index_path}")
-    _write_list_delivery(index_path, batch_id, postings, id_col)
+    ST.write_batch(index_path, batch_id, {"postings": (postings, "list", id_col)})
 
 
 def _probed_lists(postings: DataFrame, lists) -> DataFrame:
@@ -2047,7 +2005,9 @@ def compact_ivf_index(spark, index_path: str, dst_index: str | None = None) -> N
             cent.coalesce(1).write.mode("overwrite").parquet(
                 f"{dst_index}/centroids"
             )
-        _write_list_base(dst_index, postings, meta.id_col)
+        ST.write_batch(
+            dst_index, "base", {"postings": (postings, "list", meta.id_col)}
+        )
 
     # carry id_type forward (r15: the extend guards read it from meta; a
     # pre-r15 root lacks the field, so recover it from the postings once)
@@ -2251,7 +2211,9 @@ def build_ivfpq_index(
     )
     ST.commit_base(
         df.sparkSession, index_path,
-        lambda: _write_list_base(index_path, postings, id_col),
+        lambda: ST.write_batch(
+            index_path, "base", {"postings": (postings, "list", id_col)}
+        ),
         IVFPQ_META,
         ("md5pq", int(n_centroids), int(m), int(n_codewords), int(dim),
          id_col, vec_col, dict(df.dtypes)[id_col]),
@@ -2282,7 +2244,7 @@ def extend_ivfpq_index(
         df, id_col, meta.vec_col, int(meta.n_centroids), int(meta.m),
         int(meta.n_codewords), int(meta.dim),
     )
-    _write_list_delivery(index_path, batch_id, postings, id_col)
+    ST.write_batch(index_path, batch_id, {"postings": (postings, "list", id_col)})
 
 
 def rebuild_ivfpq_index(

@@ -13,11 +13,15 @@ files, and every store follows the same crash posture:
     <root>/folded/{extensions,deletes}/<id>
                                  ids a compaction folded into the base
 
-Kinds supply only their own data; this module sequences it.  The three
+Kinds supply only their own data; this module sequences it.  The four
 skeletons below are the ONLY places that order the protocol's steps:
 
+- :func:`write_batch` — one batch's artifact write, the base's and every
+  delivery's: the hive layout, the static overwrite, the salted
+  clustering, concurrent artifacts, and for a delivery the ledger commit
+  after every artifact has landed;
 - :func:`commit_base` — a base build, rebuild or compaction: folded
-  manifest (compactions), meta delete, stale-subdir clear, the kind's
+  manifest (compactions), meta delete, tombstone clear, the kind's
   artifact write, ledger reset, meta write;
 - :func:`open_delivery` / :func:`open_extension` — a delivery's preamble:
   batch-id validation, folded-replay no-op, one meta read, cross-kind
@@ -676,7 +680,74 @@ def delete_victims(
     )
 
 
-# --- the three protocol skeletons ------------------------------------------------
+# --- the four protocol skeletons -------------------------------------------------
+
+
+def write_batch(
+    index_path: str,
+    batch_id: str,
+    artifacts: dict[str, tuple[DataFrame, str | None, str | None]],
+) -> None:
+    """Write one batch's artifacts — ``{sub: (frame, partition column or
+    None, salt column)}`` — and, for a delivery, commit it.
+
+    - A partitioned artifact is clustered on (partition column, salt)
+      first (:func:`cluster_for_partitioned_write`).  Unclustered, every
+      task writes a file into every partition dir (tasks × dirs files —
+      tens of millions at 100 TB, the sink-sizing metadata bomb);
+      clustered on the partition column alone, a corpus-sized write
+      funnels through ≤ #dirs tasks (the scale-killer in the other
+      direction).  The salt hash keeps files at O(dirs × WRITE_SALT)
+      while the write stage scales with the salt.
+    - ``partitionOverwriteMode`` is pinned STATIC on every partitioned
+      write (an unpartitioned one replaces its whole dir in either mode).
+      Under a session configured dynamic, a base rebuild would replace
+      only ``batch=base`` and probes would silently keep serving stale
+      extension batches, and a replayed delivery would keep stale
+      partition dirs its new content no longer produces.
+    - The base (``batch_id='base'``) is written THROUGH ``{root}/{sub}``
+      with a literal ``batch`` column (added before the clustering), so
+      the static overwrite clears every stale batch of a previous build,
+      and the tree stays uniformly ``batch=*/<partition>=*`` — later
+      deliveries interleave without the mixed root layout partition
+      discovery rejects.  Every other id overwrites only
+      ``{sub}/batch=<id>``, so a replay replaces its own partition.
+    - A batch's artifacts sit at disjoint paths, so they are written
+      concurrently (r17: independent jobs submitted from driver threads
+      back-fill each other's stragglers); a one-artifact batch writes on
+      the caller's thread.
+    - A delivery's ledger marker is written after every artifact has
+      landed: a crash mid-delivery leaves the batch invisible to probes,
+      and a replay with the same id overwrites the partial artifacts and
+      commits.  A base needs no marker here — :func:`commit_base` writes
+      its meta after this write returns."""
+    spark = next(iter(artifacts.values()))[0].sparkSession
+
+    def write(sub: str, frame: DataFrame, part: str | None, salt: str | None):
+        cols = [part] if part else []
+        dest = f"{index_path}/{sub}/batch={batch_id}"
+        if batch_id == "base":
+            frame = frame.withColumn("batch", F.lit("base"))
+            cols, dest = ["batch", *cols], f"{index_path}/{sub}"
+        if part:
+            frame = cluster_for_partitioned_write(frame, [part], F.col(salt))
+        writer = frame.write.mode("overwrite")
+        if cols:
+            writer = writer.option("partitionOverwriteMode", "static")
+            writer = writer.partitionBy(*cols)
+        writer.parquet(dest)
+
+    jobs = [(sub, *spec) for sub, spec in artifacts.items()]
+    if len(jobs) == 1:
+        write(*jobs[0])
+    else:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+            for f in [ex.submit(write, *job) for job in jobs]:
+                f.result()
+    if batch_id != "base":
+        ledger_commit(spark, index_path, batch_id)
 
 
 def commit_base(
@@ -685,7 +756,6 @@ def commit_base(
     write: Callable[[], None],
     meta_schema: str,
     meta_row: tuple,
-    clear: tuple[str, ...] = (),
     fold: tuple[str, list[str]] | None = None,
 ) -> None:
     """Commit a base — the one sequence every build, rebuild and compaction
@@ -700,11 +770,11 @@ def commit_base(
        anywhere inside leaves a root every probe rejects loudly instead of
        one merging a partial new base with stale ledger/extension state;
     3. clear ``tombstones`` (a fresh base has no pending deletes; a
-       compaction just made them physical) plus the kind's ``clear``
-       subdirs that its write does not overwrite through the root, and —
-       unless ``fold`` carries it — the folded manifest (a from-source
-       build starts a new world: old delivery ids are reusable);
-    4. ``write()`` — the kind's artifacts;
+       compaction just made them physical) and — unless ``fold`` carries
+       it — the folded manifest (a from-source build starts a new world:
+       old delivery ids are reusable);
+    4. ``write()`` — the kind's artifacts, a :func:`write_batch` of
+       ``'base'`` (through the root, so stale batches clear with it);
     5. reset the ledger;
     6. write ``meta_row`` under ``meta_schema`` LAST, the commit marker —
        one flat row via the JVM-local VALUES constructor (r17: the
@@ -714,9 +784,8 @@ def commit_base(
         src_index, committed = fold
         fold_manifest_forward(spark, src_index, index_path, committed)
     invalidate_index_meta(spark, index_path)
-    for sub in ("tombstones", *clear):
-        fs, p, _jvm = fs_for(spark, f"{index_path}/{sub}")
-        fs.delete(p, True)
+    fs, p, _jvm = fs_for(spark, f"{index_path}/tombstones")
+    fs.delete(p, True)
     if fold is None:
         folded_clear(spark, index_path)
     write()
@@ -841,8 +910,7 @@ def tombstone_delete(
         ids, index_path, committed, meta_id_type(spark, index_path, meta), bid,
         pin=True,
     )
-    want.write.mode("overwrite").parquet(f"{index_path}/tombstones/batch={bid}")
-    ledger_commit(spark, index_path, bid)
+    write_batch(index_path, bid, {"tombstones": (want, None, None)})
 
 
 # --- serving alias ---------------------------------------------------------------

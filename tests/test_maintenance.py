@@ -176,6 +176,54 @@ def test_crash_inside_base_commit_leaves_no_servable_root(
     assert _probe(kind, spark, path, docs, emb) == served
 
 
+@pytest.mark.parametrize("verb", ["extend", "delete"])
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "ivfpq", "dedup", "neardup"])
+def test_crash_before_delivery_commit_leaves_delivery_invisible(
+    spark, docs, emb, tmp_path, monkeypatch, kind, verb
+):
+    """The delivery commit's crash posture, per kind, for an extension AND
+    a delete: every artifact of the delivery lands, then the ledger commit
+    dies.  The ledger and the kind's probe must be exactly as before the
+    delivery, and a replay with the same id must commit and serve what a
+    clean delivery into a twin root serves."""
+    src, id_col = (docs, "doc_id") if kind in ("bm25", "dedup") else (emb, "vec_id")
+    path = str(tmp_path / f"dcrash_{kind}_{verb}")
+    clean = str(tmp_path / f"dclean_{kind}_{verb}")
+    ext = _build_half(kind, docs, emb, path)
+    _build_half(kind, docs, emb, clean)
+
+    def deliver(root):
+        if verb == "extend":
+            MT.STORE_KINDS[kind].extend(ext, root, batch_id="d1")
+        else:
+            victims = src.filter(F.col(id_col) % 4 == 0).select(id_col)
+            MT.STORE_KINDS[kind].delete(spark, root, victims, "d1")
+
+    deliver(clean)
+    committed = ST.committed_batches(spark, path)
+    served = _probe(kind, spark, path, docs, emb)
+
+    def crashing(*_args, **_kwargs):
+        raise _InjectedCrash(f"{kind} {verb} died before its ledger commit")
+
+    monkeypatch.setattr(ST, "ledger_commit", crashing)
+    with pytest.raises(_InjectedCrash):
+        deliver(path)
+    monkeypatch.undo()
+
+    landed = MT.STORE_KINDS[kind].residency[0] if verb == "extend" else "tombstones"
+    assert os.path.isdir(os.path.join(path, landed, "batch=d1"))
+    assert ST.committed_batches(spark, path) == committed
+    assert _probe(kind, spark, path, docs, emb) == served
+
+    deliver(path)
+    assert ST.committed_batches(spark, path) == committed + ["d1"]
+    assert ST.committed_batches(spark, clean) == committed + ["d1"]
+    assert _probe(kind, spark, path, docs, emb) == _probe(
+        kind, spark, clean, docs, emb
+    )
+
+
 def test_store_protocol_steps_live_only_in_store_module():
     """Structural guard: the base-commit steps — meta invalidation, ledger
     reset, folded-manifest clear — and every ``.parquet(f"{...}/meta")``
@@ -239,6 +287,35 @@ def test_store_live_read_lives_only_in_store_module():
     assert found == {
         "batch isin": {"operators/store.py"},
         "tombstoned_ids": {"operators/store.py", "operators/maintenance.py"},
+    }, found
+
+
+def test_store_batch_write_lives_only_in_store_module():
+    """Structural guard: a batch's artifact layout and its ledger commit
+    are written once, in ``store.write_batch`` — the
+    ``"partitionOverwriteMode"`` pin appears only in ``operators/store.py``,
+    and ``ledger_commit`` is called only there and from ``maintenance.py``,
+    where ``snapshot_store`` writes the consistent-cut ledger of a clone —
+    so no store can hand-copy (and drift) how a delivery lands and
+    commits."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(MT.__file__).resolve().parents[1]
+    found: dict[str, set[str]] = {}
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Constant) and node.value == "partitionOverwriteMode":
+                found.setdefault(node.value, set()).add(rel)
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name == "ledger_commit":
+                    found.setdefault("ledger_commit", set()).add(rel)
+    assert found == {
+        "partitionOverwriteMode": {"operators/store.py"},
+        "ledger_commit": {"operators/store.py", "operators/maintenance.py"},
     }, found
 
 
