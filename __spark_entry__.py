@@ -24,7 +24,10 @@ sys.path.insert(0, _REPO_ROOT)
 
 from chat_data_pipeline_spark.queries import REGISTRY  # noqa: E402
 
-_SHIPPED_SESSIONS: set[int] = set()
+# application ids the package zip was added to: ``addPyFile`` belongs to the
+# SparkContext, and unlike ``id(spark)`` an application id is never reused
+# by a later session once this one stops
+_SHIPPED_SESSIONS: set[str] = set()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -36,7 +39,8 @@ def _ship_package(spark: SparkSession) -> None:
     is shipped.  ``addPyFile`` with a zip of the package handles any driver
     cwd / cluster layout.
     """
-    if id(spark) in _SHIPPED_SESSIONS:
+    app_id = spark.sparkContext.applicationId
+    if app_id in _SHIPPED_SESSIONS:
         return
     import tempfile
     import zipfile
@@ -51,7 +55,7 @@ def _ship_package(spark: SparkSession) -> None:
                     arc = os.path.relpath(full, _REPO_ROOT)
                     zf.write(full, arc)
     spark.sparkContext.addPyFile(zpath)
-    _SHIPPED_SESSIONS.add(id(spark))
+    _SHIPPED_SESSIONS.add(app_id)
 
 
 def entry(spark: SparkSession) -> DataFrame:

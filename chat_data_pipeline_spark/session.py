@@ -9,11 +9,55 @@ operators.
 
 from __future__ import annotations
 
+import gc
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+_stdlib_zip_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _stamped_invalidate_caches(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's central
+    directory only when its ``(st_mtime_ns, st_size)`` differs from the
+    stamp of this importer's last read.
+
+    A reused PySpark worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``worker_util.setup_spark_files``).  Under CPython
+    3.11 every cached zipimporter then re-parses its archive: the 14-16
+    importers over ``pyspark.zip``'s 1,328 entries take ~0.13 CPU-s per
+    call, against ~0.1 ms with the stamp check.  A zip that is rewritten or
+    newly shipped (``addPyFile``) changes its stamp and is still re-read;
+    the stamp is taken before the read, so a write racing the read shows
+    next time.  Newer CPython makes the refresh lazy (gh-103200); the stamp
+    check is correct there too, so it does not branch on the version."""
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = None
+    if stamp is None or getattr(self, "_cdp_stamp", None) != stamp:
+        _stdlib_zip_invalidate(self)
+        self._cdp_stamp = stamp
+
+
+# Inside a PySpark worker (the package is imported there by unpickling a
+# package UDF) remove the two fixed costs every task pays: the zip re-read
+# above, and the daemon's full ``gc.collect()`` after each task walking the
+# ~70k objects numpy, pandas and pyarrow create at import (~20 ms a task).
+# Freezing moves them to the permanent generation once.  The driver keeps
+# the stdlib behaviour.
+if "pyspark.worker" in sys.modules:
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+    zipimport.zipimporter.invalidate_caches = _stamped_invalidate_caches
+    gc.freeze()
 
 # r18 (guide §2.1): size floor for NATIVE-expression compute stages — see
 # repartition_for_compute(min_est_bytes_per_partition=...).  Parameterised
@@ -127,16 +171,19 @@ def repartition_for_compute(
     # frame (~0.2 s of driver latency, + ~0.1 s for the stats estimate when
     # the size floor is used), and the ~24 call sites all probe a fresh
     # 2-column projection of an immutable input table — so the final
-    # DECISION is a pure function of (session, analyzed plan, args) for the
-    # life of a run.  Key on the analyzed plan's semanticHash (analysis is
-    # ~ms and needed anyway; bench reps / serving re-invocations rebuild
-    # semantically identical frames) so repeat invocations skip the
-    # planning jobs entirely.  The memo holds a partition COUNT decision
-    # (0 = pass through), never data or results, and is process-local.
+    # DECISION is a pure function of (application, analyzed plan, args) for
+    # the life of a run.  The application id, unlike ``id(session)``, is
+    # never reused by a later session once this one stops, so a stopped
+    # session's entries stay unreachable.  Key on the analyzed plan's
+    # semanticHash (analysis is ~ms and needed anyway; bench reps / serving
+    # re-invocations rebuild semantically identical frames) so repeat
+    # invocations skip the planning jobs entirely.  The memo holds a
+    # partition COUNT decision (0 = pass through), never data or results,
+    # and is process-local.
     # Inexact estimators stay rejected — a miss still runs the exact probe.
     try:
         key = (
-            id(df.sparkSession),
+            sc.applicationId,
             df._jdf.queryExecution().analyzed().semanticHash(),
             partitions,
             min_est_bytes_per_partition,
@@ -188,13 +235,13 @@ def compute_width_estimate(
     is itself a join whose estimate is useless (r18 — the ngram posting
     build widens ``df JOIN mapping``, whose inflated estimate defeated the
     in-function size floor).  Memoized like the partition probe: the
-    estimate is a pure function of (session, analyzed plan, floor)."""
+    estimate is a pure function of (application, analyzed plan, floor)."""
     floor = int(min_est_bytes_per_partition or COMPUTE_MIN_EST_BYTES)
     try:
         sc = df.sparkSession.sparkContext
         key = (
             "width_est",
-            id(df.sparkSession),
+            sc.applicationId,
             df._jdf.queryExecution().analyzed().semanticHash(),
             floor,
             sc.defaultParallelism,
@@ -313,11 +360,14 @@ def values_df(spark, rows, schema: str):
     """Build a small LOCAL DataFrame as a pure-JVM ``VALUES`` query instead
     of ``spark.createDataFrame`` (r17 optimization): the parallelize-backed
     path pickles rows into a Python RDD, so EVERY downstream action pays a
-    Python-worker round trip — measured ~0.5 s per action in a warmed
-    session vs ~0.02 s for the VALUES form, which parses and evaluates
-    entirely in the JVM (LocalRelation).  Intended for the driver-side
-    result/parameter tables the query layer builds (fleet reports, trained
-    weights, query-term tables) — anything row-count-bounded.
+    Python-worker round trip.  In a warmed ``local[4]`` session whose
+    workers have imported the package (so they skip the per-task zip
+    re-read), a 20-row collect measured ~0.33 s and a filtered count
+    ~0.44 s, against ~0.03 s and ~0.11 s for the VALUES form, which parses
+    and evaluates entirely in the JVM (LocalRelation).  Intended for the
+    driver-side result/parameter tables the query layer builds (fleet
+    reports, trained weights, query-term tables) — anything
+    row-count-bounded.
 
     ``schema`` is the same DDL string ``createDataFrame`` takes
     (``"name type, name2 type2"``); every column is CAST to its declared
